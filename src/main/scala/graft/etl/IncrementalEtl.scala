@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Tables
+import graft.io.{ManifestLog, Tables}
 import graft.queries.GraftQuery
 
 /** Incremental warehouse maintenance via DYNAMIC partition overwrite —
@@ -78,47 +78,34 @@ object IncrementalEtl {
 
   /** Small-file compaction — the OTHER half of warehouse maintenance at
     * 100 TB: streaming/micro-batch ingest leaves thousands of KB-sized
-    * files per partition (every scan pays a per-file open + footer read;
-    * the metadata store pays a per-file listing), and the nightly
-    * compactor rewrites each partition's file set into one right-sized
-    * file WITHOUT changing the table's contents. Here ingest is
-    * simulated by writing the events table day-partitioned with 8 files
-    * per day (`repartition(8·days)` before the partitioned write);
-    * compaction reads the layout back and `repartition(event_date)`
-    * routes every day's rows to exactly one task → exactly one file per
-    * day directory (an incremental compactor that targets only the
-    * worst partitions is the same code over a partition predicate).
-    * The rewrite lands in a VERSIONED sibling directory and
-    * the "current" pointer moves — the q44 stand-in for a transactional
-    * format's snapshot commit; rewriting the directory in place would
-    * mean overwriting files a concurrent (or the compactor's own) scan
-    * is reading. Contents are untouched by construction → the catalog
-    * entry returns the compacted table and carries a full identity
-    * oracle against the source; WritersSpec asserts the before/after
-    * per-day file counts. Values travel as integer micro-units so the
-    * identity is hash-exact. */
+    * files (every scan pays a per-file open + footer read; the metadata
+    * store pays a per-file listing), and the nightly compactor rewrites
+    * them into right-sized files WITHOUT changing the table's contents.
+    * Here ingest is one [[ManifestLog.commitAppend]] of the events table
+    * as 8 round-robin files, so every day is spread over all 8;
+    * compaction is [[ManifestLog.optimize]] range-partitioned on
+    * `event_date` with one target file per day (range partitioning never
+    * splits a key across files, so each day lands in exactly one file —
+    * readable from the manifest's per-file `event_date` stats). The
+    * rewrite publishes as a new manifest version — v0 stays readable for
+    * any concurrent scan. Contents are untouched by construction → the
+    * catalog entry returns the compacted table and carries a full
+    * identity oracle against the source; WritersSpec asserts the
+    * before/after file spans. Values travel as integer micro-units so
+    * the identity is hash-exact. */
   def compactSmallFiles(spark: SparkSession, dir: String): (DataFrame, String) = {
     val out = graft.io.TempLayouts.replacing(
       "compact#" + new java.io.File(dir).getCanonicalPath, "graft_compact_") { out =>
       val ev = Tables(spark, dir).events
         .select(col("event_id"), to_date(col("ts")).as("event_date"),
           col("event_type"), floor(col("value") * 1e6).cast("long").as("value_micros"))
-      // ingest shape: ~8 small files per day partition (hash by (day,
-      // bucket)), committed as version 0 of the CommitLog table
-      graft.io.CommitLog.commitNext(out) { p =>
-        ev.repartition(256, col("event_date"), pmod(col("event_id"), lit(8)))
-          .write.partitionBy("event_date").mode("overwrite").parquet(p)
-      }
-      // compaction: one task (= one file) per day, committed as the next
-      // version — the atomic multi-partition pointer move; v0 stays
-      // readable for any concurrent scan (CommitLogSpec pins isolation)
-      graft.io.CommitLog.commitNext(out) { p =>
-        spark.read.parquet(graft.io.CommitLog.versionPath(out, 0L))
-          .repartition(col("event_date"))
-          .write.partitionBy("event_date").mode("overwrite").parquet(p)
-      }
+      val v0 = ManifestLog.commitAppend(spark, out, ev, statsCols = Seq("event_date"), files = 8)
+      val days = ManifestLog.snapshot(spark, out, v0).select(col("event_date")).distinct().count()
+      ManifestLog.optimize(spark, out, smallBytes = Long.MaxValue,
+        statsCols = Seq("event_date"), sortCol = Some("event_date"),
+        targetFiles = days.toInt)
     }
-    val table = graft.io.CommitLog.snapshotLatest(spark, out).get
+    val table = ManifestLog.snapshot(spark, out, ManifestLog.latest(out).get)
       .select(col("event_id"),
         date_format(col("event_date"), "yyyy-MM-dd").as("event_date"),
         col("event_type"), col("value_micros"))
@@ -126,38 +113,31 @@ object IncrementalEtl {
     (table, out)
   }
 
-  /** Snapshot TIME TRAVEL + diff — the read side of the versioned-commit
-    * discipline q44/q52 write by: because a commit lands as a NEW
-    * versioned directory and the current pointer moves (never an
-    * in-place mutation), every prior snapshot stays readable, so
-    * yesterday's report is reproducible and "what changed between v0
+  /** Snapshot TIME TRAVEL + diff — the read side of the manifest commits
+    * q44/q52 write by: because a commit publishes a NEW manifest version
+    * (never an in-place mutation), every prior snapshot stays readable,
+    * so yesterday's report is reproducible and "what changed between v0
     * and v1" is a plain two-snapshot join — `VERSION AS OF` plus CDC
     * diff in transactional-format terms. v0 = the daily counts; v1 =
-    * the same counts recommitted after q48's deterministic late batch
-    * (latest day's event_id ≡ 0 mod 13 arrive again). The diff reads
-    * BOTH version directories — the proof that committing v1 destroyed
-    * nothing. Group sets match by construction (the late batch only
-    * re-delivers existing events), so the diff is an inner join;
-    * all-integer counts → full oracle. At 100 TB: snapshots share
-    * unchanged files in a real table format (here each version is
-    * self-contained — the pointer-move commit is the part under test);
-    * the diff query touches only the two aggregate snapshots, never
-    * the raw events. */
+    * the same counts recommitted as a full replace after q48's
+    * deterministic late batch (latest day's event_id ≡ 0 mod 13 arrive
+    * again). The diff reads BOTH snapshots — the proof that committing
+    * v1 destroyed nothing. Group sets match by construction (the late
+    * batch only re-delivers existing events), so the diff is an inner
+    * join; all-integer counts → full oracle. The diff query touches
+    * only the two aggregate snapshots, never the raw events. */
   def snapshotDiff(spark: SparkSession, dir: String): (DataFrame, String) = {
     val out = graft.io.TempLayouts.replacing(
       "ttravel#" + new java.io.File(dir).getCanonicalPath, "graft_time_travel_") { out =>
       val ev = dailyEvents(spark, dir)
-      graft.io.CommitLog.commitNext(out) { p =>
-        counts(ev).write.mode("overwrite").parquet(p)
-      }
+      ManifestLog.commitAppend(spark, out, counts(ev), statsCols = Nil)
       val maxDate = ev.agg(max(col("event_date"))).head().getDate(0)
       val late = ev.filter(col("event_date") === lit(maxDate)
         && col("event_id") % 13 === 0)
-      graft.io.CommitLog.commitNext(out) { p =>
-        counts(ev.unionByName(late)).write.mode("overwrite").parquet(p)
-      }
+      ManifestLog.commitEntries(out,
+        ManifestLog.stage(spark, out, "v1", counts(ev.unionByName(late)), statsCols = Nil))
     }
-    def snap(v: Long, cName: String) = graft.io.CommitLog.snapshot(spark, out, v)
+    def snap(v: Long, cName: String) = ManifestLog.snapshot(spark, out, v)
       .select(col("event_date"), col("event_type"), col("cnt").as(cName))
     val diff = snap(0L, "cnt_v0")
       .join(snap(1L, "cnt_v1"), Seq("event_date", "event_type"))
@@ -193,7 +173,7 @@ object IncrementalEtl {
 
     GraftQuery(
       "q52_compact_small_files",
-      "small-file compaction: 8-files-per-day ingest layout rewritten to one file per partition",
+      "small-file compaction: 8-file round-robin ingest rewritten to one file per day",
       (spark, dir) => compactSmallFiles(spark, dir)._1,
       Some(
         """SELECT event_id,

@@ -9,12 +9,13 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
-/** Manifest-based table format — the layer [[CommitLog]] deliberately
-  * trades away ("a real format adds manifest reuse so snapshots share
-  * unchanged data files"), now provided: versions are MANIFESTS (lists of
-  * immutable, content-shared data files with per-file column statistics),
-  * not self-contained directory copies. This is the public Delta/Iceberg
-  * design reduced to its two load-bearing ideas:
+/** Manifest-based table format — the engine's ONE commit protocol for
+  * every "commit a new table state" surface (q44's streaming upsert,
+  * q52's compaction, q68's time travel, q96–q111): versions are
+  * MANIFESTS (lists of immutable, content-shared data files with
+  * per-file column statistics), not self-contained directory copies.
+  * This is the public Delta/Iceberg design reduced to its two
+  * load-bearing ideas:
   *
   *  1. **Snapshot = manifest.** Data files under `base/data/` are written
   *     once and never mutated; a version is one JSON-lines file under
@@ -39,10 +40,10 @@ import org.apache.spark.sql.functions.{col, lit}
   *
   * Scale notes: discovery is O(versions) names + one manifest read;
   * manifests are O(files) JSON lines (a real format splits manifests and
-  * checkpoints them — the [[CommitLog.checkpoint]] move, composable here
-  * the same way). Statistics soundness leans on the parquet contract that
-  * footer min/max are true bounds or absent; a file without usable stats
-  * is always KEPT by pruning (conservative).
+  * checkpoints the version listing; neither is implemented here).
+  * Statistics soundness leans on the parquet contract that footer
+  * min/max are true bounds or absent; a file without usable stats is
+  * always KEPT by pruning (conservative).
   */
 object ManifestLog {
 
@@ -137,8 +138,8 @@ object ManifestLog {
   }
 
   /** Publish `entries` as the next version: write a writer-private
-    * `.tmp`, then one put-if-absent hard-link — the [[CommitLog]]
-    * publish-last discipline with the manifest itself as the marker.
+    * `.tmp`, then one put-if-absent hard-link — publish-last, with the
+    * manifest itself as the commit marker.
     * Single-writer by contract ON THE VERSION ID: if another writer
     * published the same id first this FAILS LOUDLY (a POSIX
     * ATOMIC_MOVE rename would silently replace the committed manifest,
@@ -571,17 +572,6 @@ object ManifestLog {
       }.reduce(_ unionByName _)
     }
 
-  /** Merge-on-read DELETE (the deletion-vector strategy, public
-    * Iceberg/Delta design): commit a new version whose only novelty is a
-    * tombstone file holding the deleted KEYS — O(deleted keys) write
-    * cost, zero data files touched (q97's CoW merge is the
-    * write-amplified/read-cheap dual; a format needs both). `keysDf`'s
-    * column set IS the delete key. Always composes with the CURRENT
-    * head (a delete against an older snapshot would have to rebase the
-    * table and silently drop later commits — callers needing a pinned
-    * replay compose `manifest(base, v) ++ tombstone` with
-    * [[commitEntries]] explicitly, as q101 does). Returns the new
-    * version id. */
   // --- incremental change reads (CDC-lite) ---------------------------------
 
   /** KEY-level changes between two committed versions, derived purely
@@ -736,9 +726,13 @@ object ManifestLog {
   private class EpochAlreadyCommitted extends RuntimeException
 
   /** Exactly-once streaming epoch commit (the public Delta
-    * txn/SetTransaction design): publish `newEntries` as the next
+    * txn/SetTransaction design): publish `entries(prev)` as the next
     * version IF epoch `epochId` of `queryId` has not already committed;
-    * otherwise do NOTHING and return None. The dedup marker rides IN the
+    * otherwise do NOTHING and return None. `prev` is the real head's
+    * entries minus this query's own marker, so the callback decides the
+    * epoch's table semantics: an append sink returns `prev ++ staged`
+    * (ManifestStreamSink), a keyed upsert returns only its re-merged
+    * key table (q44 — a full replace). The dedup marker rides IN the
     * manifest itself (kind "txn", rows = epochId, replacing the query's
     * previous marker), so marker and data commit in ONE atomic
     * put-if-absent — there is no crash window where the data landed but
@@ -749,27 +743,38 @@ object ManifestLog {
     * The recheck runs INSIDE the atomic-retry arbiter against the real
     * head, so the guarantee holds even against a concurrent committer
     * of the same queryId (Spark runs one driver per query — this is
-    * belt-and-braces, not a supported topology). Data entries' `seq` is
-    * assigned HERE, inside the arbiter, to the version each attempt
-    * really publishes — a caller-side latest+1 estimate would go stale
-    * when a concurrent commit wins the race, leaving streamed files
-    * with a seq BELOW their committed version and wrongly subject to a
-    * concurrently-committed tombstone (round-14 advisory). */
-  def commitStreamEpoch(base: String, queryId: String, epochId: Long,
-      newEntries: Seq[ManifestEntry]): Option[Long] =
+    * belt-and-braces, not a supported topology). The `seq` of every data
+    * entry not already in `prev` is assigned HERE, inside the arbiter,
+    * to the version each attempt really publishes — a caller-side
+    * latest+1 estimate would go stale when a concurrent commit wins the
+    * race, leaving streamed files with a seq BELOW their committed
+    * version and wrongly subject to a concurrently-committed tombstone
+    * (round-14 advisory). */
+  def commitStreamEpoch(base: String, queryId: String, epochId: Long)
+      (entries: Seq[ManifestEntry] => Seq[ManifestEntry]): Option[Long] =
     try {
       Some(commitEntriesAtomicV(base) { (prev, next) =>
-        val already = prev.exists(e =>
-          e.kind == "txn" && e.path == txnPath(queryId) && e.rows >= epochId)
-        if (already) throw new EpochAlreadyCommitted
+        val (own, rest) = prev.partition(e => e.kind == "txn" && e.path == txnPath(queryId))
+        if (own.exists(_.rows >= epochId)) throw new EpochAlreadyCommitted
         val txn = ManifestEntry(txnPath(queryId), epochId, 0L, Map.empty,
           kind = "txn", seq = 0L)
-        prev.filterNot(e => e.kind == "txn" && e.path == txnPath(queryId)) ++
-          newEntries.map(e => if (e.kind == "data") e.copy(seq = next) else e) ++
-          Seq(txn)
+        val carried = rest.map(_.path).toSet
+        entries(rest).map(e =>
+          if (e.kind == "data" && !carried.contains(e.path)) e.copy(seq = next) else e) :+ txn
       })
     } catch { case _: EpochAlreadyCommitted => None }
 
+  /** Merge-on-read DELETE (the deletion-vector strategy, public
+    * Iceberg/Delta design): commit a new version whose only novelty is a
+    * tombstone file holding the deleted KEYS — O(deleted keys) write
+    * cost, zero data files touched (q97's CoW merge is the
+    * write-amplified/read-cheap dual; a format needs both). `keysDf`'s
+    * column set IS the delete key. Always composes with the CURRENT
+    * head (a delete against an older snapshot would have to rebase the
+    * table and silently drop later commits — callers needing a pinned
+    * replay compose `manifest(base, v) ++ tombstone` with
+    * [[commitEntries]] explicitly, as q101 does). Returns the new
+    * version id. */
   def commitDelete(spark: SparkSession, base: String, keysDf: DataFrame,
       statsCols: Seq[String] = Seq.empty): Long = {
     val head = latest(base).getOrElse(

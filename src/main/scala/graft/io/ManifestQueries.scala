@@ -279,10 +279,9 @@ object ManifestQueries {
     // fragmentation: 12 small per-commit files rewrite into one sorted
     // file, every already-big file is reused BY REFERENCE, and the swap
     // publishes as a new manifest version while old snapshots keep
-    // reading the fragments they reference (q52 is the CommitLog
-    // directory-swap version of this; here the swap is one metadata
-    // file, and history survives). The entry re-runs the compaction
-    // every invocation and reads the packed snapshot back through a
+    // reading the fragments they reference (q52 runs the same verb
+    // range-partitioned into one file per day). The entry re-runs the
+    // compaction every invocation and reads the packed snapshot back through a
     // full-oracle aggregate, so a row lost or duplicated by the rewrite
     // breaks the hash. ManifestLogSpec pins the structural contract
     // (file count drops, multiset identical, old version intact).

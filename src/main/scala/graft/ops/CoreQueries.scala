@@ -3083,7 +3083,12 @@ object CoreQueries {
         val wRank = Window.partitionBy(col("event_type"))
           .orderBy(col("v"), col("h"))
         val wAll = Window.partitionBy(col("event_type"))
-        val merged = shardSketch
+        // the sketch is bounded by k per shard, so it is the build side:
+        // the streamed groupL arrives type-clustered from its suffix
+        // window and the rank window reads it in place. Left to AQE, the
+        // build side flipped with the core count (at 4 partitions it
+        // built groupL and the rank window paid its own exchange)
+        val merged = broadcast(shardSketch)
           .join(groupL, "event_type")
           .where(col("lvl") >= col("l"))
           .withColumn("rn", row_number().over(wRank).cast("long"))

@@ -57,7 +57,9 @@ object Dashboard {
       .orderBy(quarterOrd(col("quarter")), col("transaction_type"))
 
   /** A1+J2+F8+W1+W2+W3 — streamlit.py:152–164: BUY+SELL share of all
-    * transactions per quarter, with lag-based pct change. */
+    * transactions per quarter, with lag-based pct change (null where the
+    * previous quarter's count is 0 — pandas' NaN/inf there; ANSI mode
+    * would throw DIVIDE_BY_ZERO). */
   def buySellTrend(wide: DataFrame): DataFrame = {
     val total = wide.groupBy(col("quarter")).agg(cnt.as("total_count"))
     val buySell = wide
@@ -70,7 +72,7 @@ object Dashboard {
         round(col("buy_sell_count") / col("total_count") * 100, 1))
       .withColumn("pct_change",
         round((col("buy_sell_count") - lag(col("buy_sell_count"), 1).over(w))
-          / lag(col("buy_sell_count"), 1).over(w) * 100, 1))
+          / nullif(lag(col("buy_sell_count"), 1).over(w), lit(0L)) * 100, 1))
       .orderBy(quarterOrd(col("quarter")))
   }
 

@@ -95,8 +95,8 @@ object IvfIndex {
     * index at `outPath` (same frozen centroids, empty tombstone set).
     * One partitioned write of the surviving vectors — cell assignments
     * are already known, so no centroid argmin re-runs; readers switch
-    * paths atomically (the CommitLog pattern governs the switch when
-    * the index lives inside a versioned table). */
+    * paths atomically (a [[graft.io.ManifestLog]] commit governs the
+    * switch when the index lives inside a versioned table). */
   def compactTo(spark: SparkSession, path: String, outPath: String): Unit = {
     val cells = spark.read.parquet(cellsPath(path))
     val live =

@@ -340,9 +340,9 @@ object SimilarityOps {
     * deployed nprobe) on a sampled query set; here the sample is the
     * standard batch-query set and the whole measurement — probe-cell
     * argmin, both rankings, the intersection count — is integer/
-    * deterministic, so the REPORT carries a full oracle (RecallProbe
-    * remains the ad-hoc measurement tool; this is the continuously-
-    * verifiable pipeline artifact). Cost shape: one probed-cells scan +
+    * deterministic, so the REPORT carries a full oracle (the
+    * continuously-verifiable recall measurement; run other nprobe
+    * settings through this function). Cost shape: one probed-cells scan +
     * one exact scan over the query batch — the exact side is the
     * ground-truth price any recall measurement pays, bounded by |Q|. */
   def ivfRecallReport(emb: DataFrame, queryIds: Seq[Long], k: Int,
@@ -1282,7 +1282,8 @@ object SimilarityOps {
     * < 2⁵⁰ ≪ 2⁵³).
     *
     * Default nprobe: [[KnnJoinNprobe]] — chosen from the measured
-    * recall@5 curve (RecallProbe, sf0.001 AND sf0.01 agree to ±0.01):
+    * recall@5 curve of [[knnJoinCells]] against [[knnJoinExact]]
+    * (sf0.001 AND sf0.01 agree to ±0.01):
     * {{{
     * nCells=16: nprobe 1 → 0.24, 2 → 0.38, 4 → 0.57, 6 → 0.72, 8 → 0.83
     * nCells= 8: nprobe 1 → 0.29, 2 → 0.49, 4 → 0.76, 6 → 0.92

@@ -178,7 +178,7 @@ object ManifestStreamSink {
           ManifestLog.statFile(spark, base, dest, statsCols)
         }
     }
-    val committed = ManifestLog.commitStreamEpoch(base, queryId, epochId, entries)
+    val committed = ManifestLog.commitStreamEpoch(base, queryId, epochId)(_ ++ entries)
     if (committed.isEmpty)
       // lost the belt-and-braces in-arbiter recheck: someone committed
       // this epoch between our pre-check and the publish — remove the

@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import graft.io.ManifestLog
+
 /** Structured Streaming operators over the `events` table shape
   * (event_id, ts, user_id, event_type, value, props) — the streaming
   * extension planned in SURVEY.md §2.9/§7.5 (the reference itself is
@@ -564,9 +566,9 @@ object EventStreams {
     * its latest-row-per-user into a keyed parquet table (read previous
     * version ∪ batch → argmax per key → write next version), so batch N
     * genuinely consumes batch N−1's output. That read-merge-write is the
-    * idempotent upsert a warehouse without MERGE support runs; versioned
-    * directories stand in for a transactional table format's snapshot
-    * (equivalent plan, atomic swap instead of file overwrite).
+    * idempotent upsert a warehouse without MERGE support runs; each
+    * merged key table publishes as a new [[graft.io.ManifestLog]]
+    * version (atomic manifest swap instead of file overwrite).
     * Determinism: the per-key argmax orders by (ts, event_id) — a total
     * order — so the final table equals the batch argmax regardless of
     * how rows split across micro-batches; `maxFilesPerTrigger=1` forces
@@ -592,17 +594,21 @@ object EventStreams {
       .agg(max(struct(col("ts"), col("event_id"), col("event_type"), col("value")))
         .as("last"))
 
+  /** Txn id of the q44 upsert job's epoch marker in its manifest table. */
+  private[graft] val UpsertTxn = "q44_stream_upsert_latest"
+
   /** One streaming run of the upsert job against `base` (a
-    * [[graft.io.CommitLog]] table) and `ckpt` (streaming checkpoint).
-    * RESTART-SAFE BY CONSTRUCTION: the merge input for batch N is the
-    * newest COMMITTED version with id < N, discovered from the commit
-    * log on DISK — never in-JVM state (the round-4 shape held `current`
-    * in a `@volatile var`, which a restarted JVM would lose, silently
-    * dropping all pre-crash state). A batch replayed after a failure
-    * between sink commit and checkpoint commit therefore re-derives the
-    * same predecessor and re-commits its own version id with identical
-    * content — the foreachBatch idempotence contract, which is exactly
-    * CommitLog's idempotent-replay contract. `failAtBatch` injects a
+    * [[graft.io.ManifestLog]] table) and `ckpt` (streaming checkpoint).
+    * RESTART-SAFE BY CONSTRUCTION: every batch commits through
+    * [[graft.io.ManifestLog.commitStreamEpoch]], so the head manifest
+    * carries the epoch marker of the last batch it holds. The merge
+    * input for batch N is that head, read from DISK — never in-JVM state
+    * (the round-4 shape held `current` in a `@volatile var`, which a
+    * restarted JVM would lose, silently dropping all pre-crash state). A
+    * batch replayed after a failure between sink commit and checkpoint
+    * commit finds its own epoch already in the marker and is a no-op —
+    * the foreachBatch idempotence contract. Each epoch REPLACES the
+    * table's entries with its merged key table. `failAtBatch` injects a
     * crash before that batch id's sink write (the recovery spec's
     * lever); the StreamingQueryException it causes propagates to the
     * caller. */
@@ -618,20 +624,24 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (failAtBatch.contains(id))
           throw new RuntimeException(s"injected failure before batch $id commit")
-        val merged = graft.io.CommitLog.committedBefore(base, id) match {
-          case Some(prev) =>
-            latestPerUser(
-              graft.io.CommitLog.snapshot(batch.sparkSession, base, prev)
-              .select(col("user_id"), col("last.ts").as("ts"),
-                col("last.event_id").as("event_id"),
-                col("last.event_type").as("event_type"), col("last.value").as("value"))
-              .unionByName(batch))
-          case None => latestPerUser(batch)
+        if (!ManifestLog.lastStreamEpoch(base, UpsertTxn).exists(_ >= id)) {
+          val bs = batch.sparkSession
+          val merged = ManifestLog.latest(base) match {
+            case Some(head) =>
+              latestPerUser(
+                ManifestLog.snapshot(bs, base, head)
+                .select(col("user_id"), col("last.ts").as("ts"),
+                  col("last.event_id").as("event_id"),
+                  col("last.event_type").as("event_type"), col("last.value").as("value"))
+                .unionByName(batch))
+            case None => latestPerUser(batch)
+          }
+          val tag = s"e$id-" + java.util.UUID.randomUUID().toString.take(8)
+          val staged = ManifestLog.stage(bs, base, tag, merged, statsCols = Nil)
+          if (ManifestLog.commitStreamEpoch(base, UpsertTxn, id)(_ => staged).isEmpty)
+            staged.foreach(e =>
+              java.nio.file.Files.deleteIfExists(new java.io.File(base, e.path).toPath))
         }
-        graft.io.CommitLog.commit(base, id) { p =>
-          merged.write.mode("overwrite").parquet(p)
-        }
-        ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -642,8 +652,8 @@ object EventStreams {
   /** The upsert table as of the newest committed version (empty-input
     * fallback keeps the catalog schema). */
   def upsertResult(spark: SparkSession, base: String, dir: String): DataFrame = {
-    val result = graft.io.CommitLog.snapshotLatest(spark, base).getOrElse(
-      latestPerUser(spark.read.parquet(dir + "/events.parquet").limit(0)))
+    val result = ManifestLog.latest(base).map(ManifestLog.snapshot(spark, base, _))
+      .getOrElse(latestPerUser(spark.read.parquet(dir + "/events.parquet").limit(0)))
     result.select(col("user_id"),
         col("last.ts").as("last_ts"), col("last.event_id").as("last_event_id"),
         col("last.event_type").as("last_type"), col("last.value").as("last_value"))

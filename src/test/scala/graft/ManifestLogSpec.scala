@@ -477,7 +477,7 @@ class ManifestLogSpec extends SparkSpecBase {
       ColumnDef("status", "status", "STRING")))
     val staged = stage(spark, base, "stream-e0",
       Seq((3L, 30L, "O")).toDF("k", "cents", "status"), Seq("k"))
-    val v1 = commitStreamEpoch(base, "query-evo", 0L, staged)
+    val v1 = commitStreamEpoch(base, "query-evo", 0L)(_ ++ staged)
     assert(v1.contains(1L))
     assert(manifest(base, 1L).exists(_.kind == "txn"))
     // data entries committed through the stream carry seq = the version

@@ -127,6 +127,14 @@ class StarSchemaParitySpec extends SparkSpecBase {
     assert(pct.toSeq === Seq(None, Some(-46.1), Some(-53.6), Some(-0.4)))
   }
 
+  test("trend pct-change is null, not DIVIDE_BY_ZERO, where the lag count is 0") {
+    // {DIVIDENT} alone leaves no BUY/SELL rows: every quarter's count is 0
+    val f = Dashboard.applyFilters(wh.wide, Some(("Q1", "Q4")), Some(Seq("DIVIDENT")))
+    val rows = Dashboard.buySellTrend(f).collect()
+    assert(rows.map(_.getAs[Long]("buy_sell_count")).toSeq === Seq(0L, 0L, 0L, 0L))
+    assert(rows.forall(_.isNullAt(rows.head.fieldIndex("pct_change"))))
+  }
+
   test("top-k with detail restricts to top keys (TK2/J5)") {
     val detail = Dashboard.topKWithDetail(wh.wide, "sector", 5)
     val keys = detail.select("sector").distinct().collect().map(_.getString(0)).toSet

@@ -389,9 +389,11 @@ class StreamingSpec extends SparkSpecBase {
       assert(chain(failure).exists(t =>
           Option(t.getMessage).exists(_.contains("injected failure"))),
         s"query died for an unexpected reason: $failure")
-      val committed = graft.io.CommitLog.committedVersions(base)
+      val committed = graft.io.ManifestLog.versions(base)
       assert(committed === Seq(0L),
         s"expected exactly batch 0's version committed before the crash, got $committed")
+      assert(graft.io.ManifestLog.lastStreamEpoch(base, EventStreams.UpsertTxn) === Some(0L),
+        "the head manifest must carry batch 0's epoch marker")
       // Run 2: same checkpoint, no failure — the engine must resume from
       // the WAL (re-executing the uncommitted batch 1, then batch 2), NOT
       // reprocess batch 0.

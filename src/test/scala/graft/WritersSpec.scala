@@ -132,13 +132,18 @@ class WritersSpec extends SparkSpecBase {
 
   test("q68 time travel: v0 stays readable after v1 commits; delta isolates the late day") {
     import graft.etl.IncrementalEtl
+    import graft.io.ManifestLog
     val (diff, out) = IncrementalEtl.snapshotDiff(spark, sf0001)
     val rows = diff.collect()
-    // both version directories coexist — committing v1 destroyed nothing
-    assert(new java.io.File(s"$out/v0").isDirectory)
-    assert(new java.io.File(s"$out/v1").isDirectory)
+    // both versions stay committed, and v1 (a full replace) shares no
+    // file with v0 — committing v1 destroyed nothing
+    assert(ManifestLog.versions(out) === Seq(0L, 1L))
+    val (files0, files1) = (ManifestLog.manifest(out, 0L), ManifestLog.manifest(out, 1L))
+    assert(files0.nonEmpty && files1.nonEmpty)
+    assert(files0.map(_.path).toSet.intersect(files1.map(_.path).toSet).isEmpty)
+    assert(files0.forall(e => new java.io.File(out, e.path).isFile))
     // v0 re-read AFTER the v1 commit equals the plain daily counts
-    val v0 = spark.read.parquet(s"$out/v0")
+    val v0 = ManifestLog.snapshot(spark, out, 0L)
       .collect().map(r => (r.getDate(0).toString, r.getString(1)) -> r.getAs[Long]("cnt"))
       .toMap
     val want = graft.io.Tables(spark, sf0001).events
@@ -168,22 +173,31 @@ class WritersSpec extends SparkSpecBase {
 
   test("q52 compaction: one file per day partition, contents bit-identical") {
     import graft.etl.IncrementalEtl
+    import graft.io.ManifestLog
     val (table, out) = IncrementalEtl.compactSmallFiles(spark, sf0001)
-    def filesPerDay(v: String): Map[String, Int] =
-      new java.io.File(s"$out/$v").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("event_date="))
-        .map(d => d.getName ->
-          d.listFiles().count(_.getName.endsWith(".parquet")))
-        .toMap
-    val before = filesPerDay("v0")
-    val after = filesPerDay("v1")
-    assert(before.size > 1, "need multiple day partitions")
-    assert(after.keySet === before.keySet, "compaction must keep every partition")
+    assert(ManifestLog.versions(out) === Seq(0L, 1L))
+    // days present in a version, as epoch days (the stats encoding of DATE)
+    def days(v: Long): Set[Long] =
+      ManifestLog.snapshot(spark, out, v)
+        .select(datediff(col("event_date"), lit("1970-01-01")).cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSet
+    // per day, the number of files whose event_date [min, max] stats cover it
+    def filesPerDay(v: Long): Map[Long, Int] = {
+      val spans = ManifestLog.manifest(out, v).filter(_.kind == "data").map { e =>
+        val s = e.stats("event_date")
+        (s.min.get.toLong, s.max.get.toLong)
+      }
+      days(v).map(d => d -> spans.count { case (lo, hi) => lo <= d && d <= hi }).toMap
+    }
+    val before = filesPerDay(0L)
+    val after = filesPerDay(1L)
+    assert(before.size > 1, "need multiple days")
+    assert(after.keySet === before.keySet, "compaction must keep every day")
     // ingest layout really was fragmented; compaction really collapsed it
     assert(before.values.sum > before.size,
       s"ingest produced no small files to compact: $before")
     assert(before.values.max > 1, before.toString)
-    after.foreach { case (day, n) => assert(n === 1, s"$day has $n files") }
+    after.foreach { case (day, n) => assert(n === 1, s"day $day spans $n files") }
     // identity: the compacted table equals the raw projection, row for row
     val want = graft.io.Tables(spark, sf0001).events
       .select(col("event_id"),
