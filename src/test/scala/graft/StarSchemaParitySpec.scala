@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.etl.StarSchema
@@ -111,15 +112,23 @@ class StarSchemaParitySpec extends SparkSpecBase {
     assert(r.toSeq === Seq(("Q1", 968L), ("Q2", 522L), ("Q3", 242L), ("Q4", 241L)))
   }
 
+  /** (key, transaction_type, cnt) rows, in output order. */
+  private def detailRows(df: DataFrame): Seq[(String, String, Long)] =
+    df.collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+
   test("top-3 symbols overall (streamlit.py:249-251)") {
-    val totals = wh.wide.groupBy(col("symbol")).agg(count(lit(1)).as("total"))
-      .orderBy(col("total").desc, col("symbol").asc).limit(3)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(totals.toSeq === Seq(("ARM", 100L), ("AMD", 97L), ("TSM", 80L)))
+    // totals ARM 100, AMD 97, TSM 80
+    assert(detailRows(Dashboard.topKWithDetail(wh.wide, "symbol", 3)) === Seq(
+      ("ARM", "BUY", 50L), ("ARM", "SELL", 50L),
+      ("AMD", "BUY", 49L), ("AMD", "SELL", 48L),
+      ("TSM", "BUY", 39L), ("TSM", "DIVIDENT", 3L), ("TSM", "SELL", 38L)))
   }
 
   test("trend pipeline lag/pct-change (streamlit.py:152-164)") {
     val rows = Dashboard.buySellTrend(wh.wide).collect()
+    assert(rows.map(_.getAs[String]("quarter")).toSeq === Seq("Q1", "Q2", "Q3", "Q4"))
+    assert(rows.map(_.getAs[Long]("total_count")).toSeq === Seq(999L, 542L, 268L, 260L))
+    assert(rows.map(_.getAs[Double]("buy_sell_pct")).toSeq === Seq(96.9, 96.3, 90.3, 92.7))
     val counts = rows.map(_.getAs[Long]("buy_sell_count"))
     assert(counts.toSeq === Seq(968L, 522L, 242L, 241L))
     val pct = rows.map(r =>
@@ -136,10 +145,17 @@ class StarSchemaParitySpec extends SparkSpecBase {
   }
 
   test("top-k with detail restricts to top keys (TK2/J5)") {
-    val detail = Dashboard.topKWithDetail(wh.wide, "sector", 5)
-    val keys = detail.select("sector").distinct().collect().map(_.getString(0)).toSet
-    assert(keys === Set("Technology", "Communication Services", "Healthcare",
-      "Consumer Cyclical", "Industrials"))
+    assert(detailRows(Dashboard.topKWithDetail(wh.wide, "sector", 5)) === Seq(
+      ("Technology", "BUY", 334L), ("Technology", "DIVIDENT", 18L),
+      ("Technology", "SELL", 376L),
+      ("Communication Services", "BUY", 120L), ("Communication Services", "DIVIDENT", 34L),
+      ("Communication Services", "SELL", 155L),
+      ("Healthcare", "BUY", 123L), ("Healthcare", "DIVIDENT", 11L),
+      ("Healthcare", "SELL", 126L),
+      ("Consumer Cyclical", "BUY", 118L), ("Consumer Cyclical", "DIVIDENT", 3L),
+      ("Consumer Cyclical", "SELL", 98L),
+      ("Industrials", "BUY", 101L), ("Industrials", "DIVIDENT", 14L),
+      ("Industrials", "SELL", 98L)))
   }
 
   test("quarter-range + type filters compose (streamlit.py:64-96)") {
