@@ -66,19 +66,16 @@ object Bench {
     * [[publishedMin]] — min over warm iterations), loadavg at query
     * start AND end, iterations actually run, every iteration's raw
     * seconds, and `cleanMin` — whether the published rate is
-    * CORROBORATED by an iteration that ran entirely under [[LoadGate]],
-    * above the I/O gate, and under the steal gate, at a time within
-    * [[CorroborationSlack]] of the published min. `cleanN` counts all
-    * clean iterations. The raw series is what makes one contended
-    * window reconcilable after the fact: per-iter seconds + load +
-    * write-probe + steal show whether a slow headline number was
-    * contention or a real plan regression. `allWmbps` carries the
-    * per-iteration buffered-write probe (MB/s, -1 = probe
-    * unavailable). */
+    * CORROBORATED by an iteration that ran entirely under [[LoadGate]]
+    * and under the steal gate, at a time within [[CorroborationSlack]]
+    * of the published min. `cleanN` counts all clean iterations. The
+    * raw series is what makes one contended window reconcilable after
+    * the fact: per-iter seconds + load + steal show whether a slow
+    * headline number was contention or a real plan regression. */
   final case class QueryTiming(name: String, sec: Double, qload1: Double,
       qload1End: Double, iters: Int, allSecs: Seq[Double],
       cleanMin: Boolean = true, gateRetries: Int = 0,
-      allWmbps: Seq[Double] = Nil, allSteal: Seq[Double] = Nil,
+      allSteal: Seq[Double] = Nil,
       cleanN: Int = 0, allClean: Seq[Boolean] = Nil)
 
   /** Warm up one-time JVM costs (codegen compiler, parquet reader,
@@ -101,21 +98,17 @@ object Bench {
     *
     * The noop sink forces full evaluation of every operator in the plan
     * (a bare count() would let Catalyst prune projections and sorts). */
-  /** The THREE-axis iteration gate, factored out for direct spec
+  /** The two-axis iteration gate, factored out for direct spec
     * coverage: an iteration is evidence about the PLAN only if it
-    * succeeded, ran entirely under the CPU [[LoadGate]], its
-    * write-throughput probe was not collapsed relative to the reference
-    * (`wRef`), and the HYPERVISOR did not steal more than
-    * [[StealGateFrac]] of the CPU across the iteration (round-12 axis:
-    * a host co-tenant showed as 10–22% steal in /proc/stat while
-    * loadavg sat at 2 and the disk probe read healthy — latency-bound
-    * streaming entries measured 4–6× slow with zero signal on the
-    * first two axes). Negative values mean "no signal" and pass. */
+    * succeeded, ran entirely under the CPU [[LoadGate]], and the
+    * HYPERVISOR did not steal more than [[StealGateFrac]] of the CPU
+    * across the iteration (round-12 axis: a host co-tenant showed as
+    * 10–22% steal in /proc/stat while loadavg sat at 2 — latency-bound
+    * streaming entries measured 4–6× slow with no signal in the load).
+    * Negative values mean "no signal" and pass. */
   private[graft] def iterClean(sec: Double, l0: Double, l1: Double,
-      w0: Double, wRef: Double, stealPct: Double = -1.0,
-      loadGate: Double = LoadGate): Boolean =
+      stealPct: Double = -1.0, loadGate: Double = LoadGate): Boolean =
     sec >= 0 && l0 <= loadGate && l1 <= loadGate &&
-      (w0 < 0 || wRef < 0 || w0 >= wRef * IoGateFrac) &&
       (stealPct < 0 || stealPct <= StealGateFrac)
 
   /** Steal fraction above which an iteration ran on a contended HOST.
@@ -149,39 +142,22 @@ object Bench {
     * workload class — the sf0.1 catalog sustains load1 ≈ 6–15 on this
     * box, but VecScale's 1M-vector tier drives all 32 threads to
     * load ≈ 25–30 BY ITSELF, and gating that self-load as "contention"
-    * would burn every retry and flag the whole tier (the steal and I/O
-    * axes still catch true co-tenants — the r12-class host neighbor
+    * would burn every retry and flag the whole tier (the steal axis
+    * still catches true co-tenants — the r12-class host neighbor
     * showed 10–22% steal at load 2). */
   private[graft] def timeCatalog(spark: SparkSession, sfDir: String,
-      only: Set[String] = Set.empty, wRefSeed: Double = -1.0,
+      only: Set[String] = Set.empty,
       loadGate: Double = LoadGate): Seq[QueryTiming] = {
     def loadNow: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // One iteration's context: seconds, loadavg at start/end, and the
-    // buffered-write probe at start. clean = ran entirely under the CPU
-    // gate AND with write throughput above the I/O gate. A negative
-    // loadavg / probe (platform unsupported) counts as clean on that
-    // axis — no gating signal exists there.
-    //
-    // I/O axis, RETIRED from the per-iteration gate in round 14: since
-    // this round the bench path is disk-free — every run-scoped layout,
-    // streaming checkpoint AND spark.local.dir (shuffle files) lives on
-    // tmpfs (TempLayouts/GraftSession), so a disk co-tenant can no
-    // longer slow a benched iteration, and the historical I/O-collapse
-    // regressions the axis was built for (r9: 347→84 MB/s, streaming
-    // entries 3–10× slow) are structurally impossible. The probe itself
-    // was also the largest disk writer in the harness — ~1,000
-    // iterations × 16 MB + fsync ≈ 16 GB per catalog run, enough to
-    // drain a burst-credit cloud disk by mid-run (both r14 baseline
-    // runs decayed 450→70 MB/s), which then poisoned the axis that was
-    // supposed to be the control. Run-level start/end probes remain as
-    // host telemetry, judged against the seeded committed baseline
-    // (wRef = ioBaseline(), fixed for the run); per-iteration w0
-    // records -1 (no signal → the I/O term of [[iterClean]] passes;
-    // the load and steal axes still gate).
-    final case class Iter(sec: Double, l0: Double, l1: Double, w0: Double,
-        steal: Double)
-    val wRef = wRefSeed
+    // steal fraction across it. A negative loadavg / steal (platform
+    // unsupported) counts as clean on that axis — no gating signal
+    // exists there. There is no disk axis: every run-scoped layout,
+    // streaming checkpoint and spark.local.dir lives on tmpfs
+    // (TempLayouts/GraftSession), so a disk co-tenant cannot slow a
+    // benched iteration.
+    final case class Iter(sec: Double, l0: Double, l1: Double, steal: Double)
     var gateBudget = GateRetryBudget
     // benchQueries, not queries: identical key set, but entries whose
     // VERIFIED plan embeds oracle apparatus (q22/q56's exact twin) are
@@ -197,7 +173,6 @@ object Bench {
       val qLoad = loadNow
       def runOnce(): Iter = {
         val l0 = loadNow
-        val w0 = -1.0 // per-iteration disk probe retired (see above)
         val cj0 = cpuJiffies()
         val t0 = System.nanoTime()
         val sec =
@@ -212,12 +187,10 @@ object Bench {
             InternalCaches.releaseAll()
             spark.catalog.clearCache()
           }
-        Iter(sec, l0, loadNow, w0, stealFrac(cj0, cpuJiffies()))
+        Iter(sec, l0, loadNow, stealFrac(cj0, cpuJiffies()))
       }
-      // wRef is the fixed seeded baseline for the whole run (the
-      // max-seen ratchet and the per-iteration probe are both retired)
       def clean(it: Iter): Boolean =
-        iterClean(it.sec, it.l0, it.l1, it.w0, wRef, it.steal, loadGate)
+        iterClean(it.sec, it.l0, it.l1, it.steal, loadGate)
       val base = (1 to Iters).map(_ => runOnce())
       var iters =
         if (base.forall(_.sec >= 0) && base.map(_.sec).min < 1.0)
@@ -244,7 +217,7 @@ object Bench {
       QueryTiming(name, sec,
         qLoad, loadNow, times.length, times,
         cleanMin = isClean,
-        gateRetries = retries, allWmbps = iters.map(_.w0),
+        gateRetries = retries,
         allSteal = iters.map(_.steal), cleanN = cleanN,
         allClean = flags)
     }
@@ -260,7 +233,7 @@ object Bench {
     * min-of-clean; early r14: min-of-clean-warm): **min over the WARM
     * iterations, with cleanliness as corroboration, not selection.**
     *
-    * Rationale: contention (CPU, disk, hypervisor steal) can only
+    * Rationale: contention (CPU, hypervisor steal) can only
     * INFLATE an iteration's wall time, never deflate it — so the min
     * over warm iterations is the tightest available upper bound on the
     * plan's true cost, and discarding a faster iteration because its
@@ -269,7 +242,7 @@ object Bench {
     * r13's min-of-clean published q61's 4.30 s cold layout build over
     * its 0.53 s warm rate; min-of-clean-warm published q87's 4.83 s
     * cold iteration over a CONSISTENT 0.82–0.92 s warm band whose every
-    * probe a noisy I/O reference had flagged (r14 baseline run).
+    * iteration a noisy gate had flagged (r14 baseline run).
     *
     * Returns (sec, corroborated, cleanN):
     *   - any failed iteration → (-1, true, 0) — a failure is never a
@@ -305,72 +278,6 @@ object Bench {
       (sec, corroborated, cleanFlags.count(identity))
     }
 
-  /** Buffered-write-and-fsync throughput probe (MB/s): the I/O axis of
-    * the contention telemetry AND (since round 10) of the iteration
-    * gate. loadavg catches CPU co-tenants, but a co-tenant saturating
-    * the disk is INVISIBLE in load while doubling every
-    * RocksDB-checkpoint / file-sink query (the r9 local adjudication
-    * measured streaming entries 2× apart between two idle-load windows
-    * whose buffered-write speed differed ~6×; the r9 official artifact
-    * decayed 347→84 MB/s mid-run). Run start/end use [[RunProbeMb]];
-    * per-iteration probes use the cheaper [[IterProbeMb]] so ~700
-    * probes cost well under a minute at healthy throughput. */
-  private[graft] val RunProbeMb = 64
-  private[graft] val IterProbeMb = 16
-
-  /** An iteration whose start probe lands under this fraction of the
-    * best probe seen this run ran during an I/O collapse. Half is the
-    * r9 calibration: the observed co-tenant windows were 2–6× slowdowns
-    * (347→84), while healthy probe jitter stayed within ~±25%. */
-  private[graft] val IoGateFrac = 0.5
-
-  private[graft] def diskWriteMbps(mb: Int = RunProbeMb): Double =
-    try {
-      val tmp = java.nio.file.Files.createTempFile("graft-bench-io", ".bin")
-      val buf = java.nio.ByteBuffer.allocate(1 << 20)
-      val ch = java.nio.channels.FileChannel.open(tmp,
-        java.nio.file.StandardOpenOption.WRITE)
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < mb) { buf.rewind(); ch.write(buf); i += 1 }
-      ch.force(true); ch.close()
-      val sec = (System.nanoTime() - t0) / 1e9
-      java.nio.file.Files.delete(tmp)
-      math.round(mb / sec * 10) / 10.0
-    } catch { case _: Throwable => -1.0 }
-
-  /** The box's demonstrated clean-disk write throughput (MB/s), persisted
-    * in the repo so a run that STARTS degraded still knows what healthy
-    * looks like (the best in-run probe can't — r11's official artifact
-    * gated against its own collapsed 117 MB/s). No signal → -1 (gate
-    * falls back to best-probe-this-run only).
-    *
-    * PER-HOST (round-13 advisory): the committed figure is one machine's
-    * measurement; on a host whose genuine clean throughput is lower,
-    * seeding it would stall every startup in [[startupIoGate]] and flag
-    * every iteration unclean at the box's healthy steady state. So the
-    * committed value applies only when its recorded `host` matches this
-    * machine's hostname (legacy files without a host field keep applying
-    * — they were written BY this box's round history). Any other host
-    * gets no cross-run signal unless `GRAFT_IO_BASELINE_MBPS` supplies its
-    * own measured figure (the env override also wins over the file). */
-  private[graft] def ioBaseline(): Double = {
-    val env = sys.env.get("GRAFT_IO_BASELINE_MBPS").flatMap(_.toDoubleOption)
-    if (env.isDefined) return env.get
-    try {
-      val p = java.nio.file.Paths.get("docs", "io_baseline.json")
-      val s = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val hostOk = """"host"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(s) match {
-        case Some(m) => m.group(1) == java.net.InetAddress.getLocalHost.getHostName
-        case None => true // legacy file: no host recorded, keep old behavior
-      }
-      if (!hostOk) return -1.0
-      val m = """"wmbps_clean"\s*:\s*([0-9.]+)""".r
-      m.findFirstMatchIn(s).map(_.group(1).toDouble).getOrElse(-1.0)
-    } catch { case _: Throwable => -1.0 }
-  }
-
   /** Startup LOAD gate (round-13 verdict item 8): the r13 official run
     * started with load1 = 11.3 and a second JVM alive — the per-
     * iteration gate caught the worst windows, but the whole run carried
@@ -401,20 +308,13 @@ object Bench {
     (l, waited, l > StartLoadGate)
   }
 
-  /** io_degraded annotation threshold against the recorded clean-disk
-    * baseline. The r11-era startup I/O WAIT (block until the disk
-    * recovers) is retired with the per-iteration probe — the bench path
-    * is disk-free since round 14, so disk state is telemetry, not a
-    * precondition. */
-  private[graft] val StartGateFrac = 0.6
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional args = run only the named queries (local iteration aid,
     // same convention as Verify; the driver passes none).
     val only = args.toSet
-    // default to the full 32-thread harness width (GraftSession.cpus):
-    // an unset env var must not quietly benchmark at local[4]
+    // the core grant GraftSession.local runs at (32 when unset): stamps
+    // the per-cpu detail file
     val cpus = GraftSession.cpus
     val load1 = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
@@ -426,29 +326,15 @@ object Bench {
         Seq("pgrep", "java").!!.trim.split("\\s+").count(p =>
           p.nonEmpty && p.toLong != self)
       } catch { case _: Throwable => -1 }
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
     // the load gate protects the OFFICIAL full-catalog artifact; a
     // named-query iteration run (local debugging) starts immediately —
     // its numbers are not the published surface
     val (load1Post, loadWaitSec, loadDegraded) =
       if (only.isEmpty) startupLoadGate()
       else (load1, 0L, load1 > StartLoadGate)
-    val baseline = ioBaseline()
-    // disk telemetry only since round 14 (the bench path is disk-free —
-    // tmpfs scratch/checkpoints/spark.local.dir): one probe, no waiting.
-    // io_degraded still annotates the artifact so host-disk state stays
-    // reconcilable against history, but it gates nothing.
-    val wmbps = diskWriteMbps()
-    val ioWaitSec = 0L
-    val ioDegraded = baseline > 0 && wmbps >= 0 && wmbps < baseline * StartGateFrac
     warmUp(spark, sfDir)
-    val results = timeCatalog(spark, sfDir, only, wRefSeed = baseline)
-    val wmbpsEnd = diskWriteMbps()
+    val results = timeCatalog(spark, sfDir, only)
     val qs = results.map(r => s"\"" + r.name + "\":" + r.sec)
       .mkString("{", ",", "}")
     val qloads = results.map(r =>
@@ -466,10 +352,6 @@ object Bench {
     val qclean = results.map(r => s"\"" + r.name + "\":" + r.cleanMin)
       .mkString("{", ",", "}")
     val qcleanN = results.map(r => s"\"" + r.name + "\":" + r.cleanN)
-      .mkString("{", ",", "}")
-    val qwmbps = results.map(r =>
-      s"\"" + r.name + "\":" + r.allWmbps.map(w =>
-        math.round(w * 10) / 10.0).mkString("[", ",", "]"))
       .mkString("{", ",", "}")
     val qsteal = results.map(r =>
       s"\"" + r.name + "\":" + r.allSteal.map(v =>
@@ -489,17 +371,14 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""sf":"$sfDir","iters":$Iters,"agg":"min","failed":$failed,""" +
         s""""load1":$load1,"otherJvms":$otherJvms,""" +
-        s""""wmbps":$wmbps,"wmbps_end":$wmbpsEnd,""" +
-        s""""io_baseline":$baseline,"io_wait_sec":$ioWaitSec,""" +
-        s""""io_degraded":$ioDegraded,""" +
-        s""""load_gate":$LoadGate,"io_gate_frac":$IoGateFrac,""" +
+        s""""load_gate":$LoadGate,""" +
         s""""gate_retries":$gateRetries,""" +
         s""""unclean":$unclean,"qclean":$qclean,"qclean_n":$qcleanN,""" +
         s""""agg_policy":"min_of_warm_corroborated",""" +
         s""""load1_postgate":$load1Post,"load_wait_sec":$loadWaitSec,""" +
         s""""load_degraded":$loadDegraded,"load_start_gate":$StartLoadGate,""" +
         s""""qload1":$qloads,"qload1_end":$qloadsEnd,""" +
-        s""""qsecs":$qsecs,"qiters":$qiters,"qwmbps":$qwmbps,""" +
+        s""""qsecs":$qsecs,"qiters":$qiters,""" +
         s""""qsteal":$qsteal,"qcleanflags":$qcleanflags}"""
     // The per-query detail goes to target/bench.json (local iteration) AND
     // to a repo-root copy OUTSIDE .gitignore: the official BENCH_r{N}
@@ -527,10 +406,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
         s""""failed":$failed,"sf":"$sfDir","iters":$Iters,"agg":"min",""" +
         s""""load1":$load1,"otherJvms":$otherJvms,""" +
-        s""""wmbps":$wmbps,"wmbps_end":$wmbpsEnd,""" +
-        s""""io_baseline":$baseline,"io_wait_sec":$ioWaitSec,""" +
-        s""""io_degraded":$ioDegraded,""" +
-        s""""load_gate":$LoadGate,"io_gate_frac":$IoGateFrac,""" +
+        s""""load_gate":$LoadGate,""" +
         s""""steal_gate":$StealGateFrac,""" +
         s""""gate_retries":$gateRetries,""" +
         s""""unclean":$unclean,"agg_policy":"min_of_warm_corroborated",""" +

@@ -42,6 +42,19 @@ object PlanAudit {
     self + kids.map(onePartitionWindows).sum
   }
 
+  /** Run `df`'s OWN QueryExecution (its executedPlan's RDD, every
+    * operator) and return it, so its plan is the FINAL adaptive plan:
+    * AQE's coalesced exchanges, runtime join strategies and reused
+    * stages. A `df.write` or `df.count()` would execute a different,
+    * internal QueryExecution and leave this one pre-adaptive
+    * (`isFinalPlan=false`). The one way the plan mains read plans. */
+  private[graft] def executed(
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.QueryExecution = {
+    val qe = df.queryExecution
+    qe.executedPlan.execute().count(): Unit
+    qe
+  }
+
   /** Audit one live (already-executed) plan for every cataloged query —
     * the reusable core of [[main]], also driven by PlanBudgetSpec for
     * the 1pW guard. */
@@ -72,12 +85,7 @@ object PlanAudit {
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val row =
         try {
-          val df = fn(spark, dir)
-          // drive THIS QueryExecution's plan (a write would re-plan a
-          // clone): AQE only finalizes + codegen-annotates after running
-          val qe = df.queryExecution
-          qe.executedPlan.execute().count()
-          val (p, w1p) = auditPlan(qe)
+          val (p, w1p) = auditPlan(executed(fn(spark, dir)))
           def n(pat: String) = pat.r.findAllIn(p).size
           // "Exchange" counts both shuffle and broadcast exchanges; keep
           // only shuffles so the column means "data movement over keys"

@@ -4,8 +4,10 @@ import java.nio.file.{Files, Paths}
 
 /** Generates docs/PLANS.md: the formatted physical plans of the flagship
   * queries with commentary — the ".explain and iterate until it's the
-  * plan you'd want" evidence, kept in-repo. Regenerate with
-  * `sbt "runMain graft.PlanDump"`. */
+  * plan you'd want" evidence, kept in-repo. Each query runs first
+  * ([[PlanAudit.executed]]), so every section is the final adaptive
+  * plan (`isFinalPlan=true`): the joins and exchanges that actually ran.
+  * Regenerate with `sbt "runMain graft.PlanDump"`. */
 object PlanDump {
 
   private val picks: Seq[(String, String)] = Seq(
@@ -16,8 +18,9 @@ object PlanDump {
         |top-k never global-sorts.""".stripMargin,
     "q08_star_denormalize" ->
       """The whole star joined in one plan: every dimension edge is a
-        |`BroadcastHashJoin` (no shuffle); the only exchange is the
-        |fact⋈orders join. No output sort — the checker order-normalizes,
+        |`BroadcastHashJoin`, and at sf0.001 AQE broadcasts the
+        |1,500-row orders side of the fact⋈orders join too, so the final
+        |plan has no shuffle exchange at all. No output sort — the checker order-normalizes,
         |and a total sort of the denormalized fact would be the plan's
         |only scale-killer.""".stripMargin,
     "q26_grouped_topk_agg" ->
@@ -41,9 +44,11 @@ object PlanDump {
         |merge (`sorted_intersect_size`), no per-pair set objects.""".stripMargin,
     "q25_reference_etl" ->
       """The reference's entire ETL as one lazy plan: schema-first CSV
-        |scans, broadcast semi-join orphan cleanup, dim builds, FK
-        |assignment and the wide re-join — every dimension edge a
-        |`BroadcastHashJoin`.""".stripMargin,
+        |scans, broadcast semi-join orphan cleanup, dim builds and ONE
+        |star join whose projection is the wide table — every dimension
+        |edge a `BroadcastHashJoin`. The wide table reads no surrogate
+        |id, so no `row_number` window runs; the only shuffles are the
+        |three small `distinct` dim builds.""".stripMargin,
     "d02_dedup_minhash_lsh" ->
       """MinHash+LSH: `minhash_signature` (native one-pass expression)
         |over cached shingles, band explode, self-join on (band, sig)
@@ -68,9 +73,9 @@ object PlanDump {
         |variable lookups — not CollapseProject re-inlines), one generator
         |projection, zero hash exchanges before the output sort.""".stripMargin,
     "t09_tfidf_terms" ->
-      """TF-IDF: tf and df are partial+final hash aggregates, the
-        |vocabulary-sized df frame comes back as a `BroadcastHashJoin`,
-        |corpus size attaches as a 1-row `BroadcastNestedLoopJoin`; only
+      """TF-IDF: tf and df are partial+final hash aggregates joined by a
+        |`BroadcastHashJoin` (at sf0.001 AQE broadcasts the (doc, term)
+        |tf side, `BuildLeft`, and streams the df frame), corpus size attaches as a 1-row `BroadcastNestedLoopJoin`; only
         |the per-doc rank windows over the already-reduced (doc, term)
         |frame.""".stripMargin,
     "q76_agg_summary_rewrite" ->
@@ -117,12 +122,14 @@ object PlanDump {
     sb.append("# Flagship physical plans (sf0.001, local)\n\n")
     sb.append("Generated by `sbt \"runMain graft.PlanDump\"` — do not edit by hand.\n")
     picks.foreach { case (name, commentary) =>
-      val df = graft.queries.Catalog.queries(name)(spark, dir)
+      val qe = PlanAudit.executed(graft.queries.Catalog.queries(name)(spark, dir))
       sb.append(s"\n## $name\n\n")
       sb.append(commentary.replaceAll("\n", " ")).append("\n\n```\n")
-      sb.append(df.queryExecution.explainString(
+      sb.append(qe.explainString(
         org.apache.spark.sql.execution.FormattedMode))
       sb.append("```\n")
+      InternalCaches.releaseAll()
+      spark.catalog.clearCache()
     }
     Files.createDirectories(Paths.get("docs"))
     Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)

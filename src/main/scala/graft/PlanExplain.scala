@@ -8,16 +8,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * for every query an optimization touched).
   *
   * Usage: `runMain graft.PlanExplain <outDir> <suffix> <query...>`
-  * (suffix = "before" | "after"). Each query's OWN QueryExecution is
-  * executed (its executedPlan's RDD materialized) so the dump carries
-  * the FINAL adaptive plan — AQE's coalesced exchanges, runtime join
-  * strategy changes and reused stages are what the bench actually
-  * pays. Round-15 fix (r14 advisory): the previous `df.write(noop)`
-  * spawned its own internal QueryExecution, leaving the dumped
-  * `df.queryExecution.executedPlan` un-executed — every r14 artifact's
-  * "final adaptive plan" section showed `isFinalPlan=false`
-  * placeholders. The formatted (pre-execution) plan is appended too:
-  * it is where `PushedFilters` / `ReadSchema` read cleanest.
+  * (suffix = "before" | "after"). Each query runs through
+  * [[PlanAudit.executed]] so the dump carries the FINAL adaptive plan —
+  * AQE's coalesced exchanges, runtime join strategy changes and reused
+  * stages are what the bench actually pays. The formatted plan is
+  * appended too: it is where `PushedFilters` / `ReadSchema` read
+  * cleanest.
   *
   * Times the noop run as a convenience breadcrumb (NOT bench
   * methodology — no warm iterations, no gate; use `graft.Bench` for
@@ -32,18 +28,14 @@ object PlanExplain {
     Files.createDirectories(outDir)
     val spark = GraftSession.local("plan-explain")
     try {
-      warm(spark, sfDir)
+      Bench.warmUp(spark, sfDir)
       names.foreach { name =>
         val fn = SparkEntry.benchQueries.getOrElse(name,
           sys.error(s"unknown catalog query: $name"))
         spark.sparkContext.setJobDescription(s"plan-explain: $name")
         val df = fn(spark, sfDir)
-        val qe = df.queryExecution
         val t0 = System.nanoTime()
-        // materialize THIS QueryExecution's plan (every operator runs,
-        // AQE finalizes); a noop df.write would execute a different,
-        // internal QueryExecution and leave this one pre-adaptive
-        qe.executedPlan.execute().count(): Unit
+        val qe = PlanAudit.executed(df)
         val sec = (System.nanoTime() - t0) / 1e9
         val formatted = qe.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -54,7 +46,7 @@ object PlanExplain {
              |
              |== Executed (final adaptive) plan ==
              |$fin
-             |== Formatted (pre-execution) plan ==
+             |== Formatted plan ==
              |$formatted""".stripMargin
         Files.write(outDir.resolve(s"${name}_$suffix.txt"),
           body.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -65,7 +57,4 @@ object PlanExplain {
       }
     } finally spark.stop()
   }
-
-  private def warm(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit =
-    Bench.warmUp(spark, sfDir)
 }

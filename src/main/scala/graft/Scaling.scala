@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-curve measurement: run the whole catalog at EVERY provided
   * scale factor in one JVM and report each query's full-range time
   * ratio next to the data ratio — converting the plan-shape arguments
@@ -42,13 +40,7 @@ object Scaling {
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
     require(dirs.size >= 2, "need at least two SF dirs")
-    val cpus = GraftSession.cpus
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scaling")
 
     def rows(dir: String, t: String): Long =
       try spark.read.parquet(s"$dir/$t.parquet").count()

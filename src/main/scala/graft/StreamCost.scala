@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming harness cost attribution (round-8 verdict item 6): the nine
   * streaming catalog queries together are ~20s of every bench, and a
   * drift in "streaming seconds" was previously unattributable — was it
@@ -38,13 +36,7 @@ object StreamCost {
     val sfDir = args.lift(0).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val outMd = args.lift(1).getOrElse("docs/STREAM_COST.md")
-    val cpus = GraftSession.cpus
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-stream-cost")
     Bench.warmUp(spark, sfDir)
 
     val rows = StreamingQueries.map { name =>

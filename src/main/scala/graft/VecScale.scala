@@ -147,13 +147,7 @@ object VecScale {
 
   def main(args: Array[String]): Unit = {
     val outMd = args.headOption.getOrElse("docs/SCALING_VEC.md")
-    val cpus = GraftSession.cpus
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-vecscale")
 
     val sizes = EmbSizes.zip(DocSizes)
     val dirs = sizes.map { case (ne, nd) => s"target/vecscale/e${ne}_d$nd" }
@@ -166,7 +160,7 @@ object VecScale {
     // burn every retry, and let min-of-all publish cold layout builds
     // at exactly the tier the ratios are measured from. 1.25×cpus
     // clears demonstrated self-load; TRUE co-tenants still trip the
-    // steal (>8%) and I/O-collapse axes, which are load-independent.
+    // steal (>8%) axis, which is load-independent.
     val selfLoadGate = 1.25 * Runtime.getRuntime.availableProcessors
     val timed = dirs.map { d =>
       Bench.warmUp(spark, d)
@@ -201,7 +195,7 @@ object VecScale {
          |builds never publish), one warmed JVM, smallest size first.
          |CPU gate calibrated to the sweep's own 32-thread self-load
          |(1.25×cpus — the 1M tier alone sustains load1 ≈ 25–30);
-         |steal/I/O axes unchanged, so true co-tenants still flag.
+         |steal axis unchanged, so true co-tenants still flag.
          |
          |Sizes: embeddings ${EmbSizes.mkString(" / ")} vectors,
          |documents ${DocSizes.mkString(" / ")} docs — a **${dataRatio.toInt}×

@@ -92,35 +92,39 @@ object StarSchema {
     Dims(time, geography, symbolDim, txType)
   }
 
-  /** Fact build — ref etl.ipynb:101–165: FK assignment via equi-joins
-    * (J1; all dims broadcast), then the factless projection/casts
-    * (P1/P2/X3: Unit and Date dropped). */
-  def buildFact(account: DataFrame, dims: Dims): DataFrame =
+  /** Star join — ref etl.ipynb:101–192: FK assignment via equi-joins
+    * (J1; all dims broadcast). The fact and the wide serving table are
+    * two projections of this ONE joined frame: the reference's J2
+    * re-join of the fact to the same dims would only recover the
+    * strings this frame already carries. */
+  def joinDims(account: DataFrame, dims: Dims): DataFrame = {
+    // renamed: account's `Symbol` collides with it case-insensitively
+    val symbol = dims.symbol.withColumnRenamed("symbol", "dim_symbol")
     account
       .join(broadcast(dims.time), Seq("quarter"))
-      .join(broadcast(dims.symbol), account("Symbol") === dims.symbol("symbol"))
+      .join(broadcast(symbol), account("Symbol") === symbol("dim_symbol"))
       .join(broadcast(dims.geography),
-        dims.symbol("country_mapped") === dims.geography("country_name"))
+        symbol("country_mapped") === dims.geography("country_name"))
       .join(broadcast(dims.transactionType),
         account("TransactionType") === dims.transactionType("transaction_type"))
-      .select(
-        col("IDTransaction").cast("long").as("transaction_id"),
-        col("time_id").cast("int").as("time_id"),
-        col("geography_id").cast("int").as("geography_id"),
-        col("symbol_id").cast("int").as("symbol_id"),
-        col("transaction_type_id").cast("int").as("transaction_type_id"))
+  }
 
-  /** Wide serving table — ref etl.ipynb:169–192: re-join fact with all
-    * dims (J2) and project the 7 string columns the dashboard reads. */
-  def buildWide(fact: DataFrame, dims: Dims): DataFrame =
-    fact
-      .join(broadcast(dims.time), Seq("time_id"), "left")
-      .join(broadcast(dims.geography), Seq("geography_id"), "left")
-      .join(broadcast(dims.symbol), Seq("symbol_id"), "left")
-      .join(broadcast(dims.transactionType), Seq("transaction_type_id"), "left")
-      .select(col("quarter"), col("country_name"), col("symbol"),
-        col("company_name"), col("sector"), col("industry"),
-        col("transaction_type"))
+  /** Fact — ref etl.ipynb:151–165: the factless projection/casts of the
+    * star join (P1/P2/X3: Unit and Date dropped). */
+  def factOf(star: DataFrame): DataFrame =
+    star.select(
+      col("IDTransaction").cast("long").as("transaction_id"),
+      col("time_id").cast("int").as("time_id"),
+      col("geography_id").cast("int").as("geography_id"),
+      col("symbol_id").cast("int").as("symbol_id"),
+      col("transaction_type_id").cast("int").as("transaction_type_id"))
+
+  /** Wide serving table — ref etl.ipynb:169–192: the 7 string columns
+    * the dashboard reads; `symbol` comes from the symbol dim. */
+  def wideOf(star: DataFrame): DataFrame =
+    star.select(col("quarter"), col("country_name"),
+      col("dim_symbol").as("symbol"), col("company_name"), col("sector"),
+      col("industry"), col("transaction_type"))
 
   /** Full pipeline from the raw CSV directory (ref etl.ipynb top-to-
     * bottom). Catalyst sees each output as one plan: scans → semi-join →
@@ -131,7 +135,7 @@ object StarSchema {
     val symbols = CsvDialects.readSymbols(spark, s"$rawDir/symbols.csv")
     val account = withQuarter(dropOrphanSymbols(accountRaw, symbols))
     val dims = buildDims(account, symbols)
-    val fact = buildFact(account, dims)
-    Warehouse(dims, fact, buildWide(fact, dims))
+    val star = joinDims(account, dims)
+    Warehouse(dims, factOf(star), wideOf(star))
   }
 }

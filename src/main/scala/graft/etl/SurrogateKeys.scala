@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §7.4: the parity policy reproduces the reference exactly but
   * funnels the dimension through one partition — correct and cheap for
   * dims (4…3,194 rows; any real dimension under ~10M), wrong for a
-  * billion-row dimension. The scale policies trade contiguity for full
+  * billion-row dimension. The scale policy keeps dense ids at full
   * parallelism.
   */
 object SurrogateKeys {
@@ -21,13 +21,7 @@ object SurrogateKeys {
   def sortedRowNumber(key: Column): Column =
     row_number().over(Window.orderBy(key)).cast("int")
 
-  /** Scale policy A: stable content-hash ids. Fully parallel, no sort,
-    * ids are stable under re-runs and appends (a new dim row never
-    * changes existing ids). Not dense; collision probability ~n²/2⁶⁴
-    * (negligible below billions of keys). */
-  def hashKey(key: Column): Column = xxhash64(key)
-
-  /** Scale policy B: dense ids without a global sort. Range-repartition +
+  /** Scale policy: dense ids without a global sort. Range-repartition +
     * sort-within-partitions by key, stamp `monotonically_increasing_id()`
     * (= partitionId << 33 | local row index, so both components are
     * recoverable with bit ops), aggregate per-partition counts (one tiny

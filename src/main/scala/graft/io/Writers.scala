@@ -16,11 +16,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object Writers {
 
-  /** Single-file CSV, reference-parity sink (small outputs only). */
-  def csvSingleFile(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("header", "true").csv(path)
-
   /** Quarter-partitioned parquet — the serving layout for the wide
     * table; dashboard quarter filters prune partitions at plan time. */
   def wideTablePartitioned(wide: DataFrame, path: String): Unit =
@@ -35,21 +30,12 @@ object Writers {
   def partitionedParquet(df: DataFrame, path: String, cols: String*): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(cols: _*).parquet(path)
 
-  /** Bucketed managed table for shuffle-free joins on `bucketCol`.
-    * (Bucketing requires saveAsTable — the bucket metadata lives in the
-    * catalog.) */
-  def bucketedTable(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Bucketed EXTERNAL table: bucket metadata in the (in-memory) session
-    * catalog, data files at `path` — so the layout's disk lifecycle can
-    * be owned by [[TempLayouts]] like every other JVM-scoped layout
-    * instead of accumulating in the default warehouse dir. The input is
+  /** Bucketed EXTERNAL table for shuffle-free joins on `bucketCol`
+    * (bucketing requires saveAsTable): bucket metadata in the (in-memory)
+    * session catalog, data files at `path` — so the layout's disk
+    * lifecycle can be owned by [[TempLayouts]] like every other
+    * JVM-scoped layout instead of accumulating in the default warehouse
+    * dir. The input is
     * pre-shuffled into exactly `buckets` partitions on the bucket column:
     * `repartition(buckets, col)` and the bucketed-write hash are the same
     * Murmur3-mod, so each task holds exactly one bucket's rows and each

@@ -84,9 +84,8 @@ class PlanBudgetSpec extends SparkSpecBase {
     "q93_basket_pairs"              -> (8, 3, 0, 1, 1))
 
   private def finalPlan(name: String): String = {
-    val df = Catalog.queries(name)(spark, sf0001)
-    df.collect()
-    val s = df.queryExecution.executedPlan.toString
+    val s = PlanAudit.executed(Catalog.queries(name)(spark, sf0001))
+      .executedPlan.toString
     val cut = s.indexOf("== Initial Plan ==")
     val p = if (cut >= 0) s.substring(0, cut) else s
     InternalCaches.releaseAll()
@@ -106,7 +105,6 @@ class PlanBudgetSpec extends SparkSpecBase {
   private val onePartWindowAllowlist: Map[String, String] = Map(
     "q04_trend_pct_change" -> "lag over the ≤8-row quarter dimension",
     "q09_dim_surrogate_keys" -> "row_number over the ≤7-row parity dimension",
-    "q25_reference_etl" -> "reference-ETL parity replay: 8 windows over the reference's own dimension tables (2,069-row corpus)",
     "q89_kmv_set_ops" -> "bit assignment over the 5-row event-type dimension")
 
   test("1pW guard: no catalog entry outside the allowlist has a single-partition window") {
@@ -137,9 +135,7 @@ class PlanBudgetSpec extends SparkSpecBase {
     // live sanity of PlanAudit.onePartitionWindows — the audit column is
     // only as good as the walker
     def count(name: String): Int = {
-      val df = Catalog.queries(name)(spark, sf0001)
-      val qe = df.queryExecution
-      qe.executedPlan.execute().count()
+      val qe = PlanAudit.executed(Catalog.queries(name)(spark, sf0001))
       val n = PlanAudit.onePartitionWindows(qe.executedPlan)
       InternalCaches.releaseAll(); spark.catalog.clearCache()
       n

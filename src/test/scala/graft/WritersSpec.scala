@@ -301,29 +301,28 @@ class WritersSpec extends SparkSpecBase {
   }
 
   test("bucketed tables join without a shuffle on the bucket key") {
-    spark.sql("DROP TABLE IF EXISTS graft_fact_b")
-    spark.sql("DROP TABLE IF EXISTS graft_dim_b")
-    // a killed prior JVM can leave the managed locations behind without
-    // catalog entries — clear them so CTAS doesn't refuse
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq("graft_fact_b", "graft_dim_b").foreach { t =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh, t))
-    }
+    // external tables under a run-scoped scratch dir: nothing lands in
+    // the default warehouse dir of the checkout
+    val dir = graft.io.TempLayouts.scratch("graft_bucketed_")
     val fact = (1L to 1000L).map(i => (i % 50, s"v$i")).toDF("k", "v")
     val dim = (0L until 50L).map(i => (i, s"d$i")).toDF("k", "d")
-    Writers.bucketedTable(fact, "graft_fact_b", "k", 8)
-    Writers.bucketedTable(dim, "graft_dim_b", "k", 8)
-
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
+      Writers.bucketedExternalTable(fact, "graft_fact_b", s"$dir/fact", "k", 8)
+      Writers.bucketedExternalTable(dim, "graft_dim_b", s"$dir/dim", "k", 8)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val j = spark.table("graft_fact_b")
         .join(spark.table("graft_dim_b"), Seq("k"))
       val plan = j.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed join still shuffles:\n$plan")
       assert(j.count() === 1000)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      spark.sql("DROP TABLE IF EXISTS graft_fact_b")
+      spark.sql("DROP TABLE IF EXISTS graft_dim_b")
+      graft.io.TempLayouts.discard(dir)
+    }
   }
 
   test("q62 equi-depth z-order: bounded bucket mass under skew + two-dim skipping") {
