@@ -33,7 +33,7 @@ object DedupOps {
   private val Bands = 8
   private val RowsPerBand = 4
   /** Words per shingle. */
-  private val ShingleWords = 5
+  private[graft] val ShingleWords = 5
   /** Max docs per LSH bucket before it is dropped as degenerate. */
   private val MaxBucket = 64
 
@@ -137,26 +137,14 @@ object DedupOps {
     * materialized engine-side (token ranges feed the digest directly);
     * downstream Jaccard verification runs on the sorted hash sets via
     * the native O(n+m) merge. Values equal string-shingle Jaccard
-    * modulo 64-bit collisions (negligible). [[shingledHof]] remains the
-    * HOF cross-check for the xxhash64 family still used by d05's edge
-    * generator ([[shingleJaccardEdges]]). */
+    * modulo 64-bit collisions (negligible). The test-scope
+    * `graft.HofReference.shingledHof` remains the HOF cross-check for the
+    * xxhash64 family still used by d05's edge generator
+    * ([[shingleJaccardEdges]]). */
   private def shingled(corpus: DataFrame): DataFrame =
     corpus.select(col("doc_id"),
       call_function("word_ngram_md5_hashes", col("text"), lit(ShingleWords))
         .as("shingles"))
-
-  /** The pre-native HOF formulation of [[shingled]] — spec cross-check
-    * only (interpreted lambda dispatch per gram makes it the measured
-    * per-row bottleneck of the dedup family at corpus scale). */
-  private[graft] def shingledHof(corpus: DataFrame): DataFrame =
-    corpus
-      .withColumn("th", expr("transform(regexp_extract_all(text, '\\\\S+', 0), t -> xxhash64(t))"))
-      .withColumn("shingles", expr(
-        s"""array_sort(array_distinct(transform(
-           |  sequence(1, greatest(size(th) - ${ShingleWords - 1}, 1)),
-           |  i -> aggregate(slice(th, i, $ShingleWords), ${graft.functions.expressions.NgramHashes.Seed}L,
-           |         (acc, h) -> (shiftleft(acc, 13) | shiftrightunsigned(acc, 51)) ^ h))))""".stripMargin))
-      .select(col("doc_id"), col("shingles"))
 
   /** MinHash signature over the shingle hashes via the native one-pass
     * k-permutation expression
@@ -319,24 +307,6 @@ object DedupOps {
         col("best").getField("jaccard").as("best_jaccard"))
       .orderBy(col("train_id"))
   }
-
-  /** 64-bit SimHash over word tokens — HOF reference formulation (per-bit
-    * ±1 sums over token hashes, thresholded to a bit vector). Kept as the
-    * cross-check for the native [[simhashSignature]]; tests assert the
-    * packed bits equal the native long. */
-  def withSimhashBits(corpus: DataFrame): DataFrame =
-    corpus
-      .withColumn("toks", tokens(col("text")))
-      .withColumn("th",
-        transform(array_distinct(col("toks")),
-          t => call_function("md5_prefix64", t)))
-      .withColumn("sums", expr(
-        """aggregate(th, array_repeat(0L, 64),
-          |  (acc, h) -> zip_with(acc,
-          |     transform(sequence(0, 63), b -> IF((shiftright(h, b) & 1) = 1, 1L, -1L)),
-          |     (x, y) -> x + y))""".stripMargin))
-      .withColumn("bits", expr("transform(sums, s -> IF(s >= 0, 1, 0))"))
-      .select(col("doc_id"), col("bits"))
 
   /** SimHash as ONE long per document (native codegen'd
     * [[graft.functions.expressions.SimHash64]]): Hamming distance becomes

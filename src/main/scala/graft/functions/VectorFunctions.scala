@@ -30,15 +30,11 @@ object VectorFunctions {
   /** Cosine similarity in double precision — the codegen'd native
     * expression ([[graft.functions.expressions.CosineSimilarity]],
     * registered by [[graft.GraftExtensions]]); single primitive loop
-    * inside whole-stage codegen, bit-identical to
-    * [[cosineSimilarityHof]]. */
+    * inside whole-stage codegen, bit-identical to the HOF formulation
+    * `dotProduct(a, b) / (l2Norm(a) * l2Norm(b))` (the test-scope
+    * `graft.HofReference.cosineSimilarityHof` cross-checks it). */
   def cosineSimilarity(a: Column, b: Column): Column =
     call_function("cosine_similarity", a, b)
-
-  /** HOF reference formulation of cosine (kept as the cross-check for
-    * the native expression and for sessions without GraftExtensions). */
-  def cosineSimilarityHof(a: Column, b: Column): Column =
-    dotProduct(a, b) / (l2Norm(a) * l2Norm(b))
 
   /** Hamming distance of two int-array signatures (native codegen'd
     * expression via GraftExtensions). */

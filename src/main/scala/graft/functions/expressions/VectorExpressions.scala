@@ -35,7 +35,7 @@ private[expressions] object VectorExpressions {
   *
   * Accumulates dot and both norms in index order in double precision —
   * bit-compatible with the HOF formulation it replaces
-  * ([[graft.functions.VectorFunctions.cosineSimilarityHof]]), which the
+  * (the test-scope `graft.HofReference.cosineSimilarityHof`), which the
   * ScalaTest cross-checks. Array elements must be non-null.
   */
 case class CosineSimilarity(left: Expression, right: Expression)

@@ -64,7 +64,7 @@ class DedupSpec extends SparkSpecBase {
 
     // ground truth hamming for planted pairs, from the HOF reference
     // bit-vector formulation (independent of the native simhash64 path)
-    val sig = DedupOps.withSimhashBits(corpus)
+    val sig = HofReference.withSimhashBits(corpus)
     val a = sig.filter(col("doc_id") < 100000L)
       .select(col("doc_id").as("doc_a"), col("bits").as("ba"))
     val b = sig.filter(col("doc_id") >= 100000L)
@@ -171,7 +171,7 @@ class DedupSpec extends SparkSpecBase {
 
   test("native simhash64 long equals the packed HOF bit-vector signature") {
     val corpus = docs.limit(100).select(col("doc_id"), col("text"))
-    val bits = DedupOps.withSimhashBits(corpus).collect()
+    val bits = HofReference.withSimhashBits(corpus).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         r.getSeq[Int](r.fieldIndex("bits")).zipWithIndex
           .map { case (bit, i) => if (bit == 1) 1L << i else 0L }
@@ -238,7 +238,7 @@ class DedupSpec extends SparkSpecBase {
     val nat = docs.select(col("doc_id"),
         call_function("word_ngram_hashes", col("text"), lit(5)).as("shingles"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val hof = DedupOps.shingledHof(docs.select("doc_id", "text"))
+    val hof = HofReference.shingledHof(docs.select("doc_id", "text"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(nat.keySet === hof.keySet)
     nat.foreach { case (id, s) => assert(s === hof(id), s"word grams diverge for doc $id") }
@@ -262,7 +262,7 @@ class DedupSpec extends SparkSpecBase {
     val en = edge.select(col("doc_id"),
         call_function("word_ngram_hashes", col("text"), lit(5)).as("s"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val eh = DedupOps.shingledHof(edge)
+    val eh = HofReference.shingledHof(edge)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     en.foreach { case (id, s) => assert(s === eh(id), s"edge case doc $id diverges") }
   }
@@ -307,7 +307,7 @@ class DedupSpec extends SparkSpecBase {
     def timeIt(f: => Unit): Double = { val t0 = System.nanoTime; f; (System.nanoTime - t0) / 1e9 }
     val runNat = () => big.select(call_function("word_ngram_hashes", col("text"), lit(5)))
       .foreach(_ => ())
-    val runHof = () => DedupOps.shingledHof(big).foreach(_ => ())
+    val runHof = () => HofReference.shingledHof(big).foreach(_ => ())
     runNat(); runHof() // codegen/plan warmup for both paths
     val tNat = (1 to 3).map(_ => timeIt(runNat())).min
     val tHof = (1 to 3).map(_ => timeIt(runHof())).min

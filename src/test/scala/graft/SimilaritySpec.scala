@@ -24,13 +24,13 @@ class SimilaritySpec extends SparkSpecBase {
   test("native cosine_similarity expression is bit-identical to the HOF formulation") {
     val both = emb.limit(100).select(
       VectorFunctions.cosineSimilarity(col("embedding"), col("embedding")).as("native"),
-      VectorFunctions.cosineSimilarityHof(col("embedding"), col("embedding")).as("hof"))
+      HofReference.cosineSimilarityHof(col("embedding"), col("embedding")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() === 0)
     val cross = emb.limit(50).crossJoin(
         emb.limit(50).select(col("embedding").as("e2")))
       .select(
         VectorFunctions.cosineSimilarity(col("embedding"), col("e2")).as("native"),
-        VectorFunctions.cosineSimilarityHof(col("embedding"), col("e2")).as("hof"))
+        HofReference.cosineSimilarityHof(col("embedding"), col("e2")).as("hof"))
     assert(cross.filter(col("native") =!= col("hof")).count() === 0)
   }
 

@@ -113,8 +113,8 @@ class TextSpec extends SparkSpecBase {
     val toks = regexp_extract_all(lower(col("text")), lit("\\S+"), lit(0))
     val rows = docs.select(
       call_function("top_repeat_counts", toks).as("rc"),
-      graft.text.TextOps.maxRepeatHof(toks).cast("long").as("tt_hof"),
-      graft.text.TextOps.maxRepeatHof(graft.text.TextOps.bigramsOfHof(toks))
+      HofReference.maxRepeatHof(toks).cast("long").as("tt_hof"),
+      HofReference.maxRepeatHof(HofReference.bigramsOfHof(toks))
         .cast("long").as("tb_hof"))
       .collect()
     assert(rows.length === 500)
@@ -146,8 +146,8 @@ class TextSpec extends SparkSpecBase {
       }
       val nativeCol = call_function("top_repeat_counts", col("toks"))
       val hofCol = struct(
-        graft.text.TextOps.maxRepeatHof(col("toks")).cast("long"),
-        graft.text.TextOps.maxRepeatHof(graft.text.TextOps.bigramsOfHof(col("toks")))
+        HofReference.maxRepeatHof(col("toks")).cast("long"),
+        HofReference.maxRepeatHof(HofReference.bigramsOfHof(col("toks")))
           .cast("long"))
       run(nativeCol) // JIT warmup for the native path
       val (tNative, vNative) = (1 to 3).map(_ => run(nativeCol)).minBy(_._1)
