@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.graftbridge.PlanBridge.{CacheEntry, Prepared}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** The reference dashboard's query pipelines (ref streamlit.py) over the
   * wide serving table (`quarter, country_name, symbol, company_name,
@@ -34,23 +35,28 @@ import org.apache.spark.sql.graftbridge.PlanBridge.{CacheEntry, Prepared}
   * Prepared-plan policy: a widget change re-runs every chart with new
   * filter values only, so over a cached table each chart is planned
   * once and each call binds its values.
-  *  - Key: the cache entry the input reads (by identity: re-caching makes
-  *    a new entry), the input's plan over that entry with its parameter
-  *    values blanked, the chart, `groupCol` and `k`.
-  *  - Bound: the quarter range and the types of [[applyFilters]] over a
-  *    cached input, and the country and quarter of the two Query
-  *    Analysis charts. A call whose key is known builds no intermediate
-  *    Dataset: it rebinds the values into copies of the stored analyzed
-  *    and physical plans, so nothing is analyzed, optimized, planned or
-  *    compiled again.
-  *  - Dropped: when the session's cache no longer serves its entry
-  *    (`unpersist`), checked on every miss and on every call over an
-  *    uncached input; past `MaxTemplates`, the least recently used.
+  *  - Bound: the quarter range and the types of [[applyFilters]], and
+  *    the country and quarter of the two Query Analysis charts, are
+  *    always bound parameters, never literals, whatever the input.
+  *  - Key: the session's SQL settings (a plan prepared under one
+  *    session's ANSI or codegen settings does not run under another's),
+  *    the cache entry the input reads (by identity: re-caching makes a
+  *    new entry), the input's plan over that entry with its parameter
+  *    values blanked, the chart, `groupCol` and `k`. A call whose key is
+  *    known builds no intermediate Dataset: it rebinds the values into
+  *    copies of the stored analyzed and physical plans, so nothing is
+  *    analyzed, optimized, planned or compiled again. A key whose chart
+  *    cannot be prepared is stored too, and is planned afresh each call.
+  *  - Dropped: past `MaxTemplates`, the least recently used. A template
+  *    whose entry was unpersisted is never hit again (no input resolves
+  *    to that entry any more), and a chart bound before the `unpersist`
+  *    and run after it is planned afresh when it runs, so it reads the
+  *    source and does not rebuild the cache.
   *  - Not adaptive: each chart is one stage with no exchange (the
   *    one-partition policy), so AQE has nothing to re-plan; the plan is
   *    fixed, which is what lets values be rebound into it.
   * An input that reads no cached relation (a local relation, a parquet
-  * scan) is planned afresh on every call with literal values, as before.
+  * scan) is planned afresh on every call.
   */
 object Dashboard {
 
@@ -62,46 +68,38 @@ object Dashboard {
     * charts), so 64 holds several tables'. */
   private val MaxTemplates = 64
 
-  private final case class Key(entry: CacheEntry, shape: LogicalPlan, chart: String,
-      groupCol: String, k: Int)
+  private final case class Key(conf: Map[String, String], entry: CacheEntry,
+      shape: LogicalPlan, chart: String, groupCol: String, k: Int)
 
-  /** Prepared charts by key, least recently used first. */
-  private val templates = new java.util.LinkedHashMap[Key, Prepared](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[Key, Prepared]): Boolean =
-      size() > MaxTemplates
-  }
-
-  /** Drops the templates whose cache entry the session no longer serves. */
-  private def dropStale(wide: DataFrame): Unit = templates.synchronized {
-    if (!templates.isEmpty) {
-      val dead = templates.values.toArray(Array.empty[Prepared]).map(_.entry).distinct
-        .filterNot(_.live(wide.sparkSession)).toSet
-      templates.values.removeIf(t => dead(t.entry))
+  /** Prepared charts by key (None: the chart cannot be prepared), least
+    * recently used first. */
+  private val templates =
+    new java.util.LinkedHashMap[Key, Option[Prepared]](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, Option[Prepared]]): Boolean =
+        size() > MaxTemplates
     }
-  }
 
-  /** Every chart runs through here. Over an input that reads a cached
-    * relation, the chart is planned once per (cache entry, input plan
-    * with its parameter values blanked, chart, `groupCol`, `k`) and each
-    * call binds `args` and the input's own parameters into copies of
-    * that plan; any other input builds the chart afresh with `args` as
-    * literals. `build` makes the chart from the input and its arguments. */
+  /** Every chart runs through here, with its own arguments `args` as
+    * bound string parameters. Over an input that reads a cached relation,
+    * the chart is planned once per key and each call binds `args` and the
+    * input's own parameters into copies of that plan; any other input
+    * builds the chart afresh. `build` makes the chart from the input and
+    * its parameter columns. */
   private def chart(wide: DataFrame, name: String, groupCol: String = "", k: Int = 0,
-      args: Seq[Any] = Nil)(build: (DataFrame, Seq[Column]) => DataFrame): DataFrame =
-    PlanBridge.cachedInput(wide) match {
-      case None =>
-        dropStale(wide)
-        build(wide, args.map(lit))
-      case Some(in) =>
-        val key = Key(in.entry, in.shape, name, groupCol, k)
-        templates.synchronized(Option(templates.get(key))).orElse {
-          dropStale(wide)
-          val params = args.map(PlanBridge.param)
-          val t = PlanBridge.prepare(build(wide, params), in, wide, params)
-          t.foreach(t => templates.synchronized(templates.put(key, t)))
-          t
-        }.fold(build(wide, args.map(lit)))(_.bind(wide, in, args))
+      args: Seq[String] = Nil)(build: (DataFrame, Seq[Column]) => DataFrame): DataFrame = {
+    val params = args.map(PlanBridge.param(_, StringType))
+    PlanBridge.cachedInput(wide).fold(build(wide, params)) { in =>
+      val key = Key(wide.sparkSession.conf.getAll, in.entry, in.shape, name, groupCol, k)
+      templates.synchronized(Option(templates.get(key))) match {
+        case Some(t) => t.fold(build(wide, params))(_.bind(wide, in, params))
+        case None =>
+          val c = build(wide, params)
+          val t = PlanBridge.prepare(c, in, wide, params)
+          templates.synchronized(templates.put(key, t))
+          t.fold(c)(_.bind(wide, in, params))
+      }
     }
+  }
 
   /** Every chart plan starts here. `coalesce(1)` adds no shuffle, and
     * its `SinglePartition` output satisfies the distribution that each
@@ -115,22 +113,19 @@ object Dashboard {
   def quarterOrd(q: Column): Column = substring(q, 2, 1).cast("int")
 
   /** F2+F6 — streamlit.py:44–49, 62–75: contiguous quarter range +
-    * type-membership filters. Over a cached input the values are bound
-    * parameters, so the charts over the result reuse their plans; the
-    * type set is one array parameter, so every set size shares them. */
+    * type-membership filters. The values are bound parameters, so the
+    * charts over the result reuse their plans; the type set is one array
+    * parameter, so every set size shares them. */
   def applyFilters(
       wide: DataFrame,
       quarterRange: Option[(String, String)],
       types: Option[Seq[String]]): DataFrame = {
-    val cached = PlanBridge.cachedInput(wide).isDefined
-    val value: Any => Column = if (cached) PlanBridge.param else lit
     val q = quarterRange.fold(wide) { case (lo, hi) =>
-      wide.filter(quarterOrd(col("quarter"))
-        .between(quarterOrd(value(lo)), quarterOrd(value(hi))))
+      wide.filter(quarterOrd(col("quarter")).between(
+        quarterOrd(PlanBridge.param(lo, StringType)), quarterOrd(PlanBridge.param(hi, StringType))))
     }
     types.fold(q)(ts => q.filter(
-      if (cached) array_contains(PlanBridge.param(ts.toArray), col("transaction_type"))
-      else col("transaction_type").isin(ts: _*)))
+      array_contains(PlanBridge.param(ts, ArrayType(StringType)), col("transaction_type"))))
   }
 
   /** A4+A5+F1+F5 — streamlit.py:101–119: the five metric cards in one

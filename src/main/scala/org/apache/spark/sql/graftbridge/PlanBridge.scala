@@ -39,12 +39,14 @@ object PlanBridge {
 
   private val nextParam = new AtomicLong()
 
-  /** `value` as a bound parameter: a column a plan can be prepared over
-    * once and then re-run with other values. */
-  def param(value: Any): Column = {
-    val l = Literal(value)
-    ExpressionUtils.column(BoundParam(nextParam.incrementAndGet(), l.value, l.dataType))
-  }
+  /** `value` (of `dataType`, possibly null) as a bound parameter: a
+    * column a plan can be prepared over once and then re-run with other
+    * values. */
+  def param(value: Any, dataType: DataType): Column = ExpressionUtils.column(
+    BoundParam(nextParam.incrementAndGet(), Literal.create(value, dataType).value, dataType))
+
+  private def boundParam(c: Column): BoundParam =
+    ExpressionUtils.expression(c).asInstanceOf[BoundParam]
 
   /** A cache entry, compared by identity: re-caching the same plan makes
     * a new entry, and a plan prepared over the old one must not match. */
@@ -55,8 +57,9 @@ object PlanBridge {
     }
     override def hashCode: Int = System.identityHashCode(builder)
 
-    /** The session's `CacheManager` still serves this entry. */
-    def live(spark: SparkSession): Boolean =
+    /** The session's `CacheManager` still serves this entry: its scan
+      * reads the cache, not a rebuilt copy of it. */
+    private[graftbridge] def live(spark: SparkSession): Boolean =
       session(spark).sharedState.cacheManager.lookupCachedData(session(spark), builder.logicalPlan)
         .exists(_.cachedRepresentation.cacheBuilder eq builder)
   }
@@ -94,23 +97,23 @@ object PlanBridge {
   /** A chart planned once over a cached input: its analyzed plan with the
     * input cut out at `hole`, its physical plan, and the ids of the
     * parameters they carry (the input's, then the chart's own). */
-  final class Prepared private[graftbridge] (val entry: CacheEntry, hole: LogicalPlan,
+  final class Prepared private[graftbridge] (entry: CacheEntry, hole: LogicalPlan,
       analyzed: LogicalPlan, executed: SparkPlan, ids: Seq[Long]) {
 
     /** A DataFrame over `input` (which reads `in`) with the parameters
-      * bound to `in`'s values and the chart's own `args`. Builds no
-      * Dataset but the returned one and plans nothing: both plans are
-      * copies of the prepared ones. */
-    def bind(input: DataFrame, in: CachedInput, args: Seq[Any]): DataFrame = {
+      * bound to `in`'s values and those of the chart's own [[param]]
+      * columns `args`. Builds no Dataset but the returned one and plans
+      * nothing: both plans are copies of the prepared ones. */
+    def bind(input: DataFrame, in: CachedInput, args: Seq[Column]): DataFrame = {
       val spark = session(input.sparkSession)
-      val byId = ids.zip(in.values ++ args.map(Literal(_).value)).toMap
+      val byId = ids.zip(in.values ++ args.map(boundParam(_).value)).toMap
       def rebind[T <: QueryPlan[T]](p: T): T = p.transformAllExpressions {
         case b: BoundParam if byId.contains(b.id) => b.copy(value = byId(b.id))
       }
       val inPlan = logicalPlan(input)
       spark.withActive {
         val plan = rebind(analyzed).transformUp { case h if h eq hole => inPlan }
-        val qe = new PreparedExecution(spark, plan, rebind(executed.clone()))
+        val qe = new PreparedExecution(spark, plan, entry, rebind(executed.clone()))
         new classic.Dataset[Row](qe, () => RowEncoder.encoderFor(plan.schema): Encoder[Row])
       }
     }
@@ -132,18 +135,23 @@ object PlanBridge {
     val analyzed = cut(qe.analyzed)
     val executed = QueryExecution.prepareExecutedPlan(spark, qe.sparkPlan)
     val scans = executed.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
-    val argIds = args.map(ExpressionUtils.expression(_).asInstanceOf[BoundParam].id)
+    val argIds = args.map(boundParam(_).id)
     if (found && scans.size == 1 && (scans.head eq input.entry.builder))
       Some(new Prepared(input.entry, hole, analyzed, executed, input.ids ++ argIds))
     else None
   }
 
   /** A query whose plans are given: nothing is analyzed, optimized or
-    * planned again. */
+    * planned again. The physical plan scans `entry`, so it is used only
+    * if the session still serves that entry when the plan is first read
+    * (a DataFrame bound before an `unpersist` and run after it would
+    * otherwise rebuild the cache outside the `CacheManager`); else the
+    * analyzed plan is planned the ordinary way. */
   private final class PreparedExecution(spark: classic.SparkSession, plan: LogicalPlan,
-      physical: SparkPlan) extends QueryExecution(spark, plan) {
+      entry: CacheEntry, physical: SparkPlan) extends QueryExecution(spark, plan) {
     override def analyzed: LogicalPlan = plan
-    override def executedPlan: SparkPlan = physical
+    private lazy val chosen = if (entry.live(spark)) physical else super.executedPlan
+    override def executedPlan: SparkPlan = chosen
   }
 }
 
@@ -151,10 +159,11 @@ object PlanBridge {
   * plan. It is never foldable, so the optimizer leaves it in place, and
   * its generated code reads the value from this object (through
   * `CodegenFallback`), so code generated for one value compiles once and
-  * serves every other. */
+  * serves every other. It is always nullable, so a null value can be
+  * bound into any plan prepared over it. */
 case class BoundParam(id: Long, value: Any, dataType: DataType)
     extends LeafExpression with CodegenFallback {
-  override def nullable: Boolean = false
+  override def nullable: Boolean = true
   override def foldable: Boolean = false
   override def eval(input: InternalRow): Any = value
   override def toString: String = s"param#$id($value)"
