@@ -52,8 +52,7 @@ object StreamCost {
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         val wallMs = (System.nanoTime() - t0) / 1000000L
-        val st = streaming.EventStreams.lastRunStats.getOrElse(name,
-          streaming.EventStreams.StreamRunStats(0, Seq.empty, "?", 0L))
+        val st = streaming.EventStreams.lastRunStats(name)
         InternalCaches.releaseAll()
         spark.catalog.clearCache()
         (wallMs, n, st)
@@ -73,7 +72,8 @@ object StreamCost {
     md ++= "iteration costs). `exec` = Σ triggerExecution over all\n"
     md ++= "micro-batches (the streaming engine, including state commit —\n"
     md ++= "`commit` is its state-commit share); `setup` = wall − exec\n"
-    md ++= "(checkpoint dirs on /tmp, query-thread start/stop, sink read);\n"
+    md ++= "(checkpoint dirs under TempLayouts.root — /dev/shm when it has\n"
+    md ++= "room — query-thread start/stop, sink read);\n"
     md ++= "`cold` = the first run's wall, whose surcharge over warm is\n"
     md ++= "one-time JVM cost (encoder derivation, split staging, class\n"
     md ++= "loading) that min-of-3 never sees. A future drift in streaming\n"

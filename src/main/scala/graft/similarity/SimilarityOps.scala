@@ -463,7 +463,7 @@ object SimilarityOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     var centroids = svecs.filter(col("vec_id") < k)
       .select(col("sub"), col("vec_id").as("code"), col("sq").as("c_sq"))
-    (1 to iters).foreach { _ =>
+    (1 to iters).foreach { round =>
       val assigned = svecs.join(broadcast(centroids), Seq("sub"))
         .groupBy(col("vec_id"), col("sub"))
         .agg(
@@ -481,8 +481,13 @@ object SimilarityOps {
       // M×K rows: LAZY checkpoint truncates the plan immediately (the
       // LogicalRDD replaces the round's whole lineage) while deferring
       // materialization to the next round's broadcast collect — one job
-      // per round instead of two.
-      centroids = means.localCheckpoint(false)
+      // per round instead of two. The LAST round's checkpoint is eager:
+      // callers broadcast the returned codebooks from two jobs that run
+      // at once (the encode join and the query distance table); a lazy
+      // checkpoint computed by both is marked checkpointed when the
+      // first job ends, which drops the lineage — and the SQL metrics —
+      // that the other job's tasks still report to.
+      centroids = means.localCheckpoint(round == iters)
     }
     centroids
   }

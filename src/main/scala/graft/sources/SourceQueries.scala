@@ -1,9 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.io.Tables
 import graft.queries.GraftQuery
+import graft.streaming.EventStreams
+import graft.streaming.EventStreams.StateConf
 
 /** Catalog entries for the native DataSource V2 connector ([[JsonlSource]]).
   */
@@ -171,33 +174,23 @@ object SourceQueries {
       "readStream over the native DSv2 source, 1-file micro-batches (parquet-side oracle)",
       (spark, dir) => {
         val out = eventsBacklog3(spark, dir)
-        val ss = spark.newSession()
-        // 5 event-type groups: 2 state partitions (EventStreams' r15
-        // cardinality-sized policy — fixed per-partition commit cost);
-        // complete mode, no watermark → the no-data finalization
-        // trigger does nothing, skip it (same policy as q27/q31)
-        ss.conf.set("spark.sql.shuffle.partitions", "2")
-        ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        val q = ss.readStream
-          .format("graft.sources.JsonlSource")
-          .schema(eventsFeedSchema)
-          .option("maxFilesPerTrigger", "1")
-          .load(out)
-          .groupBy(col("event_type"))
-          // distinct aggregates are (correctly) unsupported on streams —
-          // the distinct story is q22/q66's sketches; here min/max/sum
-          .agg(count(lit(1)).as("n"),
-            sum(col("value_micros")).as("sum_value_micros"),
-            min(col("event_id")).as("min_event_id"),
-            max(col("event_id")).as("max_event_id"))
-          .writeStream
-          .format("memory").queryName("q100_sink")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.EventStreams.record("q100_stream_dsv2_source", q, ss)
-        ss.table("q100_sink").orderBy(col("event_type"))
+        // 5 event-type groups: 2 state partitions (EventStreams' sizing
+        // policy); complete mode, no watermark → skip the no-data batch
+        EventStreams.runToMemory(spark, "q100_stream_dsv2_source",
+          StateConf(2, rocksDb = false, noDataBatch = false), OutputMode.Complete()) { ss =>
+          ss.readStream
+            .format("graft.sources.JsonlSource")
+            .schema(eventsFeedSchema)
+            .option("maxFilesPerTrigger", "1")
+            .load(out)
+            .groupBy(col("event_type"))
+            // distinct aggregates are (correctly) unsupported on streams —
+            // the distinct story is q22/q66's sketches; here min/max/sum
+            .agg(count(lit(1)).as("n"),
+              sum(col("value_micros")).as("sum_value_micros"),
+              min(col("event_id")).as("min_event_id"),
+              max(col("event_id")).as("max_event_id"))
+        }.orderBy(col("event_type"))
       },
       Some(
         """SELECT event_type,
@@ -295,23 +288,19 @@ object SourceQueries {
           s"q108_base#$canon", "graft_q108_manifest_")(_ => ())
         val ckpt = graft.io.TempLayouts.replacing(
           s"q108_ckpt#$canon", "graft_q108_ckpt_")(_ => ())
-        val ss = spark.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = ss.readStream
-          .format("graft.sources.JsonlSource")
-          .schema(eventsFeedSchema)
-          .option("maxFilesPerTrigger", "1")
-          .load(backlog)
-          .writeStream
-          .format("graft.sources.ManifestStreamSink")
-          .option("path", base)
-          .option("statsCols", "event_id")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        graft.streaming.EventStreams.record("q108_stream_manifest_sink", q, ss)
+        EventStreams.runStream(spark, "q108_stream_manifest_sink",
+          StateConf(8, rocksDb = false, noDataBatch = true), Some(ckpt)) { ss =>
+          ss.readStream
+            .format("graft.sources.JsonlSource")
+            .schema(eventsFeedSchema)
+            .option("maxFilesPerTrigger", "1")
+            .load(backlog)
+            .writeStream
+            .format("graft.sources.ManifestStreamSink")
+            .option("path", base)
+            .option("statsCols", "event_id")
+            .outputMode("append")
+        }
         // one version per 1-file epoch → head is v2; its snapshot must
         // equal the batch answer over the whole backlog
         val v = ManifestLog.latest(base).getOrElse(

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import java.sql.Timestamp
 
@@ -71,16 +71,16 @@ object EventStreams {
     * item 3): every state partition costs a FIXED per-micro-batch
     * commit (HDFS-backed: delta write + fsync; RocksDB: instance
     * open/load + changelog commit — measured ~100 ms task-time per
-    * partition-commit in docs/STREAM_COST.md), so partition counts are
-    * sized to each entry's DECLARED key cardinality instead of one
-    * default: 2 for the tiny-cardinality aggregations (≤ 5 event
-    * types / 25 segments / 3.6k hour-type groups), 4 for the
-    * 1.5k-user and corpus-keyed dedup states, 8 kept where state is
-    * genuinely large (q50/q73's ~95k session rows). The parameter
-    * stays on every entry point: an unbounded production deployment
-    * sizes it to key cardinality × throughput (the count is frozen
-    * into the checkpoint at first start), which is exactly the
-    * exercise this sizing performs at this scale. Results are
+    * partition-commit in docs/STREAM_COST.md; at the session default of
+    * 32 partitions one 100k-row q27 batch spent 23.5 s of task time in
+    * state commit vs 71 ms at 1 partition). So each entry's count is a
+    * constant, its [[StateConf]], sized to that entry's DECLARED key
+    * cardinality: 2 for the tiny-cardinality aggregations and joins
+    * (≤ 5 event types / 25 segments / 3.6k hour-type groups), 4 for the
+    * 1.5k-user and corpus-keyed dedup states, 8 where state is genuinely
+    * large (q50/q73's ~95k session rows). A deployment with other key
+    * cardinality × throughput changes the constant (the count is frozen
+    * into the checkpoint at first start). Results are
     * partition-count-invariant (oracle-checked). */
 
   // split dirs are JVM-scoped (one per source dataset) and removed on
@@ -180,21 +180,23 @@ object EventStreams {
 
   /** Progress evidence from the most recent run of each streaming catalog
     * query: micro-batch count (batches that read input), total state rows
-    * after each batch, and the state-store provider class — what
+    * after each batch, the state-store provider class and the state
+    * operators' partition count (0 without a state operator) — what
     * StreamingSpec asserts to prove state actually survives across
-    * triggers. */
+    * triggers under each entry's [[StateConf]]. */
   final case class StreamRunStats(
       nBatches: Int, stateRowsPerBatch: Seq[Long], provider: String,
+      statePartitions: Long,
       commitMsTotal: Long,
-      inputRowsPerBatch: Seq[Long] = Seq.empty,
-      droppedByWatermarkPerBatch: Seq[Long] = Seq.empty,
-      triggerMsTotal: Long = 0L,
-      nStateOps: Int = 0,
+      inputRowsPerBatch: Seq[Long],
+      droppedByWatermarkPerBatch: Seq[Long],
+      triggerMsTotal: Long,
+      nStateOps: Int,
       // per-phase durationMs summed over ALL triggers (addBatch,
       // queryPlanning, walCommit, latestOffset, getBatch, commitOffsets,
       // triggerExecution) — the §1 profile the r14 verdict asked for
       // before touching the micro-batch floor
-      phaseMsTotal: Map[String, Long] = Map.empty)
+      phaseMsTotal: Map[String, Long])
 
   @volatile private var runStats: Map[String, StreamRunStats] = Map.empty
   def lastRunStats: Map[String, StreamRunStats] = runStats
@@ -214,13 +216,75 @@ object EventStreams {
   private def freshCkpt(tag: String): String =
     graft.io.TempLayouts.replacing(s"ckpt#$tag", s"graft_ckpt_${tag}_")(_ => ())
 
-  /** Public recorder for streaming catalog entries that live OUTSIDE
-    * this module (the DSv2 source/sink entries q100/q108 in
-    * graft.sources) so StreamCost's exec/setup attribution covers them
-    * too. */
-  def record(name: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      ss: SparkSession): Unit = recordRun(name, q, ss)
+  /** An entry's short tag ("q27" for "q27_events_hourly_stream"): names
+    * its checkpoint and memory sink. */
+  private def tagOf(name: String): String = name.takeWhile(_ != '_')
+
+  /** A streaming entry's state settings — constants of the entry, applied
+    * by [[streamSession]], which says why each exists. */
+  private[graft] final case class StateConf(partitions: Int, rocksDb: Boolean,
+      noDataBatch: Boolean)
+
+  /** The isolated session (shared SparkContext, own SQLConf) a streaming
+    * entry runs in — the only `newSession()` for a stream. The streaming
+    * engine clones the session ON THE QUERY THREAD, so setting conf on
+    * the caller's session and restoring it after start() would race with
+    * that clone, and would leak into a concurrent caller.
+    *  - `partitions` sets `spark.sql.shuffle.partitions`, the state-store
+    *    partition count (sizing policy above).
+    *  - `rocksDb` selects [[useRocksDb]]: transformWithState runs only
+    *    on it, and the dedup states grow with the event-id space.
+    *    Stream-stream joins stay HDFS-backed: join state format v3 (one
+    *    RocksDB store with virtual column families instead of four
+    *    HDFS-backed stores per partition) benched 1.2–1.6× SLOWER in
+    *    round 14 (q36 4.9→5.9 s, q69 3.5→5.5 s, q90 3.8→4.9 s), because
+    *    at ≤ tens of KB per store the HDFS-backed provider is an in-heap
+    *    map with a tmpfs delta write, while each RocksDB instance pays
+    *    JNI open/load/commit per partition per batch. The crossover is
+    *    state size, not store count.
+    *  - `noDataBatch = false` disables `noDataMicroBatches`: in a
+    *    complete-mode entry with no watermark the AvailableNow no-data
+    *    finalization trigger has no state to finalize and emits nothing,
+    *    so its full walCommit/plan/commit cycle is skipped (round 15;
+    *    results invariant, oracle-checked). Watermarked/append entries
+    *    keep it: it is what flushes their final windows. */
+  private def streamSession(spark: SparkSession, conf: StateConf): SparkSession = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", conf.partitions.toString)
+    if (conf.rocksDb) useRocksDb(ss)
+    if (!conf.noDataBatch)
+      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    ss
+  }
+
+  /** Runs one streaming catalog entry to completion: `writer` builds the
+    * entry's query in its [[streamSession]] and configures it up to the
+    * sink; the runner adds the checkpoint (`ckpt`, else a [[freshCkpt]]
+    * for the entry), the `AvailableNow` trigger (process the bounded
+    * backlog, then stop), starts it, waits, and records its progress
+    * under `name` — also when the query fails, so a crashed run's
+    * batches are visible. Returns the session the query ran in. */
+  private[graft] def runStream(spark: SparkSession, name: String, conf: StateConf,
+      ckpt: Option[String])(writer: SparkSession => DataStreamWriter[_]): SparkSession = {
+    val ss = streamSession(spark, conf)
+    val q = writer(ss)
+      .option("checkpointLocation", ckpt.getOrElse(freshCkpt(tagOf(name))))
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination()
+    finally recordRun(name, q, ss)
+    ss
+  }
+
+  /** [[runStream]] for an entry whose `query` lands in a memory sink
+    * (named after the entry's tag) in `mode`; returns the sink table. */
+  private[graft] def runToMemory(spark: SparkSession, name: String, conf: StateConf,
+      mode: OutputMode)(query: SparkSession => DataFrame): DataFrame = {
+    val sink = tagOf(name) + "_sink"
+    runStream(spark, name, conf, None)(ss =>
+      query(ss).writeStream.format("memory").queryName(sink).outputMode(mode))
+      .table(sink)
+  }
 
   private def recordRun(name: String,
       q: org.apache.spark.sql.streaming.StreamingQuery,
@@ -230,6 +294,8 @@ object EventStreams {
       withInput.length,
       withInput.map(_.stateOperators.map(_.numRowsTotal).sum).toSeq,
       ss.conf.get("spark.sql.streaming.stateStore.providerClass", "default-hdfs"),
+      q.recentProgress.flatMap(_.stateOperators.map(_.numShufflePartitions))
+        .maxOption.getOrElse(0L),
       withInput.map(_.stateOperators.map(_.commitTimeMs).sum).sum,
       withInput.map(_.numInputRows).toSeq,
       withInput.map(_.stateOperators.map(_.numRowsDroppedByWatermark).sum).toSeq,
@@ -255,46 +321,17 @@ object EventStreams {
     * Scale notes: complete mode + memory sink suit a finite backfill
     * (result = one row per (hour, type)); an unbounded deployment swaps
     * in append mode + watermark (see [[tumblingCounts]]) and a durable
-    * sink — the aggregation plan is identical.
-    *
-    * `statePartitions` sizes the stateful-aggregation state store. The
-    * HDFS-backed provider pays a fixed per-partition commit cost (delta
-    * file write + fsync) EVERY micro-batch regardless of data volume —
-    * profiled here via `lastProgress.durationMs`: at the session default
-    * of 32 partitions one 100k-row batch spent 23.5s of task time in
-    * state commit vs 71ms at 1 partition. A bounded backfill with ~3.6k
-    * groups wants few state partitions; an unbounded deployment sizes
-    * this to key cardinality × throughput instead (the partition count
-    * is frozen into the checkpoint at first start). */
-  def hourlyCountsStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 2): DataFrame = {
-    // Run the stream in an isolated session (shared SparkContext, own
-    // SQLConf): the streaming engine clones the session ON THE QUERY
-    // THREAD, so setting shuffle.partitions on the caller's session and
-    // restoring it after start() would race with that clone — and would
-    // also leak a conf change into a concurrent caller.
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // complete-mode, no watermark: the AvailableNow no-data finalization
-    // trigger has no state to finalize and emits nothing — skip its
-    // full walCommit/plan/commit cycle (round 15; results invariant,
-    // oracle-checked). Watermarked/append entries keep the default.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val agg = eventStreamSource(ss, dir)()
-      .groupBy(date_trunc("hour", col("ts")).as("hour_start"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-    val q = agg.writeStream
-      .format("memory").queryName("q27_sink")
-      .option("checkpointLocation", freshCkpt("q27"))
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q27_events_hourly_stream", q, ss)
-    ss.table("q27_sink").orderBy(col("hour_start"), col("event_type"))
-  }
+    * sink — the aggregation plan is identical. ~3.6k (hour, type)
+    * groups: 2 state partitions (sizing policy above). */
+  def hourlyCountsStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q27_events_hourly_stream",
+      StateConf(2, rocksDb = false, noDataBatch = false), OutputMode.Complete()) { ss =>
+      eventStreamSource(ss, dir)()
+        .groupBy(date_trunc("hour", col("ts")).as("hour_start"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"),
+          min(col("value")).as("min_value"),
+          max(col("value")).as("max_value"))
+    }.orderBy(col("hour_start"), col("event_type"))
 
   /** Streaming deduplication under the oracle: the events file is read
     * as TWO streams unioned (every event planted twice — an
@@ -303,9 +340,8 @@ object EventStreams {
     * stateful operators (dedup state feeding aggregation state) running
     * as a real streaming job. Deterministic on bounded input, so it
     * carries the exact batch oracle `count(DISTINCT event_id)`.
-    * Session/state sizing as in [[hourlyCountsStreaming]].
     *
-    * This job runs on the RocksDB state-store provider by default — the
+    * This job runs on the RocksDB state-store provider — the
     * production choice once per-partition state outgrows the executor
     * heap (the HDFS-backed provider keeps the full map in JVM memory and
     * re-writes a delta file per partition per batch; RocksDB keeps state
@@ -321,31 +357,15 @@ object EventStreams {
     * instance setup). The crossover argument is memory, not latency:
     * HDFS-backed state lives on the executor heap and fails with OOM as
     * keys grow, RocksDB spills to local disk and ships changelogs. */
-  def dedupCountsStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 4, rocksdb: Boolean = true): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // complete-mode, no watermark: the AvailableNow no-data finalization
-    // trigger has no state to finalize and emits nothing — skip its
-    // full walCommit/plan/commit cycle (round 15; results invariant,
-    // oracle-checked). Watermarked/append entries keep the default.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    if (rocksdb) useRocksDb(ss)
-    val src = eventStreamSource(ss, dir)
-    val agg = src().unionByName(src())
-      .dropDuplicates("event_id")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-    val q = agg.writeStream
-      .format("memory").queryName("q31_sink")
-      .option("checkpointLocation", freshCkpt("q31"))
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q31_events_dedup_stream", q, ss)
-    ss.table("q31_sink").orderBy(col("event_type"))
-  }
+  def dedupCountsStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q31_events_dedup_stream",
+      StateConf(4, rocksDb = true, noDataBatch = false), OutputMode.Complete()) { ss =>
+      val src = eventStreamSource(ss, dir)
+      src().unionByName(src())
+        .dropDuplicates("event_id")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("cnt"))
+    }.orderBy(col("event_type"))
 
   /** Streaming dedup of JITTERED duplicates — `dropDuplicatesWithinWatermark`
     * (Spark 3.5+), the API that exists because real at-least-once upstreams
@@ -366,30 +386,19 @@ object EventStreams {
     * chained stateful operators, q31's shape). Counts and sums are
     * independent of WHICH twin survives (twins differ only in ts), so
     * the entry is deterministic and carries the exact batch oracle. */
-  def dedupWithinWatermarkStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    useRocksDb(ss)
-    val src = eventStreamSource(ss, dir)
-    val jittered = src().withColumn("ts",
-      col("ts") + expr("INTERVAL 2 SECONDS"))
-    val agg = src().unionByName(jittered)
-      .withWatermark("ts", "30 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
-    val q = agg.writeStream
-      .format("memory").queryName("q79_sink")
-      .option("checkpointLocation", freshCkpt("q79"))
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q79_stream_dedup_within_wm", q, ss)
-    ss.table("q79_sink").orderBy(col("event_type"))
-  }
+  def dedupWithinWatermarkStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q79_stream_dedup_within_wm",
+      StateConf(4, rocksDb = true, noDataBatch = true), OutputMode.Complete()) { ss =>
+      val src = eventStreamSource(ss, dir)
+      val jittered = src().withColumn("ts",
+        col("ts") + expr("INTERVAL 2 SECONDS"))
+      src().unionByName(jittered)
+        .withWatermark("ts", "30 minutes")
+        .dropDuplicatesWithinWatermark("event_id")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
+    }.orderBy(col("event_type"))
 
   /** Queryable state: after a checkpointed streaming aggregation
     * terminates, the checkpoint's state store is itself a TABLE —
@@ -407,30 +416,19 @@ object EventStreams {
     * Scale: the state source reads state files directly,
     * partition-parallel, no stream replay — N keys cost O(N) to read
     * regardless of how many events built them. */
-  def stateStoreRead(spark: SparkSession, dir: String,
-      statePartitions: Int = 2): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // complete-mode, no watermark: the AvailableNow no-data finalization
-    // trigger has no state to finalize and emits nothing — skip its
-    // full walCommit/plan/commit cycle (round 15; results invariant,
-    // oracle-checked). Watermarked/append entries keep the default.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+  def stateStoreRead(spark: SparkSession, dir: String): DataFrame = {
     // freshCkpt (not createTempDirectory): fastest local volume, and the
     // previous run's dir — still referenced by that run's lazy statestore
     // read, long since consumed — is reclaimed at the swap
     val ckpt = freshCkpt("q71")
-    val agg = eventStreamSource(ss, dir)()
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-    val q = agg.writeStream
-      .format("memory").queryName("q71_sink")
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q71_state_store_read", q, ss)
+    val ss = runStream(spark, "q71_state_store_read",
+      StateConf(2, rocksDb = false, noDataBatch = false), Some(ckpt)) { ss =>
+      eventStreamSource(ss, dir)()
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("cnt"))
+        .writeStream.format("memory").queryName("q71_sink")
+        .outputMode(OutputMode.Complete())
+    }
     // the batch read of the checkpoint's aggregation state: key = the
     // grouping columns, value = the aggregation buffer
     ss.read.format("statestore").load(ckpt)
@@ -447,11 +445,18 @@ object EventStreams {
     * passes the interval — an unconstrained stream-stream join would
     * buffer both streams forever. Inner join in append mode emits each
     * pair as soon as both sides have arrived; deterministic on bounded
-    * input → exact batch self-join oracle. Session/state sizing as in
-    * [[hourlyCountsStreaming]]. */
-  def intervalJoinStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 2): DataFrame = {
-    val ss = joinSession(spark, statePartitions)
+    * input → exact batch self-join oracle. */
+  def intervalJoinStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q36_stream_interval_join",
+      StateConf(2, rocksDb = false, noDataBatch = true), OutputMode.Append()) { ss =>
+      viewPurchaseJoin(ss, dir, "inner").select(col("user_id"), col("v_ts"), col("p_ts"))
+    }.orderBy(col("user_id"), col("v_ts"), col("p_ts"))
+
+  /** Each view joined (`joinType`) to the purchases of the same user in
+    * [v_ts, v_ts + 1h], both sides watermarked by 1 hour — the interval
+    * join shared by q36 (inner), q69 (left outer) and q90 (left semi).
+    * Stream-stream join state stays HDFS-backed; see [[streamSession]]. */
+  private def viewPurchaseJoin(ss: SparkSession, dir: String, joinType: String): DataFrame = {
     val src = eventStreamSource(ss, dir)
     val views = src().where(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("v_ts"))
@@ -459,20 +464,11 @@ object EventStreams {
     val purchases = src().where(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "1 hour")
-    val joined = views.join(purchases,
+    views.join(purchases,
       col("user_id") === col("p_user") &&
         col("p_ts") >= col("v_ts") &&
-        col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"))
-      .select(col("user_id"), col("v_ts"), col("p_ts"))
-    val q = joined.writeStream
-      .format("memory").queryName("q36_sink")
-      .option("checkpointLocation", freshCkpt("q36"))
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q36_stream_interval_join", q, ss)
-    ss.table("q36_sink").orderBy(col("user_id"), col("v_ts"), col("p_ts"))
+        col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"),
+      joinType)
   }
 
   /** LEFT OUTER stream-stream interval join — q36's inner join plus the
@@ -492,32 +488,11 @@ object EventStreams {
     * stores finite (evict once the window passes) — an unconstrained
     * outer join would buffer the full history of both streams AND never
     * be able to emit a single null row. */
-  def leftOuterIntervalJoinStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 2): DataFrame = {
-    val ss = joinSession(spark, statePartitions)
-    val src = eventStreamSource(ss, dir)
-    val views = src().where(col("event_type") === "view")
-      .select(col("user_id"), col("ts").as("v_ts"))
-      .withWatermark("v_ts", "1 hour")
-    val purchases = src().where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = views.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("p_ts") >= col("v_ts") &&
-        col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"),
-      "left_outer")
-      .select(col("user_id"), col("v_ts"), col("p_ts"))
-    val q = joined.writeStream
-      .format("memory").queryName("q69_sink")
-      .option("checkpointLocation", freshCkpt("q69"))
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q69_stream_outer_join", q, ss)
-    ss.table("q69_sink").orderBy(col("user_id"), col("v_ts"), col("p_ts"))
-  }
+  def leftOuterIntervalJoinStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q69_stream_outer_join",
+      StateConf(2, rocksDb = false, noDataBatch = true), OutputMode.Append()) { ss =>
+      viewPurchaseJoin(ss, dir, "left_outer").select(col("user_id"), col("v_ts"), col("p_ts"))
+    }.orderBy(col("user_id"), col("v_ts"), col("p_ts"))
 
   /** LEFT SEMI stream-stream interval join — the EXISTS of streams,
     * completing the join-type matrix (inner q36, left outer q69): each
@@ -535,31 +510,11 @@ object EventStreams {
     * downstream: state drops a left row at FIRST match instead of
     * buffering it for the full window, and the output is one row per
     * view instead of one per (view, purchase) pair. */
-  def leftSemiIntervalJoinStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 2): DataFrame = {
-    val ss = joinSession(spark, statePartitions)
-    val src = eventStreamSource(ss, dir)
-    val views = src().where(col("event_type") === "view")
-      .select(col("user_id"), col("ts").as("v_ts"))
-      .withWatermark("v_ts", "1 hour")
-    val purchases = src().where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = views.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("p_ts") >= col("v_ts") &&
-        col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"),
-      "left_semi")
-    val q = joined.writeStream
-      .format("memory").queryName("q90_sink")
-      .option("checkpointLocation", freshCkpt("q90"))
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q90_stream_semi_join", q, ss)
-    ss.table("q90_sink").orderBy(col("user_id"), col("v_ts"))
-  }
+  def leftSemiIntervalJoinStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q90_stream_semi_join",
+      StateConf(2, rocksDb = false, noDataBatch = true), OutputMode.Append()) { ss =>
+      viewPurchaseJoin(ss, dir, "left_semi")
+    }.orderBy(col("user_id"), col("v_ts"))
 
   /** Streaming keyed UPSERT through `foreachBatch` — the sink-side
     * pattern the memory-sink demos don't cover: each micro-batch merges
@@ -576,12 +531,11 @@ object EventStreams {
     * key table (≤ |users| rows), not the history — at scale this is the
     * constant-size-state upsert loop, with the argmax aggregated
     * map-side before the shuffle. */
-  def latestRowUpsertStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 4): DataFrame = {
+  def latestRowUpsertStreaming(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.io.TempLayouts.scratch("graft_upsert_")
     val ckpt = graft.io.TempLayouts.scratch("graft_upsert_ckpt_")
     try {
-      runUpsertStreaming(spark, dir, base, ckpt, statePartitions)
+      runUpsertStreaming(spark, dir, base, ckpt)
       upsertResult(spark, base, dir).localCheckpoint(true)
     } finally {
       graft.io.TempLayouts.discard(base)
@@ -611,43 +565,38 @@ object EventStreams {
     * table's entries with its merged key table. `failAtBatch` injects a
     * crash before that batch id's sink write (the recovery spec's
     * lever); the StreamingQueryException it causes propagates to the
-    * caller. */
+    * caller. The per-batch merge shuffles over 4 partitions (~1.5k user
+    * keys). */
   def runUpsertStreaming(spark: SparkSession, dir: String, base: String,
-      ckpt: String, statePartitions: Int = 4,
-      failAtBatch: Option[Long] = None): Unit = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val q = eventStreamSource(ss, dir)()
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (failAtBatch.contains(id))
-          throw new RuntimeException(s"injected failure before batch $id commit")
-        if (!ManifestLog.lastStreamEpoch(base, UpsertTxn).exists(_ >= id)) {
-          val bs = batch.sparkSession
-          val merged = ManifestLog.latest(base) match {
-            case Some(head) =>
-              latestPerUser(
-                ManifestLog.snapshot(bs, base, head)
-                .select(col("user_id"), col("last.ts").as("ts"),
-                  col("last.event_id").as("event_id"),
-                  col("last.event_type").as("event_type"), col("last.value").as("value"))
-                .unionByName(batch))
-            case None => latestPerUser(batch)
+      ckpt: String, failAtBatch: Option[Long] = None): Unit =
+    runStream(spark, "q44_stream_upsert_latest",
+      StateConf(4, rocksDb = false, noDataBatch = true), Some(ckpt)) { ss =>
+      eventStreamSource(ss, dir)()
+        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
+        .writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          if (failAtBatch.contains(id))
+            throw new RuntimeException(s"injected failure before batch $id commit")
+          if (!ManifestLog.lastStreamEpoch(base, UpsertTxn).exists(_ >= id)) {
+            val bs = batch.sparkSession
+            val merged = ManifestLog.latest(base) match {
+              case Some(head) =>
+                latestPerUser(
+                  ManifestLog.snapshot(bs, base, head)
+                  .select(col("user_id"), col("last.ts").as("ts"),
+                    col("last.event_id").as("event_id"),
+                    col("last.event_type").as("event_type"), col("last.value").as("value"))
+                  .unionByName(batch))
+              case None => latestPerUser(batch)
+            }
+            val tag = s"e$id-" + java.util.UUID.randomUUID().toString.take(8)
+            val staged = ManifestLog.stage(bs, base, tag, merged, statsCols = Nil)
+            if (ManifestLog.commitStreamEpoch(base, UpsertTxn, id)(_ => staged).isEmpty)
+              staged.foreach(e =>
+                java.nio.file.Files.deleteIfExists(new java.io.File(base, e.path).toPath))
           }
-          val tag = s"e$id-" + java.util.UUID.randomUUID().toString.take(8)
-          val staged = ManifestLog.stage(bs, base, tag, merged, statsCols = Nil)
-          if (ManifestLog.commitStreamEpoch(base, UpsertTxn, id)(_ => staged).isEmpty)
-            staged.foreach(e =>
-              java.nio.file.Files.deleteIfExists(new java.io.File(base, e.path).toPath))
         }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally recordRun("q44_stream_upsert_latest", q, ss)
-  }
+    }: Unit
 
   /** The upsert table as of the newest committed version (empty-input
     * fallback keeps the catalog schema). */
@@ -675,39 +624,24 @@ object EventStreams {
     * convention): double addition is order-sensitive across micro-batch
     * boundaries, integer addition is not, which is what lets a streaming
     * sum carry a batch hash oracle at all. */
-  def enrichedSegmentCountsStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 2): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // complete-mode, no watermark: the AvailableNow no-data finalization
-    // trigger has no state to finalize and emits nothing — skip its
-    // full walCommit/plan/commit cycle (round 15; results invariant,
-    // oracle-checked). Watermarked/append entries keep the default.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // un-hinted stream-static join: customer is SF-proportional, so a
-    // forced broadcast() would pin driver materialization of an
-    // unbounded dim at corpus scale. The static planner's size estimate
-    // picks broadcast-hash at any plausible test SF on its own (AQE is
-    // off for stateful streams, but autoBroadcastJoinThreshold applies
-    // to the per-batch static plan); past the threshold the same join
-    // degrades to a per-batch shuffle with no semantic change.
-    val dim = ss.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val agg = eventStreamSource(ss, dir)()
-      .join(dim, col("user_id") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
-    val q = agg.writeStream
-      .format("memory").queryName("q45_sink")
-      .option("checkpointLocation", freshCkpt("q45"))
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q45_stream_static_enrich", q, ss)
-    ss.table("q45_sink").orderBy(col("c_mktsegment"), col("event_type"))
-  }
+  def enrichedSegmentCountsStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q45_stream_static_enrich",
+      StateConf(2, rocksDb = false, noDataBatch = false), OutputMode.Complete()) { ss =>
+      // un-hinted stream-static join: customer is SF-proportional, so a
+      // forced broadcast() would pin driver materialization of an
+      // unbounded dim at corpus scale. The static planner's size estimate
+      // picks broadcast-hash at any plausible test SF on its own (AQE is
+      // off for stateful streams, but autoBroadcastJoinThreshold applies
+      // to the per-batch static plan); past the threshold the same join
+      // degrades to a per-batch shuffle with no semantic change.
+      val dim = ss.read.parquet(s"$dir/customer.parquet")
+        .select(col("c_custkey"), col("c_mktsegment"))
+      eventStreamSource(ss, dir)()
+        .join(dim, col("user_id") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
+    }.orderBy(col("c_mktsegment"), col("event_type"))
 
   /** Gap-based sessionization as a REAL streaming job via the built-in
     * `session_window` aggregation — the state operator that MERGES
@@ -725,27 +659,17 @@ object EventStreams {
     * condition is `> gap`, the same convention batch q29 uses. Value
     * sums are integer micro-units (floor BEFORE sum) per the q45/t12
     * rule. */
-  def sessionWindowStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 8): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val agg = eventStreamSource(ss, dir)()
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("value_micros"))
-    val q = agg.writeStream
-      .format("memory").queryName("q50_sink")
-      .option("checkpointLocation", freshCkpt("q50"))
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q50_stream_sessionize", q, ss)
-    ss.table("q50_sink").orderBy(col("user_id"), col("session_start"))
-  }
+  def sessionWindowStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q50_stream_sessionize",
+      StateConf(8, rocksDb = false, noDataBatch = true), OutputMode.Complete()) { ss =>
+      eventStreamSource(ss, dir)()
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
+        .select(col("session_window.start").as("session_start"),
+          col("session_window.end").as("session_end"),
+          col("user_id"), col("n_events"), col("value_micros"))
+    }.orderBy(col("user_id"), col("session_start"))
 
   /** Watermarked APPEND-mode aggregation under the oracle — the output
     * mode every unbounded production aggregation runs (complete mode
@@ -758,29 +682,19 @@ object EventStreams {
     * (they might still receive data); the oracle encodes the same
     * predicate in SQL. AvailableNow runs the no-data finalization batch
     * (`noDataMicroBatches`) so every eligible window flushes before the
-    * query stops. State sizing per [[hourlyCountsStreaming]]; value
-    * sums in integer micro-units per the q45/t12 rule. */
-  def hourlyAppendStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 2): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val agg = eventStreamSource(ss, dir)()
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
-      .select(col("window.start").as("hour_start"),
-        col("event_type"), col("cnt"), col("value_micros"))
-    val q = agg.writeStream
-      .format("memory").queryName("q54_sink")
-      .option("checkpointLocation", freshCkpt("q54"))
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q54_stream_append_hourly", q, ss)
-    ss.table("q54_sink").orderBy(col("hour_start"), col("event_type"))
-  }
+    * query stops. Value sums in integer micro-units per the q45/t12
+    * rule. */
+  def hourlyAppendStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q54_stream_append_hourly",
+      StateConf(2, rocksDb = false, noDataBatch = true), OutputMode.Append()) { ss =>
+      eventStreamSource(ss, dir)()
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
+        .select(col("window.start").as("hour_start"),
+          col("event_type"), col("cnt"), col("value_micros"))
+    }.orderBy(col("hour_start"), col("event_type"))
 
   /** Chained windowed aggregations — Spark's multiple-stateful-operator
     * surface (SPARK-40925): a 5-minute per-type pre-aggregation feeds an
@@ -804,32 +718,21 @@ object EventStreams {
     * the map-side-combine argument applied across OPERATORS. At
     * 100 TB/day the fine pre-aggregation absorbs the event volume and
     * the coarse rollup's state shuffle carries pre-reduced rows only. */
-  def windowRollupStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 2): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val five = eventStreamSource(ss, dir)()
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("cnt5"),
-        sum(floor(col("value") * 1e6).cast("long")).as("vm5"))
-    val hourly = five
-      .groupBy(window(col("window"), "1 hour"), col("event_type"))
-      .agg(sum(col("cnt5")).as("cnt"),
-        sum(col("vm5")).as("value_micros"),
-        count(lit(1)).as("n_buckets"))
-      .select(col("window.start").as("hour_start"),
-        col("event_type"), col("cnt"), col("value_micros"), col("n_buckets"))
-    val q = hourly.writeStream
-      .format("memory").queryName("q75_sink")
-      .option("checkpointLocation", freshCkpt("q75"))
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q75_stream_window_rollup", q, ss)
-    ss.table("q75_sink").orderBy(col("hour_start"), col("event_type"))
-  }
+  def windowRollupStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q75_stream_window_rollup",
+      StateConf(2, rocksDb = false, noDataBatch = true), OutputMode.Append()) { ss =>
+      eventStreamSource(ss, dir)()
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("cnt5"),
+          sum(floor(col("value") * 1e6).cast("long")).as("vm5"))
+        .groupBy(window(col("window"), "1 hour"), col("event_type"))
+        .agg(sum(col("cnt5")).as("cnt"),
+          sum(col("vm5")).as("value_micros"),
+          count(lit(1)).as("n_buckets"))
+        .select(col("window.start").as("hour_start"),
+          col("event_type"), col("cnt"), col("value_micros"), col("n_buckets"))
+    }.orderBy(col("hour_start"), col("event_type"))
 
   /** The late-data contract under the oracle: the earliest time-range
     * file is REPLAYED as a fourth micro-batch after three in-order
@@ -850,28 +753,17 @@ object EventStreams {
     * BOUNDED: reprocessed or duplicated upstream data cannot resurrect
     * evicted windows, so state size tracks the watermark horizon, not
     * the backlog or the reprocessing history. */
-  def lateDataStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 2): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val src = streamFromSplitDir(ss, splitEventsWithReplayDir(ss, dir))
-    val agg = src()
-      .withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
-      .select(col("window.start").as("hour_start"),
-        col("event_type"), col("cnt"), col("value_micros"))
-    val q = agg.writeStream
-      .format("memory").queryName("q67_sink")
-      .option("checkpointLocation", freshCkpt("q67"))
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q67_stream_late_data", q, ss)
-    ss.table("q67_sink").orderBy(col("hour_start"), col("event_type"))
-  }
+  def lateDataStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q67_stream_late_data",
+      StateConf(2, rocksDb = false, noDataBatch = true), OutputMode.Append()) { ss =>
+      streamFromSplitDir(ss, splitEventsWithReplayDir(ss, dir))()
+        .withWatermark("ts", "0 seconds")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(floor(col("value") * 1e6).cast("long")).as("value_micros"))
+        .select(col("window.start").as("hour_start"),
+          col("event_type"), col("cnt"), col("value_micros"))
+    }.orderBy(col("hour_start"), col("event_type"))
 
   /** Per-user running-totals state for [[RunningTotalsProcessor]]. */
   final case class RunningTotals(n: Long, valueMicros: Long, lastTsMicros: Long)
@@ -949,41 +841,14 @@ object EventStreams {
       "true")
   }
 
-  /** Stream-stream join sessions. Round-14 measured-and-REJECTED
-    * experiment: join state format v3 (one RocksDB store with virtual
-    * column families instead of v2's four HDFS-backed stores per
-    * partition) benched 1.2–1.6× SLOWER here — q36 4.9→5.9 s,
-    * q69 3.5→5.5 s, q90 3.8→4.9 s (min-of-warm, back-to-back A/B) —
-    * because at this state size (≤ tens of KB per store) the
-    * HDFS-backed provider is a plain in-heap map with a tmpfs delta
-    * write, while each RocksDB instance pays JNI open/load/commit
-    * machinery per partition per batch regardless of size. v3 remains
-    * the right call once per-partition join state outgrows the heap;
-    * the providers' crossover is state size, not store count. */
-  private def joinSession(spark: SparkSession, statePartitions: Int): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    ss
-  }
-
-  /** Isolated session for the transformWithState entries: own shuffle
-    * width for the state store, RocksDB provider (the only one the
-    * operator supports). */
-  private def twsSession(spark: SparkSession, statePartitions: Int): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    useRocksDb(ss)
-    ss
-  }
-
   /** Final totals from an update-mode totals sink: one row per
     * (key, batch-with-input) accumulated there; the final row per key is
     * the one with the largest n_events (strictly increasing across a
     * key's emitted rows). */
-  private def latestTotals(ss: SparkSession, sink: String): DataFrame = {
+  private def latestTotals(sink: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    ss.table(sink)
+    sink
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .select(col("user_id"), col("n_events"), col("value_micros"),
@@ -998,28 +863,20 @@ object EventStreams {
     * only its own rows — the unbounded-key analog of q44's foreachBatch
     * upsert, with the merge logic inside the state store instead of a
     * sink rewrite. */
-  def transformWithStateTotals(spark: SparkSession, dir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val ss = twsSession(spark, statePartitions)
-    import ss.implicits._
-    val typed = eventStreamSource(ss, dir)()
-      .select(col("user_id").cast("long"),
-        unix_micros(col("ts")),
-        floor(col("value") * lit(1000000)).cast("long"))
-      .as[(Long, Long, Long)]
-    val out = typed.groupByKey(_._1)
-      .transformWithState(new RunningTotalsProcessor,
-        TimeMode.None(), OutputMode.Update())
-    val q = out.toDF().writeStream
-      .format("memory").queryName("q72_sink")
-      .option("checkpointLocation", freshCkpt("q72"))
-      .outputMode(OutputMode.Update())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q72_stream_transform_with_state", q, ss)
-    latestTotals(ss, "q72_sink")
-  }
+  def transformWithStateTotals(spark: SparkSession, dir: String): DataFrame =
+    latestTotals(runToMemory(spark, "q72_stream_transform_with_state",
+      StateConf(4, rocksDb = true, noDataBatch = true), OutputMode.Update()) { ss =>
+      import ss.implicits._
+      eventStreamSource(ss, dir)()
+        .select(col("user_id").cast("long"),
+          unix_micros(col("ts")),
+          floor(col("value") * lit(1000000)).cast("long"))
+        .as[(Long, Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new RunningTotalsProcessor,
+          TimeMode.None(), OutputMode.Update())
+        .toDF()
+    })
 
   /** The warm-start handoff boundary for q74: history strictly before
     * this instant is served from the BATCH aggregate; the stream
@@ -1039,40 +896,32 @@ object EventStreams {
     * the pre-boundary history the stream never read; users whose events
     * all precede the boundary stay in state but never emit (no input ⇒
     * no row — the update-mode contract). */
-  def warmStartTotalsStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val ss = twsSession(spark, statePartitions)
-    import ss.implicits._
-    val boundary = lit(WarmStartBoundary).cast("timestamp")
-    // the warehouse side of the handoff: history aggregated ONCE
-    val initState = graft.io.Tables(ss, dir).events
-      .where(col("ts") < boundary)
-      .groupBy(col("user_id").cast("long").as("u"))
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * lit(1000000)).cast("long")).as("v"),
-        max(unix_micros(col("ts"))).as("last"))
-      .as[(Long, Long, Long, Long)]
-      .map { case (u, n, v, last) => (u, RunningTotals(n, v, last)) }
-      .groupByKey(_._1).mapValues(_._2)
-    val typed = eventStreamSource(ss, dir)()
-      .where(col("ts") >= boundary)
-      .select(col("user_id").cast("long"),
-        unix_micros(col("ts")),
-        floor(col("value") * lit(1000000)).cast("long"))
-      .as[(Long, Long, Long)]
-    val out = typed.groupByKey(_._1)
-      .transformWithState(new RunningTotalsProcessor,
-        TimeMode.None(), OutputMode.Update(), initState)
-    val q = out.toDF().writeStream
-      .format("memory").queryName("q74_sink")
-      .option("checkpointLocation", freshCkpt("q74"))
-      .outputMode(OutputMode.Update())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q74_stream_warm_start", q, ss)
-    latestTotals(ss, "q74_sink")
-  }
+  def warmStartTotalsStreaming(spark: SparkSession, dir: String): DataFrame =
+    latestTotals(runToMemory(spark, "q74_stream_warm_start",
+      StateConf(4, rocksDb = true, noDataBatch = true), OutputMode.Update()) { ss =>
+      import ss.implicits._
+      val boundary = lit(WarmStartBoundary).cast("timestamp")
+      // the warehouse side of the handoff: history aggregated ONCE
+      val initState = graft.io.Tables(ss, dir).events
+        .where(col("ts") < boundary)
+        .groupBy(col("user_id").cast("long").as("u"))
+        .agg(count(lit(1)).as("n"),
+          sum(floor(col("value") * lit(1000000)).cast("long")).as("v"),
+          max(unix_micros(col("ts"))).as("last"))
+        .as[(Long, Long, Long, Long)]
+        .map { case (u, n, v, last) => (u, RunningTotals(n, v, last)) }
+        .groupByKey(_._1).mapValues(_._2)
+      eventStreamSource(ss, dir)()
+        .where(col("ts") >= boundary)
+        .select(col("user_id").cast("long"),
+          unix_micros(col("ts")),
+          floor(col("value") * lit(1000000)).cast("long"))
+        .as[(Long, Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new RunningTotalsProcessor,
+          TimeMode.None(), OutputMode.Update(), initState)
+        .toDF()
+    })
 
   /** Open-session state for [[SessionCloseProcessor]]: running totals
     * plus the registered close-timer (ms) so re-registration can delete
@@ -1172,33 +1021,24 @@ object EventStreams {
     * floor(last_us/1000) + gap_ms ≤ floor(max_ts_us/1000); sessions
     * still inside it stay open forever — the q54/q69 still-might-extend
     * contract, encoded in the oracle's horizon predicate. */
-  def timerClosedSessionsStreaming(spark: SparkSession, dir: String,
-      statePartitions: Int = 8): DataFrame = {
-    val ss = twsSession(spark, statePartitions)
-    import ss.implicits._
-    val typed = eventStreamSource(ss, dir)()
-      .withWatermark("ts", "0 seconds")
-      .select(col("user_id").cast("long"), col("ts"),
-        floor(col("value") * lit(1000000)).cast("long"))
-      .as[(Long, java.sql.Timestamp, Long)]
-    val out = typed.groupByKey(_._1)
-      .transformWithState(new SessionCloseProcessor(gapMs = 1800000L),
-        TimeMode.EventTime(), OutputMode.Append())
-    val q = out.toDF().writeStream
-      .format("memory").queryName("q73_sink")
-      .option("checkpointLocation", freshCkpt("q73"))
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    recordRun("q73_stream_timer_sessions", q, ss)
-    ss.table("q73_sink")
-      .select(col("user_id"),
-        timestamp_micros(col("start_micros")).as("session_start"),
-        timestamp_micros(col("last_micros")).as("session_last"),
-        col("n_events"), col("value_micros"))
+  def timerClosedSessionsStreaming(spark: SparkSession, dir: String): DataFrame =
+    runToMemory(spark, "q73_stream_timer_sessions",
+      StateConf(8, rocksDb = true, noDataBatch = true), OutputMode.Append()) { ss =>
+      import ss.implicits._
+      eventStreamSource(ss, dir)()
+        .withWatermark("ts", "0 seconds")
+        .select(col("user_id").cast("long"), col("ts"),
+          floor(col("value") * lit(1000000)).cast("long"))
+        .as[(Long, java.sql.Timestamp, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new SessionCloseProcessor(gapMs = 1800000L),
+          TimeMode.EventTime(), OutputMode.Append())
+        .toDF()
+    }.select(col("user_id"),
+      timestamp_micros(col("start_micros")).as("session_start"),
+      timestamp_micros(col("last_micros")).as("session_last"),
+      col("n_events"), col("value_micros"))
       .orderBy(col("user_id"), col("session_start"))
-  }
 
   /** Driver-visible streaming artifacts: q27 carries batch q20's oracle,
     * q31 carries the batch count-distinct oracle over planted dups, and

@@ -87,5 +87,8 @@ class JsonlStreamSpec extends SparkSpecBase {
       .orderBy(col("event_type"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got.map(t => (t._1, t._2)) == expect)
+    // the entry's declared state settings: 2 partitions, HDFS-backed
+    val stats = graft.streaming.EventStreams.lastRunStats("q100_stream_dsv2_source")
+    assert(stats.statePartitions === 2L && stats.provider === "default-hdfs", stats.toString)
   }
 }

@@ -240,5 +240,8 @@ class ManifestStreamSinkSpec extends SparkSpecBase {
         (r.getAs[Long]("n"), r.getAs[Long]("sv"), r.getAs[Long]("mn"), r.getAs[Long]("mx")))
       .toMap
     assert(got === want)
+    // a stateless stream: no state operator, default provider
+    val stats = graft.streaming.EventStreams.lastRunStats("q108_stream_manifest_sink")
+    assert(stats.statePartitions === 0L && stats.provider === "default-hdfs", stats.toString)
   }
 }

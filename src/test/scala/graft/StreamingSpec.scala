@@ -21,6 +21,17 @@ class StreamingSpec extends SparkSpecBase {
     MemoryStream[Event](
       implicitly[org.apache.spark.sql.Encoder[Event]], spark)
 
+  /** Pins an entry's declared state settings: the partition count its
+    * state operators ran with (0 = no state operator) and whether the
+    * RocksDB provider was on. Results do not depend on either, so only
+    * this catches a run that lost its entry's settings. */
+  private def assertState(stats: EventStreams.StreamRunStats,
+      partitions: Long, rocksDb: Boolean): Unit = {
+    assert(stats.statePartitions === partitions, s"state partitions: $stats")
+    assert(stats.provider.contains("RocksDBStateStoreProvider") === rocksDb,
+      s"state-store provider: $stats")
+  }
+
   test("tumbling window + watermark finalizes windows and drops late data") {
     val input = newStream()
     val counts = EventStreams.tumblingCounts(input.toDF(), "10 minutes", "5 minutes")
@@ -167,6 +178,7 @@ class StreamingSpec extends SparkSpecBase {
       .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2)))
     assert(streamed.toSeq === batch.toSeq)
     val stats = EventStreams.lastRunStats("q27_events_hourly_stream")
+    assertState(stats, partitions = 2, rocksDb = false)
     assert(stats.nBatches >= 3,
       s"expected ≥3 micro-batches, got ${stats.nBatches}")
     // complete-mode aggregation: state rows accumulate monotonically —
@@ -181,6 +193,7 @@ class StreamingSpec extends SparkSpecBase {
   test("q31 runs on the RocksDB state-store provider across ≥3 micro-batches") {
     EventStreams.dedupCountsStreaming(spark, sf0001).collect()
     val stats = EventStreams.lastRunStats("q31_events_dedup_stream")
+    assertState(stats, partitions = 4, rocksDb = true)
     assert(stats.provider.contains("RocksDBStateStoreProvider"), stats.provider)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
     assert(stats.stateRowsPerBatch.forall(_ > 0L), stats.toString)
@@ -200,6 +213,7 @@ class StreamingSpec extends SparkSpecBase {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === want)
     val stats = EventStreams.lastRunStats("q79_stream_dedup_within_wm")
+    assertState(stats, partitions = 4, rocksDb = true)
     assert(stats.provider.contains("RocksDBStateStoreProvider"), stats.provider)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
     // duplicate pressure was real: the source delivered 2× the corpus
@@ -227,6 +241,7 @@ class StreamingSpec extends SparkSpecBase {
     // multi-batch streamed result must equal the batch self-join exactly
     assert(streamed === batch)
     val stats = EventStreams.lastRunStats("q36_stream_interval_join")
+    assertState(stats, partitions = 2, rocksDb = false)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
   }
 
@@ -259,6 +274,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(out.filter(col("p_ts").isNull).count() ===
       v.join(p, cond, "left_anti").count() - unmatchedTail.count())
     val stats = EventStreams.lastRunStats("q69_stream_outer_join")
+    assertState(stats, partitions = 2, rocksDb = false)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
     // state-eviction evidence (the 100 TB boundedness claim): the outer
     // join buffers BOTH sides, so without watermark eviction the state
@@ -301,6 +317,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(v.join(p, cond).count() > semi.count(),
       "corpus has no multi-match view; the once-per-left claim is vacuous")
     val stats = EventStreams.lastRunStats("q90_stream_semi_join")
+    assertState(stats, partitions = 2, rocksDb = false)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
     // (eager emission — no watermark horizon withholding matched rows —
     // is evidenced by the count equality above being horizon-FREE, and
@@ -322,6 +339,7 @@ class StreamingSpec extends SparkSpecBase {
       .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2), r.getLong(3)))
     val nEvents = graft.io.Tables(spark, sf0001).events.count()
     val stats = EventStreams.lastRunStats("q67_stream_late_data")
+    assertState(stats, partitions = 2, rocksDb = false)
     // 3 in-order batches + 1 replayed late batch
     assert(stats.nBatches === 4, s"expected 4 micro-batches, got $stats")
     val replaySize = stats.inputRowsPerBatch.sum - nEvents
@@ -360,6 +378,9 @@ class StreamingSpec extends SparkSpecBase {
     val streamed = EventStreams.latestRowUpsertStreaming(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.get(1).toString, r.getLong(2)))
     val stats = EventStreams.lastRunStats("q44_stream_upsert_latest")
+    // foreachBatch upsert: no state operator (its 4 partitions size the
+    // per-batch merge shuffle, which progress does not report)
+    assertState(stats, partitions = 0, rocksDb = false)
     assert(stats.nBatches >= 3,
       s"expected ≥3 upsert merges, got ${stats.nBatches} batches")
     // ground truth: batch argmax over the raw events
@@ -493,6 +514,7 @@ class StreamingSpec extends SparkSpecBase {
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
     val stats = EventStreams.lastRunStats("q45_stream_static_enrich")
+    assertState(stats, partitions = 2, rocksDb = false)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
     // only the downstream aggregation holds state (segment×type rows) —
     // the static join side must not add a stateful operator
@@ -515,6 +537,7 @@ class StreamingSpec extends SparkSpecBase {
       .collect().map(r => (r.get(0).toString, r.get(1).toString,
         r.getLong(2), r.getLong(3), r.getLong(4)))
     val stats = EventStreams.lastRunStats("q50_stream_sessionize")
+    assertState(stats, partitions = 8, rocksDb = false)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
     assert(stats.stateRowsPerBatch.forall(_ > 0L), stats.toString)
     // batch twin: session_window is a batch aggregation too — the
@@ -573,6 +596,7 @@ class StreamingSpec extends SparkSpecBase {
     val streamed = EventStreams.hourlyAppendStreaming(spark, sf0001)
       .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2), r.getLong(3)))
     val stats = EventStreams.lastRunStats("q54_stream_append_hourly")
+    assertState(stats, partitions = 2, rocksDb = false)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
     val ev = graft.io.Tables(spark, sf0001).events
     val maxTs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
@@ -634,6 +658,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(got.values.sum > 0L)
     // and the run really was a stream (≥1 micro-batch, stateful op)
     val stats = graft.streaming.EventStreams.lastRunStats("q71_state_store_read")
+    assertState(stats, partitions = 2, rocksDb = false)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
   }
 
@@ -654,6 +679,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(got.toSeq === batch.toSeq)
     val stats = graft.streaming.EventStreams
       .lastRunStats("q72_stream_transform_with_state")
+    assertState(stats, partitions = 4, rocksDb = true)
     // transformWithState only runs on RocksDB; the stream must have
     // carried ValueState across ≥3 micro-batches, growing as new users
     // appear
@@ -709,6 +735,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(timerClosed > 0, "no timer-closed final sessions in the output")
     val stats = graft.streaming.EventStreams
       .lastRunStats("q73_stream_timer_sessions")
+    assertState(stats, partitions = 8, rocksDb = true)
     assert(stats.provider.contains("RocksDBStateStoreProvider"), stats.provider)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
   }
@@ -745,6 +772,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(totalInOutput > liveEvents,
       s"no warm-started history in the totals: output $totalInOutput vs live $liveEvents")
     val stats = graft.streaming.EventStreams.lastRunStats("q74_stream_warm_start")
+    assertState(stats, partitions = 4, rocksDb = true)
     assert(stats.provider.contains("RocksDBStateStoreProvider"), stats.provider)
     assert(stats.nBatches >= 2, s"expected ≥2 data micro-batches, got ${stats.nBatches}")
   }
@@ -755,6 +783,7 @@ class StreamingSpec extends SparkSpecBase {
       .collect()
       .map(r => (r.get(0).toString, r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val stats = EventStreams.lastRunStats("q75_stream_window_rollup")
+    assertState(stats, partitions = 2, rocksDb = false)
     assert(stats.nBatches >= 3, s"expected ≥3 micro-batches, got ${stats.nBatches}")
     assert(stats.nStateOps === 2,
       s"expected the 5-min agg AND the hourly rollup to hold state, got ${stats.nStateOps}")
