@@ -42,11 +42,15 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *    session's ANSI or codegen settings does not run under another's),
   *    the cache entry the input reads (by identity: re-caching makes a
   *    new entry), the input's plan over that entry with its parameter
-  *    values blanked, the chart, `groupCol` and `k`. A call whose key is
-  *    known builds no intermediate Dataset: it rebinds the values into
-  *    copies of the stored analyzed and physical plans, so nothing is
-  *    analyzed, optimized, planned or compiled again. A key whose chart
+  *    values blanked, the chart, `groupCol` and `k`. A key whose chart
   *    cannot be prepared is stored too, and is planned afresh each call.
+  *  - Call: a call whose key is known builds no intermediate Dataset and
+  *    no plan copy. It rebinds the values into a copy of the stored
+  *    analyzed plan and runs one job over the RDD that the stored
+  *    physical plan built on its first run, with the values carried in
+  *    that job's tasks. Nothing is analyzed, optimized, planned, compiled
+  *    or built again. The physical plan's SQL metrics are the template's,
+  *    so they add up over all of its calls, not per call.
   *  - Dropped: past `MaxTemplates`, the least recently used. A template
   *    whose entry was unpersisted is never hit again (no input resolves
   *    to that entry any more), and a chart bound before the `unpersist`

@@ -2,15 +2,16 @@ package org.apache.spark.sql.graftbridge
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
@@ -28,7 +29,12 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
   *  - prepared plans ([[param]], [[cachedInput]], [[prepare]], [[bind]]):
   *    the [[BoundParam]] expression, a cache-entry lookup through the
   *    session's `CacheManager`, a `QueryExecution` whose executed plan is
-  *    fixed, and the `classic.Dataset` built over it.
+  *    fixed, and the `classic.Dataset` built over it;
+  *  - running a prepared plan: a physical node (`SparkPlan.doExecute`,
+  *    `executeCollect`) whose job runs over the RDD the prepared plan
+  *    built once, an `RDD` subclass whose tasks install the call's values
+  *    until they complete (`TaskContext` completion listener), and
+  *    `SparkContext.runJob` with a named function.
   */
 object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -66,10 +72,9 @@ object PlanBridge {
 
   /** An input that reads one cached relation. `shape` is its plan over
     * that relation with each parameter's value blanked and its id
-    * replaced by its first-occurrence index; `ids` and `values` are its
-    * parameters in plan order. */
-  final case class CachedInput(entry: CacheEntry, shape: LogicalPlan,
-      ids: Seq[Long], values: Seq[Any])
+    * replaced by its first-occurrence index; `params` are its parameters
+    * in plan order. */
+  final case class CachedInput(entry: CacheEntry, shape: LogicalPlan, params: Seq[BoundParam])
 
   private def params(p: LogicalPlan): Seq[BoundParam] =
     p.flatMap(_.expressions.flatMap(_.collect { case b: BoundParam => b }))
@@ -86,7 +91,7 @@ object PlanBridge {
         val first = ps.map(_.id).distinct.zipWithIndex.toMap
         val shape = plan.transformUp { case m: InMemoryRelation => LocalRelation(m.output) }
           .transformAllExpressions { case b: BoundParam => BoundParam(first(b.id), null, b.dataType) }
-        Some(CachedInput(new CacheEntry(r.cacheBuilder), shape, ps.map(_.id), ps.map(_.value)))
+        Some(CachedInput(new CacheEntry(r.cacheBuilder), shape, ps))
       case _ => None
     }
   }
@@ -103,17 +108,18 @@ object PlanBridge {
     /** A DataFrame over `input` (which reads `in`) with the parameters
       * bound to `in`'s values and those of the chart's own [[param]]
       * columns `args`. Builds no Dataset but the returned one and plans
-      * nothing: both plans are copies of the prepared ones. */
+      * nothing: the analyzed plan is a rebound copy of the prepared one,
+      * and the physical plan is a [[BoundExec]] over the prepared one. */
     def bind(input: DataFrame, in: CachedInput, args: Seq[Column]): DataFrame = {
       val spark = session(input.sparkSession)
-      val byId = ids.zip(in.values ++ args.map(boundParam(_).value)).toMap
-      def rebind[T <: QueryPlan[T]](p: T): T = p.transformAllExpressions {
-        case b: BoundParam if byId.contains(b.id) => b.copy(value = byId(b.id))
-      }
+      val bound = ids.zip(in.params ++ args.map(boundParam)).map { case (id, p) => p.copy(id = id) }
+      val values = bound.map(p => p.id -> p.value).toMap
       val inPlan = logicalPlan(input)
       spark.withActive {
-        val plan = rebind(analyzed).transformUp { case h if h eq hole => inPlan }
-        val qe = new PreparedExecution(spark, plan, entry, rebind(executed.clone()))
+        val plan = analyzed.transformAllExpressions {
+          case b: BoundParam if values.contains(b.id) => b.copy(value = values(b.id))
+        }.transformUp { case h if h eq hole => inPlan }
+        val qe = new PreparedExecution(spark, plan, entry, BoundExec(executed, bound))
         new classic.Dataset[Row](qe, () => RowEncoder.encoderFor(plan.schema): Encoder[Row])
       }
     }
@@ -135,9 +141,9 @@ object PlanBridge {
     val analyzed = cut(qe.analyzed)
     val executed = QueryExecution.prepareExecutedPlan(spark, qe.sparkPlan)
     val scans = executed.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
-    val argIds = args.map(boundParam(_).id)
+    val ids = (input.params ++ args.map(boundParam)).map(_.id)
     if (found && scans.size == 1 && (scans.head eq input.entry.builder))
-      Some(new Prepared(input.entry, hole, analyzed, executed, input.ids ++ argIds))
+      Some(new Prepared(input.entry, hole, analyzed, executed, ids))
     else None
   }
 
@@ -153,6 +159,43 @@ object PlanBridge {
     private lazy val chosen = if (entry.live(spark)) physical else super.executedPlan
     override def executedPlan: SparkPlan = chosen
   }
+
+  /** One call of a prepared chart. `child` is the prepared physical plan
+    * itself, shared by every call (so explain and plan audits see the
+    * real operators), and `params` are the call's values under its ids.
+    * A plan builds its RDD once, on its first `execute()`, and keeps it:
+    * so each call runs one job over that one RDD, with `params` carried in
+    * the job's tasks. */
+  private final case class BoundExec(child: SparkPlan, params: Seq[BoundParam])
+      extends UnaryExecNode {
+    override def output: Seq[Attribute] = child.output
+    override protected def withNewChildInternal(c: SparkPlan): BoundExec = copy(child = c)
+
+    override protected def doExecute(): RDD[InternalRow] =
+      new BoundRDD(child.execute(), params.map(p => p.id -> p.value).toMap)
+
+    override def executeCollect(): Array[InternalRow] =
+      sparkContext.runJob(execute(), CollectRows).flatten
+  }
+
+  /** `prev` with `values` (parameter id -> value) installed for each of
+    * its tasks: see [[BoundParam]]. */
+  private final class BoundRDD(prev: RDD[InternalRow], values: Map[Long, Any])
+      extends RDD[InternalRow](prev) {
+    override protected def getPartitions: Array[Partition] = firstParent[InternalRow].partitions
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+      BoundParam.install(values, context)
+      firstParent[InternalRow].iterator(split, context)
+    }
+  }
+
+  /** A task's rows, copied. A named function, not a lambda, so the
+    * closure cleaner finds no closure class to read and scan. */
+  private object CollectRows
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    override def apply(c: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
+      rows.map(_.copy()).toArray
+  }
 }
 
 /** A value in a plan that can change between runs of the same prepared
@@ -160,11 +203,28 @@ object PlanBridge {
   * its generated code reads the value from this object (through
   * `CodegenFallback`), so code generated for one value compiles once and
   * serves every other. It is always nullable, so a null value can be
-  * bound into any plan prepared over it. */
+  * bound into any plan prepared over it.
+  *
+  * In a task that installed values (a prepared chart's job), the value
+  * is the one installed for `id`, else `value`. Each task runs its own
+  * deserialized copy of the plan, so a copy looks its value up once, on
+  * its first row. */
 case class BoundParam(id: Long, value: Any, dataType: DataType)
     extends LeafExpression with CodegenFallback {
+  @transient private lazy val current: Any = BoundParam.installed.get.getOrElse(id, value)
   override def nullable: Boolean = true
   override def foldable: Boolean = false
-  override def eval(input: InternalRow): Any = value
-  override def toString: String = s"param#$id($value)"
+  override def eval(input: InternalRow): Any = current
+  override def toString: String = s"param#$id(${Literal(value, dataType)})"
+}
+
+object BoundParam {
+  private val installed = ThreadLocal.withInitial[Map[Long, Any]](() => Map.empty)
+
+  /** Installs `values` (id -> value) for the task `context` runs on this
+    * thread, until it completes. */
+  private[graftbridge] def install(values: Map[Long, Any], context: TaskContext): Unit = {
+    installed.set(values)
+    context.addTaskCompletionListener[Unit](_ => installed.remove())
+  }
 }

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.etl.StarSchema
 import graft.queries.Dashboard
@@ -51,13 +54,31 @@ object DashboardReference {
   * [[DashboardReference]], over the reference data under every quarter
   * range and type filter, and over a hand-built frame with tied totals, a
   * null group key and a quarter without BUY/SELL rows. */
-class DashboardDifferentialSpec extends SparkSpecBase {
+class DashboardDifferentialSpec extends SparkSpecBase with BeforeAndAfterAll {
 
   lazy val wide: DataFrame = {
     val w = StarSchema.build(spark, fixturePath("raw_file")).wide.cache()
     w.count()
     w
   }
+
+  /** The reference trend is planned afresh for each of the 70 filter
+    * settings, and each plan logs the unpartitioned-window warning for
+    * its ≤4-row lag window: this spec logs that logger's errors only. */
+  private val windowLogger = "org.apache.spark.sql.execution.window.WindowExec"
+  private var windowLevel: Level = _
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    windowLevel = LogManager.getLogger(windowLogger).getLevel
+    Configurator.setLevel(windowLogger, Level.ERROR)
+  }
+
+  override def afterAll(): Unit =
+    try {
+      Configurator.setLevel(windowLogger, windowLevel)
+      wide.unpersist(blocking = true)
+    } finally super.afterAll()
 
   private def assertSame(got: DataFrame, want: DataFrame, clue: String): Unit = {
     assert(got.schema === want.schema, clue)

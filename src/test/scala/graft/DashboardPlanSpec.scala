@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.scalatest.BeforeAndAfterAll
 
 import graft.etl.StarSchema
 import graft.queries.Dashboard
@@ -17,13 +18,16 @@ import graft.queries.Dashboard
   * shuffle or broadcast exchange, and only the trend's lag window is
   * unpartitioned. None of this depends on the core count, so the spec is
   * meant to pass at any `SPARK_GRAFT_CPUS`. */
-class DashboardPlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
+class DashboardPlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper
+    with BeforeAndAfterAll {
 
   lazy val wide: DataFrame = {
     val w = StarSchema.build(spark, fixturePath("raw_file")).wide.cache()
     w.count()
     w
   }
+
+  override def afterAll(): Unit = try wide.unpersist(blocking = true) finally super.afterAll()
 
   /** (chart, plan, unpartitioned windows) — the nine charts of one
     * dashboard interaction. */

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -21,9 +21,10 @@ import graft.queries.Dashboard
 
 /** The prepared-plan path of [[Dashboard]]: over a cached table each
   * chart is planned once and later interactions only bind new filter
-  * values, so they compile no code and run no adaptive re-planning; a
-  * template never outlives its cache entry, never mixes up concurrent
-  * callers, and inputs that read no cache take the ordinary path. */
+  * values, so they compile no code, run no adaptive re-planning and run
+  * their job over the RDD the template built; a template never outlives
+  * its cache entry, never mixes up concurrent callers or calls bound
+  * before others, and inputs that read no cache take the ordinary path. */
 class DashboardPreparedSpec extends SparkSpecBase {
 
   /** The main-page filters and the Query Analysis selections of one
@@ -56,17 +57,24 @@ class DashboardPreparedSpec extends SparkSpecBase {
     State(("Q1", "Q1"), Seq("BUY", "DIVIDENT"), "Ireland", "Q1"),
     State(("Q3", "Q4"), Seq("BUY", "SELL"), "United States of America", "Q3"))
 
-  /** The reference serving table, not cached: fresh attribute ids, so no
-    * other suite's cache entry or template can serve it. */
+  /** The reference serving table, not cached. Its plan is the one other
+    * suites cache (the `CacheManager` matches canonicalized plans, so its
+    * fresh attribute ids do not tell them apart): those suites release
+    * their entries when they end, and [[cached]] checks it makes its own. */
   private def reference(): DataFrame = StarSchema.build(spark, fixturePath("raw_file")).wide
 
   /** The same rows with no cache behind them: the ordinary path. */
   private def uncached(df: DataFrame): DataFrame =
     spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
+  /** `df` cached as a new entry: no entry an earlier test or suite left
+    * serves it. */
   private def cached(df: DataFrame): DataFrame = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     val c = df.cache()
     c.count()
+    assert((sc.getPersistentRDDs.keySet -- before).size === 1, "a cache entry already served it")
     c
   }
 
@@ -97,6 +105,53 @@ class DashboardPreparedSpec extends SparkSpecBase {
         assert(aqeUpdates.get === 0)
         assert(second.forall(!adaptive(_)), "every chart runs its prepared plan")
       } finally sc.removeSparkListener(listener)
+    } finally wide.unpersist(blocking = true)
+  }
+
+  /** The ids of the RDDs in each stage that `df.collect()` runs. */
+  private def stageRdds(df: DataFrame): Seq[Set[Int]] = {
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Set[Int]]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.add(e.stageInfo.rddInfos.map(_.id).toSet)
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      df.collect()
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    stages.asScala.toSeq
+  }
+
+  test("warm calls of a chart run over the RDDs its template built: one new RDD per call") {
+    val wide = cached(reference())
+    try {
+      rows(wide, states(0))
+      for ((a, b) <- charts(wide, states(1)).zip(charts(wide, states(2)))) {
+        val Seq(first) = stageRdds(a)
+        val Seq(second) = stageRdds(b)
+        assert((first intersect second).nonEmpty, s"shared RDDs\n${a.queryExecution.executedPlan}")
+        assert((first diff second).size === 1 && (second diff first).size === 1,
+          s"$first vs $second\n${a.queryExecution.executedPlan}")
+      }
+    } finally wide.unpersist(blocking = true)
+  }
+
+  test("charts bound at two states and run in reverse order each return their own rows, " +
+      "through collect, .rdd and toLocalIterator") {
+    val base = reference()
+    val two = states.take(2)
+    val want = two.map(rows(uncached(base), _))
+    val wide = cached(base)
+    try {
+      rows(wide, states(2)) // the templates exist before the charts below are bound
+      for ((bound, w) <- two.map(charts(wide, _)).zip(want).reverse) {
+        assert(bound.map(_.collect().toSeq) === w)
+        assert(bound.map(_.rdd.collect().toSeq) === w)
+        assert(bound.map(_.toLocalIterator().asScala.toSeq) === w)
+      }
     } finally wide.unpersist(blocking = true)
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.etl.StarSchema
 import graft.io.CsvDialects
@@ -9,13 +10,19 @@ import graft.queries.Dashboard
 
 /** Golden-parity tests against the reference's own data and committed
   * output (SURVEY.md §5.2.1/§5.2.5; golden values from FIXTURES.md §A). */
-class StarSchemaParitySpec extends SparkSpecBase {
+class StarSchemaParitySpec extends SparkSpecBase with BeforeAndAfterAll {
 
   lazy val rawDir: String = fixturePath("raw_file")
   lazy val wh: StarSchema.Warehouse = {
     val w = StarSchema.build(spark, rawDir)
     StarSchema.Warehouse(w.dims, w.fact.cache(), w.wide.cache())
   }
+
+  override def afterAll(): Unit =
+    try {
+      wh.wide.unpersist(blocking = true)
+      wh.fact.unpersist(blocking = true)
+    } finally super.afterAll()
 
   test("raw scans parse the reference CSV dialects") {
     val account = CsvDialects.readAccount(
