@@ -2,11 +2,12 @@
 """Run perfbench in alternating pairs on two checkouts and compare them.
 
     python3 scripts/ab_pairs.py --parent DIR --change DIR --workload session_ref \\
-        --seeds 101-110 [--seconds 20] [--trace 0] [--out FILE]
+        --seeds 101-110 [--trace 0]
 
 Each seed is one pair: both checkouts run `perfbench/run.py` with that
-seed, the parent first on odd seeds and the change first on even ones,
-so a slow phase of the host falls on both sides alike. Every run is
+seed and the run length BENCHMARK.json sets, the parent first on odd
+seeds and the change first on even ones, so a slow phase of the host
+falls on both sides alike. Every run is
 printed as it ends. Then, per metric: each side's quartiles (q1, median,
 q3), the change's wins (pairs where it is better, by the direction
 BENCHMARK.json declares; ties count for neither side), the median's
@@ -42,12 +43,14 @@ def run(checkout, workload, seed, seconds, trace):
     return json.loads(lines[-1])
 
 
-def directions(checkout):
-    """metric name -> 'lower' or 'higher', as BENCHMARK.json declares."""
+def benchmark(checkout):
+    """BENCHMARK.json's run length in seconds, and its metric directions
+    (name -> 'lower' or 'higher')."""
     with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
-    return {m["name"]: m.get("better", "lower")
-            for key in ("end_to_end", "per_layer") for m in spec.get(key, [])}
+    return spec["run_seconds"], {m["name"]: m.get("better", "lower")
+                                 for key in ("end_to_end", "per_layer")
+                                 for m in spec.get(key, [])}
 
 
 def quartiles(xs):
@@ -67,19 +70,17 @@ def main():
     ap.add_argument("--change", required=True, help="checkout of the change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 101-110 or 1,3,5")
-    ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--out", help="also write every run and the summary to this JSON file")
     args = ap.parse_args()
 
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
-    better = directions(sides["change"])
+    seconds, better = benchmark(sides["change"])
     pairs = []
     for seed in seeds(args.seeds):
         order = ["parent", "change"] if seed % 2 else ["change", "parent"]
         pair = {"seed": seed}
         for side in order:
-            res = run(sides[side], args.workload, seed, args.seconds, args.trace)
+            res = run(sides[side], args.workload, seed, seconds, args.trace)
             pair[side] = res
             if res is None:
                 print(f"seed {seed} {side}: run failed", flush=True)
@@ -96,7 +97,6 @@ def main():
     print(f"\n{args.workload}: {len(good)} of {len(pairs)} pairs with both runs correct; "
           f"failed ops parent {sum(p['parent']['failed'] for p in good)}, "
           f"change {sum(p['change']['failed'] for p in good)}")
-    summary = {}
     names = good[0]["change"]["metrics"].keys() if good else []
     for name in names:
         par = [p["parent"]["metrics"][name]["value"] for p in good]
@@ -107,18 +107,11 @@ def main():
         pq, cq = quartiles(par), quartiles(chg)
         delta = (cq[1] - pq[1]) / pq[1] * 100 if pq[1] else None
         beyond_iqr = abs(cq[1] - pq[1]) > pq[2] - pq[0]
-        summary[name] = {"parent": par, "change": chg, "parent_q": pq, "change_q": cq,
-                         "wins": wins, "losses": losses, "median_delta_pct": delta,
-                         "beyond_parent_iqr": beyond_iqr}
         print(f"{name}: parent {'/'.join(fmt(x) for x in pq)}  change "
               f"{'/'.join(fmt(x) for x in cq)} (q1/median/q3)  change better in "
               f"{wins}/{len(good)}, worse in {losses}  median "
               f"{'n/a' if delta is None else f'{delta:+.1f}%'}  "
               f"{'beyond' if beyond_iqr else 'within'} the parent IQR ({fmt(pq[2] - pq[0])})")
-    if args.out:
-        with open(args.out, "w") as fh:
-            json.dump({"workload": args.workload, "pairs": pairs, "summary": summary}, fh,
-                      indent=1)
 
 
 if __name__ == "__main__":

@@ -45,12 +45,13 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *    values blanked, the chart, `groupCol` and `k`. A key whose chart
   *    cannot be prepared is stored too, and is planned afresh each call.
   *  - Call: a call whose key is known builds no intermediate Dataset and
-  *    no plan copy. It rebinds the values into a copy of the stored
+  *    no plan copy. It puts its own parameters into a copy of the stored
   *    analyzed plan and runs one job over the RDD that the stored
   *    physical plan built on its first run, with the values carried in
   *    that job's tasks. Nothing is analyzed, optimized, planned, compiled
-  *    or built again. The physical plan's SQL metrics are the template's,
-  *    so they add up over all of its calls, not per call.
+  *    or built again. The physical plan's SQL metrics are shared by
+  *    every call of the template: each action resets them, and calls
+  *    that run at once race on them, so they hold no per-call values.
   *  - Dropped: past `MaxTemplates`, the least recently used. A template
   *    whose entry was unpersisted is never hit again (no input resolves
   *    to that entry any more), and a chart bound before the `unpersist`

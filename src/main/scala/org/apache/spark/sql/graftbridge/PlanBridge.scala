@@ -6,7 +6,7 @@ import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.catalyst.expressions.{Attribute, LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.classic
@@ -108,16 +108,20 @@ object PlanBridge {
     /** A DataFrame over `input` (which reads `in`) with the parameters
       * bound to `in`'s values and those of the chart's own [[param]]
       * columns `args`. Builds no Dataset but the returned one and plans
-      * nothing: the analyzed plan is a rebound copy of the prepared one,
-      * and the physical plan is a [[BoundExec]] over the prepared one. */
+      * nothing: the analyzed plan is the prepared one over `input` with
+      * the call's own parameters in place of the prepared ones, and the
+      * physical plan is a [[BoundExec]] over the prepared one. So a plan
+      * made from the analyzed one (`.rdd`, a further transformation) reads
+      * no values installed for a prepared chart's task. */
     def bind(input: DataFrame, in: CachedInput, args: Seq[Column]): DataFrame = {
       val spark = session(input.sparkSession)
-      val bound = ids.zip(in.params ++ args.map(boundParam)).map { case (id, p) => p.copy(id = id) }
-      val values = bound.map(p => p.id -> p.value).toMap
+      val calls = ids.zip(in.params ++ args.map(boundParam))
+      val own = calls.toMap
+      val bound = calls.map { case (id, p) => p.copy(id = id) }
       val inPlan = logicalPlan(input)
       spark.withActive {
         val plan = analyzed.transformAllExpressions {
-          case b: BoundParam if values.contains(b.id) => b.copy(value = values(b.id))
+          case b: BoundParam if own.contains(b.id) => own(b.id)
         }.transformUp { case h if h eq hole => inPlan }
         val qe = new PreparedExecution(spark, plan, entry, BoundExec(executed, bound))
         new classic.Dataset[Row](qe, () => RowEncoder.encoderFor(plan.schema): Encoder[Row])
@@ -127,8 +131,10 @@ object PlanBridge {
 
   /** Prepares `chart`, built over `inputDf` (which reads `input`) with
     * the chart's own [[param]] columns `args`. The physical plan is not
-    * adaptive. None when the chart does not read `input`'s cache entry
-    * through exactly one scan. */
+    * adaptive. Its parameters get ids of their own, which no DataFrame's
+    * logical plan holds (not even `chart`'s), so only its own jobs read
+    * the values installed under them. None when the chart does not read
+    * `input`'s cache entry through exactly one scan. */
   def prepare(chart: DataFrame, input: CachedInput, inputDf: DataFrame,
       args: Seq[Column]): Option[Prepared] = {
     val spark = session(chart.sparkSession)
@@ -137,11 +143,17 @@ object PlanBridge {
     var found = false
     def cut(p: LogicalPlan): LogicalPlan =
       if (p eq in) { found = true; hole } else p.mapChildren(cut)
+    val fresh = (input.params ++ args.map(boundParam))
+      .map(_.id -> nextParam.incrementAndGet()).toMap
+    val renumber: PartialFunction[Expression, Expression] = {
+      case b: BoundParam if fresh.contains(b.id) => b.copy(id = fresh(b.id))
+    }
     val qe = chart.queryExecution
-    val analyzed = cut(qe.analyzed)
-    val executed = QueryExecution.prepareExecutedPlan(spark, qe.sparkPlan)
+    val analyzed = cut(qe.analyzed).transformAllExpressions(renumber)
+    val executed =
+      QueryExecution.prepareExecutedPlan(spark, qe.sparkPlan.transformAllExpressions(renumber))
     val scans = executed.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
-    val ids = (input.params ++ args.map(boundParam)).map(_.id)
+    val ids = (input.params ++ args.map(boundParam)).map(p => fresh(p.id))
     if (found && scans.size == 1 && (scans.head eq input.entry.builder))
       Some(new Prepared(input.entry, hole, analyzed, executed, ids))
     else None
@@ -211,7 +223,8 @@ object PlanBridge {
   * its first row. */
 case class BoundParam(id: Long, value: Any, dataType: DataType)
     extends LeafExpression with CodegenFallback {
-  @transient private lazy val current: Any = BoundParam.installed.get.getOrElse(id, value)
+  @transient private lazy val current: Any =
+    Option(BoundParam.installed.get).fold(value)(_.getOrElse(id, value))
   override def nullable: Boolean = true
   override def foldable: Boolean = false
   override def eval(input: InternalRow): Any = current
@@ -219,11 +232,17 @@ case class BoundParam(id: Long, value: Any, dataType: DataType)
 }
 
 object BoundParam {
-  private val installed = ThreadLocal.withInitial[Map[Long, Any]](() => Map.empty)
+  /** The values installed on this thread, or null. */
+  private val installed = new ThreadLocal[Map[Long, Any]]
 
   /** Installs `values` (id -> value) for the task `context` runs on this
-    * thread, until it completes. */
+    * thread, until it completes. A task computes at most one prepared
+    * chart's job: a second install (two charts' RDDs zipped or combined
+    * in one task) fails the task, since one chart would read the other's
+    * values. */
   private[graftbridge] def install(values: Map[Long, Any], context: TaskContext): Unit = {
+    require(installed.get == null,
+      "one task cannot compute two prepared charts: their bound values would mix")
     installed.set(values)
     context.addTaskCompletionListener[Unit](_ => installed.remove())
   }

@@ -56,9 +56,14 @@ object DashboardReference {
   * null group key and a quarter without BUY/SELL rows. */
 class DashboardDifferentialSpec extends SparkSpecBase with BeforeAndAfterAll {
 
+  /** The cached table, once a test has built it: a run that never needs
+    * it neither builds nor releases it. */
+  private var built: Option[DataFrame] = None
+
   lazy val wide: DataFrame = {
     val w = StarSchema.build(spark, fixturePath("raw_file")).wide.cache()
     w.count()
+    built = Some(w)
     w
   }
 
@@ -77,7 +82,7 @@ class DashboardDifferentialSpec extends SparkSpecBase with BeforeAndAfterAll {
   override def afterAll(): Unit =
     try {
       Configurator.setLevel(windowLogger, windowLevel)
-      wide.unpersist(blocking = true)
+      built.foreach(_.unpersist(blocking = true))
     } finally super.afterAll()
 
   private def assertSame(got: DataFrame, want: DataFrame, clue: String): Unit = {

@@ -21,13 +21,19 @@ import graft.queries.Dashboard
 class DashboardPlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper
     with BeforeAndAfterAll {
 
+  /** The cached table, once a test has built it: a run that never needs
+    * it neither builds nor releases it. */
+  private var built: Option[DataFrame] = None
+
   lazy val wide: DataFrame = {
     val w = StarSchema.build(spark, fixturePath("raw_file")).wide.cache()
     w.count()
+    built = Some(w)
     w
   }
 
-  override def afterAll(): Unit = try wide.unpersist(blocking = true) finally super.afterAll()
+  override def afterAll(): Unit =
+    try built.foreach(_.unpersist(blocking = true)) finally super.afterAll()
 
   /** (chart, plan, unpartitioned windows) — the nine charts of one
     * dashboard interaction. */

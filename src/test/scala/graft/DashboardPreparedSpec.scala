@@ -7,7 +7,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.{ListenerBusDrain, SparkException}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -151,6 +151,30 @@ class DashboardPreparedSpec extends SparkSpecBase {
         assert(bound.map(_.collect().toSeq) === w)
         assert(bound.map(_.rdd.collect().toSeq) === w)
         assert(bound.map(_.toLocalIterator().asScala.toSeq) === w)
+      }
+    } finally wide.unpersist(blocking = true)
+  }
+
+  test("two bound charts computed in one task fail the job instead of mixing their values") {
+    val base = reference()
+    val countries = states.take(2).map(_.country)
+    val want = countries.map(Dashboard.topSectorsForSellInCountry(uncached(base), _).collect().toSeq)
+    assert(want.distinct.size === 2)
+    val wide = cached(base)
+    try {
+      val Seq(a, b) = countries.map(Dashboard.topSectorsForSellInCountry(wide, _))
+      // the physical plans' RDDs: each task of the zip computes both charts
+      val e = intercept[SparkException] {
+        a.queryExecution.toRdd.zipPartitions(b.queryExecution.toRdd)((x, y) => x ++ y).count()
+      }
+      assert(e.getMessage.contains("cannot compute two prepared charts"))
+      // `.rdd` plans a bound chart afresh over the call's own values: a
+      // task computing it next to a prepared chart's job reads none of
+      // that job's values, whether it is the call that prepared the
+      // template (`a`) or a later one (`b`)
+      for ((job, fresh, w) <- Seq((a, b, want(1)), (b, a, want(0)))) {
+        val got = job.queryExecution.toRdd.zipPartitions(fresh.rdd)((_, rows) => rows).collect()
+        assert(got.toSeq === w)
       }
     } finally wide.unpersist(blocking = true)
   }

@@ -13,15 +13,21 @@ import graft.queries.Dashboard
 class StarSchemaParitySpec extends SparkSpecBase with BeforeAndAfterAll {
 
   lazy val rawDir: String = fixturePath("raw_file")
+  /** The cached warehouse, once a test has built it: a run that never
+    * needs it neither builds nor releases it. */
+  private var built: Option[StarSchema.Warehouse] = None
+
   lazy val wh: StarSchema.Warehouse = {
     val w = StarSchema.build(spark, rawDir)
-    StarSchema.Warehouse(w.dims, w.fact.cache(), w.wide.cache())
+    val cached = StarSchema.Warehouse(w.dims, w.fact.cache(), w.wide.cache())
+    built = Some(cached)
+    cached
   }
 
   override def afterAll(): Unit =
-    try {
-      wh.wide.unpersist(blocking = true)
-      wh.fact.unpersist(blocking = true)
+    try built.foreach { w =>
+      w.wide.unpersist(blocking = true)
+      w.fact.unpersist(blocking = true)
     } finally super.afterAll()
 
   test("raw scans parse the reference CSV dialects") {
