@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object WarehouseLayout {
 
-  private def layoutKey(dir: String, tag: String): String =
+  private def cacheKey(dir: String, tag: String): String =
     "warehouse#" + new java.io.File(dir).getCanonicalPath + "#" + tag
 
   /** lineitem re-laid-out hive-partitioned by ship-quarter label
@@ -23,7 +23,7 @@ object WarehouseLayout {
     * layout bounds a quarter slice to its own files no matter how large
     * the fact table grows. */
   def lineitemByShipQuarter(spark: SparkSession, dir: String): String =
-    TempLayouts.cached(layoutKey(dir, "lineitem"), "graft_warehouse_li_") { out =>
+    TempLayouts.cached(cacheKey(dir, "lineitem"), "graft_warehouse_li_") { out =>
       val li = Tables(spark, dir).lineitem.withColumn("ship_quarter",
         concat(year(col("l_shipdate")).cast("string"),
           graft.ops.CoreQueries.quarterLabel(col("l_shipdate"))))
@@ -46,7 +46,7 @@ object WarehouseLayout {
     * comparing scan-output rows against a shuffled (stats-useless)
     * layout of the same rows. */
   def lineitemSortedByShipdate(spark: SparkSession, dir: String): String =
-    TempLayouts.cached(layoutKey(dir, "li_sorted"), "graft_warehouse_ls_") { out =>
+    TempLayouts.cached(cacheKey(dir, "li_sorted"), "graft_warehouse_ls_") { out =>
       Tables(spark, dir).lineitem
         .withColumn("ship_date", to_date(col("l_shipdate")))
         .repartitionByRange(8, col("ship_date"))
@@ -94,7 +94,7 @@ object WarehouseLayout {
     * dropped before the write: it orders the rows, the pruning runs on
     * the real key columns' statistics. */
   def lineitemZOrdered(spark: SparkSession, dir: String): String =
-    TempLayouts.cached(layoutKey(dir, "li_zorder"), "graft_warehouse_lz_") { out =>
+    TempLayouts.cached(cacheKey(dir, "li_zorder"), "graft_warehouse_lz_") { out =>
       val li = Tables(spark, dir).lineitem
       val b = li.agg(min(col("l_partkey")), max(col("l_partkey")),
         min(col("l_suppkey")), max(col("l_suppkey"))).head()
@@ -134,7 +134,7 @@ object WarehouseLayout {
     * correctness input, the layout only orders rows); user_id, dense
     * and tiny-domain, takes the plain min-max scale. */
   def eventsZOrderedEquiDepth(spark: SparkSession, dir: String): String =
-    TempLayouts.cached(layoutKey(dir, "ev_zed"), "graft_warehouse_ze_") { out =>
+    TempLayouts.cached(cacheKey(dir, "ev_zed"), "graft_warehouse_ze_") { out =>
       val ev = Tables(spark, dir).events
       val nb = 64
       // distinct ascending interior cuts (heavy skew can collapse
@@ -154,17 +154,6 @@ object WarehouseLayout {
         .write.mode("overwrite").parquet(out)
     }
 
-  /** orders + lineitem written ONCE per (JVM, dataset) as bucketed
-    * tables on the order key — the write-once/join-forever layout: every
-    * later fact-fact join on that key runs with ZERO Exchange on either
-    * side, because both scans already report the matching hash
-    * partitioning (q61 demonstrates it under the oracle). Returns the
-    * two catalog table names. Tables are EXTERNAL with their files in a
-    * [[TempLayouts]] dir (cleaned at exit; the in-memory catalog entries
-    * die with the JVM), named per-dataset so two datasets never serve
-    * each other's buckets. 8 buckets fit the test scale; at 100 TB the
-    * same layout takes O(cluster cores) buckets — the bucket COUNT is
-    * the only scale knob, the join plan is unchanged. */
   /** events re-landed as a semi-structured VARIANT column in parquet —
     * the Spark-4 ingest shape for payloads whose schema drifts faster
     * than the table's. The JSON envelope (type + nested meta) is parsed
@@ -177,7 +166,7 @@ object WarehouseLayout {
     * column — and the envelope is assembled from the RAW columns, so the
     * oracle recomputes from those same columns, layout-independent. */
   def eventsVariantLayout(spark: SparkSession, dir: String): String =
-    TempLayouts.cached(layoutKey(dir, "events_variant"), "graft_warehouse_ev_") { out =>
+    TempLayouts.cached(cacheKey(dir, "events_variant"), "graft_warehouse_ev_") { out =>
       Tables(spark, dir).events
         .select(
           col("event_id"),
@@ -197,7 +186,7 @@ object WarehouseLayout {
     * DIFFERENT schemas, not a partition column) so a `mergeSchema` read
     * must union the schemas and null-fill the old rows. q88's subject. */
   def eventsTwoGenerationLayout(spark: SparkSession, dir: String): String =
-    TempLayouts.cached(layoutKey(dir, "events_gen"), "graft_warehouse_eg_") { out =>
+    TempLayouts.cached(cacheKey(dir, "events_gen"), "graft_warehouse_eg_") { out =>
       val ev = Tables(spark, dir).events.select(
         col("event_id"), col("user_id"), col("event_type"),
         get_json_object(col("props"), "$.k").cast("long").as("prop_k"))
@@ -207,6 +196,17 @@ object WarehouseLayout {
         .write.mode("overwrite").parquet(s"$out/gen1")
     }
 
+  /** orders + lineitem written ONCE per (JVM, dataset) as bucketed
+    * tables on the order key — the write-once/join-forever layout: every
+    * later fact-fact join on that key runs with ZERO Exchange on either
+    * side, because both scans already report the matching hash
+    * partitioning (q61 demonstrates it under the oracle). Returns the
+    * two catalog table names. Tables are EXTERNAL with their files in a
+    * [[TempLayouts]] dir (cleaned at exit; the in-memory catalog entries
+    * die with the JVM), named per-dataset so two datasets never serve
+    * each other's buckets. 8 buckets fit the test scale; at 100 TB the
+    * same layout takes O(cluster cores) buckets — the bucket COUNT is
+    * the only scale knob, the join plan is unchanged. */
   def bucketedFactTables(spark: SparkSession, dir: String): (String, String) = {
     val canon = new java.io.File(dir).getCanonicalPath
     val suffix = java.lang.Integer.toHexString(

@@ -11,6 +11,9 @@ import graft.similarity.SimilarityOps
 class SimilaritySpec extends SparkSpecBase {
 
   lazy val emb = Tables(spark, sf0001).embeddings
+  /** The IVF-PQ serving layouts' dataset key — the one the catalog
+    * entries s14–s16 use for the same data. */
+  lazy val datasetKey = new java.io.File(sf0001).getCanonicalPath
 
   test("cosine similarity matches a scalar reference implementation") {
     import testImplicits._
@@ -252,8 +255,9 @@ class SimilaritySpec extends SparkSpecBase {
       val rs = qids.map(q => exact(q).intersect(byQ(q)).size / 10.0)
       rs.sum / rs.size
     }
-    val plain = recallOf(SimilarityOps.ivfPqTopKBatch(emb, qids, k = 10))
-    val residual = recallOf(SimilarityOps.ivfPqResidualTopKBatch(emb, qids, k = 10))
+    val plain = recallOf(SimilarityOps.ivfPqTopKBatch(emb, qids, k = 10, datasetKey))
+    val residual = recallOf(
+      SimilarityOps.ivfPqResidualTopKBatch(emb, qids, k = 10, datasetKey))
     assert(residual >= plain,
       s"residual PQ recall $residual regressed below non-residual $plain")
     // and it must remain non-trivial in absolute terms (random ≈ 0.02)
@@ -277,8 +281,9 @@ class SimilaritySpec extends SparkSpecBase {
       val rs = qids.map(q => exact(q).intersect(byQ(q)).size / 10.0)
       rs.sum / rs.size
     }
-    val plain = recallOf(SimilarityOps.ivfPqTopKBatch(emb, qids, k = 10))
-    val reranked = recallOf(SimilarityOps.ivfPqRerankTopKBatch(emb, qids, k = 10))
+    val plain = recallOf(SimilarityOps.ivfPqTopKBatch(emb, qids, k = 10, datasetKey))
+    val reranked = recallOf(
+      SimilarityOps.ivfPqRerankTopKBatch(emb, qids, k = 10, datasetKey))
     assert(reranked >= plain,
       s"reranked recall $reranked regressed below ADC-only $plain")
     assert(reranked >= 0.2, s"reranked mean recall $reranked")
