@@ -27,7 +27,9 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   * shuffle or broadcast exchange. The input is the session's serving
   * table: bounded, cached once and re-read on every widget change
   * (`st.cache_data` in the reference), so each chart's latency is set by
-  * per-job fixed costs (planning, codegen, scheduling), not by the scan.
+  * per-job fixed costs, not by the scan: job scheduling and result
+  * hand-off once a template exists (planning and codegen run once per
+  * template, below), and none at all for a repeated call (Result).
   * The policy is a constant, measured at 2,069 rows (the reference data)
   * and ~600k rows (an sf0.1 star join); a dashboard over an unbounded
   * table is not what these functions serve.
@@ -50,8 +52,24 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
   *    physical plan built on its first run, with the values carried in
   *    that job's tasks. Nothing is analyzed, optimized, planned, compiled
   *    or built again. The physical plan's SQL metrics are shared by
-  *    every call of the template: each action resets them, and calls
-  *    that run at once race on them, so they hold no per-call values.
+  *    every call of the template: each action resets them (a repeated
+  *    call, which runs no job, leaves them at zero), and calls that run
+  *    at once race on them, so they hold no per-call values.
+  *  - Result: a template keeps the rows each `collect` of it returned,
+  *    keyed by the values bound in that call (the input's filter values
+  *    and the chart's own arguments), so a call that repeats an earlier
+  *    one (most of them: a widget change alters one value) runs no job.
+  *    It is exact: the template's key already fixes the SQL settings,
+  *    the cache entry (whose rows do not change while it is served), the
+  *    input's shape, the chart, `groupCol` and `k`, and the rows die with
+  *    the template. Bounded at 128 value sets per template, least
+  *    recently used dropped. Never kept: a failed call (it runs again),
+  *    a template whose plan is not deterministic, and rows read any
+  *    other way than `collect` (`.rdd`, `toLocalIterator`, a further
+  *    transformation); a call run after its entry's `unpersist` is
+  *    planned afresh and reads no kept rows. An input that reads the
+  *    current time (or user, or database) gets no template: the
+  *    optimizer would fold the first call's value into it.
   *  - Dropped: past `MaxTemplates`, the least recently used. A template
   *    whose entry was unpersisted is never hit again (no input resolves
   *    to that entry any more), and a chart bound before the `unpersist`
@@ -99,8 +117,11 @@ object Dashboard {
         case Some(t) => t.fold(build(wide, params))(_.bind(wide, in, params))
         case None =>
           val c = build(wide, params)
-          val t = PlanBridge.prepare(c, in, wide, params)
-          templates.synchronized(templates.put(key, t))
+          val prepared = PlanBridge.prepare(c, in, wide, params)
+          // a call that raced this one to the key keeps its template, so
+          // the key has one template and one set of kept rows
+          val t = templates.synchronized(Option(templates.putIfAbsent(key, prepared)))
+            .getOrElse(prepared)
           t.fold(c)(_.bind(wide, in, params))
       }
     }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnaryExecNode}
@@ -34,7 +35,10 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
   *    `executeCollect`) whose job runs over the RDD the prepared plan
   *    built once, an `RDD` subclass whose tasks install the call's values
   *    until they complete (`TaskContext` completion listener), and
-  *    `SparkContext.runJob` with a named function.
+  *    `SparkContext.runJob` with a named function;
+  *  - a prepared plan's results: the `InternalRow`s its `executeCollect`
+  *    collected, kept by the values bound in the call, so a repeated call
+  *    runs no job.
   */
 object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -99,11 +103,38 @@ object PlanBridge {
   private def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 
+  /** Results kept per prepared plan. A dashboard's widgets bind at most
+    * 70 value sets into one template (10 quarter ranges x 7 type sets;
+    * the Query Analysis charts take one of 21 countries or 4 quarters),
+    * so 128 keeps every state of a session. A result's size is set by
+    * its chart, not by the table: k keys x types rows for a top-k,
+    * quarters x types for the stacked chart, one row per quarter or per
+    * top-k key for the others. Over the reference data that is ≤ 15 rows
+    * of ≤ ~100 bytes, so ≤ ~2 KB with its key, and the worst case, all
+    * 64 templates full, is 64 x 128 x 2 KB ≈ 16 MB of driver heap. */
+  private val MaxResults = 128
+
+  /** A prepared plan's collected rows by the values bound in the call
+    * (parameter id -> value), least recently used first. */
+  private final class Results {
+    private val rows = new java.util.LinkedHashMap[Map[Long, Any], Array[InternalRow]](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Map[Long, Any], Array[InternalRow]]): Boolean =
+        size() > MaxResults
+    }
+    def get(values: Map[Long, Any]): Option[Array[InternalRow]] =
+      rows.synchronized(Option(rows.get(values))).map(_.map(_.copy()))
+    def put(values: Map[Long, Any], collected: Array[InternalRow]): Unit =
+      rows.synchronized(rows.put(values, collected.map(_.copy())))
+  }
+
   /** A chart planned once over a cached input: its analyzed plan with the
     * input cut out at `hole`, its physical plan, and the ids of the
-    * parameters they carry (the input's, then the chart's own). */
+    * parameters they carry (the input's, then the chart's own). A
+    * deterministic one keeps the rows its calls collected. */
   final class Prepared private[graftbridge] (entry: CacheEntry, hole: LogicalPlan,
-      analyzed: LogicalPlan, executed: SparkPlan, ids: Seq[Long]) {
+      analyzed: LogicalPlan, executed: SparkPlan, ids: Seq[Long], deterministic: Boolean) {
+
+    private val results = if (deterministic) Some(new Results) else None
 
     /** A DataFrame over `input` (which reads `in`) with the parameters
       * bound to `in`'s values and those of the chart's own [[param]]
@@ -123,7 +154,7 @@ object PlanBridge {
         val plan = analyzed.transformAllExpressions {
           case b: BoundParam if own.contains(b.id) => own(b.id)
         }.transformUp { case h if h eq hole => inPlan }
-        val qe = new PreparedExecution(spark, plan, entry, BoundExec(executed, bound))
+        val qe = new PreparedExecution(spark, plan, entry, BoundExec(executed, bound)(results))
         new classic.Dataset[Row](qe, () => RowEncoder.encoderFor(plan.schema): Encoder[Row])
       }
     }
@@ -134,7 +165,10 @@ object PlanBridge {
     * adaptive. Its parameters get ids of their own, which no DataFrame's
     * logical plan holds (not even `chart`'s), so only its own jobs read
     * the values installed under them. None when the chart does not read
-    * `input`'s cache entry through exactly one scan. */
+    * `input`'s cache entry through exactly one scan, or when the input
+    * reads the current time, user or database: the optimizer folds those
+    * into literals, which the physical plan would keep for every later
+    * call. */
   def prepare(chart: DataFrame, input: CachedInput, inputDf: DataFrame,
       args: Seq[Column]): Option[Prepared] = {
     val spark = session(chart.sparkSession)
@@ -154,9 +188,11 @@ object PlanBridge {
       QueryExecution.prepareExecutedPlan(spark, qe.sparkPlan.transformAllExpressions(renumber))
     val scans = executed.collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
     val ids = (input.params ++ args.map(boundParam)).map(p => fresh(p.id))
-    if (found && scans.size == 1 && (scans.head eq input.entry.builder))
-      Some(new Prepared(input.entry, hole, analyzed, executed, ids))
-    else None
+    if (found && scans.size == 1 && (scans.head eq input.entry.builder) &&
+        !input.shape.containsPattern(CURRENT_LIKE)) {
+      val deterministic = analyzed.deterministic && input.shape.deterministic
+      Some(new Prepared(input.entry, hole, analyzed, executed, ids, deterministic))
+    } else None
   }
 
   /** A query whose plans are given: nothing is analyzed, optimized or
@@ -177,17 +213,28 @@ object PlanBridge {
     * real operators), and `params` are the call's values under its ids.
     * A plan builds its RDD once, on its first `execute()`, and keeps it:
     * so each call runs one job over that one RDD, with `params` carried in
-    * the job's tasks. */
-  private final case class BoundExec(child: SparkPlan, params: Seq[BoundParam])
-      extends UnaryExecNode {
+    * the job's tasks. `executeCollect` (a `collect`) first looks the
+    * values up in the template's `results`: a hit copies the kept rows and
+    * runs no job, and a job's rows are kept only once it succeeds. Every
+    * other way of running the plan (`execute`: `toLocalIterator`) runs
+    * the job. */
+  private final case class BoundExec(child: SparkPlan, params: Seq[BoundParam])(
+      results: Option[Results]) extends UnaryExecNode {
     override def output: Seq[Attribute] = child.output
-    override protected def withNewChildInternal(c: SparkPlan): BoundExec = copy(child = c)
+    override protected def otherCopyArgs: Seq[AnyRef] = results :: Nil
+    override protected def withNewChildInternal(c: SparkPlan): BoundExec =
+      copy(child = c)(results)
 
-    override protected def doExecute(): RDD[InternalRow] =
-      new BoundRDD(child.execute(), params.map(p => p.id -> p.value).toMap)
+    private def values: Map[Long, Any] = params.map(p => p.id -> p.value).toMap
+
+    override protected def doExecute(): RDD[InternalRow] = new BoundRDD(child.execute(), values)
 
     override def executeCollect(): Array[InternalRow] =
-      sparkContext.runJob(execute(), CollectRows).flatten
+      results.flatMap(_.get(values)).getOrElse {
+        val rows = sparkContext.runJob(execute(), CollectRows).flatten
+        results.foreach(_.put(values, rows))
+        rows
+      }
   }
 
   /** `prev` with `values` (parameter id -> value) installed for each of

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -48,25 +44,6 @@ class DashboardPlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper
     ("topIndustriesForBuyInQuarter", Dashboard.topIndustriesForBuyInQuarter(_, "Q4"), 0),
     ("quartersByBuySell", Dashboard.quartersByBuySell, 0))
 
-  /** Collects `df` under its own job group; returns the jobs it ran. */
-  private def jobsToCollect(df: DataFrame): Int = {
-    val sc = spark.sparkContext
-    val group = s"dashboard-plan-${System.nanoTime}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "dashboard plan pin")
-      try df.collect() finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def exchanges(p: SparkPlan): Seq[String] =
     collect(p) {
       case e: Exchange => e.nodeName
@@ -80,7 +57,7 @@ class DashboardPlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper
         else wide
       for ((name, chart, windows) <- charts) {
         val df = chart(in)
-        assert(jobsToCollect(df) === 1, s"$name jobs")
+        assert(withJobCount(df.collect())._2 === 1, s"$name jobs")
         val p = df.queryExecution.executedPlan
         assert(exchanges(p).isEmpty, s"$name exchanges:\n$p")
         assert(PlanAudit.onePartitionWindows(p) === windows, s"$name unpartitioned windows:\n$p")

@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, current_timestamp, lit, rand}
 
 import graft.etl.StarSchema
 import graft.queries.Dashboard
@@ -22,9 +22,11 @@ import graft.queries.Dashboard
 /** The prepared-plan path of [[Dashboard]]: over a cached table each
   * chart is planned once and later interactions only bind new filter
   * values, so they compile no code, run no adaptive re-planning and run
-  * their job over the RDD the template built; a template never outlives
-  * its cache entry, never mixes up concurrent callers or calls bound
-  * before others, and inputs that read no cache take the ordinary path. */
+  * their job over the RDD the template built, and a call that repeats
+  * earlier values runs no job; a template and the rows it keeps never
+  * outlive its cache entry, never mix up concurrent callers or calls
+  * bound before others, and inputs that read no cache take the ordinary
+  * path. */
 class DashboardPreparedSpec extends SparkSpecBase {
 
   /** The main-page filters and the Query Analysis selections of one
@@ -129,13 +131,32 @@ class DashboardPreparedSpec extends SparkSpecBase {
     val wide = cached(reference())
     try {
       rows(wide, states(0))
-      for ((a, b) <- charts(wide, states(1)).zip(charts(wide, states(2)))) {
+      // the first eight charts take values that differ between the two
+      // states; `quartersByBuySell` takes none, so its calls repeat the
+      // first and are answered from the rows it kept
+      val (bound, repeated) = charts(wide, states(1)).zip(charts(wide, states(2))).splitAt(8)
+      for ((a, b) <- bound) {
         val Seq(first) = stageRdds(a)
         val Seq(second) = stageRdds(b)
         assert((first intersect second).nonEmpty, s"shared RDDs\n${a.queryExecution.executedPlan}")
         assert((first diff second).size === 1 && (second diff first).size === 1,
           s"$first vs $second\n${a.queryExecution.executedPlan}")
       }
+      for ((a, b) <- repeated) assert(stageRdds(a).isEmpty && stageRdds(b).isEmpty)
+    } finally wide.unpersist(blocking = true)
+  }
+
+  test("a repeated interaction runs no job and returns the rows of its first run") {
+    val base = reference()
+    val want = rows(uncached(base), states(0))
+    val wide = cached(base)
+    try {
+      val (first, ran) = withJobCount(rows(wide, states(0)))
+      assert(first === want)
+      assert(ran === 9)
+      val (again, reran) = withJobCount(rows(wide, states(0)))
+      assert(again === want)
+      assert(reran === 0)
     } finally wide.unpersist(blocking = true)
   }
 
@@ -186,13 +207,21 @@ class DashboardPreparedSpec extends SparkSpecBase {
     val other = base.filter(col("country_name") =!= "China" && col("quarter") =!= "Q3")
     val want = states.map(rows(uncached(other), _))
     val first = cached(base)
-    assert(rows(first, states(0)) === rows(uncached(base), states(0)))
+    try {
+      assert(rows(first, states(0)) === rows(uncached(base), states(0)))
+      assert(withJobCount(rows(first, states(0)))._2 === 0, "the first table keeps its rows")
+    } finally first.unpersist(blocking = true)
     // no chart call between the two caches: nothing drops the first
     // table's plans before the second table's charts look them up
-    first.unpersist(blocking = true)
     val second = cached(other)
-    try assert(states.map(rows(second, _)) === want)
-    finally second.unpersist(blocking = true)
+    try {
+      // a state the first table answered: the second table's templates
+      // hold no rows yet, so each chart runs its job over the new entry
+      val (again, ran) = withJobCount(rows(second, states(0)))
+      assert(again === want.head)
+      assert(ran === 9)
+      assert(states.map(rows(second, _)) === want)
+    } finally second.unpersist(blocking = true)
   }
 
   test("after unpersist a chart call does not bring the old cache back") {
@@ -202,19 +231,32 @@ class DashboardPreparedSpec extends SparkSpecBase {
     val other = cached(spark.range(10).toDF("n"))
     val before = sc.getPersistentRDDs.keySet
     val wide = cached(reference())
-    val filtered = Dashboard.applyFilters(wide, Some(("Q2", "Q3")), Some(Seq("BUY")))
-    val want = rows(wide, states(2))
-    Dashboard.buySellTrend(filtered).collect()
-    assert(sc.getPersistentRDDs.keySet.size === before.size + 1)
-    wide.unpersist(blocking = true)
-    assert(sc.getPersistentRDDs.keySet === before)
-    // first the frame filtered while the table was cached, whose trend
-    // template is still held
-    Dashboard.buySellTrend(filtered).collect()
-    Dashboard.metricCards(filtered).collect()
-    assert(rows(wide, states(2)) === want)
-    assert(sc.getPersistentRDDs.keySet === before, "a stale template rebuilt the cache")
-    other.unpersist(blocking = true)
+    try {
+      val filtered = Dashboard.applyFilters(wide, Some(("Q2", "Q3")), Some(Seq("BUY")))
+      val want = rows(wide, states(2))
+      // the same state again, bound while the table is cached: its
+      // templates hold these values' rows
+      val bound = charts(wide, states(2))
+      Dashboard.buySellTrend(filtered).collect()
+      assert(sc.getPersistentRDDs.keySet.size === before.size + 1)
+      wide.unpersist(blocking = true)
+      assert(sc.getPersistentRDDs.keySet === before)
+      // first the frame filtered while the table was cached, whose trend
+      // template is still held
+      Dashboard.buySellTrend(filtered).collect()
+      Dashboard.metricCards(filtered).collect()
+      // the repeated state, bound before the unpersist and called after it:
+      // every chart reads the source, none answers from the kept rows
+      for ((df, w) <- (bound ++ charts(wide, states(2))).zip(want ++ want)) {
+        val (got, ran) = withJobCount(df.collect().toSeq)
+        assert(got === w)
+        assert(ran > 0, s"kept rows answered\n${df.queryExecution.executedPlan}")
+      }
+      assert(sc.getPersistentRDDs.keySet === before, "a stale template rebuilt the cache")
+    } finally {
+      wide.unpersist(blocking = true)
+      other.unpersist(blocking = true)
+    }
   }
 
   test("a chart bound while its table is cached and run after unpersist reads the source") {
@@ -239,16 +281,22 @@ class DashboardPreparedSpec extends SparkSpecBase {
     try {
       val china = Dashboard.topSectorsForSellInCountry(wide, "China").collect().toSeq
       assert(china.nonEmpty)
-      assert(Dashboard.topSectorsForSellInCountry(wide, null).collect().isEmpty)
-      assert(Dashboard.topIndustriesForBuyInQuarter(wide, null).collect().isEmpty)
+      // twice each: the repeated null call is answered from kept rows
+      for (_ <- 1 to 2) {
+        assert(Dashboard.topSectorsForSellInCountry(wide, null).collect().isEmpty)
+        assert(Dashboard.topIndustriesForBuyInQuarter(wide, null).collect().isEmpty)
+      }
+      assert(withJobCount(Dashboard.topSectorsForSellInCountry(wide, null).collect())._2 === 0)
       assert(Dashboard.topSectorsForSellInCountry(wide, "China").collect().toSeq === china)
       def total(range: (String, String), types: Seq[String]): Long =
         Dashboard.metricCards(Dashboard.applyFilters(wide, Some(range), Some(types)))
           .collect().head.getLong(0)
       val buys = total(("Q1", "Q4"), Seq("BUY"))
       assert(buys > 0)
-      assert(total((null, "Q4"), Seq("BUY")) === 0L)
-      assert(total(("Q1", "Q4"), Seq("BUY", null)) === buys)
+      for (_ <- 1 to 2) {
+        assert(total((null, "Q4"), Seq("BUY")) === 0L)
+        assert(total(("Q1", "Q4"), Seq("BUY", null)) === buys)
+      }
     } finally wide.unpersist(blocking = true)
   }
 
@@ -260,15 +308,61 @@ class DashboardPreparedSpec extends SparkSpecBase {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       for (round <- 1 to 3) {
-        val got = Await.result(Future.sequence(states.map(s => Future(rows(wide, s)))), 5.minutes)
-        got.zip(want).zip(states).foreach { case ((g, w), s) =>
+        val got = Await.result(
+          Future.sequence(states.map(s => Future(withJobCount(rows(wide, s))))), 5.minutes)
+        got.zip(want).zip(states).foreach { case (((g, ran), w), s) =>
           assert(g === w, s"round $round: $s")
+          // rounds 2 and 3 repeat round 1's calls: answered from kept rows
+          if (round > 1) assert(ran === 0, s"round $round: $s")
         }
       }
     } finally {
       pool.shutdown()
       wide.unpersist(blocking = true)
     }
+  }
+
+  test("a chart that fails at run time fails on every call, and a valid call after it " +
+      "returns rows") {
+    val base = reference()
+    def filtered(df: DataFrame, lo: String) =
+      Dashboard.applyFilters(df, Some((lo, "Q4")), Some(Seq("BUY")))
+    val want = Dashboard.metricCards(filtered(uncached(base), "Q1")).collect().toSeq
+    val wide = cached(base)
+    try {
+      // "Qx" fails the quarter's int cast under ANSI, in the job's task
+      for (_ <- 1 to 2) {
+        val e = intercept[NumberFormatException](
+          Dashboard.metricCards(filtered(wide, "Qx")).collect())
+        assert(e.getMessage.contains("CAST_INVALID_INPUT"))
+      }
+      assert(Dashboard.metricCards(filtered(wide, "Q1")).collect().toSeq === want)
+    } finally wide.unpersist(blocking = true)
+  }
+
+  test("an input filtered on the current time reads the time of each call, not of the first") {
+    val wide = cached(reference())
+    try {
+      val all = Dashboard.metricCards(wide).collect().head.getLong(0)
+      assert(all > 0)
+      // a moment after the first call below and before the second
+      val cut = new java.sql.Timestamp(System.currentTimeMillis() + 4000)
+      def total(): Long =
+        Dashboard.metricCards(wide.filter(current_timestamp() < lit(cut))).collect().head.getLong(0)
+      assert(total() === all)
+      Thread.sleep(math.max(0L, cut.getTime - System.currentTimeMillis()) + 500)
+      assert(total() === 0L, "the template kept the first call's time")
+    } finally wide.unpersist(blocking = true)
+  }
+
+  test("a chart over a nondeterministic input runs its job on every call") {
+    val wide = cached(reference())
+    try {
+      def sample(): DataFrame = Dashboard.metricCards(wide.filter(rand(7) < 0.5))
+      val (first, ran) = withJobCount(sample().collect().toSeq)
+      assert(ran === 1)
+      assert(withJobCount(sample().collect().toSeq) === ((first, 1)))
+    } finally wide.unpersist(blocking = true)
   }
 
   test("an input that reads no cache is planned the ordinary way and gives the cached rows") {

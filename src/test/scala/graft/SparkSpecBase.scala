@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +18,26 @@ trait SparkSpecBase extends AnyFunSuite {
 
   /** Encoders/implicits bound to the shared test session. */
   val testImplicits = TestSpark.spark.implicits
+
+  /** `body`'s result and the Spark jobs it ran, counted under a job
+    * group of its own on the calling thread. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"job-count-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      val out = try body finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   def fixturePath(rel: String): String = {
     val url = getClass.getResource(s"/reference_fixtures/$rel")
