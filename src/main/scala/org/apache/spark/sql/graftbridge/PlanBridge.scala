@@ -5,17 +5,18 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{CodegenMode, ExplainMode, FormattedMode, QueryExecution,
+  SimpleMode, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.types.DataType
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** The one bridge into Spark's `private[sql]` and Catalyst-internal API.
   *
@@ -38,7 +39,13 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
   *    `SparkContext.runJob` with a named function;
   *  - a prepared plan's results: the `InternalRow`s its `executeCollect`
   *    collected, kept by the values bound in the call, so a repeated call
-  *    runs no job.
+  *    runs no job;
+  *  - a prepared plan's descriptions: `QueryExecution.explainString`
+  *    overridden, so the physical-plan description that every action
+  *    posts with its SQL execution start event is rendered once per
+  *    (template, mode, bound values), at most [[MaxDescriptions]] kept per
+  *    template, and the rows' `ExpressionEncoder` built once per template
+  *    and shared by every Dataset its calls make.
   */
 object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -114,27 +121,48 @@ object PlanBridge {
     * 64 templates full, is 64 x 128 x 2 KB ≈ 16 MB of driver heap. */
   private val MaxResults = 128
 
-  /** A prepared plan's collected rows by the values bound in the call
-    * (parameter id -> value), least recently used first. */
-  private final class Results {
-    private val rows = new java.util.LinkedHashMap[Map[Long, Any], Array[InternalRow]](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Map[Long, Any], Array[InternalRow]]): Boolean =
-        size() > MaxResults
+  /** Descriptions kept per prepared plan, as (explain mode, values)
+    * pairs. A `collect` describes its plan in one mode (the SQL UI's,
+    * `formatted` by default), and a widget change alters one value, so a
+    * call that repeats an earlier one mostly repeats the previous
+    * interaction: 4 keeps the last few value sets, not every state as
+    * [[MaxResults]] does. A description prints the table's whole cached
+    * plan, so its size is set by the table, not by the chart: over the
+    * reference table (measured for the nine charts) a `simple` one is
+    * ≤ 26 KB, a `formatted` one ≤ 35 KB (≤ 707 lines) and a `codegen` one
+    * ≤ 115 KB. The worst case, all 64 templates full of `codegen` ones,
+    * is 64 x 4 x 115 KB ≈ 29 MB of driver heap; of `formatted` ones, the
+    * only mode a `collect` renders, ≈ 9 MB. */
+  private val MaxDescriptions = 4
+
+  /** The explain modes that print the physical plan alone. A logical
+    * plan prints the call's own parameter ids, which [[param]] makes
+    * fresh for every call, so only these describe two calls with the
+    * same values alike. */
+  private val PhysicalModes: Set[ExplainMode] = Set(SimpleMode, CodegenMode, FormattedMode)
+
+  /** A bounded map, least recently used dropped first, safe to share. */
+  private final class Lru[K, V](max: Int) {
+    private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size() > max
     }
-    def get(values: Map[Long, Any]): Option[Array[InternalRow]] =
-      rows.synchronized(Option(rows.get(values))).map(_.map(_.copy()))
-    def put(values: Map[Long, Any], collected: Array[InternalRow]): Unit =
-      rows.synchronized(rows.put(values, collected.map(_.copy())))
+    def get(k: K): Option[V] = map.synchronized(Option(map.get(k)))
+    def put(k: K, v: V): Unit = map.synchronized(map.put(k, v))
   }
 
   /** A chart planned once over a cached input: its analyzed plan with the
     * input cut out at `hole`, its physical plan, and the ids of the
-    * parameters they carry (the input's, then the chart's own). A
-    * deterministic one keeps the rows its calls collected. */
+    * parameters they carry (the input's, then the chart's own). It
+    * builds its rows' encoder once and keeps, by the values bound in a
+    * call (parameter id -> value), the descriptions of its calls and,
+    * when deterministic, the rows they collected. */
   final class Prepared private[graftbridge] (entry: CacheEntry, hole: LogicalPlan,
       analyzed: LogicalPlan, executed: SparkPlan, ids: Seq[Long], deterministic: Boolean) {
 
-    private val results = if (deterministic) Some(new Results) else None
+    private[PlanBridge] val results =
+      if (deterministic) Some(new Lru[Map[Long, Any], Array[InternalRow]](MaxResults)) else None
+    private[PlanBridge] val descriptions = new Lru[(ExplainMode, Map[Long, Any]), String](MaxDescriptions)
+    private val encoder = ExpressionEncoder(analyzed.schema)
 
     /** A DataFrame over `input` (which reads `in`) with the parameters
       * bound to `in`'s values and those of the chart's own [[param]]
@@ -154,8 +182,8 @@ object PlanBridge {
         val plan = analyzed.transformAllExpressions {
           case b: BoundParam if own.contains(b.id) => own(b.id)
         }.transformUp { case h if h eq hole => inPlan }
-        val qe = new PreparedExecution(spark, plan, entry, BoundExec(executed, bound)(results))
-        new classic.Dataset[Row](qe, () => RowEncoder.encoderFor(plan.schema): Encoder[Row])
+        val qe = new PreparedExecution(spark, plan, entry, BoundExec(executed, bound)(this))
+        new classic.Dataset[Row](qe, encoder)
       }
     }
   }
@@ -200,12 +228,16 @@ object PlanBridge {
     * if the session still serves that entry when the plan is first read
     * (a DataFrame bound before an `unpersist` and run after it would
     * otherwise rebuild the cache outside the `CacheManager`); else the
-    * analyzed plan is planned the ordinary way. */
+    * analyzed plan is planned the ordinary way, and described the
+    * ordinary way too. */
   private final class PreparedExecution(spark: classic.SparkSession, plan: LogicalPlan,
-      entry: CacheEntry, physical: SparkPlan) extends QueryExecution(spark, plan) {
+      entry: CacheEntry, call: BoundExec) extends QueryExecution(spark, plan) {
     override def analyzed: LogicalPlan = plan
-    private lazy val chosen = if (entry.live(spark)) physical else super.executedPlan
+    private lazy val chosen = if (entry.live(spark)) call else super.executedPlan
     override def executedPlan: SparkPlan = chosen
+    override def explainString(mode: ExplainMode): String =
+      if (chosen eq call) call.describe(mode, super.explainString(mode))
+      else super.explainString(mode)
   }
 
   /** One call of a prepared chart. `child` is the prepared physical plan
@@ -214,27 +246,47 @@ object PlanBridge {
     * A plan builds its RDD once, on its first `execute()`, and keeps it:
     * so each call runs one job over that one RDD, with `params` carried in
     * the job's tasks. `executeCollect` (a `collect`) first looks the
-    * values up in the template's `results`: a hit copies the kept rows and
+    * values up in the template's results: a hit copies the kept rows and
     * runs no job, and a job's rows are kept only once it succeeds. Every
     * other way of running the plan (`execute`: `toLocalIterator`) runs
-    * the job. */
+    * the job. The call's descriptions are kept the same way: only once
+    * its `collect` returns rows. */
   private final case class BoundExec(child: SparkPlan, params: Seq[BoundParam])(
-      results: Option[Results]) extends UnaryExecNode {
+      template: Prepared) extends UnaryExecNode {
     override def output: Seq[Attribute] = child.output
-    override protected def otherCopyArgs: Seq[AnyRef] = results :: Nil
+    override protected def otherCopyArgs: Seq[AnyRef] = template :: Nil
     override protected def withNewChildInternal(c: SparkPlan): BoundExec =
-      copy(child = c)(results)
+      copy(child = c)(template)
 
     private def values: Map[Long, Any] = params.map(p => p.id -> p.value).toMap
 
+    /** The descriptions rendered for this call, by mode, not kept yet. */
+    private val described = new java.util.concurrent.ConcurrentHashMap[ExplainMode, String]
+
+    /** This call's description in `mode`, which `render` makes. In a mode
+      * that prints the physical plan alone it depends on the values only
+      * (the child and its parameter ids are the template's), so the
+      * template's kept description of the same values serves it,
+      * byte-identical, and the cached plan is not walked again. */
+    def describe(mode: ExplainMode, render: => String): String =
+      if (!PhysicalModes(mode)) render
+      else template.descriptions.get((mode, values)).getOrElse {
+        val text = render
+        described.put(mode, text)
+        text
+      }
+
     override protected def doExecute(): RDD[InternalRow] = new BoundRDD(child.execute(), values)
 
-    override def executeCollect(): Array[InternalRow] =
-      results.flatMap(_.get(values)).getOrElse {
+    override def executeCollect(): Array[InternalRow] = {
+      val rows = template.results.flatMap(_.get(values)).map(_.map(_.copy())).getOrElse {
         val rows = sparkContext.runJob(execute(), CollectRows).flatten
-        results.foreach(_.put(values, rows))
+        template.results.foreach(_.put(values, rows.map(_.copy())))
         rows
       }
+      described.forEach((mode, text) => template.descriptions.put((mode, values), text))
+      rows
+    }
   }
 
   /** `prev` with `values` (parameter id -> value) installed for each of

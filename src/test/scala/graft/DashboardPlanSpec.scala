@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.graftbridge.BoundParam
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.scalatest.BeforeAndAfterAll
 
 import graft.etl.StarSchema
@@ -12,7 +15,7 @@ import graft.queries.Dashboard
 /** Plan pin for the dashboard charts over the cached serving table: each
   * chart runs as exactly one Spark job, its final adaptive plan holds no
   * shuffle or broadcast exchange, and only the trend's lag window is
-  * unpartitioned. None of this depends on the core count, so the spec is
+  * unpartitioned; the main-page filters are one `Filter` over the table. None of this depends on the core count, so the spec is
   * meant to pass at any `SPARK_GRAFT_CPUS`. */
 class DashboardPlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper
     with BeforeAndAfterAll {
@@ -63,5 +66,21 @@ class DashboardPlanSpec extends SparkSpecBase with AdaptiveSparkPlanHelper
         assert(PlanAudit.onePartitionWindows(p) === windows, s"$name unpartitioned windows:\n$p")
       }
     }
+  }
+
+  test("applyFilters puts its conditions into one Filter over the table's plan") {
+    val plan = wide.queryExecution.analyzed
+    /** The parameter types of the one `Filter` that `f` adds to `wide`. */
+    def filterParams(f: DataFrame): Seq[DataType] = f.queryExecution.analyzed match {
+      case Filter(cond, child) if child eq plan => cond.collect { case b: BoundParam => b.dataType }
+      case other => fail(s"not one Filter over the table's plan:\n$other")
+    }
+    val range = Some(("Q2", "Q3"))
+    val types = Some(Seq("BUY", "SELL"))
+    assert(filterParams(Dashboard.applyFilters(wide, range, types)) ===
+      Seq(StringType, StringType, ArrayType(StringType)))
+    assert(filterParams(Dashboard.applyFilters(wide, range, None)) === Seq(StringType, StringType))
+    assert(filterParams(Dashboard.applyFilters(wide, None, types)) === Seq(ArrayType(StringType)))
+    assert(Dashboard.applyFilters(wide, None, None) eq wide)
   }
 }

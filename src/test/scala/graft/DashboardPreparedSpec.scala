@@ -7,14 +7,20 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.{ListenerBusDrain, SparkException}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{CodegenMode, CostMode, ExplainMode, ExtendedMode,
+  FormattedMode, QueryExecution, SimpleMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions.{col, current_timestamp, lit, rand}
+import org.scalatest.BeforeAndAfterAll
 
 import graft.etl.StarSchema
 import graft.queries.Dashboard
@@ -26,8 +32,25 @@ import graft.queries.Dashboard
   * earlier values runs no job; a template and the rows it keeps never
   * outlive its cache entry, never mix up concurrent callers or calls
   * bound before others, and inputs that read no cache take the ordinary
-  * path. */
-class DashboardPreparedSpec extends SparkSpecBase {
+  * path. A call's description, which every `collect` posts, is the one
+  * a fresh rendering of its plan gives, whether the template kept it or
+  * not. */
+class DashboardPreparedSpec extends SparkSpecBase with BeforeAndAfterAll {
+
+  /** The trend's lag window has no partitioning (one-partition policy),
+    * and each trend plan logs a warning for it: this spec logs that
+    * logger's errors only. */
+  private val windowLogger = "org.apache.spark.sql.execution.window.WindowExec"
+  private var windowLevel: Level = _
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    windowLevel = LogManager.getLogger(windowLogger).getLevel
+    Configurator.setLevel(windowLogger, Level.ERROR)
+  }
+
+  override def afterAll(): Unit =
+    try Configurator.setLevel(windowLogger, windowLevel) finally super.afterAll()
 
   /** The main-page filters and the Query Analysis selections of one
     * dashboard state. */
@@ -306,14 +329,24 @@ class DashboardPreparedSpec extends SparkSpecBase {
     val wide = cached(base)
     val pool = Executors.newFixedThreadPool(states.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    /** The charts of `s`, each described, then collected. */
+    def interaction(s: State): (Seq[DataFrame], Seq[String], Seq[Seq[Row]]) = {
+      val cs = charts(wide, s)
+      val described = cs.map(_.queryExecution.explainString(FormattedMode))
+      (cs, described, cs.map(_.collect().toSeq))
+    }
     try {
       for (round <- 1 to 3) {
         val got = Await.result(
-          Future.sequence(states.map(s => Future(withJobCount(rows(wide, s))))), 5.minutes)
-        got.zip(want).zip(states).foreach { case (((g, ran), w), s) =>
+          Future.sequence(states.map(s => Future(withJobCount(interaction(s))))), 5.minutes)
+        got.zip(want).zip(states).foreach { case ((((cs, described, g), ran), w), s) =>
           assert(g === w, s"round $round: $s")
           // rounds 2 and 3 repeat round 1's calls: answered from kept rows
           if (round > 1) assert(ran === 0, s"round $round: $s")
+          // described while the other threads described the same
+          // templates' plans, rendered again here alone
+          for ((df, d) <- cs.zip(described))
+            assert(d === fresh(df, FormattedMode), s"round $round: $s")
         }
       }
     } finally {
@@ -331,11 +364,17 @@ class DashboardPreparedSpec extends SparkSpecBase {
     val wide = cached(base)
     try {
       // "Qx" fails the quarter's int cast under ANSI, in the job's task
-      for (_ <- 1 to 2) {
-        val e = intercept[NumberFormatException](
-          Dashboard.metricCards(filtered(wide, "Qx")).collect())
-        assert(e.getMessage.contains("CAST_INVALID_INPUT"))
+      val described = for (_ <- 1 to 2) yield {
+        val Seq(start) = executionStarts {
+          val e = intercept[NumberFormatException](
+            Dashboard.metricCards(filtered(wide, "Qx")).collect())
+          assert(e.getMessage.contains("CAST_INVALID_INPUT"))
+        }
+        start.physicalPlanDescription
       }
+      // a failed call keeps no description: the second renders its own
+      assert(described(1) === described(0))
+      assert(!(described(1) eq described(0)))
       assert(Dashboard.metricCards(filtered(wide, "Q1")).collect().toSeq === want)
     } finally wide.unpersist(blocking = true)
   }
@@ -376,5 +415,100 @@ class DashboardPreparedSpec extends SparkSpecBase {
     val wide = cached(base)
     try assert(fresh.map(_.collect().toSeq) === rows(wide, states(3)))
     finally wide.unpersist(blocking = true)
+  }
+
+  private val modes: Seq[ExplainMode] = Seq(SimpleMode, ExtendedMode, CodegenMode, CostMode, FormattedMode)
+
+  /** `df`'s description in `mode`, rendered afresh from its plans: what
+    * Spark's own `QueryExecution` prints for them, with nothing kept. */
+  private def fresh(df: DataFrame, mode: ExplainMode): String = {
+    val qe = df.queryExecution
+    new QueryExecution(qe.sparkSession, qe.logical) {
+      override def analyzed: LogicalPlan = qe.analyzed
+      override def optimizedPlan: LogicalPlan = qe.optimizedPlan
+      override def executedPlan: SparkPlan = qe.executedPlan
+    }.explainString(mode)
+  }
+
+  test("a call's descriptions in every mode are those a fresh rendering of its plan gives, " +
+      "for calls at two value sets run in the order A, B, A") {
+    val wide = cached(reference())
+    try {
+      for (m <- modes) {
+        val described = for ((s, i) <- Seq(states(0), states(1), states(0)).zipWithIndex) yield {
+          val calls = charts(wide, s)
+          // described before the collect that lets the template keep them
+          val d = calls.map(_.queryExecution.explainString(m))
+          calls.foreach(_.collect())
+          for ((df, got) <- calls.zip(d))
+            assert(got === fresh(df, m), s"call $i, $m:\n${df.queryExecution.executedPlan}")
+          d
+        }
+        // the third call (A again) is served what the first one kept,
+        // in the modes that print the physical plan alone
+        if (Seq(SimpleMode, CodegenMode, FormattedMode).contains(m))
+          for ((third, first) <- described(2).zip(described(0))) assert(third eq first, m)
+      }
+    } finally wide.unpersist(blocking = true)
+  }
+
+  /** The SQL execution start events that `body` posts. */
+  private def executionStarts(body: => Unit): Seq[SparkListenerSQLExecutionStart] = {
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => starts.add(s)
+        case _ =>
+      }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    starts.asScala.toSeq
+  }
+
+  /** How a description prints each value `s` binds into a chart: the
+    * main-page filters into the six filtered charts, the country and the
+    * quarter into the two Query Analysis charts, none into the last. */
+  private def printedValues(s: State): Seq[Seq[String]] = {
+    val filters = Seq(s"(${s.range._1})", s"(${s.range._2})", s.types.mkString("([", ",", "])"))
+    Seq.fill(6)(filters) ++ Seq(Seq(s"(${s.country})"), Seq(s"(${s.quarter})"), Nil)
+  }
+
+  /** The root operator's line of a formatted description: a prepared
+    * call's is its `BoundExec`. */
+  private def root(description: String): String = description.linesIterator.drop(1).next()
+
+  test("every chart collect, hit or miss, posts one execution start that describes its " +
+      "own values, and a chart run after unpersist describes its fresh plan") {
+    // another cached table, so the session's cache is not empty after
+    // the unpersist below
+    val other = cached(spark.range(10).toDF("n"))
+    val wide = cached(reference())
+    try {
+      // A misses, B misses, A hits: its rows and its descriptions are kept
+      for (s <- Seq(states(0), states(1), states(0)); (df, printed) <-
+           charts(wide, s).zip(printedValues(s))) {
+        val Seq(start) = executionStarts(df.collect())
+        val d = start.physicalPlanDescription
+        assert(d === fresh(df, FormattedMode), s"$s\n$d")
+        assert(root(d).startsWith("Bound "), d)
+        for (v <- printed) assert(d.contains(v), s"$s: $v\n$d")
+      }
+      val boundBefore = charts(wide, states(0))
+      wide.unpersist(blocking = true)
+      for (df <- boundBefore) {
+        val Seq(start) = executionStarts(df.collect())
+        val d = start.physicalPlanDescription
+        assert(root(d).startsWith("AdaptiveSparkPlan "), d)
+      }
+    } finally {
+      wide.unpersist(blocking = true)
+      other.unpersist(blocking = true)
+    }
   }
 }
