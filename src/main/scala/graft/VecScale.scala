@@ -216,8 +216,8 @@ object VecScale {
          |own scaling evidence is s07/s08 (cell-partitioned probes) and the
          |per-row families (s09/s10). A production layout grows nCells with
          |N — which s12 now does (`knnJoinDerivedCells`, round 15); the
-         |IVF-PQ entries keep the fixed `SimilarityOps.IvfPqCells` =
-         |${graft.similarity.SimilarityOps.IvfPqCells}, which their oracle SQL interpolates.
+         |IVF-PQ entries keep the fixed `SimilarityOps.CoarseCells` =
+         |${graft.similarity.SimilarityOps.CoarseCells}, which their oracle SQL interpolates.
          |
          |Exclusions: `s11_knn_join_exact` is the O(N²) CONTROL whose
          |parameters do not grow with N; at 100k vectors it would measure

@@ -33,21 +33,16 @@ object IvfIndex {
     fs.exists(p)
   }
 
-  /** Assign every vector to its nearest centroid and persist the layout.
-    * `refine > 0` runs that many integer k-means rounds first
-    * ([[SimilarityOps.kmeansCentroidsInt]]). Centroids are stored in the
-    * quantized integer space (`c_qemb`) — the same space assignments are
-    * made in, so probe-cell selection at query time replays the exact
-    * build-time argmin. One shuffle of the corpus (the partitionBy
-    * write), one tiny centroid write. */
-  def build(emb: DataFrame, path: String, nCells: Int, refine: Int = 0): Unit = {
+  /** Assign every vector to its nearest seed centroid
+    * ([[SimilarityOps.seedCentroids]]: the first `nCells` vectors) and
+    * persist the layout. Centroids are stored in the quantized integer
+    * space (`c_qemb`) — the same space assignments are made in, so
+    * probe-cell selection at query time replays the exact build-time
+    * argmin. One shuffle of the corpus (the partitionBy write), one tiny
+    * centroid write. */
+  def build(emb: DataFrame, path: String, nCells: Int): Unit = {
     val embQ = SimilarityOps.withQuant(emb)
-    val centroids =
-      (if (refine > 0)
-         SimilarityOps.kmeansCentroidsInt(
-           embQ.select(col("vec_id"), col("qemb")), nCells, refine)
-       else embQ.filter(col("vec_id") < nCells)
-         .select(col("vec_id").as("cell_id"), col("qemb").as("c_qemb")))
+    val centroids = SimilarityOps.seedCentroids(embQ, nCells)
     SimilarityOps.assignCellsInt(embQ, centroids, carry = Seq("embedding"))
       .select(col("vec_id"), col("embedding"), col("cell_id"))
       .write.mode(SaveMode.Overwrite).partitionBy("cell_id")

@@ -183,15 +183,21 @@ object SimilarityOps {
       .select(col("vec_id") +: col("best").getField("cell_id").as("cell_id") +:
         carry.map(col): _*)
 
+  /** The seed centroids (cell_id, c_qemb): the first `k` vectors by id —
+    * s07/s08/s17/s18's quantizer and every k-means run's start. */
+  private[similarity] def seedCentroids(embQ: DataFrame, k: Int): DataFrame =
+    embQ.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cell_id"), col("qemb").as("c_qemb"))
+
   /** Lloyd's k-means in quantized integer space: seeds = the first k
     * vectors by id, `iters` assign/recompute rounds, centroid update =
     * component-wise sum DIV count. Each round is one distributed assign
     * (N×k integer distances, broadcast centroids, argmin aggregate) +
     * one groupBy integer mean; only the k×d centroid matrix ever reaches
-    * the driver. Bit-replayable in any engine (see [[kmeansCteSql]]). */
-  def kmeansCentroidsInt(embQ: DataFrame, k: Int, iters: Int): DataFrame = {
-    var centroids = embQ.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cell_id"), col("qemb").as("c_qemb"))
+    * the driver. Bit-replayable in any engine (see [[kmeansCteSql]]).
+    * Called only through the one store, [[coarseCentroids]]. */
+  private def kmeansCentroidsInt(embQ: DataFrame, k: Int, iters: Int): DataFrame = {
+    var centroids = seedCentroids(embQ, k)
     // d probed once (one cheap head job) so each refine round's means
     // compute in ONE hash aggregate — count(1) + d componentwise sums
     // (d+1 = 65 buffers, under the 100-field codegen limit; a first
@@ -219,6 +225,32 @@ object SimilarityOps {
       centroids = means.localCheckpoint(true)
     }
     centroids
+  }
+
+  /** The trained coarse quantizer: `CoarseCells` cells after
+    * `CoarseRounds` k-means rounds (s03, d06, s14–s16, s22's post-filter
+    * path; s12 derives its cells from N). Read by the plans and their
+    * oracle SQL alike, so the two sides cannot drift. */
+  val CoarseCells = 16
+  val CoarseRounds = 2
+
+  /** The IVF family's coarse quantizer (cell_id, c_qemb): `nCells`
+    * integer k-means centroids after `rounds` rounds. `rounds = 0` gives
+    * the seed centroids. Trained ones come from ONE store: the first call
+    * per (`datasetKey`, `nCells`, `rounds`) in this JVM trains them and
+    * writes parquet ([[graft.io.TempLayouts.cached]]), and every call
+    * reads that parquet back, so the frame carries its true size (the
+    * checkpointed frame keeps its cross-join's 1.7e15-byte estimate,
+    * which draws a 1 MiB runtime Bloom filter into every plan that joins
+    * it). Precondition: `embQ` is the quantized embeddings of the dataset
+    * `datasetKey` names (the catalog passes its canonical dir). */
+  private[similarity] def coarseCentroids(embQ: DataFrame, datasetKey: String,
+      nCells: Int, rounds: Int): DataFrame = {
+    def train = kmeansCentroidsInt(embQ.select(col("vec_id"), col("qemb")), nCells, rounds)
+    if (rounds == 0) train
+    else embQ.sparkSession.read.parquet(graft.io.TempLayouts.cached(
+      s"coarse#$nCells#$rounds#$datasetKey", "graft_coarse_")(
+        train.write.mode("overwrite").parquet(_)))
   }
 
   /** Chained-CTE DuckDB replay of [[kmeansCentroidsInt]] +
@@ -263,17 +295,15 @@ object SimilarityOps {
 
   /** IVF: assign every vector to its nearest centroid cell in quantized
     * integer space (seed centroids by default; pass `refine > 0` for
-    * k-means rounds), then probe the nprobe cells nearest the query and
-    * re-rank only those with exact double cosine. Cells and probes are
-    * integer decisions → the whole query replays in DuckDB (s03). */
+    * k-means rounds, stored per `datasetKey` — [[coarseCentroids]]),
+    * then probe the nprobe cells nearest the query and re-rank only
+    * those with exact double cosine. Cells and probes are integer
+    * decisions → the whole query replays in DuckDB (s03). */
   def ivfTopK(emb: DataFrame, qid: Long, k: Int, nCells: Int, nprobe: Int,
-      refine: Int = 0): DataFrame = {
+      datasetKey: String, refine: Int = 0): DataFrame = {
     val embQ = withQuant(emb)
     val centroids = graft.InternalCaches.track(
-      (if (refine > 0)
-         kmeansCentroidsInt(embQ.select(col("vec_id"), col("qemb")), nCells, refine)
-       else embQ.filter(col("vec_id") < nCells)
-         .select(col("vec_id").as("cell_id"), col("qemb").as("c_qemb")))
+      coarseCentroids(embQ, datasetKey, nCells, refine)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // build: one row per (vector, cell) → argmin aggregate (map-side
     // partial; see assignCellsInt)
@@ -309,8 +339,7 @@ object SimilarityOps {
   def ivfRangeSearchBatch(emb: DataFrame, queryIds: Seq[Long],
       minSimE4: Long, nCells: Int, nprobe: Int): DataFrame = {
     val embQ = withQuant(emb)
-    val centroids = embQ.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell_id"), col("qemb").as("c_qemb"))
+    val centroids = seedCentroids(embQ, nCells)
     val assigned = assignCellsInt(embQ, centroids, carry = Seq("embedding"))
     val queriesQ = embQ.filter(col("vec_id").isin(queryIds: _*))
     val probeK = graft.functions.expressions.GroupedTopK.topK(nprobe)
@@ -387,13 +416,11 @@ object SimilarityOps {
     * (full oracle); SimilaritySpec additionally asserts pair soundness
     * (every reported link re-checks above threshold against exact
     * cosine) and drop-set monotonicity vs the global brute-force pair
-    * set. */
-  def semanticDedup(emb: DataFrame, nCells: Int, refine: Int,
-      simThresholdE4: Long): DataFrame = {
+    * set. Cells: the stored quantizer of `datasetKey` ([[coarseCentroids]]). */
+  def semanticDedup(emb: DataFrame, simThresholdE4: Long,
+      datasetKey: String): DataFrame = {
     val embQ = withQuant(emb)
-    val centroids = graft.InternalCaches.track(
-      kmeansCentroidsInt(embQ.select(col("vec_id"), col("qemb")), nCells, refine)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val centroids = coarseCentroids(embQ, datasetKey, CoarseCells, CoarseRounds)
     val assigned = graft.InternalCaches.track(
       graft.dedup.DedupOps.capBlocks(
         assignCellsInt(embQ, centroids, carry = Seq("embedding"))
@@ -445,12 +472,9 @@ object SimilarityOps {
   val PqCodes = 16
   val PqIters = 2
 
-  /** The IVF coarse quantizer of s14–s16: `IvfPqCells` integer k-means
-    * cells after `IvfPqRefine` rounds, `IvfPqNprobe` of them probed per
-    * query; s16 exact-reranks the top `IvfPqRerankR` ADC candidates.
-    * Shared with the oracle SQL like the PQ settings above. */
-  val IvfPqCells = 16
-  val IvfPqRefine = 2
+  /** s14–s16 probe `IvfPqNprobe` of the [[CoarseCells]] cells per query;
+    * s16 exact-reranks the top `IvfPqRerankR` ADC candidates. Shared
+    * with the oracle SQL like the PQ settings above. */
   val IvfPqNprobe = 4
   val IvfPqRerankR = 32
 
@@ -600,8 +624,8 @@ object SimilarityOps {
   // ONE layout per (dataset, variant) built on first use per JVM,
   // instead of each invocation retraining byte-identical codebooks.
   // Artifacts, all integer (bit-exact through the parquet round trip,
-  // so every DuckDB oracle is unchanged):
-  //   centroids/  (cell_id, c_qemb)            — k×d coarse quantizer
+  // so every DuckDB oracle is unchanged), beside the dataset's stored
+  // coarse quantizer (coarseCentroids — the k×d (cell_id, c_qemb)):
   //   pqcent/     (sub, code, c_sq)            — M×K PQ codebooks
   //   codes/      (vec_id, sub, code) BY cell_id — the corpus, cell-
   //               partitioned so a probe reads nprobe/nCells of it via
@@ -615,10 +639,7 @@ object SimilarityOps {
     graft.io.TempLayouts.cached(s"ivfpq#$variant#$datasetKey", "graft_ivfpq_") { base =>
       val dsub = embeddingDim(emb, "embedding") / PqM
       val embQ = withQuant(emb)
-      val centroids = graft.InternalCaches.track(
-        kmeansCentroidsInt(embQ.select(col("vec_id"), col("qemb")), IvfPqCells, IvfPqRefine)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      centroids.write.parquet(s"$base/centroids")
+      val centroids = ivfPqCentroids(emb, datasetKey)
       val assigned = graft.dedup.DedupOps.capBlocks(
         assignCellsInt(embQ, centroids,
           carry = if (residual) Seq("qemb") else Seq.empty),
@@ -649,14 +670,18 @@ object SimilarityOps {
     }
   }
 
+  /** The stored coarse quantizer the s14–s16 layouts and queries share. */
+  private def ivfPqCentroids(emb: DataFrame, datasetKey: String): DataFrame =
+    coarseCentroids(withQuant(emb), datasetKey, CoarseCells, CoarseRounds)
+
   /** Probe-cell choice from the STORED centroid matrix, driver-side:
     * k×d integer rows (16×64 here) — the IvfIndex bounded-collect
     * class, what lets the code scan carry a LITERAL cell_id filter and
     * therefore plan-time partition pruning. Returns the [[IvfPqNprobe]]
     * nearest (qid, cell_id) pairs per query, ties to the lower cell id. */
-  private def probePairs(spark: SparkSession, centPath: String,
+  private def probePairs(centroids: DataFrame,
       queriesQ: DataFrame): Seq[(Long, Long)] = {
-    val cents = spark.read.parquet(centPath).collect()
+    val cents = centroids.collect()
       .map(r => (r.getAs[Long]("cell_id"),
         r.getSeq[Long](r.fieldIndex("c_qemb")).toArray))
     val qs = queriesQ.select(col("vec_id"), col("qemb")).collect()
@@ -704,7 +729,7 @@ object SimilarityOps {
     val spark = emb.sparkSession
     import spark.implicits._
     val pqCent = spark.read.parquet(s"$base/pqcent")
-    val pp = probePairs(spark, s"$base/centroids", queriesQ)
+    val pp = probePairs(ivfPqCentroids(emb, datasetKey), queriesQ)
     val probes = pp.toDF("qid", "cell_id")
     val dtable = subvectorsQ(queriesQ.select(col("vec_id"), col("qemb")), PqM, dsub)
       .withColumnRenamed("vec_id", "qid")
@@ -802,9 +827,9 @@ object SimilarityOps {
     val base = ivfPqLayout(emb, datasetKey, residual = true)
     val spark = emb.sparkSession
     import spark.implicits._
-    val centroids = spark.read.parquet(s"$base/centroids")
+    val centroids = ivfPqCentroids(emb, datasetKey)
     val pqCent = spark.read.parquet(s"$base/pqcent")
-    val pp = probePairs(spark, s"$base/centroids", queriesQ)
+    val pp = probePairs(centroids, queriesQ)
     // query residual AGAINST EACH PROBED CELL's centroid (nprobe rows
     // per query), subvectorized → the per-cell ADC lookup table
     val qres = pp.toDF("qid", "cell_id")
@@ -879,6 +904,121 @@ object SimilarityOps {
     sb.toString
   }
 
+  /** `keep` (vec_id, cell_id): `asg` without cells over
+    * [[graft.dedup.DedupOps.MaxBlock]] — the oracle twin of `capBlocks`. */
+  private def keepCteSql: String =
+    s"""keep AS (
+       |  SELECT a.vec_id, a.cell_id FROM asg a
+       |  JOIN (SELECT cell_id, count(*) AS n FROM asg GROUP BY cell_id) c
+       |    USING (cell_id)
+       |  WHERE c.n <= ${graft.dedup.DedupOps.MaxBlock})""".stripMargin
+
+  /** `qsv`, the batch queries' subvectors, and `dt` (qid, sub, code,
+    * qd2), their ADC distance table (s10, s14, s16). */
+  private def rawDistTableSql: String =
+    s"""qsv AS (SELECT vec_id AS qid, sub, sq FROM sv
+       |        WHERE vec_id IN ${batchIdsSql}),
+       |dt AS (
+       |  SELECT q.qid, c.sub, c.code, ${intDistSql("q.sq", "c.c")} AS qd2
+       |  FROM qsv q JOIN pcent c ON q.sub = c.sub)""".stripMargin
+
+  /** The ADC oracles' tail: top-10 per query of `src` (qid, vec_id, d2)
+    * by (d2, vec_id), as (qid, rk, vec_id, neg_d2). */
+  private def adcRankSql(src: String): String =
+    s"""rk AS (
+       |  SELECT qid, vec_id, d2,
+       |         row_number() OVER (PARTITION BY qid
+       |                            ORDER BY d2 ASC, vec_id) AS rk
+       |  FROM $src)
+       |SELECT qid, CAST(rk AS BIGINT) AS rk, vec_id,
+       |       CAST(-d2 AS BIGINT) AS neg_d2
+       |FROM rk WHERE rk <= 10
+       |ORDER BY qid, rk""".stripMargin
+
+  /** The one oracle of s14–s16, so the three cannot drift apart: coarse
+    * k-means, `keep`, the PQ chain over `qe` or (`residual`, s15) the
+    * within-cell residuals `rq`, each query's [[IvfPqNprobe]] cells
+    * `probe`, and the ADC sums `adc` (qid, vec_id, d2), from one distance
+    * table per query or per (query, probed cell). `rerank` (s16) cuts
+    * `adc` at [[IvfPqRerankR]] and re-scores exactly from `qe`. */
+  private def ivfPqOracleSql(residual: Boolean, rerank: Boolean = false): String = {
+    val residuals =
+      s"""rq AS (
+         |  SELECT k2.vec_id, k2.cell_id,
+         |         list_transform(range(1, len(e.q) + 1),
+         |                        i -> e.q[i] - c.c[i] + $ResidOffset) AS q
+         |  FROM keep k2
+         |  JOIN qe e ON e.vec_id = k2.vec_id
+         |  JOIN cent c ON c.cell_id = k2.cell_id),
+         |""".stripMargin
+    val adc =
+      if (residual)
+        s"""qrq AS (
+           |  SELECT p.qid, p.cell_id,
+           |         list_transform(range(1, len(e.q) + 1),
+           |                        i -> e.q[i] - c.c[i] + $ResidOffset) AS q
+           |  FROM probe p
+           |  JOIN qe e ON e.vec_id = p.qid
+           |  JOIN cent c ON c.cell_id = p.cell_id),
+           |qsv AS (
+           |  SELECT qid, cell_id, s.sub,
+           |         list_slice(q, s.sub * dd.dsub + 1, (s.sub + 1) * dd.dsub) AS sq
+           |  FROM qrq CROSS JOIN dd CROSS JOIN (SELECT unnest($pqSubsSql) AS sub) s),
+           |dt AS (
+           |  SELECT q.qid, q.cell_id, c.sub, c.code,
+           |         ${intDistSql("q.sq", "c.c")} AS qd2
+           |  FROM qsv q JOIN pcent c ON q.sub = c.sub),
+           |adc AS (
+           |  SELECT d.qid, r.vec_id, CAST(sum(d.qd2) AS BIGINT) AS d2
+           |  FROM rq r
+           |  JOIN pcodes p2 ON p2.vec_id = r.vec_id
+           |  JOIN dt d ON d.cell_id = r.cell_id AND d.sub = p2.sub
+           |           AND d.code = p2.code
+           |  WHERE r.vec_id <> d.qid
+           |  GROUP BY d.qid, r.vec_id),""".stripMargin
+      else
+        s"""$rawDistTableSql,
+           |cand AS (
+           |  SELECT p.qid, kp.vec_id
+           |  FROM probe p JOIN keep kp USING (cell_id)
+           |  WHERE kp.vec_id <> p.qid),
+           |adc AS (
+           |  SELECT c2.qid, c2.vec_id, CAST(sum(d.qd2) AS BIGINT) AS d2
+           |  FROM cand c2
+           |  JOIN pcodes p2 ON p2.vec_id = c2.vec_id
+           |  JOIN dt d ON d.qid = c2.qid AND d.sub = p2.sub AND d.code = p2.code
+           |  GROUP BY c2.qid, c2.vec_id),""".stripMargin
+    val exact =
+      s"""candr AS (
+         |  SELECT qid, vec_id FROM (
+         |    SELECT qid, vec_id,
+         |           row_number() OVER (PARTITION BY qid
+         |                              ORDER BY d2 ASC, vec_id) AS rn
+         |    FROM adc) WHERE rn <= $IvfPqRerankR),
+         |exact AS (
+         |  SELECT c.qid, c.vec_id, ${intDistSql("ev.q", "eq2.q")} AS d2
+         |  FROM candr c
+         |  JOIN qe ev ON ev.vec_id = c.vec_id
+         |  JOIN qe eq2 ON eq2.vec_id = c.qid),
+         |""".stripMargin
+    s"""WITH ${kmeansCteSql(CoarseCells, CoarseRounds)},
+       |$keepCteSql,
+       |${if (residual) residuals else ""}${pqCteSql(withQe = false,
+         srcCte = if (residual) "rq" else "qe")},
+       |probe AS (
+       |  SELECT qid, cell_id FROM (
+       |    SELECT e.vec_id AS qid, c.cell_id,
+       |           row_number() OVER (PARTITION BY e.vec_id
+       |             ORDER BY ${intDistSql("e.q", "c.c")} ASC, c.cell_id ASC) AS rn
+       |    FROM qe e CROSS JOIN cent c
+       |    WHERE e.vec_id IN ${batchIdsSql}) WHERE rn <= $IvfPqNprobe),
+       |$adc
+       |${if (rerank) exact else ""}${adcRankSql(if (rerank) "exact" else "adc")}""".stripMargin
+  }
+
+  /** A dataset's identity for the stores keyed by it: its canonical dir. */
+  private def datasetKeyOf(dir: String): String = new java.io.File(dir).getCanonicalPath
+
   /** Exact top-k for a SET of query vectors: broadcast the query set,
     * ONE pass over the index, grouped top-k via the bounded-heap
     * aggregate ([[graft.functions.expressions.GroupedTopK]]) — no
@@ -912,6 +1052,9 @@ object SimilarityOps {
       .orderBy(col("qid"), col("rk"))
   }
 
+  /** Cells probed per query by [[filteredTopKBatch]]'s post-filter path. */
+  val FilteredNprobe = 8
+
   /** The pre/post-filter strategy decision for [[filteredTopKBatch]],
     * exposed for tests: one columnar COUNT pass over the predicate
     * column (never the vectors) — a plan-time statistics read, the same
@@ -941,15 +1084,16 @@ object SimilarityOps {
     *    proportional to the filtered corpus, which is precisely the
     *    regime where post-filtering an index is recall-starved (few
     *    survivors per probed cell).
-    *  - broad predicate: POST-FILTER — probe the IVF index (integer
-    *    k-means cells, s03's family), overfetch k×`overfetch`
+    *  - broad predicate: POST-FILTER — probe [[FilteredNprobe]] cells of
+    *    the stored quantizer of `datasetKey` ([[coarseCentroids]], the
+    *    one s03 and s14–s16 read), overfetch k×`overfetch`
     *    candidates per query with the bounded heap, fetch their
     *    metadata by broadcast point-lookup (|Q|·k·overfetch rows, never
     *    corpus-bound — the s16 fetch pattern), apply the predicate, cut
     *    to k. Approximate, and the overfetch must scale with
     *    1/selectivity or the predicate eats the candidate list: measured
     *    recall@10 at ~9% selectivity is 0.32 with overfetch 4 and 0.62
-    *    from overfetch 10 on — the plateau is the nprobe=8/16 probe
+    *    from overfetch 10 on — the plateau is the 8-of-16-cells probe
     *    ceiling, past which only more probes help (FilteredAnnSpec pins
     *    both the recovery and the plateau).
     *
@@ -958,19 +1102,19 @@ object SimilarityOps {
     * DuckDB oracle replays the whole answer (s05's SQL over the
     * filtered corpus). */
   def filteredTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int,
-      pred: Column, maxExactFrac: Double = 0.25, nCells: Int = 16,
-      nprobe: Int = 8, refine: Int = 2, overfetch: Int = 4): DataFrame = {
+      pred: Column, datasetKey: String, maxExactFrac: Double = 0.25,
+      overfetch: Int = 4): DataFrame = {
     val q = emb.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
     if (filteredStrategy(emb, pred, maxExactFrac) == "prefilter") {
       topKBatchFrom(emb.filter(pred), q, k)
     } else {
       val embQ = withQuant(emb)
-      val centroids = kmeansCentroidsInt(embQ, nCells, refine)
+      val centroids = coarseCentroids(embQ, datasetKey, CoarseCells, CoarseRounds)
       val assigned = assignCellsInt(embQ, centroids, carry = Seq("embedding"))
       val qQ = withQuant(emb.filter(col("vec_id").isin(queryIds: _*)))
         .select(col("vec_id").as("qid"), col("qemb").as("q_qemb"))
-      val probeK = graft.functions.expressions.GroupedTopK.topK(nprobe)
+      val probeK = graft.functions.expressions.GroupedTopK.topK(FilteredNprobe)
       val probes = qQ.crossJoin(broadcast(centroids))
         .select(col("qid"),
           (-squaredDistanceLong(col("q_qemb"), col("c_qemb")).cast("double"))
@@ -1152,8 +1296,8 @@ object SimilarityOps {
     * one equi-join on cell_id instead of a cross product), so a
     * billion-vector corpus does one shuffle by cell plus block-local
     * scoring. Each CORPUS vector lives in exactly one cell; each ANCHOR
-    * probes its `nprobe` nearest cells (the IVF serving knob — a single
-    * probe misses every neighbor that fell just across a cell boundary;
+    * probes its [[KnnJoinNprobe]] nearest cells (the IVF serving knob — a
+    * single probe misses every neighbor that fell just across a cell boundary;
     * measured here, nprobe 1→8 of 16 lifts recall@5 0.24→0.83 on the
     * sf0.001 corpus). The probe fan-out multiplies only the anchor-side
     * rows (nprobe×n into the join), never the corpus side. Neighbors
@@ -1165,7 +1309,7 @@ object SimilarityOps {
     * oracle (the probe score −dist stays exact in double: distances
     * < 2⁵⁰ ≪ 2⁵³).
     *
-    * Default nprobe: [[KnnJoinNprobe]] — chosen from the measured
+    * Probe width [[KnnJoinNprobe]] — chosen from the measured
     * recall@5 curve of [[knnJoinCells]] against [[knnJoinExact]]
     * (sf0.001 AND sf0.01 agree to ±0.01):
     * {{{
@@ -1177,13 +1321,12 @@ object SimilarityOps {
     * is near-uniform random, the worst case for any partition-based
     * ANN (no cluster structure to exploit; real embedding corpora sit
     * far left of this curve). SimilaritySpec asserts the ≥ 0.8 floor
-    * at the shipped default. */
-  def knnJoinCells(emb: DataFrame, k: Int, nCells: Int, refine: Int,
-      nprobe: Int = KnnJoinNprobe): DataFrame = {
+    * at that width. Cells: the stored quantizer of `datasetKey`
+    * ([[coarseCentroids]]). */
+  def knnJoinCells(emb: DataFrame, k: Int, nCells: Int,
+      datasetKey: String): DataFrame = {
     val embQ = withQuant(emb)
-    val centroids = graft.InternalCaches.track(
-      kmeansCentroidsInt(embQ.select(col("vec_id"), col("qemb")), nCells, refine)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val centroids = coarseCentroids(embQ, datasetKey, nCells, CoarseRounds)
     val assigned = graft.InternalCaches.track(
       graft.dedup.DedupOps.capBlocks(
         assignCellsInt(embQ, centroids, carry = Seq("embedding"))
@@ -1192,7 +1335,7 @@ object SimilarityOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // anchor side: each vector fanned out to its nprobe nearest cells
     // (bounded-heap top-k over the broadcast centroid set — window-free)
-    val probeK = graft.functions.expressions.GroupedTopK.topK(nprobe)
+    val probeK = graft.functions.expressions.GroupedTopK.topK(KnnJoinNprobe)
     val probes = embQ.crossJoin(broadcast(centroids))
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
         (-squaredDistanceLong(col("qemb"), col("c_qemb")).cast("double"))
@@ -1336,9 +1479,8 @@ object SimilarityOps {
 
   /** [[knnJoinCells]] with the cell count derived from the corpus size
     * (one parquet-stats count job). */
-  def knnJoinCellsAuto(emb: DataFrame, k: Int, refine: Int,
-      nprobe: Int = KnnJoinNprobe): DataFrame =
-    knnJoinCells(emb, k, knnJoinDerivedCells(emb.count()), refine, nprobe)
+  def knnJoinCellsAuto(emb: DataFrame, k: Int, datasetKey: String): DataFrame =
+    knnJoinCells(emb, k, knnJoinDerivedCells(emb.count()), datasetKey)
 
   /** Built-index locations, one per (JVM, dataset dir), held in
     * [[graft.io.TempLayouts]]. Each build goes to a fresh per-invocation
@@ -1625,12 +1767,13 @@ object SimilarityOps {
     // engines MUST agree row-for-row.
     GraftQuery(
       "s03_similarity_ivf_topk",
-      "IVF(16 cells, 2 k-means rounds, nprobe=4) + exact re-rank top-10 (integer k-means, fully oracled)",
+      s"IVF($CoarseCells cells, $CoarseRounds k-means rounds, nprobe=4) + exact re-rank top-10 (integer k-means, fully oracled)",
       (spark, dir) =>
-        ivfTopK(Tables(spark, dir).embeddings, qid = 0L, k = 10, nCells = 16,
-          nprobe = 4, refine = 2),
+        ivfTopK(Tables(spark, dir).embeddings, qid = 0L, k = 10,
+          nCells = CoarseCells, nprobe = 4, datasetKey = datasetKeyOf(dir),
+          refine = CoarseRounds),
       Some(
-        s"""WITH ${kmeansCteSql(16, 2)},
+        s"""WITH ${kmeansCteSql(CoarseCells, CoarseRounds)},
           |qv AS (SELECT q FROM qe WHERE vec_id = 0),
           |probe AS (
           |  SELECT cell_id FROM (
@@ -1825,14 +1968,10 @@ object SimilarityOps {
       "d06_semantic_dedup",
       "SemDeDup: k-means-blocked embedding near-dup drop set (integer k-means, fully oracled)",
       (spark, dir) => semanticDedup(Tables(spark, dir).embeddings,
-        nCells = 16, refine = 2, simThresholdE4 = 3500L),
+        simThresholdE4 = 3500L, datasetKey = datasetKeyOf(dir)),
       Some(
-        s"""WITH ${kmeansCteSql(16, 2)},
-          |keep AS (
-          |  SELECT a.vec_id, a.cell_id FROM asg a
-          |  JOIN (SELECT cell_id, count(*) AS n FROM asg GROUP BY cell_id) c
-          |    USING (cell_id)
-          |  WHERE c.n <= ${graft.dedup.DedupOps.MaxBlock}),
+        s"""WITH ${kmeansCteSql(CoarseCells, CoarseRounds)},
+          |$keepCteSql,
           |pairs AS (
           |  SELECT b.vec_id AS id_b, a.vec_id AS id_a,
           |         CAST(round(${cosSql("ea.embedding", "eb.embedding")} * 10000) AS BIGINT) AS sim_e4
@@ -1929,25 +2068,13 @@ object SimilarityOps {
         pqTopKBatch(Tables(spark, dir).embeddings, BatchQueryIds, k = 10),
       Some(
         s"""WITH ${pqCteSql()},
-          |qsv AS (SELECT vec_id AS qid, sub, sq FROM sv
-          |        WHERE vec_id IN ${batchIdsSql}),
-          |dt AS (
-          |  SELECT q.qid, c.sub, c.code, ${intDistSql("q.sq", "c.c")} AS qd2
-          |  FROM qsv q JOIN pcent c ON q.sub = c.sub),
+          |$rawDistTableSql,
           |adc AS (
           |  SELECT d.qid, p.vec_id, CAST(sum(d.qd2) AS BIGINT) AS d2
           |  FROM pcodes p JOIN dt d ON p.sub = d.sub AND p.code = d.code
           |  WHERE p.vec_id <> d.qid
           |  GROUP BY d.qid, p.vec_id),
-          |rk AS (
-          |  SELECT qid, vec_id, d2,
-          |         row_number() OVER (PARTITION BY qid
-          |                            ORDER BY d2 ASC, vec_id) AS rk
-          |  FROM adc)
-          |SELECT qid, CAST(rk AS BIGINT) AS rk, vec_id,
-          |       CAST(-d2 AS BIGINT) AS neg_d2
-          |FROM rk WHERE rk <= 10
-          |ORDER BY qid, rk""".stripMargin)
+          |${adcRankSql("adc")}""".stripMargin)
     ),
 
     // ------------------------------------------------------------------
@@ -1991,14 +2118,10 @@ object SimilarityOps {
       "s12_knn_join_cells",
       "cell-blocked approximate self-kNN join (integer k-means, N-derived cell count, fully oracled)",
       (spark, dir) => knnJoinCellsAuto(Tables(spark, dir).embeddings,
-        k = 5, refine = 2),
+        k = 5, datasetKey = datasetKeyOf(dir)),
       Some(
-        s"""WITH ${kmeansCteSql(16, 2, kSql = Some(KnnJoinDerivedCellsSql))},
-          |keep AS (
-          |  SELECT a.vec_id, a.cell_id FROM asg a
-          |  JOIN (SELECT cell_id, count(*) AS n FROM asg GROUP BY cell_id) c
-          |    USING (cell_id)
-          |  WHERE c.n <= ${graft.dedup.DedupOps.MaxBlock}),
+        s"""WITH ${kmeansCteSql(CoarseCells, CoarseRounds, kSql = Some(KnnJoinDerivedCellsSql))},
+          |$keepCteSql,
           |probe AS (
           |  SELECT vec_id AS qid, cell_id FROM (
           |    SELECT e.vec_id, c.cell_id,
@@ -2085,46 +2208,8 @@ object SimilarityOps {
       "IVF-PQ ADC top-10 for the 5-query batch (coarse cells × PQ codes, fully oracled)",
       (spark, dir) =>
         ivfPqTopKBatch(Tables(spark, dir).embeddings, BatchQueryIds, k = 10,
-          datasetKey = new java.io.File(dir).getCanonicalPath),
-      Some(
-        s"""WITH ${kmeansCteSql(IvfPqCells, IvfPqRefine)},
-          |keep AS (
-          |  SELECT a.vec_id, a.cell_id FROM asg a
-          |  JOIN (SELECT cell_id, count(*) AS n FROM asg GROUP BY cell_id) c
-          |    USING (cell_id)
-          |  WHERE c.n <= ${graft.dedup.DedupOps.MaxBlock}),
-          |${pqCteSql(withQe = false)},
-          |probe AS (
-          |  SELECT qid, cell_id FROM (
-          |    SELECT e.vec_id AS qid, c.cell_id,
-          |           row_number() OVER (PARTITION BY e.vec_id
-          |             ORDER BY ${intDistSql("e.q", "c.c")} ASC, c.cell_id ASC) AS rn
-          |    FROM qe e CROSS JOIN cent c
-          |    WHERE e.vec_id IN ${batchIdsSql}) WHERE rn <= $IvfPqNprobe),
-          |qsv AS (SELECT vec_id AS qid, sub, sq FROM sv
-          |        WHERE vec_id IN ${batchIdsSql}),
-          |dt AS (
-          |  SELECT q.qid, c.sub, c.code, ${intDistSql("q.sq", "c.c")} AS qd2
-          |  FROM qsv q JOIN pcent c ON q.sub = c.sub),
-          |cand AS (
-          |  SELECT p.qid, kp.vec_id
-          |  FROM probe p JOIN keep kp USING (cell_id)
-          |  WHERE kp.vec_id <> p.qid),
-          |adc AS (
-          |  SELECT c2.qid, c2.vec_id, CAST(sum(d.qd2) AS BIGINT) AS d2
-          |  FROM cand c2
-          |  JOIN pcodes p2 ON p2.vec_id = c2.vec_id
-          |  JOIN dt d ON d.qid = c2.qid AND d.sub = p2.sub AND d.code = p2.code
-          |  GROUP BY c2.qid, c2.vec_id),
-          |rk AS (
-          |  SELECT qid, vec_id, d2,
-          |         row_number() OVER (PARTITION BY qid
-          |                            ORDER BY d2 ASC, vec_id) AS rk
-          |  FROM adc)
-          |SELECT qid, CAST(rk AS BIGINT) AS rk, vec_id,
-          |       CAST(-d2 AS BIGINT) AS neg_d2
-          |FROM rk WHERE rk <= 10
-          |ORDER BY qid, rk""".stripMargin)
+          datasetKey = datasetKeyOf(dir)),
+      Some(ivfPqOracleSql(residual = false))
     ),
 
     // ------------------------------------------------------------------
@@ -2140,61 +2225,8 @@ object SimilarityOps {
       "residual IVF-PQ ADC top-10 for the 5-query batch (by_residual=true, fully oracled)",
       (spark, dir) =>
         ivfPqResidualTopKBatch(Tables(spark, dir).embeddings, BatchQueryIds, k = 10,
-          datasetKey = new java.io.File(dir).getCanonicalPath),
-      Some(
-        s"""WITH ${kmeansCteSql(IvfPqCells, IvfPqRefine)},
-          |keep AS (
-          |  SELECT a.vec_id, a.cell_id FROM asg a
-          |  JOIN (SELECT cell_id, count(*) AS n FROM asg GROUP BY cell_id) c
-          |    USING (cell_id)
-          |  WHERE c.n <= ${graft.dedup.DedupOps.MaxBlock}),
-          |rq AS (
-          |  SELECT k2.vec_id, k2.cell_id,
-          |         list_transform(range(1, len(e.q) + 1),
-          |                        i -> e.q[i] - c.c[i] + $ResidOffset) AS q
-          |  FROM keep k2
-          |  JOIN qe e ON e.vec_id = k2.vec_id
-          |  JOIN cent c ON c.cell_id = k2.cell_id),
-          |${pqCteSql(withQe = false, srcCte = "rq")},
-          |probe AS (
-          |  SELECT qid, cell_id FROM (
-          |    SELECT e.vec_id AS qid, c.cell_id,
-          |           row_number() OVER (PARTITION BY e.vec_id
-          |             ORDER BY ${intDistSql("e.q", "c.c")} ASC, c.cell_id ASC) AS rn
-          |    FROM qe e CROSS JOIN cent c
-          |    WHERE e.vec_id IN ${batchIdsSql}) WHERE rn <= $IvfPqNprobe),
-          |qrq AS (
-          |  SELECT p.qid, p.cell_id,
-          |         list_transform(range(1, len(e.q) + 1),
-          |                        i -> e.q[i] - c.c[i] + $ResidOffset) AS q
-          |  FROM probe p
-          |  JOIN qe e ON e.vec_id = p.qid
-          |  JOIN cent c ON c.cell_id = p.cell_id),
-          |qsv AS (
-          |  SELECT qid, cell_id, s.sub,
-          |         list_slice(q, s.sub * dd.dsub + 1, (s.sub + 1) * dd.dsub) AS sq
-          |  FROM qrq CROSS JOIN dd CROSS JOIN (SELECT unnest($pqSubsSql) AS sub) s),
-          |dt AS (
-          |  SELECT q.qid, q.cell_id, c.sub, c.code,
-          |         ${intDistSql("q.sq", "c.c")} AS qd2
-          |  FROM qsv q JOIN pcent c ON q.sub = c.sub),
-          |adc AS (
-          |  SELECT d.qid, r.vec_id, CAST(sum(d.qd2) AS BIGINT) AS d2
-          |  FROM rq r
-          |  JOIN pcodes p2 ON p2.vec_id = r.vec_id
-          |  JOIN dt d ON d.cell_id = r.cell_id AND d.sub = p2.sub
-          |           AND d.code = p2.code
-          |  WHERE r.vec_id <> d.qid
-          |  GROUP BY d.qid, r.vec_id),
-          |rk AS (
-          |  SELECT qid, vec_id, d2,
-          |         row_number() OVER (PARTITION BY qid
-          |                            ORDER BY d2 ASC, vec_id) AS rk
-          |  FROM adc)
-          |SELECT qid, CAST(rk AS BIGINT) AS rk, vec_id,
-          |       CAST(-d2 AS BIGINT) AS neg_d2
-          |FROM rk WHERE rk <= 10
-          |ORDER BY qid, rk""".stripMargin)
+          datasetKey = datasetKeyOf(dir)),
+      Some(ivfPqOracleSql(residual = true))
     ),
 
     // ------------------------------------------------------------------
@@ -2208,57 +2240,8 @@ object SimilarityOps {
       s"IVF-PQ ADC top-$IvfPqRerankR candidates exact-reranked to top-10 (FAISS refine, fully oracled)",
       (spark, dir) =>
         ivfPqRerankTopKBatch(Tables(spark, dir).embeddings, BatchQueryIds, k = 10,
-          datasetKey = new java.io.File(dir).getCanonicalPath),
-      Some(
-        s"""WITH ${kmeansCteSql(IvfPqCells, IvfPqRefine)},
-          |keep AS (
-          |  SELECT a.vec_id, a.cell_id FROM asg a
-          |  JOIN (SELECT cell_id, count(*) AS n FROM asg GROUP BY cell_id) c
-          |    USING (cell_id)
-          |  WHERE c.n <= ${graft.dedup.DedupOps.MaxBlock}),
-          |${pqCteSql(withQe = false)},
-          |probe AS (
-          |  SELECT qid, cell_id FROM (
-          |    SELECT e.vec_id AS qid, c.cell_id,
-          |           row_number() OVER (PARTITION BY e.vec_id
-          |             ORDER BY ${intDistSql("e.q", "c.c")} ASC, c.cell_id ASC) AS rn
-          |    FROM qe e CROSS JOIN cent c
-          |    WHERE e.vec_id IN ${batchIdsSql}) WHERE rn <= $IvfPqNprobe),
-          |qsv AS (SELECT vec_id AS qid, sub, sq FROM sv
-          |        WHERE vec_id IN ${batchIdsSql}),
-          |dt AS (
-          |  SELECT q.qid, c.sub, c.code, ${intDistSql("q.sq", "c.c")} AS qd2
-          |  FROM qsv q JOIN pcent c ON q.sub = c.sub),
-          |cand AS (
-          |  SELECT p.qid, kp.vec_id
-          |  FROM probe p JOIN keep kp USING (cell_id)
-          |  WHERE kp.vec_id <> p.qid),
-          |adc AS (
-          |  SELECT c2.qid, c2.vec_id, CAST(sum(d.qd2) AS BIGINT) AS d2
-          |  FROM cand c2
-          |  JOIN pcodes p2 ON p2.vec_id = c2.vec_id
-          |  JOIN dt d ON d.qid = c2.qid AND d.sub = p2.sub AND d.code = p2.code
-          |  GROUP BY c2.qid, c2.vec_id),
-          |candr AS (
-          |  SELECT qid, vec_id FROM (
-          |    SELECT qid, vec_id,
-          |           row_number() OVER (PARTITION BY qid
-          |                              ORDER BY d2 ASC, vec_id) AS rn
-          |    FROM adc) WHERE rn <= $IvfPqRerankR),
-          |exact AS (
-          |  SELECT c.qid, c.vec_id, ${intDistSql("ev.q", "eq2.q")} AS d2
-          |  FROM candr c
-          |  JOIN qe ev ON ev.vec_id = c.vec_id
-          |  JOIN qe eq2 ON eq2.vec_id = c.qid),
-          |rk AS (
-          |  SELECT qid, vec_id, d2,
-          |         row_number() OVER (PARTITION BY qid
-          |                            ORDER BY d2 ASC, vec_id) AS rk
-          |  FROM exact)
-          |SELECT qid, CAST(rk AS BIGINT) AS rk, vec_id,
-          |       CAST(-d2 AS BIGINT) AS neg_d2
-          |FROM rk WHERE rk <= 10
-          |ORDER BY qid, rk""".stripMargin)
+          datasetKey = datasetKeyOf(dir)),
+      Some(ivfPqOracleSql(residual = false, rerank = true))
     ),
 
     // ------------------------------------------------------------------
@@ -2281,7 +2264,7 @@ object SimilarityOps {
       (spark, dir) => {
         val emb = Tables(spark, dir).embeddings
         val path = graft.io.TempLayouts.cached(
-          "s17_index#" + new java.io.File(dir).getCanonicalPath,
+          "s17_index#" + datasetKeyOf(dir),
           "graft_ivf_incr_") { p =>
           IvfIndex.build(emb.filter(col("vec_id") % 5 =!= 0), p, nCells = 16)
           IvfIndex.add(emb.filter(col("vec_id") % 5 === 0), p)
@@ -2525,7 +2508,7 @@ object SimilarityOps {
       "filtered ANN: exact top-10 over the label=3 subset via the selectivity-chosen pre-filter path",
       (spark, dir) =>
         filteredTopKBatch(Tables(spark, dir).embeddings, BatchQueryIds,
-          k = 10, pred = col("label") === 3),
+          k = 10, pred = col("label") === 3, datasetKey = datasetKeyOf(dir)),
       Some(
         s"""WITH q AS (
           |  SELECT vec_id AS qid, embedding AS q_emb FROM embeddings
@@ -2634,7 +2617,7 @@ object SimilarityOps {
       (spark, dir) => {
         val emb = Tables(spark, dir).embeddings
         val path = graft.io.TempLayouts.cached(
-          "s24_index#" + new java.io.File(dir).getCanonicalPath,
+          "s24_index#" + datasetKeyOf(dir),
           "graft_ivf_del_") { p =>
           IvfIndex.build(emb, p, nCells = 16)
           IvfIndex.delete(emb.filter(col("vec_id") % 7 === 3)

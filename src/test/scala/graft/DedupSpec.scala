@@ -198,7 +198,8 @@ class DedupSpec extends SparkSpecBase {
     DedupOps.simhashNearDups(corpus, maxHamming = 3).count()
     graft.similarity.SimilarityOps
       .ivfTopK(Tables(spark, sf0001).embeddings, qid = 0L, k = 5,
-        nCells = 8, nprobe = 2)
+        nCells = 8, nprobe = 2,
+        datasetKey = new java.io.File(sf0001).getCanonicalPath)
       .count()
     assert(graft.InternalCaches.liveCount >= 4,
       "minhash sh+sig, simhash sig, and IVF centroids should be tracked")

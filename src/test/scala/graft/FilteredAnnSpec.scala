@@ -14,6 +14,7 @@ import graft.similarity.SimilarityOps
 class FilteredAnnSpec extends SparkSpecBase {
 
   private lazy val emb = Tables(spark, sf0001).embeddings
+  private lazy val datasetKey = new java.io.File(sf0001).getCanonicalPath
 
   /** Driver-side exact filtered top-k, fully independent of the engine
     * path: double cosine accumulated left-to-right (the engines' order),
@@ -53,7 +54,8 @@ class FilteredAnnSpec extends SparkSpecBase {
 
   test("pre-filter path is exact: matches a driver-side recompute") {
     val got = SimilarityOps.filteredTopKBatch(
-        emb, SimilarityOps.BatchQueryIds, k = 10, pred = col("label") === 3)
+        emb, SimilarityOps.BatchQueryIds, k = 10, pred = col("label") === 3,
+        datasetKey = datasetKey)
       .collect()
       .groupBy(_.getLong(0))
       .map { case (qid, rows) =>
@@ -66,17 +68,31 @@ class FilteredAnnSpec extends SparkSpecBase {
 
   test("pre-filter predicate reaches the parquet scan as a pushed filter") {
     val df = SimilarityOps.filteredTopKBatch(
-      emb, SimilarityOps.BatchQueryIds, k = 10, pred = col("label") === 3)
+      emb, SimilarityOps.BatchQueryIds, k = 10, pred = col("label") === 3,
+      datasetKey = datasetKey)
     df.collect()
     val scans = df.queryExecution.executedPlan.toString
     assert(scans.contains("PushedFilters") && scans.contains("EqualTo(label,3)"),
       scans.take(4000))
   }
 
+  test("post-filter plan (forced) holds no runtime Bloom filter") {
+    // the stored centroids report their true size; a 1.7e15-byte
+    // estimate (a checkpointed k-means frame's) makes InjectRuntimeFilter
+    // ship a 1 MiB Bloom filter in every task
+    val df = SimilarityOps.filteredTopKBatch(
+      emb, SimilarityOps.BatchQueryIds, k = 10, pred = col("label") === 3,
+      datasetKey = datasetKey, maxExactFrac = 0.0)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("might_contain") && !plan.contains("bloom_filter_agg"),
+      plan.take(4000))
+  }
+
   test("post-filter path (forced) pays recall, never exceeds exact, keeps the predicate") {
     val post = SimilarityOps.filteredTopKBatch(
         emb, SimilarityOps.BatchQueryIds, k = 10, pred = col("label") === 3,
-        maxExactFrac = 0.0)
+        datasetKey = datasetKey, maxExactFrac = 0.0)
       .collect()
       .groupBy(_.getLong(0))
       .map { case (qid, rows) => qid -> rows.map(_.getLong(2)).toSet }
@@ -95,7 +111,7 @@ class FilteredAnnSpec extends SparkSpecBase {
     def recallAt(of: Int): Double = {
       val p = SimilarityOps.filteredTopKBatch(
           emb, SimilarityOps.BatchQueryIds, k = 10, pred = col("label") === 3,
-          maxExactFrac = 0.0, overfetch = of)
+          datasetKey = datasetKey, maxExactFrac = 0.0, overfetch = of)
         .collect().groupBy(_.getLong(0))
         .map { case (q, rows) => q -> rows.map(_.getLong(2)).toSet }
       val hits = want.keys.toSeq.map(q =>

@@ -11,8 +11,9 @@ import graft.similarity.SimilarityOps
 class SimilaritySpec extends SparkSpecBase {
 
   lazy val emb = Tables(spark, sf0001).embeddings
-  /** The IVF-PQ serving layouts' dataset key — the one the catalog
-    * entries s14–s16 use for the same data. */
+  /** The dataset key of the stored coarse quantizer and the IVF-PQ
+    * serving layouts — the one the catalog entries use for the same
+    * data. */
   lazy val datasetKey = new java.io.File(sf0001).getCanonicalPath
 
   test("cosine similarity matches a scalar reference implementation") {
@@ -77,7 +78,8 @@ class SimilaritySpec extends SparkSpecBase {
   test("IVF top-k achieves recall ≥ 0.5 vs exact on this data") {
     val exact = SimilarityOps.bruteForceTopK(emb, 0L, 10)
       .collect().map(_.getAs[Long]("vec_id")).toSet
-    val approx = SimilarityOps.ivfTopK(emb, 0L, 10, nCells = 16, nprobe = 4)
+    val approx = SimilarityOps.ivfTopK(emb, 0L, 10, nCells = 16, nprobe = 4,
+        datasetKey = datasetKey)
       .collect().map(_.getAs[Long]("vec_id")).toSet
     assert(approx.nonEmpty)
     assert(exact.intersect(approx).size >= 5,
@@ -189,10 +191,11 @@ class SimilaritySpec extends SparkSpecBase {
   test("k-means-refined IVF does not regress recall vs seed centroids") {
     val exact = SimilarityOps.bruteForceTopK(emb, 0L, 10)
       .collect().map(_.getAs[Long]("vec_id")).toSet
-    val seeded = SimilarityOps.ivfTopK(emb, 0L, 10, nCells = 16, nprobe = 4)
+    val seeded = SimilarityOps.ivfTopK(emb, 0L, 10, nCells = 16, nprobe = 4,
+        datasetKey = datasetKey)
       .collect().map(_.getAs[Long]("vec_id")).toSet
     val refined = SimilarityOps.ivfTopK(emb, 0L, 10, nCells = 16, nprobe = 4,
-        refine = 2)
+        datasetKey = datasetKey, refine = 2)
       .collect().map(_.getAs[Long]("vec_id")).toSet
     assert(refined.nonEmpty)
     assert(exact.intersect(refined).size >= exact.intersect(seeded).size - 2,
@@ -370,8 +373,8 @@ class SimilaritySpec extends SparkSpecBase {
 
   test("d06 SemDeDup: every reported link is a true >=threshold pair; drop set is sound") {
     val thresholdE4 = 3500L
-    val got = SimilarityOps.semanticDedup(emb, nCells = 16, refine = 2,
-      simThresholdE4 = thresholdE4).collect()
+    val got = SimilarityOps.semanticDedup(emb,
+      simThresholdE4 = thresholdE4, datasetKey = datasetKey).collect()
       .map(r => (r.getAs[Long]("dropped_id"), r.getAs[Long]("kept_id"),
         r.getAs[Long]("sim_e4"), r.getAs[Long]("n_dup_links")))
     graft.InternalCaches.releaseAll()
@@ -407,7 +410,8 @@ class SimilaritySpec extends SparkSpecBase {
     val exact = SimilarityOps.knnJoinExact(emb, k = 5).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id")))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val blocked = SimilarityOps.knnJoinCells(emb, k = 5, nCells = 16, refine = 2)
+    val blocked = SimilarityOps.knnJoinCells(emb, k = 5, nCells = 16,
+        datasetKey = datasetKey)
       .collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"), r.getAs[Long]("sim_e4")))
     graft.InternalCaches.releaseAll()
@@ -475,6 +479,22 @@ class SimilaritySpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val mipsIds = got.map(g => (g._1, g._2, g._3))
     assert(mipsIds !== cosine, "MIPS top-k identical to cosine top-k — norms carry no signal here")
+  }
+
+  test("one coarse quantizer per dataset: s03, then s14, then s22's post-filter path train k-means once") {
+    // a key no other test uses, so the first of the three consumers trains
+    val key = s"$datasetKey#one-quantizer"
+    def trains(body: => Unit): Boolean =
+      withJobs(body)._2.exists(_.stageInfos.exists(_.details.contains("kmeansCentroidsInt")))
+    val trained = Seq(
+      trains(SimilarityOps.ivfTopK(emb, 0L, 10, nCells = SimilarityOps.CoarseCells,
+        nprobe = 4, datasetKey = key, refine = SimilarityOps.CoarseRounds).collect()),
+      trains(SimilarityOps.ivfPqTopKBatch(emb, SimilarityOps.BatchQueryIds, k = 10,
+        datasetKey = key).collect()),
+      trains(SimilarityOps.filteredTopKBatch(emb, SimilarityOps.BatchQueryIds, k = 10,
+        pred = col("label") === 3, datasetKey = key, maxExactFrac = 0.0).collect()))
+    graft.InternalCaches.releaseAll()
+    assert(trained === Seq(true, false, false))
   }
 
   test("s14: IVF-PQ is deterministic, score-ordered, and finds real neighbors through both quantizers") {

@@ -1,6 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -19,24 +21,30 @@ trait SparkSpecBase extends AnyFunSuite {
   /** Encoders/implicits bound to the shared test session. */
   val testImplicits = TestSpark.spark.implicits
 
-  /** `body`'s result and the Spark jobs it ran, counted under a job
+  /** `body`'s result and the Spark jobs it ran, collected under a job
     * group of its own on the calling thread. */
-  def withJobCount[T](body: => T): (T, Int) = {
+  def withJobs[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
     val group = s"job-count-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger()
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
+          jobs.add(e)
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "job count")
       val out = try body finally sc.clearJobGroup()
       ListenerBusDrain(sc)
-      (out, jobs.get)
+      (out, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the number of Spark jobs it ran. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val (out, jobs) = withJobs(body)
+    (out, jobs.size)
   }
 
   def fixturePath(rel: String): String = {
