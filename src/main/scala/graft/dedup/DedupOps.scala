@@ -46,7 +46,8 @@ object DedupOps {
     * a corpus whose ids reach it would silently misclassify sides and
     * collide planted ids with real ones — so entries that ride the
     * convention assert it LOUDLY here instead. One max() over the
-    * doc-id column, checked once per (entry, dir) per JVM. */
+    * doc-id column, checked once per (entry, dir) per JVM. Every planted
+    * corpus below and every oracle that replays one reads this offset. */
   private val PlantOffset = 100000L
   private val idSpaceChecked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -61,20 +62,44 @@ object DedupOps {
       idSpaceChecked.add(key)
     }
 
+  /** A whitespace-perturbed copy of `text`: equal to it after
+    * normalization. */
+  private val spaced: Column = concat(regexp_replace(col("text"), " ", "  "), lit(" "))
+
+  /** `text` without its last `n` words. */
+  private def truncated(n: Int): Column =
+    regexp_replace(col("text"), s"(\\s+\\S+){$n}$$", "")
+
   /** documents ∪ whitespace-perturbed copies — equal after normalization. */
   def exactDupCorpus(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("text"))
       .unionByName(docs.select(
-        (col("doc_id") + lit(100000L)).as("doc_id"),
-        concat(regexp_replace(col("text"), " ", "  "), lit(" ")).as("text")))
+        (col("doc_id") + lit(PlantOffset)).as("doc_id"), spaced.as("text")))
+
+  /** The oracle's twin of [[exactDupCorpus]], as CTE `corpus` (d01, d13,
+    * t13). */
+  private[graft] val exactDupCorpusSql: String =
+    s"""corpus AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL
+       |  SELECT doc_id + $PlantOffset AS doc_id, replace(text, ' ', '  ') || ' ' AS text FROM documents)""".stripMargin
 
   /** documents ∪ last-3-words-truncated copies — near-dups (word-shingle
     * Jaccard ≈ 0.9), not exact dups. */
   def nearDupCorpus(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("text"))
       .unionByName(docs.select(
-        (col("doc_id") + lit(100000L)).as("doc_id"),
-        regexp_replace(col("text"), "(\\s+\\S+){3}$", "").as("text")))
+        (col("doc_id") + lit(PlantOffset)).as("doc_id"), truncated(3).as("text")))
+
+  /** The oracle's twin of [[nearDupCorpus]], as CTE `cte` (d02, d04, d14,
+    * p02). */
+  private[graft] def nearDupCorpusSql(cte: String): String =
+    s"""$cte AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL
+       |  SELECT doc_id + $PlantOffset AS doc_id,
+       |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text
+       |  FROM documents)""".stripMargin
 
   /** Every 5th document ∪ two successive truncations (3 and 6 trailing
     * words) keeping `source` — a corpus whose near-dup PAIR graph forms
@@ -87,12 +112,24 @@ object DedupOps {
       .select(col("doc_id"), col("source"), col("text"))
     sub
       .unionByName(sub.select(
-        (col("doc_id") + lit(100000L)).as("doc_id"), col("source"),
-        regexp_replace(col("text"), "(\\s+\\S+){3}$", "").as("text")))
+        (col("doc_id") + lit(PlantOffset)).as("doc_id"), col("source"),
+        truncated(3).as("text")))
       .unionByName(sub.select(
-        (col("doc_id") + lit(200000L)).as("doc_id"), col("source"),
-        regexp_replace(col("text"), "(\\s+\\S+){6}$", "").as("text")))
+        (col("doc_id") + lit(2 * PlantOffset)).as("doc_id"), col("source"),
+        truncated(6).as("text")))
   }
+
+  /** d15/d17's incoming batch (doc_id, text): the held-out 1/5 of
+    * `docs`, plus planted index-dups (`copy` of base docs, id +
+    * PlantOffset) and within-batch dups (`copy` of batch docs, id +
+    * 2·PlantOffset). */
+  private def plantedBatch(docs: DataFrame, copy: Column): DataFrame =
+    docs.filter(col("doc_id") % 5 === 0)
+      .select(col("doc_id"), col("text"))
+      .unionByName(docs.filter(col("doc_id") % 10 === 1)
+        .select((col("doc_id") + lit(PlantOffset)).as("doc_id"), copy.as("text")))
+      .unionByName(docs.filter(col("doc_id") % 10 === 0)
+        .select((col("doc_id") + lit(2 * PlantOffset)).as("doc_id"), copy.as("text")))
 
   /** Exact word-5-shingle Jaccard pairs ≥ `threshold` within `source`
     * blocks — the deterministic (oracle-able) edge generator for the
@@ -104,17 +141,13 @@ object DedupOps {
     // block self-join references the capped frame in BOTH arms — left
     // lazy, the corpus-wide regex + word_ngram_hashes pass re-ran up to
     // four times per materialization (measured warm: d05 3.5 → 2.1 s).
-    // Both frames are tiny relative to text (ids + hash arrays);
-    // tracked for inter-iteration release.
-    val shingled = graft.InternalCaches.track(
+    // Both frames are tiny relative to text (ids + hash arrays).
+    val shingled = cached(
       corpus
         .withColumn("gh",
           call_function("word_ngram_hashes", col("text"), lit(ShingleWords)))
-        .select(col("doc_id"), col("source"), col("gh"), size(col("gh")).as("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val g = graft.InternalCaches.track(
-      capBlocks(shingled, Seq("source"), MaxBlock)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("doc_id"), col("source"), col("gh"), size(col("gh")).as("n")))
+    val g = cached(capBlocks(shingled, Seq("source"), MaxBlock))
     val a = g.select(col("source"), col("doc_id").as("src"),
       col("gh").as("g_a"), col("n").as("n_a"))
     val b = g.select(col("source"), col("doc_id").as("dst"),
@@ -122,10 +155,31 @@ object DedupOps {
     a.join(b, Seq("source"))
       .filter(col("src") < col("dst"))
       .withColumn("inter", call_function("sorted_intersect_size", col("g_a"), col("g_b")))
-      .filter(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double") >= threshold)
+      .filter(jaccard("n_a", "n_b") >= threshold)
       .select(col("src"), col("dst"))
   }
+
+  /** Persist a frame that more than one branch reads, and register it
+    * with [[graft.InternalCaches]]: a long-lived session calls
+    * `InternalCaches.releaseAll()` after consuming a result to drop these
+    * without touching its own caches. In the MinHash-LSH pipeline the
+    * persist is also an optimizer barrier — without it CollapseProject
+    * inlines the shingle expression into all 32 minhash lambdas and the
+    * 8 band slices, multiplying both per-row compute and plan size. */
+  private def cached(df: DataFrame): DataFrame =
+    graft.InternalCaches.track(df.persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** Exact Jaccard from the shared-gram count `inter` and the two set
+    * sizes: inter / (n_a + n_b - inter). */
+  private def jaccard(nA: String, nB: String): Column =
+    col("inter").cast("double") / (col(nA) + col(nB) - col("inter")).cast("double")
+
+  // ---------------------------------------------------------------------
+  // The MinHash-LSH pipeline (d02, d07, d14, d17, p02), one function per
+  // stage: shingle → sign ([[signed]]), band ([[banded]]), drop hot
+  // buckets ([[dropHotBuckets]]), candidates ([[selfCandidates]] /
+  // [[crossCandidates]]), exact-Jaccard verify ([[verified]]). The SQL
+  // twins of each stage sit with [[minhashBandSqlOver]].
 
   /** doc_id + sorted distinct word-5-shingle HASH set via the native
     * one-pass [[graft.functions.expressions.WordNgramMd5Hashes]] —
@@ -154,6 +208,16 @@ object DedupOps {
     sh.withColumn("minhash",
       call_function("minhash_signature", col("shingles"), lit(NumHashes)))
 
+  /** Stage 1, shingle → sign: a corpus's persisted shingle frame
+    * (doc_id, shingles) and persisted signature frame (doc_id, shingles,
+    * minhash). The shingles feed two branches (signatures and the
+    * exact-Jaccard verify), the signatures feed the bands and d14's
+    * agreement count. */
+  private def signed(corpus: DataFrame): (DataFrame, DataFrame) = {
+    val sh = cached(shingled(corpus))
+    (sh, cached(withSignature(sh)))
+  }
+
   /** Explode the signature into (band, band_sig) LSH keys. The band key
     * is the RAW RowsPerBand-tuple of minhash values, not a hash of it:
     * equality is then exactly tuple equality (no 32-bit hash collision
@@ -169,6 +233,77 @@ object DedupOps {
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_sig")
   }
+
+  /** Stage 2: drop every LSH bucket with more than [[MaxBucket]]
+    * members, whole — one count on (band, band_sig) and a semi-join; no
+    * row data moves for the dropped buckets. `bands` is any frame keyed
+    * by (band, band_sig).
+    *
+    * MERGE-hinted (round 15, the d08 policy): the band space is
+    * unbounded, so the kept-bucket list is corpus-proportional, and its
+    * size estimate runs through agg+filter over a posexplode — both of
+    * which understate (d08's measured failure class: the 64 MB gate
+    * picked a corpus-sized broadcast build at the 500k-doc sweep tier).
+    * The list arrives hash-clustered on (band, band_sig) from the count
+    * shuffle, so the pin costs a sort, not an extra exchange, and
+    * sort-merge spills where a broadcast build would collapse the
+    * driver. */
+  private def dropHotBuckets(bands: DataFrame): DataFrame =
+    bands.join(
+      bands.groupBy(col("band"), col("band_sig"))
+        .agg(count(lit(1)).as("bucket_n"))
+        .filter(col("bucket_n") <= MaxBucket)
+        .select(col("band"), col("band_sig")).hint("merge"),
+      Seq("band", "band_sig"), "left_semi")
+
+  /** Stage 3 within one corpus: the distinct (doc_a < doc_b) pairs that
+    * share a bucket of `kept` (doc_id, band, band_sig), hot buckets
+    * already dropped. MERGE: both sides are the corpus-proportional
+    * band frame ([[dropHotBuckets]]' note). */
+  private def selfCandidates(kept: DataFrame): DataFrame = {
+    val a = kept.select(col("band"), col("band_sig"), col("doc_id").as("doc_a"))
+    val b = kept.select(col("band"), col("band_sig"), col("doc_id").as("doc_b"))
+    a.join(b.hint("merge"), Seq("band", "band_sig"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"))
+      .distinct()
+  }
+
+  /** Stage 3 across two corpora: the distinct (left id, right id) pairs
+    * sharing a bucket, from two frames of (id, band, band_sig) with
+    * their hot buckets already dropped. MERGE: both corpora are
+    * unbounded ([[dropHotBuckets]]' note). */
+  private def crossCandidates(left: DataFrame, right: DataFrame): DataFrame =
+    left.join(right.hint("merge"), Seq("band", "band_sig"))
+      .drop("band", "band_sig")
+      .distinct()
+
+  /** Candidate pairs of one corpus's bands: [[dropHotBuckets]] then
+    * [[selfCandidates]] (d02, d14, p02). */
+  private def candidatePairs(bands: DataFrame): DataFrame =
+    selfCandidates(dropHotBuckets(bands))
+
+  /** Stage 4: exact-Jaccard verify. Joins each candidate pair's `idA`
+    * and `idB` to their shingle sets in `shA` / `shB` (as sh_a/n_a,
+    * sh_b/n_b), adds the shared-gram count `inter` and [[jaccard]], and
+    * keeps the pairs at or above `threshold`.
+    *
+    * MERGE on both joins (round 15, measured): at the 500k-doc sweep
+    * tier the planner picked BuildRight broadcasts of the persisted
+    * shingle frames (plans/r15-scale/d02_dedup_minhash_lsh_500k_before.txt
+    * — every join in the entry was a corpus-sized-build BHJ; single run
+    * 236 s), so "the cache's accurate stats will demote it" is
+    * empirically false here. */
+  private def verified(cand: DataFrame, idA: String, shA: DataFrame,
+      idB: String, shB: DataFrame, threshold: Double): DataFrame =
+    cand
+      .join(shA.select(col("doc_id").as(idA), col("shingles").as("sh_a"),
+        size(col("shingles")).as("n_a")).hint("merge"), Seq(idA))
+      .join(shB.select(col("doc_id").as(idB), col("shingles").as("sh_b"),
+        size(col("shingles")).as("n_b")).hint("merge"), Seq(idB))
+      .withColumn("inter", call_function("sorted_intersect_size", col("sh_a"), col("sh_b")))
+      .withColumn("jaccard", jaccard("n_a", "n_b"))
+      .filter(col("jaccard") >= threshold)
 
   /** Max docs per blocking key for the block-local all-pairs operators
     * (d03 / s04). Far above every block in the test data (max 250), so
@@ -190,65 +325,13 @@ object DedupOps {
     df.join(small, blockCols, "left_semi")
   }
 
-  /** Candidate pairs from LSH buckets, with degenerate buckets dropped. */
-  private def candidatePairs(buckets: DataFrame): DataFrame = {
-    val smallBuckets = buckets
-      .groupBy(col("band"), col("band_sig"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") <= MaxBucket)
-      .select(col("band"), col("band_sig"))
-    // MERGE on both joins (round 15, the d08 policy): the band space is
-    // unbounded, so the distinct-bucket list AND the pruned bucket rows
-    // are corpus-proportional; their size estimates run through
-    // agg+filter and a posexplode — both of which understate (d08's
-    // measured failure class: the 64 MB gate picked a corpus-sized
-    // broadcast build at the 500k-doc sweep tier). Both sides arrive
-    // hash-clustered on (band, band_sig) from the count shuffle, so the
-    // pin costs sorts, not extra exchanges, and sort-merge spills where
-    // a broadcast build would collapse the driver.
-    val pruned = buckets.join(smallBuckets.hint("merge"),
-      Seq("band", "band_sig"), "left_semi")
-    val a = pruned.select(col("band"), col("band_sig"), col("doc_id").as("doc_a"))
-    val b = pruned.select(col("band"), col("band_sig"), col("doc_id").as("doc_b"))
-    a.join(b.hint("merge"), Seq("band", "band_sig"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-  }
-
-  /** Full MinHash-LSH near-dup pipeline over a (doc_id, text) corpus:
-    * candidates from band buckets, verified with exact shingle Jaccard.
-    *
-    * The shingle and signature frames are persisted: both are consumed
-    * by two downstream branches (banding + verification), and the
-    * persist is also an optimizer barrier — without it CollapseProject
-    * inlines the shingle expression into all 32 minhash lambdas and the
-    * 8 band hashes, multiplying both per-row compute and plan size.
-    * Both are registered with [[graft.InternalCaches]]: a long-lived
-    * session calls `InternalCaches.releaseAll()` after consuming the
-    * result to drop them without touching its own caches. */
+  /** Full MinHash-LSH near-dup pipeline over a (doc_id, text) corpus
+    * (d02, p02): [[signed]] → [[banded]] → [[candidatePairs]] (hot-bucket
+    * drop + self-candidates) → [[verified]], one row per pair with exact
+    * shingle Jaccard ≥ `threshold`. */
   def minhashNearDups(corpus: DataFrame, threshold: Double): DataFrame = {
-    import graft.InternalCaches.track
-    val sh = track(shingled(corpus).persist(StorageLevel.MEMORY_AND_DISK))
-    val sig = track(withSignature(sh).persist(StorageLevel.MEMORY_AND_DISK))
-    val cand = candidatePairs(banded(sig))
-    val shA = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"),
-      size(col("shingles")).as("n_a"))
-    val shB = sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"),
-      size(col("shingles")).as("n_b"))
-    // MERGE on the verify joins too (round 15, measured): at the
-    // 500k-doc sweep tier the planner STILL picked BuildRight broadcasts
-    // of the persisted shingle frames (plans/r15-scale/
-    // d02_dedup_minhash_lsh_500k_before.txt — every join in the entry
-    // was a corpus-sized-build BHJ; single run 236 s), so "the cache's
-    // accurate stats will demote it" is empirically false here.
-    cand
-      .join(shA.hint("merge"), Seq("doc_a"))
-      .join(shB.hint("merge"), Seq("doc_b"))
-      .withColumn("inter", call_function("sorted_intersect_size", col("sh_a"), col("sh_b")))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
+    val (sh, sig) = signed(corpus)
+    verified(candidatePairs(banded(sig)), "doc_a", sh, "doc_b", sh, threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -257,48 +340,24 @@ object DedupOps {
     * `train` doc against the `eval` corpus by estimated Jaccard without
     * an all-pairs product (t14 catches exact n-gram overlap; a
     * lightly-edited eval document slips past it, this catches it).
-    * Both sides band independently; candidates come from the
-    * (band, band_sig) equi-join with BOTH sides' degenerate buckets
-    * dropped (a hot signature on either side would otherwise go
-    * quadratic — same [[MaxBucket]] policy as the self-join); candidates
-    * verify against exact shingle-hash Jaccard. One row per
+    * Both sides sign and band independently and drop their own hot
+    * buckets ([[dropHotBuckets]] — a hot signature on either side would
+    * otherwise go quadratic); [[crossCandidates]] pairs them and
+    * [[verified]] checks exact shingle-hash Jaccard. One row per
     * contaminated train doc with its match count and strongest eval
     * match (argmax as a partial-aggregating max(struct), no window).
     *
     * Scale: shuffles are keyed by (band, band_sig) and doc ids only;
     * the shingle frames persist once per side and serve both the
-    * banding and the verification branches (the d02 barrier
-    * discipline). */
+    * banding and the verification branches. */
   def minhashCrossMatches(train: DataFrame, eval: DataFrame,
       threshold: Double): DataFrame = {
-    import graft.InternalCaches.track
-    val shT = track(shingled(train).persist(StorageLevel.MEMORY_AND_DISK))
-    val shE = track(shingled(eval).persist(StorageLevel.MEMORY_AND_DISK))
-    def bands(sh: DataFrame, idAs: String): DataFrame =
-      banded(track(withSignature(sh).persist(StorageLevel.MEMORY_AND_DISK)))
-        .withColumnRenamed("doc_id", idAs)
-    // MERGE on the bucket semis and the cross join: band space is
-    // unbounded and both corpora are unbounded — candidatePairs' note
-    def dropHotBuckets(b: DataFrame): DataFrame =
-      b.join(
-        b.groupBy(col("band"), col("band_sig"))
-          .agg(count(lit(1)).as("n")).filter(col("n") <= MaxBucket)
-          .select(col("band"), col("band_sig")).hint("merge"),
-        Seq("band", "band_sig"), "left_semi")
-    val cand = dropHotBuckets(bands(shT, "train_id"))
-      .join(dropHotBuckets(bands(shE, "eval_id")).hint("merge"),
-        Seq("band", "band_sig"))
-      .select(col("train_id"), col("eval_id"))
-      .distinct()
-    cand
-      .join(shT.select(col("doc_id").as("train_id"), col("shingles").as("sh_t"),
-        size(col("shingles")).as("n_t")).hint("merge"), Seq("train_id"))
-      .join(shE.select(col("doc_id").as("eval_id"), col("shingles").as("sh_e"),
-        size(col("shingles")).as("n_e")).hint("merge"), Seq("eval_id"))
-      .withColumn("inter", call_function("sorted_intersect_size", col("sh_t"), col("sh_e")))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("n_t") + col("n_e") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
+    val (shT, sigT) = signed(train)
+    val (shE, sigE) = signed(eval)
+    def kept(sig: DataFrame, idAs: String): DataFrame =
+      dropHotBuckets(banded(sig).withColumnRenamed("doc_id", idAs))
+    verified(crossCandidates(kept(sigT, "train_id"), kept(sigE, "eval_id")),
+        "train_id", shT, "eval_id", shE, threshold)
       .groupBy(col("train_id"))
       .agg(count(lit(1)).as("n_eval_matches"),
         max(struct(col("jaccard"), (-col("eval_id")).as("neg_id"))).as("best"))
@@ -361,7 +420,7 @@ object DedupOps {
     val b = blocks.select(col("block"), col("block_val"),
       col(idCol).as("doc_b"), col(sigCol).as("sig_b"))
     // MERGE: both sides are the 4×-exploded signature corpus
-    // (candidatePairs' note — the cap bounds each BLOCK, not the frame,
+    // (dropHotBuckets' note — the cap bounds each BLOCK, not the frame,
     // and the explode's size estimate undershoots). The capBlocks semi
     // above is left alone: its build side is the distinct key list,
     // bounded by the 4×2^16 block-value space.
@@ -376,18 +435,16 @@ object DedupOps {
   }
 
   /** SimHash near-dups: 4×16-bit block LSH + exact Hamming re-check. */
-  def simhashNearDups(corpus: DataFrame, maxHamming: Int): DataFrame = {
-    val sig = graft.InternalCaches.track(
-      simhashSignature(corpus).persist(StorageLevel.MEMORY_AND_DISK))
-    hamming64Pairs(sig, "doc_id", "sig", maxHamming)
-  }
+  def simhashNearDups(corpus: DataFrame, maxHamming: Int): DataFrame =
+    hamming64Pairs(cached(simhashSignature(corpus)), "doc_id", "sig", maxHamming)
 
   /** Shared DuckDB replay of the shingle→minhash→band chain over a
     * preceding `corpus(doc_id, text)` CTE — the SQL twin of
-    * [[shingled]] → [[withSignature]] → [[banded]], used by the d02 and
-    * d07 oracles. The universal-hash coefficients are interpolated as a
-    * VALUES table: they are driver-side constants published as part of
-    * the engine spec (seed 42), not data-dependent randomness. Emits
+    * [[shingled]] → [[withSignature]] → [[banded]], used by the d02,
+    * d07, d14, d17 and p02 oracles. The universal-hash coefficients are
+    * interpolated as a VALUES table: they are driver-side constants
+    * published as part of the engine spec (seed 42), not data-dependent
+    * randomness. Emits
     * CTE bodies `toks, pos, grams, hs, coeff, mh, sigl, bands`;
     * `grams` doubles as the exact-Jaccard verification input. */
   private[graft] def minhashBandSql: String = minhashBandSqlOver("corpus")
@@ -433,53 +490,69 @@ object DedupOps {
        |sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id)""".stripMargin
   }
 
-  /** The self-join half of the d02 replay (CTEs buckets, pruned, cand,
-    * inter, pairs) over the chain emitted by [[minhashBandSqlOver]]:
-    * hot-bucket drop, candidate generation, exact-Jaccard verification.
-    * `pairs(doc_a, doc_b, jaccard)` holds the verified ≥ `threshold`
-    * pairs — shared by the d02 and p02 oracles. */
-  private[graft] def minhashPairSql(threshold: Double): String =
-    s"""buckets AS (
-       |  SELECT band, bkey FROM bands GROUP BY band, bkey HAVING count(*) <= ${MaxBucket}),
-       |pruned AS (
-       |  SELECT bands.doc_id, bands.band, bands.bkey
-       |  FROM bands JOIN buckets USING (band, bkey)),
-       |cand AS (
+  /** The SQL twin of [[dropHotBuckets]]: CTE `out` holds the rows of
+    * band CTE `bands` (doc_id, band, bkey) whose bucket has at most
+    * [[MaxBucket]] members. */
+  private[graft] def keptBucketsSql(out: String, bands: String): String =
+    s"""$out AS (
+       |  SELECT $bands.* FROM $bands JOIN (
+       |    SELECT band, bkey FROM $bands GROUP BY band, bkey
+       |    HAVING count(*) <= $MaxBucket) k USING (band, bkey))""".stripMargin
+
+  /** The SQL twin of [[selfCandidates]]: CTE `out(doc_a, doc_b)` holds
+    * the distinct doc_a < doc_b pairs sharing a bucket of CTE `kept`. */
+  private[graft] def selfCandidatesSql(out: String, kept: String): String =
+    s"""$out AS (
        |  SELECT DISTINCT pa.doc_id AS doc_a, pb.doc_id AS doc_b
-       |  FROM pruned pa
-       |  JOIN pruned pb ON pa.band = pb.band AND pa.bkey = pb.bkey
-       |                AND pa.doc_id < pb.doc_id),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-       |  FROM cand c
-       |  JOIN grams ga ON ga.doc_id = c.doc_a
-       |  JOIN grams gb ON gb.doc_id = c.doc_b AND gb.h = ga.h
-       |  GROUP BY c.doc_a, c.doc_b),
-       |pairs AS (
-       |  SELECT i.doc_a, i.doc_b,
+       |  FROM $kept pa
+       |  JOIN $kept pb ON pa.band = pb.band AND pa.bkey = pb.bkey
+       |                AND pa.doc_id < pb.doc_id)""".stripMargin
+
+  /** The SQL twin of [[verified]]: CTE `inter` counts the gram hashes
+    * each pair (`a`, `b`) of CTE `cand` shares, and CTE
+    * `out(a, b, jaccard)` keeps the pairs with exact Jaccard ≥
+    * `threshold`. Reads `grams` and `sizes` from [[minhashBandSqlOver]]. */
+  private[graft] def verifySql(inter: String, out: String, cand: String,
+      a: String, b: String, threshold: Double): String =
+    s"""$inter AS (
+       |  SELECT c.$a, c.$b, count(*) AS inter
+       |  FROM $cand c
+       |  JOIN grams ga ON ga.doc_id = c.$a
+       |  JOIN grams gb ON gb.doc_id = c.$b AND gb.h = ga.h
+       |  GROUP BY c.$a, c.$b),
+       |$out AS (
+       |  SELECT i.$a, i.$b,
        |         CAST(i.inter AS DOUBLE) / CAST(sa.n + sb.n - i.inter AS DOUBLE) AS jaccard
-       |  FROM inter i
-       |  JOIN sizes sa ON sa.doc_id = i.doc_a
-       |  JOIN sizes sb ON sb.doc_id = i.doc_b
+       |  FROM $inter i
+       |  JOIN sizes sa ON sa.doc_id = i.$a
+       |  JOIN sizes sb ON sb.doc_id = i.$b
        |  WHERE CAST(i.inter AS DOUBLE) / CAST(sa.n + sb.n - i.inter AS DOUBLE) >= $threshold)""".stripMargin
 
+  /** The self-join half of the d02 replay over the chain emitted by
+    * [[minhashBandSqlOver]] — the SQL twin of [[candidatePairs]] then
+    * [[verified]]: CTEs `pruned` (hot buckets dropped), `cand`, `inter`
+    * and `pairs(doc_a, doc_b, jaccard)`, the verified ≥ `threshold`
+    * pairs. Shared by the d02 and p02 oracles. */
+  private[graft] def minhashPairSql(threshold: Double): String =
+    Seq(keptBucketsSql("pruned", "bands"), selfCandidatesSql("cand", "pruned"),
+      verifySql("inter", "pairs", "cand", "doc_a", "doc_b", threshold)).mkString(",\n")
 
   /** The cluster-label replay chain shared by the d05 and d16 oracles
     * (base → corpus → sh → edges → recursive cc → lbl): the 1-in-5
     * truncation corpus, exact word-5-shingle Jaccard pair edges, and
     * the transitive closure labelled by component-minimum doc_id.
     * Factored so the two entries' clustering semantics cannot drift.
-    * Must be preceded by `WITH RECURSIVE`; composed by concatenation
-    * (NOT s-interpolation — the regexes contain `$` anchors). */
+    * Must be preceded by `WITH RECURSIVE`; raw-interpolated: the
+    * regexes keep their backslashes, and each `$` anchor is doubled. */
   private[dedup] val clusterLabelSql: String =
-    """base AS (
+    raw"""base AS (
       |  SELECT doc_id, source, text FROM documents WHERE doc_id % 5 = 0),
       |corpus AS (
       |  SELECT doc_id, source, text FROM base
       |  UNION ALL
-      |  SELECT doc_id + 100000, source, regexp_replace(text, '(\s+\S+){3}$', '') FROM base
+      |  SELECT doc_id + $PlantOffset, source, regexp_replace(text, '(\s+\S+){3}$$', '') FROM base
       |  UNION ALL
-      |  SELECT doc_id + 200000, source, regexp_replace(text, '(\s+\S+){6}$', '') FROM base),
+      |  SELECT doc_id + ${2 * PlantOffset}, source, regexp_replace(text, '(\s+\S+){6}$$', '') FROM base),
       |sh AS (
       |  SELECT doc_id, source,
       |         list_distinct([array_to_string(ws[i:i+4], ' ')
@@ -523,11 +596,8 @@ object DedupOps {
           .orderBy(col("canonical_id"))
       },
       Some(
-        """WITH corpus AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id, replace(text, ' ', '  ') || ' ' AS text FROM documents),
-          |fp AS (
+        "WITH " + exactDupCorpusSql + ",\n" +
+        """fp AS (
           |  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
           |  FROM corpus)
           |SELECT min(doc_id) AS canonical_id, count(*) AS dup_cnt, fingerprint
@@ -544,8 +614,9 @@ object DedupOps {
     // table — they are part of the engine spec, seed 42), and the band
     // key is the raw 4-tuple — so DuckDB replays the ENTIRE pipeline
     // end to end: shingle hashes, the 32 (a·h+b mod p) minhash minima,
-    // the 8-band bucketing with the MaxBucket hot-bucket drop, the
-    // candidate self-join, and the exact-Jaccard verification. The two
+    // the 8-band bucketing with the hot-bucket drop, the
+    // candidate self-join, and the exact-Jaccard verification — each
+    // stage from the same builder pair as d07, d14, d17 and p02. The two
     // engines share only the algorithm description, not one line of
     // execution machinery. The ScalaTest additionally asserts recovery
     // of every planted near-dup pair and corpus-wide soundness against
@@ -558,12 +629,7 @@ object DedupOps {
         minhashNearDups(nearDupCorpus(t.documents), threshold = 0.5)
       },
       Some(
-        s"""WITH corpus AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id,
-          |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text
-          |  FROM documents),
+        s"""WITH ${nearDupCorpusSql("corpus")},
           |$minhashBandSql,
           |${minhashPairSql(0.5)}
           |SELECT doc_a, doc_b, jaccard FROM pairs
@@ -600,9 +666,7 @@ object DedupOps {
         a.join(b, Seq("source"))
           .filter(col("doc_a") < col("doc_b"))
           .withColumn("inter", call_function("sorted_intersect_size", col("g_a"), col("g_b")))
-          .select(col("doc_a"), col("doc_b"),
-            (col("inter").cast("double") /
-              (col("n_a") + col("n_b") - col("inter")).cast("double")).as("jaccard"))
+          .select(col("doc_a"), col("doc_b"), jaccard("n_a", "n_b").as("jaccard"))
           .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b"))
           .limit(20)
       },
@@ -639,13 +703,8 @@ object DedupOps {
         // raw-interpolated so the engine's ACTUAL hot-block cap
         // (MaxBlock) lands in the oracle — a hardcoded 1024 would
         // silently diverge engine and oracle if the cap ever changed
-        // (round-14 advisory); $$ = the literal regex anchor
-        raw"""WITH corpus AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id,
-          |         regexp_replace(text, '(\s+\S+){3}$$', '') AS text
-          |  FROM documents),
+        // (round-14 advisory)
+        raw"""WITH ${nearDupCorpusSql("corpus")},
           |tok AS (
           |  SELECT doc_id, unnest(list_distinct(regexp_split_to_array(text, '\s+'))) AS t
           |  FROM corpus),
@@ -719,7 +778,8 @@ object DedupOps {
     // eval side = the originals; every train doc is a light edit of an
     // eval doc, exactly the case exact-overlap decontamination (t14)
     // exists to catch but can miss under edits. FULLY ORACLED via the
-    // same md5-family replay as d02 (shared minhashBandSql chain):
+    // same md5-family replay as d02 (shared minhashBandSql chain and
+    // stage builders):
     // DuckDB rebuilds both sides' signatures, bands each side, drops
     // each side's hot buckets independently, joins, verifies exact
     // Jaccard, and mirrors the argmax tie-break (jaccard desc, eval_id
@@ -732,8 +792,8 @@ object DedupOps {
       (spark, dir) => {
         val corpus = clusterCorpus(Tables(spark, dir).documents)
         minhashCrossMatches(
-          corpus.filter(col("doc_id") >= 100000L).select(col("doc_id"), col("text")),
-          corpus.filter(col("doc_id") < 100000L).select(col("doc_id"), col("text")),
+          corpus.filter(col("doc_id") >= PlantOffset).select(col("doc_id"), col("text")),
+          corpus.filter(col("doc_id") < PlantOffset).select(col("doc_id"), col("text")),
           threshold = 0.5)
       },
       Some(
@@ -742,38 +802,20 @@ object DedupOps {
           |corpus AS (
           |  SELECT doc_id, text FROM base
           |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id,
+          |  SELECT doc_id + $PlantOffset AS doc_id,
           |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text FROM base
           |  UNION ALL
-          |  SELECT doc_id + 200000 AS doc_id,
+          |  SELECT doc_id + ${2 * PlantOffset} AS doc_id,
           |         regexp_replace(text, '(\\s+\\S+){6}$$', '') AS text FROM base),
           |$minhashBandSql,
-          |bt AS (SELECT * FROM bands WHERE doc_id >= 100000),
-          |be AS (SELECT * FROM bands WHERE doc_id < 100000),
-          |btp AS (
-          |  SELECT bt.* FROM bt JOIN (
-          |    SELECT band, bkey FROM bt GROUP BY band, bkey
-          |    HAVING count(*) <= ${MaxBucket}) kt USING (band, bkey)),
-          |bep AS (
-          |  SELECT be.* FROM be JOIN (
-          |    SELECT band, bkey FROM be GROUP BY band, bkey
-          |    HAVING count(*) <= ${MaxBucket}) ke USING (band, bkey)),
+          |bt AS (SELECT * FROM bands WHERE doc_id >= $PlantOffset),
+          |be AS (SELECT * FROM bands WHERE doc_id < $PlantOffset),
+          |${keptBucketsSql("btp", "bt")},
+          |${keptBucketsSql("bep", "be")},
           |cand AS (
           |  SELECT DISTINCT btp.doc_id AS train_id, bep.doc_id AS eval_id
           |  FROM btp JOIN bep ON btp.band = bep.band AND btp.bkey = bep.bkey),
-          |inter AS (
-          |  SELECT c.train_id, c.eval_id, count(*) AS inter
-          |  FROM cand c
-          |  JOIN grams gt ON gt.doc_id = c.train_id
-          |  JOIN grams ge ON ge.doc_id = c.eval_id AND ge.h = gt.h
-          |  GROUP BY c.train_id, c.eval_id),
-          |ver AS (
-          |  SELECT i.train_id, i.eval_id,
-          |         CAST(i.inter AS DOUBLE) / CAST(st.n + se.n - i.inter AS DOUBLE) AS jaccard
-          |  FROM inter i
-          |  JOIN sizes st ON st.doc_id = i.train_id
-          |  JOIN sizes se ON se.doc_id = i.eval_id
-          |  WHERE CAST(i.inter AS DOUBLE) / CAST(st.n + se.n - i.inter AS DOUBLE) >= 0.5),
+          |${verifySql("inter", "ver", "cand", "train_id", "eval_id", 0.5)},
           |rk AS (
           |  SELECT train_id, eval_id, jaccard,
           |         count(*) OVER (PARTITION BY train_id) AS n_eval_matches,
@@ -802,7 +844,7 @@ object DedupOps {
     // EVERY gram also occurs in its container, so each of its grams has
     // df ≥ 2 and the pair is found unless ALL the contained doc's grams
     // are hotter than the cap — the declared boilerplate-miss class,
-    // the same knob as d02's MaxBucket. Candidate volume is bounded by
+    // the same knob as d02's hot-bucket cap. Candidate volume is bounded by
     // Σ_g df(g)² over capped grams (measured output-bound at all three
     // SFs: 386→218 rows at sf0.001); the verify step is one
     // array_intersect per candidate pair, never all-pairs. Containment
@@ -815,7 +857,6 @@ object DedupOps {
       "d12_containment_dedup",
       "asymmetric containment >= 0.8 pairs (prefix-snippet corpus, rare-gram inverted index)",
       (spark, dir) => {
-        import graft.InternalCaches.track
         val t = Tables(spark, dir)
         val toks = regexp_extract_all(col("text"), lit("\\S+"), lit(0))
         val snippets = t.documents.filter(col("doc_id") % 4 === 0)
@@ -828,9 +869,8 @@ object DedupOps {
         // Sorted-distinct 5-gram hash set per doc; persisted — it feeds
         // the df index AND both sides of the candidate verification (and
         // the persist is a CollapseProject barrier for the gram HOF).
-        val gramSets = track(corpus.select(col("doc_id"),
-          call_function("word_ngram_hashes", col("text"), lit(5)).as("gs"))
-          .persist())
+        val gramSets = cached(corpus.select(col("doc_id"),
+          call_function("word_ngram_hashes", col("text"), lit(5)).as("gs")))
         val grams = gramSets.select(col("doc_id"), explode(col("gs")).as("g"))
         // MERGE on the df-index join and the rare self-join (round 15):
         // the distinct-gram df list and the rare postings are both
@@ -925,11 +965,8 @@ object DedupOps {
           .orderBy(col("doc_id"))
       },
       Some(
-        """WITH corpus AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id, replace(text, ' ', '  ') || ' ' AS text FROM documents),
-          |fp AS (
+        "WITH " + exactDupCorpusSql + ",\n" +
+        """fp AS (
           |  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
           |  FROM corpus)
           |SELECT doc_id, fingerprint,
@@ -950,7 +987,8 @@ object DedupOps {
     // exactly the region the threshold lives in). Everything is the
     // d02 machinery single-sourced (same shingles, signatures, bands,
     // hot-bucket caps); agreement and both micro-unit ratios are
-    // integers, the whole chain replays in DuckDB.
+    // integers, the whole chain replays in DuckDB from the same stage
+    // builders.
     //
     // Plan shape: d02's one banding shuffle + one candidate join, then
     // signature/shingle lookups re-join the persisted frames; no new
@@ -959,12 +997,7 @@ object DedupOps {
       "d14_minhash_estimator",
       "per-candidate-pair MinHash agreement estimate vs exact Jaccard (signed error, micro-units)",
       (spark, dir) => {
-        val t = Tables(spark, dir)
-        val corpus = nearDupCorpus(t.documents)
-        val sh = graft.InternalCaches.track(
-          shingled(corpus).persist(StorageLevel.MEMORY_AND_DISK))
-        val sig = graft.InternalCaches.track(
-          withSignature(sh).persist(StorageLevel.MEMORY_AND_DISK))
+        val (sh, sig) = signed(nearDupCorpus(Tables(spark, dir).documents))
         val cands = candidatePairs(banded(sig))
         val agree = expr(
           "size(filter(zip_with(mh_a, mh_b, (x, y) -> x = y), b -> b))")
@@ -987,23 +1020,10 @@ object DedupOps {
           .orderBy(col("doc_a"), col("doc_b"))
       },
       Some(
-        s"""WITH corpus AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id,
-          |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text
-          |  FROM documents),
+        s"""WITH ${nearDupCorpusSql("corpus")},
           |$minhashBandSql,
-          |buckets AS (
-          |  SELECT band, bkey FROM bands GROUP BY band, bkey HAVING count(*) <= $MaxBucket),
-          |pruned AS (
-          |  SELECT bands.doc_id, bands.band, bands.bkey
-          |  FROM bands JOIN buckets USING (band, bkey)),
-          |cand AS (
-          |  SELECT DISTINCT pa.doc_id AS doc_a, pb.doc_id AS doc_b
-          |  FROM pruned pa
-          |  JOIN pruned pb ON pa.band = pb.band AND pa.bkey = pb.bkey
-          |                AND pa.doc_id < pb.doc_id),
+          |${keptBucketsSql("pruned", "bands")},
+          |${selfCandidatesSql("cand", "pruned")},
           |agree AS (
           |  SELECT doc_a, doc_b, CAST(count(*) FILTER (WHERE va = vb) AS BIGINT) AS est_agree
           |  FROM (
@@ -1064,7 +1084,6 @@ object DedupOps {
       (spark, dir) => {
         val t = Tables(spark, dir)
         assertPlantIdSpace(t.documents, "d15#" + dir)
-        val perturb = concat(regexp_replace(col("text"), " ", "  "), lit(" "))
         // the durable index: base snapshot = 4/5 of documents, built once
         // per JVM and served from parquet thereafter
         val idxDir = graft.io.TempLayouts.cached(
@@ -1081,20 +1100,12 @@ object DedupOps {
         // incoming batch: the held-out 1/5, plus planted index-dups
         // (perturbed copies of base docs) and within-batch dups
         // (perturbed copies of batch docs)
-        val docs = t.documents
-        val incoming = docs.filter(col("doc_id") % 5 === 0)
-          .select(col("doc_id"), col("text"))
-          .unionByName(docs.filter(col("doc_id") % 10 === 1)
-            .select((col("doc_id") + lit(100000L)).as("doc_id"),
-              perturb.as("text")))
-          .unionByName(docs.filter(col("doc_id") % 10 === 0)
-            .select((col("doc_id") + lit(200000L)).as("doc_id"),
-              perturb.as("text")))
+        val incoming = plantedBatch(t.documents, spaced)
           .select(col("doc_id"), contentFingerprint(col("text")).as("fingerprint"))
         incrementalDedupVerdicts(index, incoming)
       },
       Some(
-        """WITH base AS (
+        raw"""WITH base AS (
           |  SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
           |idx AS (
           |  SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
@@ -1103,10 +1114,10 @@ object DedupOps {
           |incoming AS (
           |  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
           |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id, replace(text, ' ', '  ') || ' ' AS text
+          |  SELECT doc_id + $PlantOffset AS doc_id, replace(text, ' ', '  ') || ' ' AS text
           |  FROM documents WHERE doc_id % 10 = 1
           |  UNION ALL
-          |  SELECT doc_id + 200000 AS doc_id, replace(text, ' ', '  ') || ' ' AS text
+          |  SELECT doc_id + ${2 * PlantOffset} AS doc_id, replace(text, ' ', '  ') || ' ' AS text
           |  FROM documents WHERE doc_id % 10 = 0),
           |fp AS (
           |  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
@@ -1151,8 +1162,7 @@ object DedupOps {
         val t = Tables(spark, dir)
         // corpus persisted (round 14): both the edge generator and the
         // n_words projection re-derive the 3-arm regex corpus otherwise
-        val corpus = graft.InternalCaches.track(
-          clusterCorpus(t.documents).persist(StorageLevel.MEMORY_AND_DISK))
+        val corpus = cached(clusterCorpus(t.documents))
         val edges = shingleJaccardEdges(corpus, threshold = 0.5)
         val assign = ConnectedComponents.components(edges)
         val docs = corpus.select(col("doc_id"),
@@ -1230,38 +1240,23 @@ object DedupOps {
       (spark, dir) => {
         val t = Tables(spark, dir)
         assertPlantIdSpace(t.documents, "d17#" + dir)
-        val truncate3 = regexp_replace(col("text"), "(\\s+\\S+){3}$", "")
         val idxDir = graft.io.TempLayouts.cached(
           "d17_index#" + new java.io.File(dir).getCanonicalPath,
           "graft_d17_idx_") { out =>
-          val base = t.documents.filter(col("doc_id") % 5 =!= 0)
-            .select(col("doc_id"), col("text"))
-          val sh = shingled(base).persist(StorageLevel.MEMORY_AND_DISK)
-          val bands = banded(withSignature(sh))
-          val small = bands.groupBy(col("band"), col("band_sig"))
-            .agg(count(lit(1)).as("n")).filter(col("n") <= MaxBucket)
-            .select(col("band"), col("band_sig"))
-          bands.join(small, Seq("band", "band_sig"), "left_semi")
-            .write.mode("overwrite").parquet(s"$out/bands")
+          val (sh, sig) = signed(t.documents.filter(col("doc_id") % 5 =!= 0)
+            .select(col("doc_id"), col("text")))
+          dropHotBuckets(banded(sig)).write.mode("overwrite").parquet(s"$out/bands")
           sh.write.mode("overwrite").parquet(s"$out/shingles")
+          sig.unpersist()
           sh.unpersist()
         }
         // incoming batch: the held-out 1/5, plus planted index-dups
         // (truncations of base docs) and within-batch dups (truncations
         // of batch docs) — the d15 batch composition, fuzzied
-        val docs = t.documents
-        val incoming = docs.filter(col("doc_id") % 5 === 0)
-          .select(col("doc_id"), col("text"))
-          .unionByName(docs.filter(col("doc_id") % 10 === 1)
-            .select((col("doc_id") + lit(100000L)).as("doc_id"),
-              truncate3.as("text")))
-          .unionByName(docs.filter(col("doc_id") % 10 === 0)
-            .select((col("doc_id") + lit(200000L)).as("doc_id"),
-              truncate3.as("text")))
         incrementalNearDupVerdicts(
           spark.read.parquet(s"$idxDir/bands"),
           spark.read.parquet(s"$idxDir/shingles"),
-          incoming, threshold = 0.5)
+          plantedBatch(t.documents, truncated(3)), threshold = 0.5)
       },
       Some(
         s"""WITH base AS (
@@ -1269,67 +1264,34 @@ object DedupOps {
           |inc AS (
           |  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
           |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id,
+          |  SELECT doc_id + $PlantOffset AS doc_id,
           |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text
           |  FROM documents WHERE doc_id % 10 = 1
           |  UNION ALL
-          |  SELECT doc_id + 200000 AS doc_id,
+          |  SELECT doc_id + ${2 * PlantOffset} AS doc_id,
           |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text
           |  FROM documents WHERE doc_id % 10 = 0),
           |allc AS (SELECT * FROM base UNION ALL SELECT * FROM inc),
           |${minhashBandSqlOver("allc")},
-          |bi AS (SELECT * FROM bands WHERE doc_id < 100000 AND doc_id % 5 <> 0),
-          |bb AS (SELECT * FROM bands WHERE doc_id >= 100000 OR doc_id % 5 = 0),
-          |bip AS (
-          |  SELECT bi.* FROM bi JOIN (
-          |    SELECT band, bkey FROM bi GROUP BY band, bkey
-          |    HAVING count(*) <= ${MaxBucket}) ki USING (band, bkey)),
-          |bbp AS (
-          |  SELECT bb.* FROM bb JOIN (
-          |    SELECT band, bkey FROM bb GROUP BY band, bkey
-          |    HAVING count(*) <= ${MaxBucket}) kb USING (band, bkey)),
+          |bi AS (SELECT * FROM bands WHERE doc_id < $PlantOffset AND doc_id % 5 <> 0),
+          |bb AS (SELECT * FROM bands WHERE doc_id >= $PlantOffset OR doc_id % 5 = 0),
+          |${keptBucketsSql("bip", "bi")},
+          |${keptBucketsSql("bbp", "bb")},
           |cio AS (
           |  SELECT DISTINCT bbp.doc_id AS doc_id, bip.doc_id AS idx_id
           |  FROM bbp JOIN bip USING (band, bkey)),
-          |cbb AS (
-          |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          |  FROM bbp a JOIN bbp b ON a.band = b.band AND a.bkey = b.bkey
-          |                       AND a.doc_id < b.doc_id),
-          |iio AS (
-          |  SELECT c.doc_id, c.idx_id, count(*) AS inter
-          |  FROM cio c
-          |  JOIN grams gn ON gn.doc_id = c.doc_id
-          |  JOIN grams go ON go.doc_id = c.idx_id AND go.h = gn.h
-          |  GROUP BY c.doc_id, c.idx_id),
-          |vio AS (
-          |  SELECT i.doc_id, i.idx_id,
-          |         CAST(i.inter AS DOUBLE) / CAST(sn.n + so.n - i.inter AS DOUBLE) AS j
-          |  FROM iio i
-          |  JOIN sizes sn ON sn.doc_id = i.doc_id
-          |  JOIN sizes so ON so.doc_id = i.idx_id
-          |  WHERE CAST(i.inter AS DOUBLE) / CAST(sn.n + so.n - i.inter AS DOUBLE) >= 0.5),
-          |ibb AS (
-          |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-          |  FROM cbb c
-          |  JOIN grams ga ON ga.doc_id = c.doc_a
-          |  JOIN grams gb ON gb.doc_id = c.doc_b AND gb.h = ga.h
-          |  GROUP BY c.doc_a, c.doc_b),
-          |vbb AS (
-          |  SELECT i.doc_a, i.doc_b,
-          |         CAST(i.inter AS DOUBLE) / CAST(sa.n + sb.n - i.inter AS DOUBLE) AS j
-          |  FROM ibb i
-          |  JOIN sizes sa ON sa.doc_id = i.doc_a
-          |  JOIN sizes sb ON sb.doc_id = i.doc_b
-          |  WHERE CAST(i.inter AS DOUBLE) / CAST(sa.n + sb.n - i.inter AS DOUBLE) >= 0.5),
+          |${selfCandidatesSql("cbb", "bbp")},
+          |${verifySql("iio", "vio", "cio", "doc_id", "idx_id", 0.5)},
+          |${verifySql("ibb", "vbb", "cbb", "doc_a", "doc_b", 0.5)},
           |ri AS (
-          |  SELECT doc_id, idx_id, j,
+          |  SELECT doc_id, idx_id, jaccard,
           |         row_number() OVER (PARTITION BY doc_id
-          |                            ORDER BY j DESC, idx_id) AS rk
+          |                            ORDER BY jaccard DESC, idx_id) AS rk
           |  FROM vio),
           |rb AS (
-          |  SELECT doc_b AS doc_id, doc_a, j,
+          |  SELECT doc_b AS doc_id, doc_a, jaccard,
           |         row_number() OVER (PARTITION BY doc_b
-          |                            ORDER BY j DESC, doc_a) AS rk
+          |                            ORDER BY jaccard DESC, doc_a) AS rk
           |  FROM vbb)
           |SELECT i.doc_id,
           |       CASE WHEN ri.doc_id IS NOT NULL THEN 'dup_index'
@@ -1338,7 +1300,7 @@ object DedupOps {
           |       CAST(CASE WHEN ri.doc_id IS NOT NULL THEN ri.idx_id
           |                 WHEN rb.doc_id IS NOT NULL THEN rb.doc_a
           |                 ELSE i.doc_id END AS BIGINT) AS canonical_id,
-          |       CASE WHEN ri.doc_id IS NOT NULL THEN ri.j ELSE rb.j END
+          |       CASE WHEN ri.doc_id IS NOT NULL THEN ri.jaccard ELSE rb.jaccard END
           |         AS best_jaccard
           |FROM inc i
           |LEFT JOIN (SELECT * FROM ri WHERE rk = 1) ri USING (doc_id)
@@ -1373,36 +1335,29 @@ object DedupOps {
     * (doc_id, shingles) verification payload — the two halves of the
     * durable LSH index; `incoming` is (doc_id, text) for the new batch.
     * O(batch) work: only the batch is shingled/signed/banded here; the
-    * index sides arrive as parquet scans. Neither probe join carries a
-    * hint — at test SF AQE broadcasts the batch side; at corpus scale
-    * both degrade to shuffled hash joins keyed on (band, band_sig) and
-    * doc ids only (shingle arrays move once, to the verify join).
-    * Argmax canonicals are partial `max(struct)` aggregates — no
-    * window. See the d17 catalog entry for the full scale argument. */
+    * index sides arrive as parquet scans. The batch bands lose their hot
+    * buckets once ([[dropHotBuckets]]; the index side was pruned at
+    * build), and the pruned frame feeds both the index probe and the
+    * within-batch [[selfCandidates]]. The index-probe joins and both
+    * verify joins carry no hint: their anchors (persisted batch frames,
+    * index parquet scans) carry accurate sizes, so at test SF AQE
+    * broadcasts the batch side, and at corpus scale it demotes them to
+    * shuffled joins keyed on (band, band_sig) and doc ids only (shingle
+    * arrays move once, to the verify join). Argmax canonicals are
+    * partial `max(struct)` aggregates — no window. See the d17 catalog
+    * entry for the full scale argument. */
   def incrementalNearDupVerdicts(indexBands: DataFrame,
       indexShingles: DataFrame, incoming: DataFrame,
       threshold: Double): DataFrame = {
-    import graft.InternalCaches.track
-    val sh = track(shingled(incoming).persist(StorageLevel.MEMORY_AND_DISK))
-    val bb = track(banded(withSignature(sh))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    // batch-side hot-bucket drop; the index side was pruned at build
-    val smallB = bb.groupBy(col("band"), col("band_sig"))
-      .agg(count(lit(1)).as("n")).filter(col("n") <= MaxBucket)
-      .select(col("band"), col("band_sig"))
-    // MERGE on the bucket semi (candidatePairs' note: unbounded band
-    // space, agg+filter estimate). The index-probe joins below stay
-    // unhinted as documented — their anchors (persisted batch frames,
-    // index parquet scans) carry accurate sizes, so AQE demotes them
-    // itself once a side outgrows the broadcast gate.
-    val bbp = track(bb.join(smallB.hint("merge"), Seq("band", "band_sig"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val sh = cached(shingled(incoming))
+    // the batch persists its band frame, which the hot-bucket count and
+    // semi-join both read; its signatures feed nothing else
+    val bbp = cached(dropHotBuckets(cached(banded(withSignature(sh)))))
     val shN = sh.withColumn("n", size(col("shingles")))
     def jaccardOf(df: DataFrame): DataFrame = df
       .withColumn("inter",
         call_function("sorted_intersect_size", col("sh_x"), col("sh_y")))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("n_x") + col("n_y") - col("inter")).cast("double"))
+      .withColumn("jaccard", jaccard("n_x", "n_y"))
       .filter(col("jaccard") >= threshold)
     // new × old: probe the persisted index with the batch bands
     val bestIdx = jaccardOf(
@@ -1423,7 +1378,7 @@ object DedupOps {
     // new × new: within-batch pairs; an incoming doc is a batch-dup of
     // an EARLIER batch doc only (first-wins)
     val bestBatch = jaccardOf(
-      candidatePairs(bbp)
+      selfCandidates(bbp)
         .join(shN.select(col("doc_id").as("doc_a"),
           col("shingles").as("sh_x"), col("n").as("n_x")), Seq("doc_a"))
         .join(shN.select(col("doc_id").as("doc_b"),

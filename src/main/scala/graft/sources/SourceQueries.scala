@@ -288,8 +288,9 @@ object SourceQueries {
           s"q108_base#$canon", "graft_q108_manifest_")(_ => ())
         val ckpt = graft.io.TempLayouts.replacing(
           s"q108_ckpt#$canon", "graft_q108_ckpt_")(_ => ())
-        EventStreams.runStream(spark, "q108_stream_manifest_sink",
-          StateConf(8, rocksDb = false, noDataBatch = true), Some(ckpt)) { ss =>
+        // stateless (no state operator, no exchange): no StateConf
+        EventStreams.runStream(spark, "q108_stream_manifest_sink", None,
+          Some(ckpt)) { ss =>
           ss.readStream
             .format("graft.sources.JsonlSource")
             .schema(eventsFeedSchema)

@@ -247,13 +247,20 @@ object EventStreams {
     *    finalization trigger has no state to finalize and emits nothing,
     *    so its full walCommit/plan/commit cycle is skipped (round 15;
     *    results invariant, oracle-checked). Watermarked/append entries
-    *    keep it: it is what flushes their final windows. */
-  private def streamSession(spark: SparkSession, conf: StateConf): SparkSession = {
+    *    keep it: it is what flushes their final windows.
+    *
+    * A stateless entry passes no [[StateConf]]: q108 reads a source
+    * straight into a sink, with no state operator and no exchange, so a
+    * partition count would be read by nothing (its recorded
+    * [[StreamRunStats]] `statePartitions` is 0). */
+  private def streamSession(spark: SparkSession, conf: Option[StateConf]): SparkSession = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", conf.partitions.toString)
-    if (conf.rocksDb) useRocksDb(ss)
-    if (!conf.noDataBatch)
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    conf.foreach { c =>
+      ss.conf.set("spark.sql.shuffle.partitions", c.partitions.toString)
+      if (c.rocksDb) useRocksDb(ss)
+      if (!c.noDataBatch)
+        ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    }
     ss
   }
 
@@ -264,7 +271,7 @@ object EventStreams {
     * backlog, then stop), starts it, waits, and records its progress
     * under `name` — also when the query fails, so a crashed run's
     * batches are visible. Returns the session the query ran in. */
-  private[graft] def runStream(spark: SparkSession, name: String, conf: StateConf,
+  private[graft] def runStream(spark: SparkSession, name: String, conf: Option[StateConf],
       ckpt: Option[String])(writer: SparkSession => DataStreamWriter[_]): SparkSession = {
     val ss = streamSession(spark, conf)
     val q = writer(ss)
@@ -281,7 +288,7 @@ object EventStreams {
   private[graft] def runToMemory(spark: SparkSession, name: String, conf: StateConf,
       mode: OutputMode)(query: SparkSession => DataFrame): DataFrame = {
     val sink = tagOf(name) + "_sink"
-    runStream(spark, name, conf, None)(ss =>
+    runStream(spark, name, Some(conf), None)(ss =>
       query(ss).writeStream.format("memory").queryName(sink).outputMode(mode))
       .table(sink)
   }
@@ -422,7 +429,7 @@ object EventStreams {
     // read, long since consumed — is reclaimed at the swap
     val ckpt = freshCkpt("q71")
     val ss = runStream(spark, "q71_state_store_read",
-      StateConf(2, rocksDb = false, noDataBatch = false), Some(ckpt)) { ss =>
+      Some(StateConf(2, rocksDb = false, noDataBatch = false)), Some(ckpt)) { ss =>
       eventStreamSource(ss, dir)()
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"))
@@ -570,7 +577,7 @@ object EventStreams {
   def runUpsertStreaming(spark: SparkSession, dir: String, base: String,
       ckpt: String, failAtBatch: Option[Long] = None): Unit =
     runStream(spark, "q44_stream_upsert_latest",
-      StateConf(4, rocksDb = false, noDataBatch = true), Some(ckpt)) { ss =>
+      Some(StateConf(4, rocksDb = false, noDataBatch = true)), Some(ckpt)) { ss =>
       eventStreamSource(ss, dir)()
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
         .writeStream

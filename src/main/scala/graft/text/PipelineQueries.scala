@@ -171,12 +171,7 @@ object PipelineQueries {
           minhashDedup(exactCanonical(scoredKept(corpus)), threshold = 0.5))
       },
       Some(
-        s"""WITH corpus0 AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id,
-          |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text
-          |  FROM documents),
+        s"""WITH ${graft.dedup.DedupOps.nearDupCorpusSql("corpus0")},
           |scored AS (
           |  SELECT doc_id, text,
           |         CAST(length(text) AS BIGINT) AS n_chars,

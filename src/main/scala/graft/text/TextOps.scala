@@ -697,11 +697,8 @@ object TextOps {
           .orderBy(col("doc_id"))
       },
       Some(
-        """WITH corpus AS (
-          |  SELECT doc_id, text FROM documents
-          |  UNION ALL
-          |  SELECT doc_id + 100000 AS doc_id, replace(text, ' ', '  ') || ' ' AS text FROM documents),
-          |t AS (
+        "WITH " + graft.dedup.DedupOps.exactDupCorpusSql + ",\n" +
+        """t AS (
           |  SELECT doc_id,
           |         regexp_extract_all(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), '\S+') AS toks
           |  FROM corpus),

@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.DedupOps
@@ -700,5 +707,53 @@ class DedupSpec extends SparkSpecBase {
     val plan = frame.queryExecution.executedPlan.toString
     assert(plan.contains("graft_d17_idx_"),
       s"d17 plan does not read the persisted index:\n${plan.take(2000)}")
+  }
+
+  /** Every node of the catalog entry `name`'s initial (pre-AQE) physical
+    * plan at sf0.001, with the plan of each frame it reads from cache
+    * included once. */
+  private def initialPlanNodes(name: String): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
+      case s: InMemoryTableScanExec =>
+        if (seen.add(s.relation.cachedPlan)) s +: walk(s.relation.cachedPlan)
+        else Seq(s)
+      case other => other +: other.children.flatMap(walk)
+    }
+    val df: DataFrame = graft.queries.Catalog.queries(name)(spark, sf0001)
+    val nodes = walk(df.queryExecution.executedPlan)
+    graft.InternalCaches.releaseAll()
+    nodes
+  }
+
+  test("MinHash-LSH join policy: d02, d07, d14 and d17's batch side plan every band_sig join as sort-merge") {
+    def bandJoins(name: String): Seq[BaseJoinExec] = initialPlanNodes(name).collect {
+      case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "band_sig")) => j
+    }
+    // d17's index probe (its build side carries idx_id) is unhinted by
+    // design: it reads the persisted index, whose size is known
+    val joins = Seq("d02_dedup_minhash_lsh", "d07_fuzzy_decontaminate",
+      "d14_minhash_estimator").map(n => n -> bandJoins(n)) :+
+      ("d17_incremental_neardup" -> bandJoins("d17_incremental_neardup")
+        .filterNot(_.right.output.exists(_.name == "idx_id")))
+    joins.foreach { case (name, js) =>
+      assert(js.nonEmpty, s"$name: no band_sig-keyed join found")
+      val other = js.filterNot(_.isInstanceOf[SortMergeJoinExec])
+      assert(other.isEmpty,
+        s"$name: band_sig-keyed joins not planned as sort-merge: " +
+          other.map(_.nodeName).mkString(", "))
+    }
+  }
+
+  test("d17 drops the batch's hot buckets once: one count over (band, band_sig)") {
+    val bucketCounts = initialPlanNodes("d17_incremental_neardup").collect {
+      case a: BaseAggregateExec
+          if a.groupingExpressions.map(_.name) == Seq("band", "band_sig") &&
+            a.aggregateExpressions.exists(_.mode == Final) => a
+    }
+    assert(bucketCounts.size === 1,
+      s"d17 counts its batch buckets ${bucketCounts.size} times")
   }
 }
