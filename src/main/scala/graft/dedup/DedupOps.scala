@@ -66,9 +66,15 @@ object DedupOps {
     * normalization. */
   private val spaced: Column = concat(regexp_replace(col("text"), " ", "  "), lit(" "))
 
+  /** The oracle's [[spaced]]. */
+  private val spacedSql = "replace(text, ' ', '  ') || ' '"
+
   /** `text` without its last `n` words. */
   private def truncated(n: Int): Column =
     regexp_replace(col("text"), s"(\\s+\\S+){$n}$$", "")
+
+  /** The oracle's [[truncated]]. */
+  private def truncatedSql(n: Int): String = raw"regexp_replace(text, '(\s+\S+){$n}$$', '')"
 
   /** documents ∪ whitespace-perturbed copies — equal after normalization. */
   def exactDupCorpus(docs: DataFrame): DataFrame =
@@ -82,7 +88,7 @@ object DedupOps {
     s"""corpus AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
-       |  SELECT doc_id + $PlantOffset AS doc_id, replace(text, ' ', '  ') || ' ' AS text FROM documents)""".stripMargin
+       |  SELECT doc_id + $PlantOffset AS doc_id, $spacedSql AS text FROM documents)""".stripMargin
 
   /** documents ∪ last-3-words-truncated copies — near-dups (word-shingle
     * Jaccard ≈ 0.9), not exact dups. */
@@ -98,7 +104,7 @@ object DedupOps {
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
        |  SELECT doc_id + $PlantOffset AS doc_id,
-       |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text
+       |         ${truncatedSql(3)} AS text
        |  FROM documents)""".stripMargin
 
   /** Every 5th document ∪ two successive truncations (3 and 6 trailing
@@ -119,6 +125,18 @@ object DedupOps {
         truncated(6).as("text")))
   }
 
+  /** The oracle's twin of [[clusterCorpus]], as CTEs `base` and
+    * `corpus` (d05, d07, d16). */
+  private val clusterCorpusSql: String =
+    s"""base AS (
+       |  SELECT doc_id, source, text FROM documents WHERE doc_id % 5 = 0),
+       |corpus AS (
+       |  SELECT doc_id, source, text FROM base
+       |  UNION ALL
+       |  SELECT doc_id + $PlantOffset, source, ${truncatedSql(3)} FROM base
+       |  UNION ALL
+       |  SELECT doc_id + ${2 * PlantOffset}, source, ${truncatedSql(6)} FROM base)""".stripMargin
+
   /** d15/d17's incoming batch (doc_id, text): the held-out 1/5 of
     * `docs`, plus planted index-dups (`copy` of base docs, id +
     * PlantOffset) and within-batch dups (`copy` of batch docs, id +
@@ -130,6 +148,18 @@ object DedupOps {
         .select((col("doc_id") + lit(PlantOffset)).as("doc_id"), copy.as("text")))
       .unionByName(docs.filter(col("doc_id") % 10 === 0)
         .select((col("doc_id") + lit(2 * PlantOffset)).as("doc_id"), copy.as("text")))
+
+  /** The oracle's twin of [[plantedBatch]], as CTE `cte`, with `copy`
+    * the oracle's form of the batch's perturbation (d15, d17). */
+  private def plantedBatchSql(cte: String, copy: String): String =
+    s"""$cte AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
+       |  UNION ALL
+       |  SELECT doc_id + $PlantOffset AS doc_id, $copy AS text
+       |  FROM documents WHERE doc_id % 10 = 1
+       |  UNION ALL
+       |  SELECT doc_id + ${2 * PlantOffset} AS doc_id, $copy AS text
+       |  FROM documents WHERE doc_id % 10 = 0)""".stripMargin
 
   /** Exact word-5-shingle Jaccard pairs ≥ `threshold` within `source`
     * blocks — the deterministic (oracle-able) edge generator for the
@@ -539,21 +569,12 @@ object DedupOps {
 
   /** The cluster-label replay chain shared by the d05 and d16 oracles
     * (base → corpus → sh → edges → recursive cc → lbl): the 1-in-5
-    * truncation corpus, exact word-5-shingle Jaccard pair edges, and
-    * the transitive closure labelled by component-minimum doc_id.
-    * Factored so the two entries' clustering semantics cannot drift.
-    * Must be preceded by `WITH RECURSIVE`; raw-interpolated: the
-    * regexes keep their backslashes, and each `$` anchor is doubled. */
+    * truncation corpus ([[clusterCorpusSql]]), exact word-5-shingle
+    * Jaccard pair edges, and the transitive closure labelled by
+    * component-minimum doc_id. Factored so the two entries' clustering
+    * semantics cannot drift. Must be preceded by `WITH RECURSIVE`. */
   private[dedup] val clusterLabelSql: String =
-    raw"""base AS (
-      |  SELECT doc_id, source, text FROM documents WHERE doc_id % 5 = 0),
-      |corpus AS (
-      |  SELECT doc_id, source, text FROM base
-      |  UNION ALL
-      |  SELECT doc_id + $PlantOffset, source, regexp_replace(text, '(\s+\S+){3}$$', '') FROM base
-      |  UNION ALL
-      |  SELECT doc_id + ${2 * PlantOffset}, source, regexp_replace(text, '(\s+\S+){6}$$', '') FROM base),
-      |sh AS (
+    clusterCorpusSql + ",\n" + raw"""sh AS (
       |  SELECT doc_id, source,
       |         list_distinct([array_to_string(ws[i:i+4], ' ')
       |                        FOR i IN range(1, greatest(len(ws) - 3, 2))]) AS grams
@@ -797,16 +818,7 @@ object DedupOps {
           threshold = 0.5)
       },
       Some(
-        s"""WITH base AS (
-          |  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-          |corpus AS (
-          |  SELECT doc_id, text FROM base
-          |  UNION ALL
-          |  SELECT doc_id + $PlantOffset AS doc_id,
-          |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text FROM base
-          |  UNION ALL
-          |  SELECT doc_id + ${2 * PlantOffset} AS doc_id,
-          |         regexp_replace(text, '(\\s+\\S+){6}$$', '') AS text FROM base),
+        s"""WITH $clusterCorpusSql,
           |$minhashBandSql,
           |bt AS (SELECT * FROM bands WHERE doc_id >= $PlantOffset),
           |be AS (SELECT * FROM bands WHERE doc_id < $PlantOffset),
@@ -1111,14 +1123,7 @@ object DedupOps {
           |  SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
           |         min(doc_id) AS idx_canonical
           |  FROM base GROUP BY 1),
-          |incoming AS (
-          |  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
-          |  UNION ALL
-          |  SELECT doc_id + $PlantOffset AS doc_id, replace(text, ' ', '  ') || ' ' AS text
-          |  FROM documents WHERE doc_id % 10 = 1
-          |  UNION ALL
-          |  SELECT doc_id + ${2 * PlantOffset} AS doc_id, replace(text, ' ', '  ') || ' ' AS text
-          |  FROM documents WHERE doc_id % 10 = 0),
+          |${plantedBatchSql("incoming", spacedSql)},
           |fp AS (
           |  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
           |  FROM incoming),
@@ -1261,16 +1266,7 @@ object DedupOps {
       Some(
         s"""WITH base AS (
           |  SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
-          |inc AS (
-          |  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
-          |  UNION ALL
-          |  SELECT doc_id + $PlantOffset AS doc_id,
-          |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text
-          |  FROM documents WHERE doc_id % 10 = 1
-          |  UNION ALL
-          |  SELECT doc_id + ${2 * PlantOffset} AS doc_id,
-          |         regexp_replace(text, '(\\s+\\S+){3}$$', '') AS text
-          |  FROM documents WHERE doc_id % 10 = 0),
+          |${plantedBatchSql("inc", truncatedSql(3))},
           |allc AS (SELECT * FROM base UNION ALL SELECT * FROM inc),
           |${minhashBandSqlOver("allc")},
           |bi AS (SELECT * FROM bands WHERE doc_id < $PlantOffset AND doc_id % 5 <> 0),
