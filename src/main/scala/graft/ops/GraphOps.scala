@@ -6,38 +6,68 @@ import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.queries.GraftQuery
 
-/** Iterative graph analytics over a graph derived from the warehouse —
-  * PageRank as the representative fixed-point computation (link-quality
-  * weighting of a crawl corpus is the training-data-pipeline use; the
-  * same loop shape serves label propagation and hub/authority scores).
+/** Iterative graph analytics over graphs derived from the warehouse.
   *
-  * The graph: customer and supplier nodes (namespaced odd/even ids),
-  * one edge per DISTINCT (customer, supplier) trading pair from
-  * orders⋈lineitem, materialized in both directions so every node has
-  * out-degree ≥ 1 (no dangling-mass term needed).
+  * Eight of the ten entries (g01, g04, g06–g10) read ONE graph, the
+  * customer↔supplier trading graph: customer and supplier nodes
+  * (namespaced even/odd ids), one edge per DISTINCT (customer, supplier)
+  * trading pair from orders⋈lineitem, materialized in both directions so
+  * every node has in- and out-degree ≥ 1 (no dangling-mass term, no
+  * join back to the node set for zero-in-degree nodes). The family's
+  * pieces are each written once, in the plans and in the oracle SQL:
+  *  - the graph: [[tradeEdges]] / `tradeEdgesSql`, persisted
+  *    hash-partitioned by `src` ([[bySrc]]) for g04 and g07–g10;
+  *  - the vocabulary: the `kind` column ([[kind]] / `kindSql`) and the
+  *    seed suppliers ([[isSeed]] / `seedSql`) of g04, g06 and g10;
+  *  - the rank walk of g01 and g06 ([[rankWalk]] / `rankWalkSql`), one
+  *    walk whose teleport set is a predicate;
+  *  - the fixed-round loop ([[iterate]]) of g01, g03, g06–g09, and the
+  *    frontier loop ([[frontierLoop]]) of g04 and g10;
+  *  - the settings, named constants both the plans and the oracles read.
   *
-  * Determinism across engines is the design constraint: every rank is a
-  * BIGINT in 1e-12 units of total mass and every step is integer
-  * arithmetic (`div` floor division, per-edge BEFORE the sum — an
-  * integer sum is order-independent where a double sum is not), so five
-  * iterations replay bit-exactly in DuckDB as five unrolled CTEs (`//`)
-  * and the whole fixed-point carries a full hash oracle — the same
-  * integers-not-floats rule the rest of the catalog follows (t12/t16).
+  * Determinism across engines is the design constraint: every value is
+  * an integer (ranks are BIGINTs in 1e-12 units of total mass, `div`
+  * floor division per edge BEFORE the sum — an integer sum is
+  * order-independent where a double sum is not), so each fixed-round
+  * entry replays bit-exactly in DuckDB as unrolled CTEs (`//`) and
+  * carries a full hash oracle — the same integers-not-floats rule the
+  * rest of the catalog follows (t12/t16).
   *
-  * Scale shape (the d05 connected-components discipline): per iteration
-  * ONE join of edges to the rank vector (shuffle on src) and ONE partial
-  * aggregate to dst (map-side combine — a billion-in-degree hub reduces
-  * before the shuffle); the static edge+degree frame is persisted once
-  * and reused; each round ends in an eager localCheckpoint so the
-  * iterative plan stays constant-size instead of doubling per round. On
-  * a cluster the persisted edges partition by src once and every
-  * iteration's join reuses that layout.
+  * Scale shape (the d05 connected-components discipline, Shark-style
+  * iteration over cached co-partitioned data): the static edge frame is
+  * persisted once and partitioned by the key every round joins on; each
+  * round is one join of that frame to the N-row state vector (only the
+  * vector moves) and one map-side-combined aggregate; each round ends
+  * in an eager localCheckpoint so the iterative plan stays constant-size
+  * instead of doubling per round.
   */
 object GraphOps {
 
   /** Total rank mass in scaled units (1e12 ≪ 2^63/N for any realistic
     * node count; per-node quotients stay exact BIGINTs). */
   val Scale = 1000000000000L
+
+  // The family's settings. Declared BEFORE [[all]]: the oracle SQL and
+  // the descriptions interpolate them at object-init time.
+  /** g01/g06 rank iterations. */
+  val RankIters = 5
+  /** g03 pointer-doubling rounds (2⁵ = 32 levels; a hint, see [[resolvePointers]]). */
+  val PointerRounds = 5
+  /** g07 label-propagation rounds. */
+  val LabelRounds = 3
+  /** g08 k-core: the degree bound and the peel rounds. */
+  val KCoreK = 4
+  val KCoreRounds = 3
+  /** g09 KMV register size and sketch sweeps (2 sweeps = 2-hop balls). */
+  val KmvK = 32
+  val KmvRounds = 2
+  /** g04's round cap: a frontier still live after this many rounds fails loudly. */
+  val BfsRounds = 20
+  /** g10's declared distance horizon; also its round cap (min weight is 1). */
+  val SsspHorizon = 300L
+
+  /** 2^52, the value range of a KMV hash (13 hex chars of md5). */
+  private val KmvHashSpace = 4503599627370496L
 
   private def tradeEdges(t: Tables): DataFrame = {
     // `pairs` is persisted (round-14, guide §2.4): the bidirectional
@@ -58,10 +88,64 @@ object GraphOps {
     pairs.unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  /** 5-iteration damped PageRank (d = 85/100) over the trading graph.
-    * r₀ = Scale div N; rₜ₊₁(v) = (15·(Scale div N)) div 100 +
-    * (85·Σ_{u→v}(rₜ(u) div deg(u))) div 100. */
-  def pageRank(t: Tables, iters: Int = 5): DataFrame = {
+  /** The trading graph in oracle SQL: `pairs` holds the distinct
+    * (customer, supplier) pairs, `edges` both directions. Must mirror
+    * [[tradeEdges]]. */
+  private def tradeEdgesSql(pairs: String, edges: String): String =
+    s"""$pairs AS (
+       |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+       |$edges AS (SELECT src, dst FROM $pairs UNION SELECT dst, src FROM $pairs)""".stripMargin
+
+  /** `edges` persisted hash-partitioned by `src` and tracked: every
+    * round's join on `src` reuses the layout, so only the round's N-row
+    * state vector moves. */
+  private def bySrc(edges: DataFrame): DataFrame = graft.InternalCaches.track(
+    edges.repartition(col("src"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  private def nodesOf(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node")).distinct()
+
+  /** The `kind` column of a frame keyed by `node`: suppliers are the odd ids. */
+  private def kind: Column =
+    when(col("node") % 2 === 1, "supplier").otherwise("customer").as("kind")
+
+  /** [[kind]] in oracle SQL, over the node column `node`. */
+  private def kindSql(node: String): String =
+    s"CASE WHEN $node % 2 = 1 THEN 'supplier' ELSE 'customer' END AS kind"
+
+  /** The seed suppliers of g04, g06 and g10 — every 4th supplier
+    * (suppkey ≡ 0 mod 4), a pure expression of the node id so neither
+    * engine needs a join or a side channel to agree on the seed set. */
+  private def isSeed(node: Column): Column =
+    node % 2 === 1 && (shiftright((node - 1).cast("long"), 1) % 4 === 0)
+
+  /** [[isSeed]] in oracle SQL, over the node column `node`. */
+  private def seedSql(node: String): String =
+    s"($node % 2 = 1 AND (($node - 1) // 2) % 4 = 0)"
+
+  /** The states of a fixed-round iteration: `start`, then `n`
+    * applications of `step`, each eagerly localCheckpointed so a round's
+    * plan reads the previous state's rows, not its lineage. */
+  private def iterate(start: DataFrame, n: Int)(step: DataFrame => DataFrame): Seq[DataFrame] =
+    (1 to n).scanLeft(start.localCheckpoint(true))((cur, _) => step(cur).localCheckpoint(true))
+
+  /** The rank walk of g01 and g06: [[RankIters]] rounds of damped
+    * (d = 85/100) integer PageRank whose teleport mass lands on the
+    * nodes matching `teleport` — every node for PageRank (g01), the
+    * seed suppliers for personalized PageRank (g06, "how close is this
+    * node to the seed set under random traversal", the seed-relative
+    * importance used for recommendation candidates and crawl frontier
+    * scoring). With T the teleport set:
+    * r₀ = [v∈T]·(Scale div |T|);
+    * rₜ₊₁(v) = [v∈T]·(15·(Scale div |T|)) div 100
+    *           + (85·Σ_{u→v} rₜ(u) div deg(u)) div 100.
+    * Per round ONE join of edges to the rank vector (shuffle on src)
+    * and ONE partial aggregate to dst (map-side combine — a
+    * billion-in-degree hub reduces before the shuffle); the base term
+    * is a pure projection of the dst id, no join. */
+  private def rankWalk(t: Tables, teleport: Column => Column): DataFrame = {
     val edges = graft.InternalCaches.track {
       val e = tradeEdges(t)
       val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -74,90 +158,66 @@ object GraphOps {
       e.join(deg, "src")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val nodes = edges.select(col("src").as("node")).distinct()
-    val n = nodes.count() // one count job; N is a broadcast scalar
+    val nodes = nodesOf(edges)
+    val n = nodes.filter(teleport(col("node"))).count() // one count job
+    require(n > 0,
+      "rank walk needs a non-empty teleport set: no graph node matches " +
+        "the teleport predicate (corpus too small or predicate drift)")
     val r0 = Scale / n
     val base = 15L * r0 / 100L
-    var ranks = nodes.select(col("node"), lit(r0).as("r")).localCheckpoint(true)
-    (1 to iters).foreach { _ =>
-      // No join back to `nodes` for zero-in-degree nodes: the edge set is
-      // bidirectional by construction, so every node has in-degree ≥ 1
-      // and the dst aggregate already covers ALL nodes (profiled: the
-      // left join doubled per-round cost for structurally dead work; a
-      // dangling-node graph variant would need it back).
-      ranks = edges
+    val start = nodes.select(col("node"),
+      when(teleport(col("node")), lit(r0)).otherwise(lit(0L)).as("r"))
+    iterate(start, RankIters) { ranks =>
+      edges
         .join(ranks, col("src") === col("node"))
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("t"))
         .select(col("dst").as("node"),
-          (lit(base) + expr("85 * t div 100")).as("r"))
-        // N rows only: truncate lineage so the per-round plan stays flat
-        .localCheckpoint(true)
-    }
-    ranks
-      .select(col("node").as("node_id"),
-        when(col("node") % 2 === 1, "supplier").otherwise("customer").as("kind"),
-        col("r").as("rank_scaled"))
-      .orderBy(col("node_id"))
-  }
-
-  /** g06's seed predicate — the g04 BFS seed set (every 4th supplier),
-    * a pure expression of the node id so neither engine needs a join to
-    * apply it. */
-  private def pprSeed(node: Column): Column =
-    node % 2 === 1 &&
-      (shiftright((node - 1).cast("long"), 1) % 4 === 0)
-
-  /** 5-iteration PERSONALIZED PageRank: teleport mass returns to the
-    * g04 seed suppliers instead of spreading uniformly, so ranks answer
-    * "how close is this node to the seed set under random traversal" —
-    * the seed-relative importance used for recommendation candidates
-    * and crawl frontier scoring. Same integer fixed-point discipline as
-    * [[pageRank]] (per-edge floor division BEFORE the exact BIGINT sum,
-    * five unrolled CTE replays in the oracle) and the same per-round
-    * plan (one shuffle-join on src reusing the persisted edge layout,
-    * one map-side-combined dst aggregate, eager localCheckpoint); only
-    * the base term differs — it lands on seeds alone:
-    * r₀ = [v∈S]·(Scale div |S|);
-    * rₜ₊₁(v) = [v∈S]·(15·(Scale div |S|)) div 100
-    *           + (85·Σ_{u→v} rₜ(u) div deg(u)) div 100. */
-  def personalizedPageRank(t: Tables, iters: Int = 5): DataFrame = {
-    val edges = graft.InternalCaches.track {
-      val e = tradeEdges(t)
-      val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      e.join(deg, "src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    val nodes = edges.select(col("src").as("node")).distinct()
-    val nSeeds = nodes.filter(pprSeed(col("node"))).count()
-    require(nSeeds > 0,
-      "personalized PageRank needs a non-empty seed set: no graph node " +
-        "matches the seed predicate (corpus too small or predicate drift)")
-    val r0 = Scale / nSeeds
-    val base = 15L * r0 / 100L
-    var ranks = nodes
-      .select(col("node"),
-        when(pprSeed(col("node")), lit(r0)).otherwise(lit(0L)).as("r"))
-      .localCheckpoint(true)
-    (1 to iters).foreach { _ =>
-      // the dst aggregate covers all nodes (bidirectional edges, every
-      // node has in-degree ≥ 1 — the g01 argument); the seed-only base
-      // is a pure projection of the dst id, no join
-      ranks = edges
-        .join(ranks, col("src") === col("node"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("t"))
-        .select(col("dst").as("node"),
-          (when(pprSeed(col("dst")), lit(base)).otherwise(lit(0L)) +
+          (when(teleport(col("dst")), lit(base)).otherwise(lit(0L)) +
             expr("85 * t div 100")).as("r"))
-        .localCheckpoint(true)
-    }
-    ranks
-      .select(col("node").as("node_id"),
-        when(col("node") % 2 === 1, "supplier").otherwise("customer").as("kind"),
-        col("r").as("rank_scaled"))
+    }.last
+      .select(col("node").as("node_id"), kind, col("r").as("rank_scaled"))
       .orderBy(col("node_id"))
   }
+
+  /** [[rankWalk]] in oracle SQL, unrolled [[RankIters]] times;
+    * `teleport` is its teleport predicate over a node column. */
+  private def rankWalkSql(teleport: String => String): String = {
+    def iter(i: Int): String =
+      s"""r$i AS (
+         |  SELECT n.node,
+         |         CASE WHEN ${teleport("n.node")}
+         |              THEN (SELECT (15 * ($Scale // count(*))) // 100 FROM teleport)
+         |              ELSE 0 END
+         |           + (85 * coalesce(s.t, 0)) // 100 AS r
+         |  FROM nodes n LEFT JOIN (
+         |    SELECT e.dst AS node, sum(r${i - 1}.r // e.deg) AS t
+         |    FROM edges e JOIN r${i - 1} ON e.src = r${i - 1}.node
+         |    GROUP BY e.dst) s USING (node))""".stripMargin
+    s"""WITH ${tradeEdgesSql("e0", "eraw")},
+       |deg AS (SELECT src, count(*) AS deg FROM eraw GROUP BY src),
+       |edges AS (SELECT eraw.src, eraw.dst, deg.deg FROM eraw JOIN deg USING (src)),
+       |nodes AS (SELECT DISTINCT src AS node FROM eraw),
+       |teleport AS (SELECT node FROM nodes WHERE ${teleport("node")}),
+       |r0 AS (
+       |  SELECT node,
+       |         CASE WHEN ${teleport("node")}
+       |              THEN (SELECT $Scale // count(*) FROM teleport) ELSE 0 END AS r
+       |  FROM nodes),
+       |${(1 to RankIters).map(iter).mkString(",\n")}
+       |SELECT node AS node_id, ${kindSql("node")},
+       |       CAST(r AS BIGINT) AS rank_scaled -- sum() upcasts to HUGEINT -> float64 in pandas
+       |FROM r$RankIters
+       |ORDER BY node_id""".stripMargin
+  }
+
+  /** g01: PageRank, the representative fixed-point computation
+    * (link-quality weighting of a crawl corpus is the training-data
+    * pipeline use) — [[rankWalk]] teleporting to every node. */
+  def pageRank(t: Tables): DataFrame = rankWalk(t, _ => lit(true))
+
+  /** g06: personalized PageRank — [[rankWalk]] teleporting to the seeds. */
+  def personalizedPageRank(t: Tables): DataFrame = rankWalk(t, isSeed)
 
   /** Per-node triangle counts over the part co-purchase graph (distinct
     * part pairs sharing an order, both line quantities ≥ 25 — the
@@ -247,13 +307,13 @@ object GraphOps {
     * All-integer (depths; balances in floor-cents) → the full fixed
     * point carries a DuckDB `WITH RECURSIVE` oracle — the two engines
     * compute the same closure by entirely different algorithms. */
-  def hierarchyResolve(t: Tables, rounds: Int = 5): DataFrame = {
+  def hierarchyResolve(t: Tables): DataFrame = {
     val nodes = t.customer.select(col("c_custkey").as("node"),
       floor(col("c_acctbal") * 100).cast("long").as("bal_cents"))
     val links0 = nodes.select(col("node"),
       when(col("node") <= 8, col("node")).otherwise(expr("node div 2")).as("anc"),
       when(col("node") <= 8, 0L).otherwise(1L).as("d"))
-    val links = resolvePointers(links0, rounds)
+    val links = resolvePointers(links0, PointerRounds)
     val totals = links.join(nodes, "node")
       .groupBy(col("anc")).agg(sum(col("bal_cents")).as("root_total_bal_cents"))
     links
@@ -285,14 +345,10 @@ object GraphOps {
     * unreachable backstop. */
   def resolvePointers(links0: DataFrame, rounds: Int): DataFrame = {
     val MaxRounds = 62
-    var links = links0.localCheckpoint(true)
-    def step(): Unit = {
-      links = links.as("a")
-        .join(links.as("b"), col("a.anc") === col("b.node"))
-        .select(col("a.node"), col("b.anc"), (col("a.d") + col("b.d")).as("d"))
-        .localCheckpoint(true)
-    }
-    (1 to rounds).foreach(_ => step())
+    def double(links: DataFrame): DataFrame = links.as("a")
+      .join(links.as("b"), col("a.anc") === col("b.node"))
+      .select(col("a.node"), col("b.anc"), (col("a.d") + col("b.d")).as("d"))
+    var links = iterate(links0, rounds)(double).last
     // A pointer is resolved iff its anc is a TRUE root: self-looped AT
     // DISTANCE 0. The d=0 guard matters — doubling collapses a cycle of
     // even length into self-loops with d>0 (1→2→1 becomes 1→1 at d=2),
@@ -307,7 +363,8 @@ object GraphOps {
     var prev = Long.MaxValue
     while (pending > 0 && pending < prev && round < MaxRounds) {
       prev = pending
-      step(); round += 1; pending = unresolved()
+      links = double(links).localCheckpoint(true)
+      round += 1; pending = unresolved()
     }
     if (pending > 0)
       throw new IllegalStateException(
@@ -317,99 +374,115 @@ object GraphOps {
     links
   }
 
-  /** Multi-source BFS hop distances over the trading graph — the
-    * "blast radius" primitive (how far is every entity from a seed set:
-    * compromised suppliers, recalled parts, a marketing cohort).
-    * Sources are derived relationally from the graph itself (supplier
-    * nodes with suppkey ≡ 0 mod 4), so both engines agree on the seed
-    * set without a side channel.
-    *
-    * This is DELTA iteration, not bulk iteration: each round joins the
-    * edge set against only the FRONTIER (nodes first reached last
-    * round), takes the map-side-combining min over arriving distances,
-    * and anti-joins the known set so the frontier stays minimal —
-    * visited nodes never re-enter the join. Rounds = eccentricity of
-    * the seed set (~6 on this near-bipartite graph), each round ONE
-    * shuffle-join + ONE partial agg + ONE anti-join. The edge table is
-    * persisted hash-partitioned by src once (the g01 discipline), so
-    * per-round joins move only frontier rows. Termination is exact: the
-    * loop ends when the frontier empties; a 64-round backstop turns a
-    * pathological input into a loud failure instead of an endless loop.
-    *
-    * All-integer distances (unreached = -1) → full DuckDB oracle: a
-    * bounded `WITH RECURSIVE ... UNION` walk computes min hop counts by
-    * a completely different algorithm (level-synchronous dedup walk vs
-    * frontier delta iteration) and must agree bit-for-bit. */
-  def bfsDistances(t: Tables, maxRounds: Int = 20): DataFrame = {
-    val edges = graft.InternalCaches.track {
-      tradeEdges(t).repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    val nodes = edges.select(col("src").as("node")).distinct()
-    val sources = nodes
-      .filter(col("node") % 2 === 1 && expr("((node - 1) div 2) % 4") === 0)
+  /** Frontier (DELTA) iteration shared by g04 and g10: `dist` starts as
+    * the `sources` at distance 0; each round `relax(dist, frontier)`
+    * yields the (node, dist) rows that are new or shorter, `merge(dist,
+    * fresh)` folds them in, and only they re-expand next round — visited
+    * nodes never re-enter the join. Termination is exact: the loop ends
+    * when a round yields nothing; a frontier still live after
+    * `maxRounds` rounds is a loud failure instead of an endless loop or
+    * a silently cut answer. Every state is localCheckpoint-frozen, so
+    * lineage does not grow with rounds. */
+  private def frontierLoop(what: String, sources: DataFrame, maxRounds: Int)(
+      relax: (DataFrame, DataFrame) => DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     var dist = sources.select(col("node"), lit(0L).as("dist")).localCheckpoint(true)
     var frontier = dist
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
       round += 1
-      val arrivals = edges
-        .join(frontier.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      val discovered = arrivals
-        .join(dist.select(col("node")), Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      if (discovered.isEmpty) converged = true
+      val fresh = relax(dist, frontier).localCheckpoint(true)
+      if (fresh.isEmpty) converged = true
       else {
-        dist = dist.unionByName(discovered).localCheckpoint(true)
-        frontier = discovered
+        dist = merge(dist, fresh).localCheckpoint(true)
+        frontier = fresh
       }
     }
     if (!converged)
       throw new IllegalStateException(
-        s"bfsDistances: frontier still live after $maxRounds rounds — " +
-          "eccentricity exceeds the hint; raise maxRounds")
-    nodes.join(dist, Seq("node"), "left")
-      .select(col("node").as("node_id"),
-        when(col("node") % 2 === 1, "supplier").otherwise("customer").as("kind"),
-        coalesce(col("dist"), lit(-1L)).as("dist"))
-      .orderBy(col("node_id"))
+        s"$what: frontier still live after $maxRounds rounds — the graph's " +
+          "eccentricity from the sources exceeds the round cap")
+    dist
   }
 
-  /** g10: single-source-set WEIGHTED shortest paths — g04's BFS measures
-    * hops; the business question is usually weighted ("how close is
-    * this supplier through STRONG trading relationships"). Edge weight
-    * is derived from relationship intensity: w = max(1, 100 div n_txn)
-    * for n_txn lineitems between the pair — heavy trading ⇒ short edge;
-    * exact integer arithmetic so every relaxation replays in SQL.
+  /** g04/g10 output: every graph node with its `kind` and its distance
+    * (`-1` = not reached) under the name `distCol`. */
+  private def distanceTable(nodes: DataFrame, dist: DataFrame, distCol: String): DataFrame =
+    nodes.join(dist, Seq("node"), "left")
+      .select(col("node").as("node_id"), kind, coalesce(col("dist"), lit(-1L)).as(distCol))
+      .orderBy(col("node_id"))
+
+  /** g04/g10 oracle: a bounded recursive walk from the seed suppliers
+    * over `eraw` — `step` is an arrival's distance, `bound` the walk's
+    * horizon — min per node, every node reported (-1 = not reached). A
+    * UNION-deduped level walk is a different algorithm from the frontier
+    * loop and must agree bit-for-bit. */
+  private def seedWalkSql(step: String, bound: String, distCol: String): String =
+    s"""nodes AS (SELECT DISTINCT src AS node FROM eraw),
+       |sources AS (SELECT node FROM nodes WHERE ${seedSql("node")}),
+       |walk AS (
+       |  SELECT node, CAST(0 AS BIGINT) AS dist FROM sources
+       |  UNION
+       |  SELECT e.dst AS node, $step AS dist
+       |  FROM walk w JOIN eraw e ON e.src = w.node
+       |  WHERE $bound),
+       |d AS (SELECT node, min(dist) AS dist FROM walk GROUP BY node)
+       |SELECT n.node AS node_id, ${kindSql("n.node")},
+       |       CAST(coalesce(d.dist, -1) AS BIGINT) AS $distCol
+       |FROM nodes n LEFT JOIN d USING (node)
+       |ORDER BY node_id""".stripMargin
+
+  /** g04: multi-source BFS hop distances from the seed suppliers over
+    * the trading graph — the "blast radius" primitive (how far is every
+    * entity from a seed set: compromised suppliers, recalled parts, a
+    * marketing cohort). Rounds = eccentricity of the seed set (~6 on
+    * this near-bipartite graph). */
+  def bfsDistances(t: Tables): DataFrame = {
+    val edges = bySrc(tradeEdges(t))
+    val nodes = nodesOf(edges)
+    distanceTable(nodes, bfsHops(edges, nodes.filter(isSeed(col("node")))), "dist")
+  }
+
+  /** g04's [[frontierLoop]] over a graph given as frames — `edges`
+    * (src, dst), `sources` (node) — returning (node, dist) for every
+    * reached node. Each round is ONE shuffle-join of the frontier to the
+    * edges + ONE map-side-combined min over arrivals + ONE anti-join of
+    * the known set, so the frontier stays minimal; at most [[BfsRounds]]
+    * rounds. */
+  def bfsHops(edges: DataFrame, sources: DataFrame): DataFrame =
+    frontierLoop("bfsHops", sources, BfsRounds) { (dist, frontier) =>
+      edges
+        .join(frontier.withColumnRenamed("node", "src"), "src")
+        .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+        .join(dist.select(col("node")), Seq("node"), "left_anti")
+    }(_.unionByName(_))
+
+  /** g10: WEIGHTED shortest paths from the seed suppliers — g04's BFS
+    * measures hops; the business question is usually weighted ("how
+    * close is this supplier through STRONG trading relationships").
+    * Edge weight is derived from relationship intensity: w = max(1, 100
+    * div n_txn) for n_txn lineitems between the pair — heavy trading ⇒
+    * short edge; exact integer arithmetic so every relaxation replays in
+    * SQL.
     *
-    * Algorithm: distributed Bellman-Ford with a DELTA frontier — only
-    * nodes whose tentative distance IMPROVED this round re-expand next
-    * round (the weighted generalization of g04's discovered-set
-    * frontier; unlike BFS a settled node can re-enter the frontier when
-    * a shorter many-hop path arrives later). One exchange per round
-    * (the frontier⋈edges arrival agg); the running dist table updates
-    * by anti-join + union of the improved rows, localCheckpoint-frozen
-    * per round (the g01/g04 iterative-fixed-point discipline: lineage
-    * must not grow with rounds).
+    * Algorithm: distributed Bellman-Ford on the [[frontierLoop]] — only
+    * nodes whose tentative distance IMPROVED re-expand next round (unlike
+    * BFS a settled node can re-enter the frontier when a shorter
+    * many-hop path arrives later), so a round joins arrivals to the dist
+    * table to find improvements, and the dist table updates by anti-join
+    * + union of the improved rows. One exchange per round (the
+    * frontier⋈edges arrival agg).
     *
-    * `distCap` is a DECLARED horizon, part of the semantics: arrivals
-    * beyond it are pruned in-flight (at corpus scale this bounds both
-    * the frontier and — in the oracle — the recursive walk's state,
-    * exactly like g04's hop bound), and nodes beyond it report -1
-    * alongside the genuinely unreachable. Termination: every frontier
-    * row strictly decreases an integer distance bounded below, so the
-    * improved set empties in ≤ distCap/min_w rounds; `maxRounds`
-    * therefore DEFAULTS to that semantic bound (min edge weight is 1,
-    * so distCap rounds always suffice — a fixed smaller default could
-    * throw on valid data at larger scale factors) and stays overridable
-    * as the same loud-failure hint as g04's. */
-  def weightedSssp(t: Tables, distCap: Long = 300L,
-      maxRounds: Int = -1): DataFrame = {
-    val roundCap = if (maxRounds > 0) maxRounds
-      else math.min(distCap, Int.MaxValue.toLong).toInt
+    * [[SsspHorizon]] is a DECLARED horizon, part of the semantics:
+    * arrivals beyond it are pruned in-flight (bounding both the frontier
+    * and the oracle's recursive walk state), and nodes beyond it report
+    * -1 alongside the genuinely unreachable. It is also the round cap:
+    * every improvement strictly lowers an integer distance by at least
+    * the minimum weight 1, so the improved set empties within
+    * SsspHorizon rounds. */
+  def weightedSssp(t: Tables): DataFrame = {
     val pairs = t.orders
       .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
       .groupBy((col("o_custkey") * 2).as("src"),
@@ -417,48 +490,23 @@ object GraphOps {
       .agg(count(lit(1)).as("n"))
     val half = pairs.select(col("src"), col("dst"),
       greatest(lit(1L), expr("100 DIV n")).as("w"))
-    val edges = graft.InternalCaches.track {
-      half.unionByName(
-          half.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-        .repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    val nodes = edges.select(col("src").as("node")).distinct()
-    val sources = nodes
-      .filter(col("node") % 2 === 1 && expr("((node - 1) div 2) % 4") === 0)
-    var dist = sources.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dist
-    var round = 0
-    var converged = false
-    while (!converged && round < roundCap) {
-      round += 1
-      val arrivals = edges
+    val edges = bySrc(
+      half.unionByName(half.select(col("dst").as("src"), col("src").as("dst"), col("w"))))
+    val nodes = nodesOf(edges)
+    val dist = frontierLoop("weightedSssp", nodes.filter(isSeed(col("node"))),
+        SsspHorizon.toInt) { (dist, frontier) =>
+      edges
         .join(frontier.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("cand"))
         .groupBy(col("node")).agg(min(col("cand")).as("cand"))
-        .filter(col("cand") <= distCap)
-      val improved = arrivals
+        .filter(col("cand") <= SsspHorizon)
         .join(dist.withColumnRenamed("dist", "cur"), Seq("node"), "left")
         .filter(col("cur").isNull || col("cand") < col("cur"))
         .select(col("node"), col("cand").as("dist"))
-        .localCheckpoint(true)
-      if (improved.isEmpty) converged = true
-      else {
-        dist = dist.join(improved.select(col("node")), Seq("node"), "left_anti")
-          .unionByName(improved).localCheckpoint(true)
-        frontier = improved
-      }
+    } { (dist, improved) =>
+      dist.join(improved.select(col("node")), Seq("node"), "left_anti").unionByName(improved)
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"weightedSssp: frontier still improving after $roundCap rounds — " +
-          "raise maxRounds (bounded by distCap/min_w)")
-    nodes.join(dist, Seq("node"), "left")
-      .select(col("node").as("node_id"),
-        when(col("node") % 2 === 1, "supplier").otherwise("customer").as("kind"),
-        coalesce(col("dist"), lit(-1L)).as("wdist"))
-      .orderBy(col("node_id"))
+    distanceTable(nodes, dist, "wdist")
   }
 
   /** g05's supplier-hub cap: common-neighbor evidence through a
@@ -524,27 +572,21 @@ object GraphOps {
     * the 2-cycle oscillation pure synchronous LPA exhibits on bipartite
     * graphs — and this customer↔supplier graph IS bipartite), and the
     * argmax tie-break is total (count desc, then min label). A fixed
-    * round count replaces the convergence loop so the oracle unrolls to
-    * plain CTEs.
+    * round count ([[LabelRounds]]) replaces the convergence loop so the
+    * oracle unrolls to plain CTEs.
     *
     * l₀(v) = v;  lₜ₊₁(v) = argmax_{l} |{u→v : lₜ(u)=l}| + [lₜ(v)=l],
     * ties → smaller l.
     *
-    * Scale shape (the g01 discipline): edges persisted hash-partitioned
-    * by src ONCE, so each round's join moves only the N-row label
-    * vector; the mode-vote is two hash aggregates — (node, lbl) counts
-    * then the per-node argmax as a map-side-combinable min(struct(-c,
-    * lbl)), NOT a window, so a hub node's vote list never sorts in one
-    * task; per-round localCheckpoint keeps the plan constant-size. */
-  def labelPropagation(t: Tables, rounds: Int = 3): DataFrame = {
-    val edges = graft.InternalCaches.track {
-      tradeEdges(t).repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint(true)
-    (1 to rounds).foreach { _ =>
+    * Scale shape: each round's join moves only the N-row label vector
+    * ([[bySrc]]); the mode-vote is two hash aggregates — (node, lbl)
+    * counts then the per-node argmax as a map-side-combinable
+    * min(struct(-c, lbl)), NOT a window, so a hub node's vote list never
+    * sorts in one task. */
+  def labelPropagation(t: Tables): DataFrame = {
+    val edges = bySrc(tradeEdges(t))
+    val labels = iterate(nodesOf(edges).select(col("node"), col("node").as("lbl")),
+        LabelRounds) { labels =>
       val votes = edges.join(labels, col("src") === col("node"))
         .select(col("dst").as("n"), col("lbl"))
         .unionByName(labels.select(col("node").as("n"), col("lbl")))
@@ -555,19 +597,17 @@ object GraphOps {
       // vote rows cross un-combined (no map-side (n, lbl) merge before
       // the exchange) — on the DISTINCT-pair trading graph early-round
       // votes barely combine anyway, so one raw shuffle beats two.
-      labels = votes
+      votes
         .repartition(col("n"))
         .groupBy(col("n"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("n"))
         .agg(min(struct((-col("c")).as("negc"), col("lbl").as("l"))).as("w"))
         .select(col("n").as("node"), col("w.l").as("lbl"))
-        .localCheckpoint(true)
-    }
+    }.last
     val sizes = labels.groupBy(col("lbl"))
       .agg(count(lit(1)).as("community_size"))
     labels.join(sizes, Seq("lbl"))
-      .select(col("node").as("node_id"),
-        when(col("node") % 2 === 1, "supplier").otherwise("customer").as("kind"),
+      .select(col("node").as("node_id"), kind,
         col("lbl").as("community"), col("community_size"))
       .orderBy(col("node_id"))
   }
@@ -580,43 +620,33 @@ object GraphOps {
     * fixed point). On the trading graph it answers "which customers
     * and suppliers are embedded in a dense trading neighborhood"
     * (ie. not one-off counterparties) — the same shape as keeping only
-    * well-linked crawl domains. A fixed round count R replaces the
-    * until-fixpoint loop so the oracle unrolls to plain CTEs (the
-    * g07/g01 discipline); the output is TOTAL over the node set:
+    * well-linked crawl domains. A fixed round count R ([[KCoreRounds]],
+    * k = [[KCoreK]]) replaces the until-fixpoint loop so the oracle
+    * unrolls to plain CTEs; the output is TOTAL over the node set:
     * survivors carry status 'core' and their final in-core degree,
     * peeled nodes carry 'peeled' and 0.
     *
     * s₀ = V;  sₜ₊₁ = { v ∈ sₜ : |N(v) ∩ sₜ| ≥ k },
     * core_degree(v∈s_R) = |N(v) ∩ s_{R-1}|.
     *
-    * Scale shape: edges persisted hash-partitioned by dst ONCE; each
-    * round is one join of edges to the (N-row) survivor vector on dst
-    * — reusing the persisted layout, only the survivor vector moves —
-    * then a map-side-combined count by src and an N-row×N-row
-    * membership join (no broadcast hint: both sides are
-    * corpus-proportional, AQE picks the strategy). Per-round
-    * localCheckpoint keeps the iterative plan constant-size. */
-  def kCore(t: Tables, k: Int = 4, rounds: Int = 3): DataFrame = {
-    val edges = graft.InternalCaches.track {
-      tradeEdges(t).repartition(col("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    * Scale shape: each round is one join of the [[bySrc]] edges to the
+    * (N-row) survivor vector on src — only the survivor vector moves —
+    * then a map-side-combined count by dst (the edge set is
+    * bidirectional, so that is each survivor-neighbor's degree) and an
+    * N-row×N-row membership join (no broadcast hint: both sides are
+    * corpus-proportional, AQE picks the strategy). */
+  def kCore(t: Tables): DataFrame = {
+    val edges = bySrc(tradeEdges(t))
+    val states = iterate(nodesOf(edges), KCoreRounds) { surv =>
+      edges.join(surv.select(col("node")), col("src") === col("node"))
+        .groupBy(col("dst")).agg(count(lit(1)).as("deg"))
+        .join(surv.select(col("node").as("m")), col("dst") === col("m"))
+        .filter(col("deg") >= KCoreK)
+        .select(col("dst").as("node"), col("deg"))
     }
-    val nodes = edges.select(col("src").as("node")).distinct()
-      .localCheckpoint(true)
-    var surv = nodes
-    (1 to rounds).foreach { _ =>
-      val deg = edges.join(surv.select(col("node")), col("dst") === col("node"))
-        .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      surv = deg
-        .join(surv.select(col("node").as("m")), col("src") === col("m"))
-        .filter(col("deg") >= k)
-        .select(col("src").as("node"), col("deg"))
-        .localCheckpoint(true)
-    }
-    nodes.select(col("node"))
-      .join(surv, Seq("node"), "left")
-      .select(col("node").as("node_id"),
-        when(col("node") % 2 === 1, "supplier").otherwise("customer").as("kind"),
+    states.head.select(col("node"))
+      .join(states.last, Seq("node"), "left")
+      .select(col("node").as("node_id"), kind,
         when(col("deg").isNotNull, "core").otherwise("peeled").as("status"),
         coalesce(col("deg"), lit(0L)).as("core_degree"))
       .orderBy(col("node_id"))
@@ -624,55 +654,39 @@ object GraphOps {
 
   /** One unrolled peel round: degree restricted to the previous
     * survivor set, kept iff ≥ k. Must mirror [[kCore]]. */
-  private def kcoreOracleIter(prev: String, cur: String, k: Int): String =
-    s"""$cur AS (
+  private def kcoreOracleIter(i: Int): String =
+    s"""s$i AS (
        |  SELECT e.src AS node, count(*) AS deg
        |  FROM edges e
-       |  JOIN $prev p ON e.dst = p.node
-       |  JOIN $prev q ON e.src = q.node
-       |  GROUP BY e.src HAVING count(*) >= $k)""".stripMargin
+       |  JOIN s${i - 1} p ON e.dst = p.node
+       |  JOIN s${i - 1} q ON e.src = q.node
+       |  GROUP BY e.src HAVING count(*) >= $KCoreK)""".stripMargin
 
   /** One unrolled synchronous LPA round: neighbor votes + the self-vote,
     * argmax by (count desc, label asc). Must mirror [[labelPropagation]]. */
-  private def lpaOracleIter(prev: String, cur: String): String =
-    s"""$cur AS (
+  private def lpaOracleIter(i: Int): String =
+    s"""l$i AS (
        |  SELECT node, lbl FROM (
        |    SELECT node, lbl,
        |           row_number() OVER (PARTITION BY node ORDER BY c DESC, lbl) AS rn
        |    FROM (
        |      SELECT node, lbl, count(*) AS c FROM (
        |        SELECT e.dst AS node, p.lbl AS lbl
-       |        FROM edges e JOIN $prev p ON e.src = p.node
+       |        FROM edges e JOIN l${i - 1} p ON e.src = p.node
        |        UNION ALL
-       |        SELECT node, lbl FROM $prev) v
+       |        SELECT node, lbl FROM l${i - 1}) v
        |      GROUP BY node, lbl) cnt)
        |  WHERE rn = 1)""".stripMargin
 
-  private def oracleIter(prev: String, cur: String): String =
-    s"""$cur AS (
-       |  SELECT n.node, (SELECT (15 * (${Scale} // count(*))) // 100 FROM nodes)
-       |           + (85 * coalesce(s.t, 0)) // 100 AS r
-       |  FROM nodes n LEFT JOIN (
-       |    SELECT e.dst AS node, sum($prev.r // e.deg) AS t
-       |    FROM edges e JOIN $prev ON e.src = $prev.node
-       |    GROUP BY e.dst) s USING (node))""".stripMargin
-
-  /** The g06 seed predicate in DuckDB SQL (must mirror [[pprSeed]]). */
-  private val pprSeedSql = "(node % 2 = 1 AND ((node - 1) // 2) % 4 = 0)"
-
-  /** One unrolled PPR iteration: the base term lands on seeds only. */
-  private def pprOracleIter(prev: String, cur: String): String =
-    s"""$cur AS (
-       |  SELECT n.node,
-       |         CASE WHEN ${pprSeedSql.replace("node", "n.node")}
-       |              THEN (SELECT (15 * (${Scale} // count(*))) // 100 FROM seeds)
-       |              ELSE 0 END
-       |           + (85 * coalesce(s.t, 0)) // 100 AS r
-       |  FROM nodes n LEFT JOIN (
-       |    SELECT e.dst AS node, sum($prev.r // e.deg) AS t
-       |    FROM edges e JOIN $prev ON e.src = $prev.node
-       |    GROUP BY e.dst) s USING (node))""".stripMargin
-
+  /** One unrolled KMV sketch sweep: every node's register merged with
+    * its in-neighbors' (UNION dedups members), cut to the k smallest
+    * hashes. Must mirror [[hyperBallKmv]]. */
+  private def kmvOracleIter(i: Int): String =
+    s"""r$i AS (SELECT e.dst AS node, s.h FROM e JOIN s${i - 1} s ON s.node = e.src
+       |       UNION SELECT node, h FROM s${i - 1}),
+       |s$i AS (SELECT node, h, rn FROM (
+       |         SELECT node, h, row_number() OVER (PARTITION BY node ORDER BY h) AS rn
+       |         FROM r$i) WHERE rn <= $KmvK)""".stripMargin
 
   /** Neighborhood-size sketching — HyperBall (Boldi & Vigna, "In-Core
     * Computation of Geometric Centralities with HyperBall", 2013) with
@@ -681,7 +695,7 @@ object GraphOps {
     * every neighbor's sketch into the node's own. The corpus-scale
     * question it answers ("how connected is this graph? what is its
     * effective diameter / reach profile?") is exactly what exact BFS
-    * from every node cannot — N BFS traversals vs `rounds` sketch
+    * from every node cannot — N BFS traversals vs [[KmvRounds]] sketch
     * sweeps.
     *
     * KMV instead of HyperLogLog is the q66 lesson applied to graphs:
@@ -691,47 +705,35 @@ object GraphOps {
     * rows-only (engine-specific binary). The estimator is q66's
     * (k−1)·H / h(k).
     *
-    * Scale shape: one round = one join of the edge list to the |V|·k
-    * sketch frame + ONE [[graft.functions.expressions.KmvMerge]]
+    * Scale shape: one round = one join of the [[bySrc]] edge list to the
+    * |V|·k sketch frame + ONE [[graft.functions.expressions.KmvMerge]]
     * aggregate — |E| register merges, the HyperBall cost, with
     * map-side partial merging collapsing any in-degree before the
     * shuffle (a row-explode formulation would instead shuffle |E|·k
-    * rows through a distinct AND a bottom-k). Eager localCheckpoint
-    * per round keeps the iterative plan constant-size (GraphOps
-    * discipline); edges persist once and every round's join reuses the
-    * layout. */
-  def hyperBallKmv(t: Tables, k: Int = 32, rounds: Int = 2): DataFrame = {
-    // hash-partitioned by src ONCE (round 15 — the g07/g04/g10
-    // discipline): every round's join and the final degree aggregate
-    // are keyed on src, so an unpartitioned persist re-shuffled the
-    // FULL |E|·k frame each round; now only the sketch vector moves
-    val e = graft.InternalCaches.track(
-      tradeEdges(t).repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nodes = e.select(col("src").as("node")).distinct()
+    * rows through a distinct AND a bottom-k). The final degree
+    * aggregate is keyed on src too. */
+  def hyperBallKmv(t: Tables): DataFrame = {
+    val e = bySrc(tradeEdges(t))
     val h = conv(substring(md5(col("node").cast("string")), 1, 13), 16, 10)
       .cast("long")
-    val kmv = graft.functions.expressions.KmvMerge.merge(k)
-    var sk = nodes.select(col("node"), array(h).as("sk")).localCheckpoint(true)
-    (1 to rounds).foreach { _ =>
-      sk = e.join(sk, col("src") === col("node"))
+    val kmv = graft.functions.expressions.KmvMerge.merge(KmvK)
+    val sk = iterate(nodesOf(e).select(col("node"), array(h).as("sk")), KmvRounds) { sk =>
+      e.join(sk, col("src") === col("node"))
         .select(col("dst").as("node"), col("sk"))
         .unionByName(sk)
         .groupBy(col("node"))
         .agg(kmv(col("sk")).as("sk"))
-        .localCheckpoint(true)
-    }
+    }.last
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .withColumnRenamed("src", "node")
-    val hashSpace = 4503599627370496L // 2^52: 13 hex chars of md5
     sk.join(deg, Seq("node"))
       .select(col("node").as("node_id"), col("deg"),
         size(col("sk")).cast("long").as("b2_kmv_size"),
-        when(size(col("sk")) === k, element_at(col("sk"), k))
+        when(size(col("sk")) === KmvK, element_at(col("sk"), KmvK))
           .otherwise(lit(0L)).as("b2_kth_hash"))
       .select(col("node_id"), col("deg"), col("b2_kmv_size"), col("b2_kth_hash"),
-        when(col("b2_kmv_size") < k, col("b2_kmv_size"))
-          .otherwise(expr(s"${k - 1}L * ${hashSpace}L div b2_kth_hash"))
+        when(col("b2_kmv_size") < KmvK, col("b2_kmv_size"))
+          .otherwise(expr(s"${KmvK - 1}L * ${KmvHashSpace}L div b2_kth_hash"))
           .as("b2_est"))
       .orderBy(col("node_id"))
   }
@@ -739,27 +741,9 @@ object GraphOps {
   val all: Seq[GraftQuery] = Seq(
     GraftQuery(
       "g01_pagerank",
-      "5-iteration integer PageRank over the customer-supplier trading graph",
+      s"$RankIters-iteration integer PageRank over the customer-supplier trading graph",
       (spark, dir) => pageRank(Tables(spark, dir)),
-      Some(
-        s"""WITH e0 AS (
-           |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-           |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-           |eraw AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-           |deg AS (SELECT src, count(*) AS deg FROM eraw GROUP BY src),
-           |edges AS (SELECT eraw.src, eraw.dst, deg.deg FROM eraw JOIN deg USING (src)),
-           |nodes AS (SELECT DISTINCT src AS node FROM eraw),
-           |r0 AS (SELECT node, (SELECT ${Scale} // count(*) FROM nodes) AS r FROM nodes),
-           |${oracleIter("r0", "r1")},
-           |${oracleIter("r1", "r2")},
-           |${oracleIter("r2", "r3")},
-           |${oracleIter("r3", "r4")},
-           |${oracleIter("r4", "r5")}
-           |SELECT node AS node_id,
-           |       CASE WHEN node % 2 = 1 THEN 'supplier' ELSE 'customer' END AS kind,
-           |       CAST(r AS BIGINT) AS rank_scaled -- sum() upcasts to HUGEINT -> float64 in pandas
-           |FROM r5
-           |ORDER BY node_id""".stripMargin)
+      Some(rankWalkSql(_ => "TRUE"))
     ),
 
     GraftQuery(
@@ -822,26 +806,8 @@ object GraphOps {
       "multi-source BFS hop distances from seed suppliers via frontier delta iteration",
       (spark, dir) => bfsDistances(Tables(spark, dir)),
       Some(
-        """WITH RECURSIVE e0 AS (
-          |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-          |eraw AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-          |nodes AS (SELECT DISTINCT src AS node FROM eraw),
-          |sources AS (
-          |  SELECT node FROM nodes
-          |  WHERE node % 2 = 1 AND ((node - 1) // 2) % 4 = 0),
-          |walk AS (
-          |  SELECT node, 0 AS dist FROM sources
-          |  UNION
-          |  SELECT e.dst AS node, w.dist + 1 AS dist
-          |  FROM walk w JOIN eraw e ON e.src = w.node
-          |  WHERE w.dist < 20),
-          |d AS (SELECT node, min(dist) AS dist FROM walk GROUP BY node)
-          |SELECT n.node AS node_id,
-          |       CASE WHEN n.node % 2 = 1 THEN 'supplier' ELSE 'customer' END AS kind,
-          |       CAST(coalesce(d.dist, -1) AS BIGINT) AS dist
-          |FROM nodes n LEFT JOIN d USING (node)
-          |ORDER BY node_id""".stripMargin)
+        s"""WITH RECURSIVE ${tradeEdgesSql("e0", "eraw")},
+           |${seedWalkSql("w.dist + 1", s"w.dist < $BfsRounds", "dist")}""".stripMargin)
     ),
 
     // ------------------------------------------------------------------
@@ -897,125 +863,77 @@ object GraphOps {
 
     // ------------------------------------------------------------------
     // g06: personalized PageRank from the g04 seed suppliers — see
-    // [[personalizedPageRank]]. The oracle unrolls the same five
-    // integer iterations with the seed-conditional base term.
+    // [[rankWalk]]. The oracle unrolls the same integer iterations with
+    // the seed-conditional base term.
     GraftQuery(
       "g06_personalized_pagerank",
-      "5-iteration integer personalized PageRank from the g04 seed suppliers",
+      s"$RankIters-iteration integer personalized PageRank from the g04 seed suppliers",
       (spark, dir) => personalizedPageRank(Tables(spark, dir)),
-      Some(
-        s"""WITH e0 AS (
-           |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-           |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-           |eraw AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-           |deg AS (SELECT src, count(*) AS deg FROM eraw GROUP BY src),
-           |edges AS (SELECT eraw.src, eraw.dst, deg.deg FROM eraw JOIN deg USING (src)),
-           |nodes AS (SELECT DISTINCT src AS node FROM eraw),
-           |seeds AS (SELECT node FROM nodes WHERE $pprSeedSql),
-           |r0 AS (
-           |  SELECT node,
-           |         CASE WHEN $pprSeedSql
-           |              THEN (SELECT ${Scale} // count(*) FROM seeds) ELSE 0 END AS r
-           |  FROM nodes),
-           |${pprOracleIter("r0", "r1")},
-           |${pprOracleIter("r1", "r2")},
-           |${pprOracleIter("r2", "r3")},
-           |${pprOracleIter("r3", "r4")},
-           |${pprOracleIter("r4", "r5")}
-           |SELECT node AS node_id,
-           |       CASE WHEN node % 2 = 1 THEN 'supplier' ELSE 'customer' END AS kind,
-           |       CAST(r AS BIGINT) AS rank_scaled
-           |FROM r5
-           |ORDER BY node_id""".stripMargin)
+      Some(rankWalkSql(seedSql))
     ),
 
     // ------------------------------------------------------------------
     // g07: community detection by synchronous label propagation — see
-    // [[labelPropagation]]. The oracle unrolls the same three
-    // mode-vote rounds (count desc, label asc argmax per node).
+    // [[labelPropagation]]. The oracle unrolls the same mode-vote rounds
+    // (count desc, label asc argmax per node).
     GraftQuery(
       "g07_community_labelprop",
-      "3-round deterministic label-propagation communities over the trading graph (self-vote, min-label tie-break)",
+      s"$LabelRounds-round deterministic label-propagation communities over the trading graph (self-vote, min-label tie-break)",
       (spark, dir) => labelPropagation(Tables(spark, dir)),
       Some(
-        s"""WITH e0 AS (
-           |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-           |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-           |edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+        s"""WITH ${tradeEdgesSql("e0", "edges")},
            |l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges),
-           |${lpaOracleIter("l0", "l1")},
-           |${lpaOracleIter("l1", "l2")},
-           |${lpaOracleIter("l2", "l3")},
+           |${(1 to LabelRounds).map(lpaOracleIter).mkString(",\n")},
            |sz AS (SELECT lbl, CAST(count(*) AS BIGINT) AS community_size
-           |       FROM l3 GROUP BY lbl)
-           |SELECT l.node AS node_id,
-           |       CASE WHEN l.node % 2 = 1 THEN 'supplier' ELSE 'customer' END AS kind,
+           |       FROM l$LabelRounds GROUP BY lbl)
+           |SELECT l.node AS node_id, ${kindSql("l.node")},
            |       l.lbl AS community, sz.community_size
-           |FROM l3 l JOIN sz USING (lbl)
+           |FROM l$LabelRounds l JOIN sz USING (lbl)
            |ORDER BY node_id""".stripMargin)
     ),
 
     // ------------------------------------------------------------------
-
-    // ------------------------------------------------------------------
     // g09: HyperBall-with-KMV 2-hop neighborhood sizes — see
-    // [[hyperBallKmv]]. The oracle unrolls both sketch sweeps: UNION
+    // [[hyperBallKmv]]. The oracle unrolls the sketch sweeps: UNION
     // dedups members, row_number <= k is the register cut, and the
     // estimator is q66's.
     GraftQuery(
       "g09_hyperball_kmv",
-      "HyperBall-style 2-hop ball-size estimates per node (KMV registers k=32, fully oracled)",
+      s"HyperBall-style 2-hop ball-size estimates per node (KMV registers k=$KmvK, fully oracled)",
       (spark, dir) => hyperBallKmv(Tables(spark, dir)),
       Some(
-        s"""WITH p AS (
-           |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-           |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-           |e AS (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
+        s"""WITH ${tradeEdgesSql("p", "e")},
            |n AS (SELECT DISTINCT src AS node FROM e),
-           |h0 AS (SELECT node,
+           |s0 AS (SELECT node,
            |         CAST('0x' || substr(md5(CAST(node AS VARCHAR)), 1, 13) AS BIGINT) AS h
            |       FROM n),
-           |r1 AS (SELECT e.dst AS node, h.h FROM e JOIN h0 h ON h.node = e.src
-           |       UNION SELECT node, h FROM h0),
-           |s1 AS (SELECT node, h FROM (
-           |         SELECT node, h, row_number() OVER (PARTITION BY node ORDER BY h) AS rn
-           |         FROM r1) WHERE rn <= 32),
-           |r2 AS (SELECT e.dst AS node, s.h FROM e JOIN s1 s ON s.node = e.src
-           |       UNION SELECT node, h FROM s1),
-           |s2 AS (SELECT node, h, row_number() OVER (PARTITION BY node ORDER BY h) AS rn
-           |       FROM r2),
+           |${(1 to KmvRounds).map(kmvOracleIter).mkString(",\n")},
            |agg AS (SELECT node, CAST(count(*) AS BIGINT) AS b2_kmv_size,
-           |               CAST(coalesce(max(CASE WHEN rn = 32 THEN h END), 0) AS BIGINT) AS b2_kth_hash
-           |        FROM s2 WHERE rn <= 32 GROUP BY node),
+           |               CAST(coalesce(max(CASE WHEN rn = $KmvK THEN h END), 0) AS BIGINT) AS b2_kth_hash
+           |        FROM s$KmvRounds GROUP BY node),
            |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1)
            |SELECT a.node AS node_id, d.deg, a.b2_kmv_size, a.b2_kth_hash,
-           |       CASE WHEN a.b2_kmv_size < 32 THEN a.b2_kmv_size
-           |            ELSE 31 * 4503599627370496 // a.b2_kth_hash END AS b2_est
+           |       CASE WHEN a.b2_kmv_size < $KmvK THEN a.b2_kmv_size
+           |            ELSE ${KmvK - 1} * $KmvHashSpace // a.b2_kth_hash END AS b2_est
            |FROM agg a JOIN deg d USING (node)
            |ORDER BY node_id""".stripMargin)
     ),
 
     // g08: k-core decomposition by fixed-round degree peeling — see
-    // [[kCore]]. The oracle unrolls the same three peel rounds
+    // [[kCore]]. The oracle unrolls the same peel rounds
     // (HAVING count(*) >= k over the surviving subgraph).
     GraftQuery(
       "g08_kcore_peel",
-      "3-round k-core peel (k=4) over the trading graph: total core/peeled verdict with final in-core degree",
+      s"$KCoreRounds-round k-core peel (k=$KCoreK) over the trading graph: total core/peeled verdict with final in-core degree",
       (spark, dir) => kCore(Tables(spark, dir)),
       Some(
-        s"""WITH e0 AS (
-           |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-           |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-           |edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+        s"""WITH ${tradeEdgesSql("e0", "edges")},
            |s0 AS (SELECT DISTINCT src AS node FROM edges),
-           |${kcoreOracleIter("s0", "s1", 4)},
-           |${kcoreOracleIter("s1", "s2", 4)},
-           |${kcoreOracleIter("s2", "s3", 4)}
-           |SELECT n.node AS node_id,
-           |       CASE WHEN n.node % 2 = 1 THEN 'supplier' ELSE 'customer' END AS kind,
-           |       CASE WHEN s3.node IS NULL THEN 'peeled' ELSE 'core' END AS status,
-           |       CAST(coalesce(s3.deg, 0) AS BIGINT) AS core_degree
-           |FROM s0 n LEFT JOIN s3 USING (node)
+           |${(1 to KCoreRounds).map(kcoreOracleIter).mkString(",\n")}
+           |SELECT n.node AS node_id, ${kindSql("n.node")},
+           |       CASE WHEN s$KCoreRounds.node IS NULL THEN 'peeled' ELSE 'core' END AS status,
+           |       CAST(coalesce(s$KCoreRounds.deg, 0) AS BIGINT) AS core_degree
+           |FROM s0 n LEFT JOIN s$KCoreRounds USING (node)
            |ORDER BY node_id""".stripMargin)
     ),
 
@@ -1027,33 +945,18 @@ object GraphOps {
     // the identical fixed point; min-per-node reads off the answer.
     GraftQuery(
       "g10_weighted_sssp",
-      "weighted shortest paths (Bellman-Ford delta frontier, w = max(1, 100 div n_txn), horizon 300)",
+      s"weighted shortest paths (Bellman-Ford delta frontier, w = max(1, 100 div n_txn), horizon $SsspHorizon)",
       (spark, dir) => weightedSssp(Tables(spark, dir)),
       Some(
-        """WITH RECURSIVE p0 AS (
-          |  SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst,
-          |         count(*) AS n
-          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-          |  GROUP BY 1, 2),
-          |e0 AS (SELECT src, dst, greatest(1, 100 // n) AS w FROM p0),
-          |eraw AS (SELECT src, dst, w FROM e0
-          |         UNION ALL SELECT dst, src, w FROM e0),
-          |nodes AS (SELECT DISTINCT src AS node FROM eraw),
-          |sources AS (
-          |  SELECT node FROM nodes
-          |  WHERE node % 2 = 1 AND ((node - 1) // 2) % 4 = 0),
-          |walk AS (
-          |  SELECT node, CAST(0 AS BIGINT) AS dist FROM sources
-          |  UNION
-          |  SELECT e.dst AS node, CAST(w.dist + e.w AS BIGINT) AS dist
-          |  FROM walk w JOIN eraw e ON e.src = w.node
-          |  WHERE w.dist + e.w <= 300),
-          |d AS (SELECT node, min(dist) AS dist FROM walk GROUP BY node)
-          |SELECT n.node AS node_id,
-          |       CASE WHEN n.node % 2 = 1 THEN 'supplier' ELSE 'customer' END AS kind,
-          |       CAST(coalesce(d.dist, -1) AS BIGINT) AS wdist
-          |FROM nodes n LEFT JOIN d USING (node)
-          |ORDER BY node_id""".stripMargin)
+        s"""WITH RECURSIVE p0 AS (
+           |  SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst,
+           |         count(*) AS n
+           |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+           |  GROUP BY 1, 2),
+           |e0 AS (SELECT src, dst, greatest(1, 100 // n) AS w FROM p0),
+           |eraw AS (SELECT src, dst, w FROM e0
+           |         UNION ALL SELECT dst, src, w FROM e0),
+           |${seedWalkSql("CAST(w.dist + e.w AS BIGINT)", s"w.dist + e.w <= $SsspHorizon", "wdist")}""".stripMargin)
     )
   )
 }

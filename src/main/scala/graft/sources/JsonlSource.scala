@@ -590,7 +590,8 @@ private[graft] case class JsonlStreamOffset(files: Seq[String])
   * set of files that appeared since the last committed offset (whole
   * files — the connector's batch sink publishes files ATOMICALLY via
   * rename, so a visible file is complete; that pairing is what makes
-  * file-granular streaming exactly-once end to end). Column pruning and
+  * file-granular streaming exactly-once end to end). Files are admitted
+  * in arrival order ([[currentFiles]]). Column pruning and
   * filter pushdown ride the same [[JsonlReaderFactory]] as the batch
   * scan. Admission control: `maxFilesPerTrigger`-style rate limiting via
   * [[ReadLimit.maxFiles]], and `Trigger.AvailableNow` pins the backlog
@@ -608,8 +609,14 @@ private[graft] class JsonlMicroBatchStream(
 
   @volatile private var availableNowBound: Option[Seq[String]] = None
 
+  /** Visible data files in ARRIVAL order — oldest modification time
+    * first, name on ties (Spark's file source admits the same way). Names
+    * carry the writing job's random queryId, so name order alone would
+    * admit separately written files in a different order on every run. */
   private def currentFiles(): Seq[String] =
-    JsonlSource.listDataFiles(path).map(_.getPath.getName).sorted
+    JsonlSource.listDataFiles(path)
+      .sortBy(f => (f.getModificationTime, f.getPath.getName))
+      .map(_.getPath.getName)
 
   override def initialOffset(): StreamOffset = JsonlStreamOffset(Seq.empty)
 

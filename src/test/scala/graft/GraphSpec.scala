@@ -5,9 +5,19 @@ import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.ops.GraphOps
 
-/** g01 PageRank: exact driver-side replay of the integer fixed point,
-  * plus the structural properties that make the result a PageRank. */
-class GraphSpec extends SparkSpecBase {
+/** The graph family: exact driver-side replays of each entry, plus the
+  * structural properties that make each result what it claims. Each
+  * test starts with nothing cached (an earlier suite in the same JVM can
+  * leave the trading graph's frames cached) and releases the frames the
+  * entries persisted, so none outlives it. */
+class GraphSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach {
+
+  private def release(): Unit = {
+    graft.InternalCaches.releaseAll()
+    spark.catalog.clearCache()
+  }
+  override def beforeEach(): Unit = { super.beforeEach(); release() }
+  override def afterEach(): Unit = try release() finally super.afterEach()
 
   test("g01: ranks equal an exact driver-side integer replay of 5 iterations") {
     val t = Tables(spark, sf0001)
@@ -29,7 +39,6 @@ class GraphSpec extends SparkSpecBase {
     }
     val got = graft.queries.Catalog.queries("g01_pagerank")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    graft.InternalCaches.releaseAll()
     assert(got.map(_._1).toSeq === nodes.toSeq, "node set")
     got.foreach { case (id, kind, r) =>
       assert(kind === (if (id % 2 == 1) "supplier" else "customer"))
@@ -71,7 +80,6 @@ class GraphSpec extends SparkSpecBase {
     assert(want.values.sum > 0, "seeded graph must contain triangles")
     val got = GraphOps.trianglesFromEdges(edges.toDF("u", "v"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.InternalCaches.releaseAll()
     assert(got === want)
   }
 
@@ -89,7 +97,6 @@ class GraphSpec extends SparkSpecBase {
     val want = bruteTriangles(edges).filter(_._2 > 0)
     val got = graft.queries.Catalog.queries("g02_triangle_count")(spark, sf0001)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.InternalCaches.releaseAll()
     assert(got === want)
     assert(want.values.sum % 3 === 0, "each triangle counted at all 3 nodes")
   }
@@ -143,7 +150,6 @@ class GraphSpec extends SparkSpecBase {
     val got = graft.queries.Catalog.queries("g04_bfs_distance")(spark, sf0001)
       .collect().map(r => (r.getAs[Long]("node_id"), r.getAs[String]("kind"),
         r.getAs[Long]("dist")))
-    graft.InternalCaches.releaseAll()
     assert(got.map(_._1).toSet === nodes, "one row per graph node")
     got.foreach { case (n, kind, d) =>
       assert(kind === (if (n % 2 == 1) "supplier" else "customer"))
@@ -158,6 +164,24 @@ class GraphSpec extends SparkSpecBase {
     // the oracle's dist < 20 bound so the bounded recursive replay is exact
     val reached = got.collect { case (_, _, d) if d >= 0 => d }
     assert(reached.max > 1L && reached.max < 20L)
+  }
+
+  test("g04 core: exact hops within the round cap; a longer path fails loudly") {
+    import testImplicits._
+    // a bidirectional path 0 - 1 - ... - hops, walked from node 0
+    def path(hops: Int) = {
+      val one = (0L until hops.toLong).map(i => (i, i + 1))
+      (one ++ one.map(_.swap)).toDF("src", "dst")
+    }
+    val source = Seq(0L).toDF("node")
+    val within = GraphOps.BfsRounds - 1
+    val got = GraphOps.bfsHops(path(within), source)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === (0L to within.toLong).map(i => i -> i).toMap)
+    val e = intercept[IllegalStateException] {
+      GraphOps.bfsHops(path(GraphOps.BfsRounds + 5), source)
+    }
+    assert(e.getMessage.contains("frontier still live"), e.getMessage)
   }
 
   test("g03 core: 9 doubling rounds resolve a 500-deep chain (log-depth, not O(depth))") {
@@ -239,6 +263,7 @@ class GraphSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSeq
     assert(got === expected(GraphOps.LinkHubCap))
+    release() // the capped call persists the same pair table
     assert(got.nonEmpty && got.forall(r => r._5 >= 1 && r._5 <= 10))
 
     // the hub-exclusion path: at a synthetic cap of 3, real suppliers
@@ -276,7 +301,6 @@ class GraphSpec extends SparkSpecBase {
     }
     val got = graft.queries.Catalog.queries("g06_personalized_pagerank")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    graft.InternalCaches.releaseAll()
     assert(got.map(_._1).toSeq === nodes.toSeq, "node set")
     got.foreach { case (id, kind, r) =>
       assert(kind === (if (id % 2 == 1) "supplier" else "customer"))
@@ -317,7 +341,6 @@ class GraphSpec extends SparkSpecBase {
     }
     val got = graft.queries.Catalog.queries("g07_community_labelprop")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    graft.InternalCaches.releaseAll()
     assert(got.map(_._1).toSeq === nodes.toSeq, "node set")
     val sizes = lbl.values.groupBy(identity).view.mapValues(_.size.toLong).toMap
     got.foreach { case (id, kind, comm, cs) =>
@@ -387,7 +410,6 @@ class GraphSpec extends SparkSpecBase {
     }
     val got = graft.queries.Catalog.queries("g08_kcore_peel")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-    graft.InternalCaches.releaseAll()
     assert(got.map(_._1).toSeq === nodes.toSeq, "verdict must cover the whole node set")
     got.foreach { case (id, kind, status, cd) =>
       assert(kind === (if (id % 2 == 1) "supplier" else "customer"))

@@ -12,6 +12,7 @@ import graft.sources.{JsonlMicroBatchStream, JsonlStreamOffset}
   */
 class JsonlStreamSpec extends SparkSpecBase {
   import testImplicits._
+  import JsonlStreamSpec.backlogSliceCounts
 
   private val schema = "k LONG, s STRING"
 
@@ -90,5 +91,17 @@ class JsonlStreamSpec extends SparkSpecBase {
     // the entry's declared state settings: 2 partitions, HDFS-backed
     val stats = graft.streaming.EventStreams.lastRunStats("q100_stream_dsv2_source")
     assert(stats.statePartitions === 2L && stats.provider === "default-hdfs", stats.toString)
+    // the backlog's three slices arrive one per batch in the order written
+    assert(stats.inputRowsPerBatch === backlogSliceCounts(spark, sf0001), stats.toString)
   }
+}
+
+object JsonlStreamSpec {
+  /** Row counts of the events backlog's slices (`pmod(event_id, 3)`),
+    * in slice order — what q100 and q108 admit one file per batch. */
+  def backlogSliceCounts(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[Long] =
+    graft.io.Tables(spark, dir).events
+      .groupBy(pmod(col("event_id"), lit(3)).as("slice")).count()
+      .orderBy(col("slice"))
+      .collect().map(_.getLong(1)).toSeq
 }

@@ -243,5 +243,7 @@ class ManifestStreamSinkSpec extends SparkSpecBase {
     // a stateless stream: no state operator, default provider
     val stats = graft.streaming.EventStreams.lastRunStats("q108_stream_manifest_sink")
     assert(stats.statePartitions === 0L && stats.provider === "default-hdfs", stats.toString)
+    assert(stats.inputRowsPerBatch === JsonlStreamSpec.backlogSliceCounts(spark, sf0001),
+      stats.toString)
   }
 }
